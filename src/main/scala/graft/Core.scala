@@ -85,9 +85,7 @@ object Tables {
     val cores = spark.sparkContext.defaultParallelism.toLong
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem").foreach { n =>
-      val bytes =
-        try new java.io.File(s"$dir/$n.parquet").length
-        catch { case _: Throwable => 0L }
+      val bytes = parquetBytes(new java.io.File(s"$dir/$n.parquet"))
       val parts =
         math.min(cores, math.max(1L, bytes / (1250L << 10))).toInt
       val base = apply(spark, dir, n)
@@ -96,6 +94,16 @@ object Tables {
       pinned.put((dir, n), df)
     }
   }
+
+  /** Bytes of a parquet table: the file itself, or the sum of the part
+    * files of a directory-style table (`File.length` of a directory is
+    * its inode size, about 4 KB). A missing table is 0 bytes. */
+  private def parquetBytes(f: java.io.File): Long =
+    if (f.isDirectory) Option(f.listFiles()).toSeq.flatten
+      .filter(p => p.isFile && !p.getName.startsWith("_") &&
+        !p.getName.startsWith("."))
+      .map(_.length).sum
+    else f.length
 
   /** Register every table as a temp view (for spark.sql-based queries). */
   def registerAll(spark: SparkSession, dir: String): Unit =

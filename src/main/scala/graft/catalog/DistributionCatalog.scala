@@ -98,7 +98,11 @@ object DistributionCatalog {
   /** Read a catalog table; reference tables come back broadcast-hinted
     * so every join applies the REFERENCE_JOIN strategy. A table with
     * isolated tenants ([[isolateTenant]]) reads as base ∪ tenant parts,
-    * so whole-table analytics see every row. */
+    * so whole-table analytics see every row. A distribution-column
+    * equality on the result is pushed into both parts, and on a session
+    * with [[graft.plans.GraftExtensions]] each part's scan is routed to
+    * the one bucket file that can hold the key
+    * ([[graft.plans.RouteToShard]]). */
   def table(spark: SparkSession, name: String): DataFrame = {
     val base = spark.table(name)
     val df = isolatedTenants.get(name) match {
@@ -521,8 +525,12 @@ object DistributionCatalog {
 
   /** Route a single-tenant read: the dedicated table if the tenant is
     * isolated (scan = just its files), else the base table with a
-    * distribution-column point filter (scan = one pruned bucket — the
-    * router path the reference plans for non-isolated tenants). */
+    * distribution-column point filter — the router path the reference
+    * plans for non-isolated tenants (`fast_path_router_planner.c`). On
+    * a session with [[graft.plans.GraftExtensions]] that filter routes
+    * the scan to the key's one bucket file, read by one task
+    * ([[graft.plans.RouteToShard]]); without them Spark's bucket pruning
+    * still reads one bucket, but schedules a task per bucket. */
   def tenantShard(spark: SparkSession, name: String,
       tenantValue: Any): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}

@@ -16,6 +16,13 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
   *     as a reference table gets a BROADCAST hint — the REFERENCE_JOIN
   *     rule (citus `multi_join_order.h:33`) applied automatically, so
   *     queries don't need explicit broadcast() calls;
+  *   - the router fast path for distribution-key reads (citus
+  *     `fast_path_router_planner.c:88-124`, `multi_router_planner.c:183`,
+  *     `local_plan_cache.c`): [[RouteToShard]] reads a table whose
+  *     distribution column is pinned to one value from that one bucket
+  *     file, and [[ShareKeyCodegen]] keeps the key out of the generated
+  *     source, so every key of a parameterized statement reuses one
+  *     compiled class. Both are always on;
   *   - SQL function `simhash64(array<string>)` → the native single-pass
   *     expression.
   *
@@ -41,6 +48,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // citus.enable_repartition_joins guard — opt-in via
     // spark.graft.enableRepartitionJoins=false.
     e.injectOptimizerRule(_ => RepartitionJoinGuard)
+    // after filter inference, so a key inferred across a join pins too
+    e.injectPreCBORule(_ => RouteToShard)
+    // before CollapseCodegenStages, on the adaptive and static paths
+    e.injectColumnar(_ => ShareKeyCodegen)
     e.injectFunction((
       new FunctionIdentifier("simhash64"),
       new ExpressionInfo(classOf[graft.functions.SimHash64Expr].getName,

@@ -115,20 +115,13 @@ class CatalogSpec extends AnyFunSuite {
     setup
     // the router-planner read path (multi_hash_pruning.sql): an
     // equality filter on the distribution column must touch ONE shard —
-    // Spark's bucket pruning is the same behavior on bucketed layout
-    // autoBucketedScan only weighs shuffle savings, not pruning — turn
-    // it off so the scan keeps its bucket identity (a router layer
-    // would pin this for dist-col point reads)
-    spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled",
-      "false")
-    try {
-      val one = spark.table("d_orders").filter(col("o_orderkey") === 1L)
-      val planStr = one.queryExecution.executedPlan.toString
-      assert(planStr.contains("SelectedBucketsCount: 1 out of 8"),
-        s"expected single-bucket scan, plan:\n$planStr")
-      assert(one.count() <= 1)
-    } finally spark.conf.unset(
-      "spark.sql.sources.bucketing.autoBucketedScan.enabled")
+    // one bucket file, read by one task
+    val one = spark.table("d_orders").filter(col("o_orderkey") === 1L)
+    assert(one.inputFiles.length === 1,
+      s"expected one bucket file, got ${one.inputFiles.toSeq}")
+    assert(one.queryExecution.executedPlan.execute().getNumPartitions === 1,
+      "a single-shard read must run one task")
+    assert(one.count() <= 1)
   }
 
   test("materialized view stores the result; refresh recomputes it") {

@@ -43,4 +43,26 @@ class QueryStatsSpec extends AnyFunSuite {
     assert(QueryStats.view(spark).count() === 0)
     QueryStats.uninstall(spark)
   }
+
+  test("one parameterized read with two keys is one statement with " +
+      "calls = 2") {
+    Tables(spark, TestSpark.sf, "orders").createOrReplaceTempView("qs_orders")
+    QueryStats.reset()
+    QueryStats.install(spark)
+    try {
+      val text = "SELECT o_orderkey, o_totalprice FROM qs_orders " +
+        "WHERE o_orderkey = $1"
+      Seq(1L, 7L).foreach(k => Graft.pgSqlParams(spark, text, k).collect())
+      eventually {
+        // reading the view is a statement of its own; keep the reads'
+        val rows = QueryStats.view(spark).collect()
+          .filter(_.getString(1).contains("o_totalprice"))
+        assert(rows.length === 1, s"expected one statement: ${rows.toSeq}")
+        assert(rows(0).getLong(2) === 2)
+      }
+    } finally {
+      QueryStats.reset()
+      QueryStats.uninstall(spark)
+    }
+  }
 }

@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all suites (sbt runs suites in one JVM). */
+/** One shared local session for all suites (sbt runs suites in one JVM),
+  * with the engine's extensions installed as `Graft.session` installs
+  * them, so the suites check the plans users get. */
 object TestSpark {
   lazy val spark: SparkSession = {
     val wh = java.nio.file.Files.createTempDirectory("graft-warehouse")
@@ -14,6 +16,7 @@ object TestSpark {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir", wh.toUri.toString)
       .config("spark.ui.enabled", "false")
+      .withExtensions(new graft.plans.GraftExtensions)
       .getOrCreate()
   }
 

@@ -3,10 +3,12 @@
 
 Usage: python3 tools/check.py <sfDir> <verifyOutDir>
 
-For each query result parquet under verifyOutDir, runs the matching
-oracle SQL (oracle_sql.json) in DuckDB against the same sfDir tables and
-compares: column names (sorted), row count, and exact values after
-sorting columns by name and rows by all columns.
+Scores every query named in oracle_sql.json: runs its oracle SQL in
+DuckDB against the same sfDir tables and compares it with the query's
+result parquet under verifyOutDir: column names (sorted), row count, and
+exact values after sorting columns by name and rows by all columns. A
+query whose result is missing counts as a failure. Result directories
+without an oracle get a rows-only check.
 """
 import json
 import sys
@@ -32,10 +34,14 @@ def main(sf_dir: str, out_dir: str) -> int:
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     import glob
     import os
-    names = sorted(
-        os.path.basename(p) for p in glob.glob(f"{out_dir}/*") if os.path.isdir(p))
+    outputs = {
+        os.path.basename(p) for p in glob.glob(f"{out_dir}/*") if os.path.isdir(p)}
     n_pass = n_fail = n_noora = 0
-    for name in names:
+    for name in sorted(outputs | set(oracle)):
+        if name not in outputs:
+            print(f"  [FAIL-miss] {name}: no result output")
+            n_fail += 1
+            continue
         got = pd.read_parquet(f"{out_dir}/{name}")
         if name not in oracle:
             print(f"  [rows-only] {name}: rows={len(got)}" +
