@@ -1,88 +1,26 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.plans.PlanChecks
 
 /** Benchmark main: times the headline queries (SparkEntry.benchQueries)
-  * on SPARK_GRAFT_SF_DIR and prints one JSON line for the driver. */
+  * on SPARK_GRAFT_SF_DIR with SPARK_GRAFT_CPUS cores and prints one JSON
+  * line. Runs on [[Graft.session]] with the data-sized confs of
+  * [[Tables.benchConf]]. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Size shuffle partitions to the data, not the core count: target
-    // ~64 MB of (compressed-parquet-equivalent) input per partition.
-    // At sf0.1 that is 1-2 partitions — the QProfile sweep measured
-    // shuffle=1 at 4.94 s/set vs shuffle=32 at 5.47-5.88 (per-task
-    // scheduling dominates tiny shuffles); at cluster scale the same
-    // rule grows into the thousands, which is the point. Clamped to
-    // 4×cores here because local[] can't use more anyway.
-    val files = Option(new java.io.File(sfDir).listFiles())
-      .map(_.filter(_.getName.endsWith(".parquet")).toSeq)
-      .getOrElse(Seq.empty)
-    val inputBytes = files.map(_.length).sum
-    val maxFileBytes = (files.map(_.length) :+ 0L).max
-    // Bytes-derived partition count (~64 MB/partition — the guide §2.2
-    // band); at 100 TB this is the dominant, thousands-sized term.
-    val dataParts = inputBytes / (64L << 20)
-    // Map-side parallelism of the pinned cache (Tables.pinForBench:
-    // fileBytes/1.25MB clamped to cores — the largest fact table sets
-    // it). r14: the reduce must not be NARROWER than the map when the
-    // reduce carries real work (the forced-shuffle joins, q18's
-    // orderkey aggregate) — at shuffle=1 those stages serialize into
-    // one task. Floor the shuffle width at the map parallelism;
-    // measured (PartTune, medians, interleaved single-JVM): bench set
-    // 2.93 → 1.84-1.96 s/set, join_shuffle_fact 0.46 → 0.18-0.20,
-    // q18 0.34 → 0.19. Core-count-ONLY values stay out: at 32
-    // partitions per stage the set degrades to 4.2-5.5 s/set
-    // (85 KB tasks are pure scheduling overhead), so the floor is
-    // bytes-clamped exactly like the cache rule.
-    val mapPar = math.min(cpus.toLong, math.max(1L, maxFileBytes / (1250L << 10)))
-    val shufParts = math.max(1L,
-      math.min(cpus.toLong * 4, math.max(dataParts, mapPar)))
-    // AQE's runtime re-planning (coalesce/skew-split) only has material
-    // to work with when the DATA gives a shuffle many partitions; at a
-    // handful it just adds per-stage re-optimization latency (measured:
-    // 5.27 vs 5.57 s/set at shuffle=1; and its coalescer would fold the
-    // map-parallelism floor above straight back to one task). Keep it
-    // for real data sizes — at 100 TB dataParts is in the thousands and
-    // AQE is load-bearing.
-    val aqe = dataParts >= 8
-    // Scan-split rule, same data-proportional spirit: aim for ~2 scan
-    // tasks per core when the data supports it, never exceeding the
-    // 128 MB cluster default (at 100 TB the default is right; below
-    // ~4 GB local it would leave cores idle on the big fact files).
-    // Floor 16 MB keeps tiny SFs at 1 task (split overhead dominates).
-    val partBytes = math.max(16L << 20,
-      math.min(128L << 20, inputBytes / (cpus.toLong * 2)))
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.files.maxPartitionBytes", partBytes.toString)
-      .config("spark.sql.shuffle.partitions", shufParts.toString)
-      .config("spark.sql.adaptive.enabled", aqe.toString)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", aqe.toString)
-      // measured wins at sf0.1 (see BenchTune): kryo for broadcast/cache
-      // serde, a broadcast threshold that keeps every dim table on the
-      // hash side, and raw in-memory columns (cache is already compact).
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // extra conf overrides for tuning runs: "k=v;k=v"
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.nonEmpty)
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder.config(k, v)
-      })
-    val spark = builder.getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Graft.session(s"local[$cpus]", "graft-bench")
     spark.sparkContext.setLogLevel("WARN")
+    Tables.benchConf(Tables.benchBytes(sfDir), cpus)
+      .foreach { case (k, v) => spark.conf.set(k, v) }
+    def abort(msg: String): Nothing = {
+      System.err.println("BENCH ABORT: " + msg)
+      spark.stop()
+      sys.exit(1)
+    }
 
-    // Sweep hook (not used by the driver): SPARK_GRAFT_BENCH_QUERIES
-    // times an arbitrary comma-separated query list instead of the
-    // headline set (used for the SCALING.md extension-op sweep).
-    val names = sys.env.get("SPARK_GRAFT_BENCH_QUERIES")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(SparkEntry.benchQueries)
+    val names = SparkEntry.benchQueries
     val qmap = SparkEntry.queries
     // Plan pin: the forced-shuffle entry must actually BE the shuffle
     // join it claims to time. The shuffle_hash hint (r13: was merge
@@ -91,16 +29,13 @@ object Bench {
     // it ever degrades to a broadcast join the bench would silently
     // time the wrong plan — fail loudly instead (the recorded number
     // is a per-round tracked artifact).
-    if (names.contains("join_shuffle_fact")) {
+    locally {
       val df = qmap("join_shuffle_fact")(spark, sfDir)
-      if (!graft.plans.PlanChecks.hasShuffledHashJoin(df) ||
-          graft.plans.PlanChecks.hasBroadcastHashJoin(df)) {
-        System.err.println("BENCH ABORT: join_shuffle_fact plan " +
-          "degraded — expected ShuffledHashJoin with no " +
-          "BroadcastHashJoin, got:\n" + df.queryExecution.executedPlan)
-        spark.stop()
-        sys.exit(1)
-      }
+      if (!PlanChecks.hasShuffledHashJoin(df) ||
+          PlanChecks.hasBroadcastHashJoin(df))
+        abort("join_shuffle_fact plan degraded — expected " +
+          "ShuffledHashJoin with no BroadcastHashJoin, got:\n" +
+          df.queryExecution.executedPlan)
     }
     // Same pin for the expression-key entry: the supplier link hashes
     // on pmod(l_partkey*l_suppkey,100) — colocation is impossible, so
@@ -108,38 +43,46 @@ object Bench {
     // computed key (the reference's single-hash repartition join,
     // which is itself a hash join per fragment pair). The shuffle_hash
     // hint must hold as a ShuffledHashJoin; the dim joins are SUPPOSED
-    // to broadcast, so only the SHJ presence is asserted.
-    if (names.contains("ch_market_share_repartition")) {
-      val df = qmap("ch_market_share_repartition")(spark, sfDir)
-      // r14 (ADVICE r13): identify the forced join by its keys —
-      // link_key (the aliased pmod computed key) vs s_suppkey — so the
-      // pin cannot pass with the supplier link degraded while some
-      // OTHER join happens to be shuffled-hash.
-      val plan = graft.plans.PlanChecks.executedPlan(df)
-      if (graft.plans.PlanChecks
-          .shuffledHashJoinsOn(plan, "link_key", "s_suppkey").isEmpty) {
-        System.err.println("BENCH ABORT: ch_market_share_repartition " +
-          "plan degraded — expected the expression-key (link_key = " +
-          "s_suppkey) ShuffledHashJoin, got:\n" + plan)
-        spark.stop()
-        sys.exit(1)
-      }
+    // to broadcast, so only the SHJ presence is asserted. The forced
+    // join is identified by its keys — link_key (the aliased pmod
+    // computed key) vs s_suppkey — so the pin cannot pass with the
+    // supplier link degraded while some OTHER join is shuffled-hash.
+    locally {
+      val plan = PlanChecks.executedPlan(
+        qmap("ch_market_share_repartition")(spark, sfDir))
+      if (PlanChecks.shuffledHashJoinsOn(plan, "link_key", "s_suppkey").isEmpty)
+        abort("ch_market_share_repartition plan degraded — expected the " +
+          "expression-key (link_key = s_suppkey) ShuffledHashJoin, got:\n" +
+          plan)
     }
+
+    // A pass that throws must not record a fast, flattering time:
+    // correctness is gated separately (Verify), but a *crashing*
+    // query would otherwise corrupt the per-round time-series silently.
+    // Count failures per entry, and abort the bench after the warm-up
+    // or the timed passes if any occurred.
+    val failures = scala.collection.mutable.Map[String, Int]()
+    def run(n: String): Double = {
+      val t0 = System.nanoTime()
+      try qmap(n)(spark, sfDir).write.format("noop").mode("overwrite").save()
+      catch {
+        case e: Throwable =>
+          failures(n) = failures.getOrElse(n, 0) + 1
+          System.err.println(s"BENCH FAILURE in $n: $e")
+      }
+      (System.nanoTime() - t0) / 1e9
+    }
+    def abortOnFailures(phase: String): Unit =
+      if (failures.nonEmpty)
+        abort(s"$phase passes threw — " +
+          failures.map { case (n, c) => s"$n x$c" }.mkString(", "))
+
     // Pin the working set in memory (buffer-pool analogue) and warm up
     // (JIT/C2 + codegen caches — steady state needs ~4 passes in a
     // fresh JVM; the 2-pass timed total was ~1s slower); not timed.
     Tables.pinForBench(spark, sfDir)
-    if (sys.env.contains("SPARK_GRAFT_BENCH_QUERIES"))
-      Seq("documents", "embeddings", "events").foreach { n =>
-        val df = Tables(spark, sfDir, n).cache(); df.count()
-        Tables.pin((sfDir, n), df)
-      }
-    (1 to 4).foreach { _ =>
-      names.foreach { n =>
-        try qmap(n)(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-      }
-    }
+    (1 to 4).foreach(_ => names.foreach(run))
+    abortOnFailures("warm-up")
     // Machine-load context: ambient load inflated a recorded round
     // total by ~23% once (r5; a quiet rerun reproduced r4's numbers).
     // Record the 1-minute loadavg before and after the timed passes so
@@ -154,8 +97,7 @@ object Bench {
     // day-to-day variance measured in SCALING.md). Time 5 passes per
     // query, report the median, and carry min/max so a regression can
     // be told apart from load.
-    val timedPasses = sys.env.get("SPARK_GRAFT_BENCH_PASSES")
-      .flatMap(_.toIntOption).getOrElse(5)
+    val timedPasses = 5
     // The shuffle-join entries drifted upward two rounds in a row at 5
     // passes while staying inside their own min/max bands (r7 "What's
     // wrong" #2) — 9 passes tightens their medians so drift can be
@@ -174,30 +116,10 @@ object Bench {
       "q1_pricing_summary", "q5_local_supplier",
       "q18_large_volume_customer")
     def passesFor(n: String): Int =
-      if (slowJoinEntries(n)) math.max(timedPasses, 9) else timedPasses
-    // A timed pass that throws must not record a fast, flattering time:
-    // correctness is gated separately by the driver, but a *crashing*
-    // query would otherwise corrupt the per-round time-series silently.
-    // Count failures per entry and abort the whole bench if any occur.
-    val failures = scala.collection.mutable.Map[String, Int]()
-    val samples: Map[String, Seq[Double]] = names.map { n =>
-      n -> (1 to passesFor(n)).map { _ =>
-        val t0 = System.nanoTime()
-        try qmap(n)(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch {
-          case e: Throwable =>
-            failures(n) = failures.getOrElse(n, 0) + 1
-            System.err.println(s"BENCH FAILURE in timed pass of $n: $e")
-        }
-        (System.nanoTime() - t0) / 1e9
-      }
-    }.toMap
-    if (failures.nonEmpty) {
-      System.err.println("BENCH ABORT: timed passes threw — " +
-        failures.map { case (n, c) => s"$n x$c" }.mkString(", "))
-      spark.stop()
-      sys.exit(1)
-    }
+      if (slowJoinEntries(n)) 9 else timedPasses
+    val samples: Map[String, Seq[Double]] =
+      names.map(n => n -> (1 to passesFor(n)).map(_ => run(n))).toMap
+    abortOnFailures("timed")
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
       if (s.size % 2 == 1) s(s.size / 2)

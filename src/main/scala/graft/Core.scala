@@ -50,49 +50,96 @@ object Tables {
     * cached plans are bound to their session). */
   def unpin(): Unit = pinned.clear()
 
-  private[graft] def pin(key: (String, String), df: DataFrame): Unit =
-    pinned.put(key, df)
+  /** The star-schema tables [[pinForBench]] pins: the bench's working
+    * set, and the input [[benchConf]] is sized over. */
+  val benchTables: Seq[String] = Seq(
+    "region", "nation", "customer", "supplier", "part", "orders", "lineitem")
 
   /** Cache + materialize the star-schema tables for benchmarking.
     *
     * Partitioning (revised r14): each sf0.1 parquet file holds ONE row
     * group, so Spark's split rule cannot give the scan more than one
     * real task no matter what maxPartitionBytes says — every map stage
-    * over a naturally-cached table is single-threaded (StageProfile
-    * r14: the "3-task" lineitem stages carry all 600k rows in one
+    * over a naturally-cached table is single-threaded (r14 stage
+    * profile: the "3-task" lineitem stages carry all 600k rows in one
     * task). On a real cluster the cache inherits the file layout
     * (thousands of multi-row-group splits); the single-row-group file
     * is a small-SF artifact. Restore the parallelism the data
     * supports by ROUND-ROBIN repartitioning each table at pin time to
-    * clamp(fileBytes / 1.25 MB, 1, defaultParallelism) — ~5 MB
-    * deserialized per partition (parquet→row expansion ~4×), i.e.
-    * 20-40 ms map tasks: big enough that per-task scheduling (~2 ms)
-    * is noise, small enough to engage the cores the data can use.
+    * [[mapParallelism]] partitions.
     * Round-robin (not hash-by-key) deliberately: a key-partitioned
     * cache would satisfy ENSURE_REQUIREMENTS and silently REMOVE the
     * exchanges the forced-shuffle bench entries exist to time.
-    * Measured (PartTune r14, medians over interleaved passes,
+    * Measured (r14 partition sweep, medians over interleaved passes,
     * local[32] sf0.1): bench set 2.93→1.96 s/set at parts=8 vs
     * natural; the r13-era "parts>1 loses" result was mean-based and
     * confounded with shuffle=8 + ambient load — per-query medians
-    * reverse it.
-    *
-    * The r1 negative (repartition(32) 2× worse) stands for CORE-COUNT
-    *-derived values: 32 partitions of a 2.7 MB orders file is ~85 KB
-    * per task, pure scheduling overhead. The bytes rule keeps orders
-    * at 2 and dims at 1. */
+    * reverse it. */
   def pinForBench(spark: SparkSession, dir: String): Unit = {
-    val cores = spark.sparkContext.defaultParallelism.toLong
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem").foreach { n =>
-      val bytes = parquetBytes(new java.io.File(s"$dir/$n.parquet"))
-      val parts =
-        math.min(cores, math.max(1L, bytes / (1250L << 10))).toInt
+    val cores = spark.sparkContext.defaultParallelism
+    benchTables.zip(benchBytes(dir)).foreach { case (n, bytes) =>
+      val parts = mapParallelism(bytes, cores)
       val base = apply(spark, dir, n)
       val df = (if (parts > 1) base.repartition(parts) else base).cache()
       df.count()
       pinned.put((dir, n), df)
     }
+  }
+
+  /** Partitions of a pinned table of `bytes` parquet bytes:
+    * clamp(bytes / 1.25 MB, 1, cores) — ~5 MB deserialized per
+    * partition (parquet→row expansion ~4×), i.e. 20-40 ms map tasks:
+    * big enough that per-task scheduling (~2 ms) is noise, small
+    * enough to engage the cores the data can use. The r1 negative
+    * (repartition(32) 2× worse) stands for CORE-COUNT-derived values:
+    * 32 partitions of a 2.7 MB orders file is ~85 KB per task, pure
+    * scheduling overhead. The bytes rule keeps orders at 2 and dims
+    * at 1. */
+  def mapParallelism(bytes: Long, cores: Int): Int =
+    math.min(cores.toLong, math.max(1L, bytes / (1250L << 10))).toInt
+
+  /** Parquet bytes of each of [[benchTables]] under `dir`. */
+  def benchBytes(dir: String): Seq[Long] =
+    benchTables.map(n => parquetBytes(new java.io.File(s"$dir/$n.parquet")))
+
+  /** The bench's data-sized SQL confs: a pure function of the pinned
+    * tables' parquet bytes ([[benchBytes]]) and the core count. All are
+    * runtime confs, applied with `spark.conf.set` on a [[Graft.session]].
+    *
+    *  - Shuffle width is sized to the data, not the core count: ~64 MB
+    *    of parquet input per partition. At sf0.1 that term is 0 — a
+    *    width sweep measured shuffle=1 at 4.94 s/set vs shuffle=32
+    *    at 5.47-5.88 (per-task scheduling dominates tiny shuffles); at
+    *    cluster scale the same rule grows into the thousands. Clamped
+    *    to 4×cores because local[] can't use more anyway.
+    *  - The reduce must not be NARROWER than the map when it carries
+    *    real work (the forced-shuffle joins, q18's orderkey aggregate):
+    *    at shuffle=1 those stages serialize into one task. So the width
+    *    is floored at the largest table's [[mapParallelism]] (r14,
+    *    medians, interleaved single-JVM: bench set 2.93 → 1.84-1.96
+    *    s/set, join_shuffle_fact 0.46 → 0.18-0.20, q18 0.34 → 0.19).
+    *  - AQE's runtime re-planning (coalesce/skew-split) only has
+    *    material when the DATA gives a shuffle many partitions; at a
+    *    handful it adds per-stage re-optimization latency (5.27 vs 5.57
+    *    s/set at shuffle=1), and its coalescer would fold the map
+    *    floor straight back to one task. On from 8 data partitions.
+    *  - Scan split: ~2 scan tasks per core when the data supports it,
+    *    never above the 128 MB cluster default, floored at 16 MB so tiny
+    *    SFs stay at 1 task (split overhead dominates). */
+  def benchConf(tableBytes: Seq[Long], cores: Int): Map[String, String] = {
+    val inputBytes = tableBytes.sum
+    val dataParts = inputBytes / (64L << 20)
+    val mapPar = mapParallelism((tableBytes :+ 0L).max, cores)
+    val shufParts = math.max(1L,
+      math.min(cores.toLong * 4, math.max(dataParts, mapPar.toLong)))
+    val aqe = (dataParts >= 8).toString
+    val partBytes = math.max(16L << 20,
+      math.min(128L << 20, inputBytes / (cores.toLong * 2)))
+    Map(
+      "spark.sql.files.maxPartitionBytes" -> partBytes.toString,
+      "spark.sql.shuffle.partitions" -> shufParts.toString,
+      "spark.sql.adaptive.enabled" -> aqe,
+      "spark.sql.adaptive.coalescePartitions.enabled" -> aqe)
   }
 
   /** Bytes of a parquet table: the file itself, or the sum of the part
@@ -165,7 +212,7 @@ object Dsl {
     * Spark's Round on DoubleType codegens to a per-row
     * java.math.BigDecimal.setScale, which allocates on every row of
     * every money column and dominated the bench agg stages (r13
-    * CentsTune A/B: q1 0.399→0.240 s). floor is fused double
+    * A/B, OPTIMIZATION_r13.md: q1 0.399→0.240 s). floor is fused double
     * arithmetic in codegen. Equivalence: the true value is an integer
     * n in cents and the double error δ ≪ 0.5, so x*100+0.5 ∈
     * (n+0.5−δ, n+0.5+δ) and floor picks n — the same integer HALF_UP

@@ -1,60 +1,65 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.plans.PlanChecks
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 
 /** Dev tool: dump physical-plan quality for the headline queries into
   * EXPLAINS.md — per-query exchange counts, join strategies, aggregate
-  * modes, and the formatted plan, captured AFTER AQE finalizes (the
-  * plan that actually ran). This is the ".explain and iterate" record:
-  * reviewers can see each headline plan is the intended one (broadcasts
-  * on dims, partial/final aggs, TakeOrderedAndProject for top-k, no
-  * redundant exchanges).
+  * modes, and the formatted plan. It runs what Bench times: the
+  * [[Graft.session]] with [[Tables.benchConf]] applied, over the pinned
+  * cache, on SPARK_GRAFT_SF_DIR with SPARK_GRAFT_CPUS cores; each plan
+  * is captured after a run (the plan that actually ran). This is the
+  * ".explain and iterate" record: readers can see each headline plan
+  * is the intended one (broadcasts on dims, partial/final aggs,
+  * TakeOrderedAndProject for top-k, no redundant exchanges).
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Graft.session(s"local[$cpus]", "graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
+    val conf = Tables.benchConf(Tables.benchBytes(sfDir), cpus)
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    Tables.pinForBench(spark, sfDir)
     val qmap = SparkEntry.queries
     val sb = new StringBuilder
-    sb ++= "# EXPLAINS — headline-query physical plans (post-AQE)\n\n"
-    sb ++= s"Generated by `graft.ExplainDump` on `$sfDir`. For each " +
-      "headline query: exchange count, join/aggregate strategy mix, " +
-      "and the executed plan tree.\n"
+    sb ++= "# EXPLAINS — headline-query physical plans\n\n"
+    sb ++= s"Generated by `graft.ExplainDump` on `$sfDir` at " +
+      s"`local[$cpus]`: the bench's session and data-sized confs (" +
+      conf.toSeq.sorted.map { case (k, v) => s"`$k=$v`" }.mkString(", ") +
+      ") over the pinned cache. For each headline query: exchange " +
+      "count (the cache's round-robin exchange ran once, at pin time, " +
+      "and is not counted), join/aggregate strategy mix, and the " +
+      "executed plan tree.\n"
     // the bench headliners + the r11 scale-safe WITH TIES plan (its
     // r10 adjudication was the one weak plan — the pin here shows
     // the threshold-then-filter shape with zero Window nodes)
     (SparkEntry.benchQueries :+ "sort_fetch_with_ties").foreach { n =>
-      val df = qmap(n)(spark, sfDir)
-      df.write.format("noop").mode("overwrite").save()
-      val plan = graft.plans.PlanChecks.executedPlan(df)
-      val tree = plan.toString
-      val shuffles = tree.split("\n").count(_.contains("Exchange"))
-      val kinds = plan.collect { case p => p.nodeName }.groupBy(identity)
+      val plan = PlanChecks.executedPlan(qmap(n)(spark, sfDir))
+      val nodes = PlanChecks.nodesOf(plan)
+      val shuffles = nodes.count(_.isInstanceOf[ShuffleExchangeLike])
+      val kinds = nodes.map(_.nodeName).groupBy(identity)
         .map { case (k, v) => s"$k ×${v.size}" }.toSeq.sorted
         .filter(k => k.contains("Join") || k.contains("Exchange") ||
           k.contains("Aggregate") || k.contains("TakeOrdered"))
       sb ++= s"\n## $n\n\n"
       sb ++= s"exchanges=$shuffles :: ${kinds.mkString(", ")}\n\n"
-      sb ++= "```\n" + tree.split("\n").take(40).map(_.take(120))
+      sb ++= "```\n" + plan.toString.split("\n").take(60).map(_.take(120))
         .mkString("\n") + "\n```\n"
       println(s"PLAN $n :: exchanges=$shuffles :: ${kinds.mkString(", ")}")
     }
     sb ++= joinOrderNote
     java.nio.file.Files.write(java.nio.file.Paths.get("EXPLAINS.md"),
       sb.toString.getBytes("UTF-8"))
+    Tables.unpin()
     spark.stop()
   }
 
   /** Static analysis section (regenerated with the file): where AQE's
     * join order differs from the reference's greedy left-deep planner
     * on the `multi_join_order_additional.sql` battery, and why the
-    * resulting plan is equal or better. Plans captured via
-    * `Test/runMain graft.JoinOrderDump`. */
+    * resulting plan is equal or better. */
   private def joinOrderNote: String =
     """
 ## Join-order note — multi_join_order_additional.sql vs greedy left-deep
@@ -64,8 +69,7 @@ choosing per step the cheapest applicable rule in a fixed precedence
 (reference join → local partition join → single-partition →
 dual-partition → cartesian; `planner/multi_join_order.c:286`).
 Catalyst orders joins by cost (stats + AQE runtime re-planning).
-Observed differences on the battery's own queries
-(`Test/runMain graft.JoinOrderDump`, post-AQE plans):
+Observed differences on the battery's own queries (post-AQE plans):
 
 1. **Self-join on the distribution key** (`l1.l_orderkey =
    l2.l_orderkey`): the reference emits a *local partition join*

@@ -36,19 +36,33 @@ import org.apache.spark.sql.SparkSession
   */
 object Graft {
 
-  /** Session with the engine's extensions and scale-sane defaults
-    * installed (shuffle partitions should still be sized to data —
-    * see Bench for the auto-sizing rule). */
+  /** The engine's session: [[plans.GraftExtensions]] installed, AQE on,
+    * UTC, and the static settings the sf0.1 bench measured as wins:
+    * kryo for broadcast/cache serde, a 64 MB broadcast threshold that
+    * keeps every dim table on the hash side, and raw in-memory columns
+    * (the cache is already compact).
+    * Settings that depend on the data size (shuffle width, split size,
+    * AQE at small sizes) are runtime confs: see [[Tables.benchConf]]. */
   def session(master: String = "local[*]", appName: String = "graft")
       : SparkSession =
+    builder(master, appName).getOrCreate()
+
+  /** The builder [[session]] finishes; the one place a session is
+    * configured (the test session adds only its own warehouse dir and
+    * shuffle width). */
+  private[graft] def builder(master: String, appName: String)
+      : SparkSession.Builder =
     SparkSession.builder()
       .master(master)
       .appName(appName)
+      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
+      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
+      .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
       .withExtensions(new plans.GraftExtensions)
-      .getOrCreate()
 
   val catalog: graft.catalog.DistributionCatalog.type =
     graft.catalog.DistributionCatalog

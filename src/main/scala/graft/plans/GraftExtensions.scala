@@ -26,10 +26,8 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
   *   - SQL function `simhash64(array<string>)` → the native single-pass
   *     expression.
   *
-  * Install with:
-  * {{{
-  * SparkSession.builder().withExtensions(new GraftExtensions)
-  * }}}
+  * [[graft.Graft.session]] installs them; it is the one place a
+  * session is built.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {

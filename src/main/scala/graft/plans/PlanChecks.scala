@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Expression, NamedExpression}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
@@ -53,19 +54,24 @@ object PlanChecks {
     * shuffled-hash). */
   def nodesOf(plan: SparkPlan): Seq[SparkPlan] = collectAll(plan)
 
-  /** The ShuffledHashJoin nodes whose left/right join keys reference
-    * the given attribute names (or whose key expression text contains
-    * them — covers a collapsed alias). Identifies the forced
-    * expression-key join among several shuffle-capable joins. */
+  /** The ShuffledHashJoin nodes whose left/right join keys name the
+    * given attributes: a key matches when it references an attribute
+    * of exactly that name or carries an alias of that name (a
+    * collapsed projection). Identifies the forced expression-key join
+    * among several shuffle-capable joins; `s_suppkey` does not match a
+    * `ps_suppkey` key. */
   def shuffledHashJoinsOn(plan: SparkPlan, leftKey: String,
-      rightKey: String): Seq[ShuffledHashJoinExec] =
+      rightKey: String): Seq[ShuffledHashJoinExec] = {
+    def named(keys: Seq[Expression], name: String): Boolean =
+      keys.exists(_.exists {
+        case n: NamedExpression => n.name == name
+        case _ => false
+      })
     collectAll(plan).collect {
       case j: ShuffledHashJoinExec
-          if j.leftKeys.exists(k => k.references.exists(_.name == leftKey) ||
-            k.toString.contains(leftKey)) &&
-            j.rightKeys.exists(k => k.references.exists(_.name == rightKey) ||
-              k.toString.contains(rightKey)) => j
+          if named(j.leftKeys, leftKey) && named(j.rightKeys, rightKey) => j
     }
+  }
 
   /** Scan-level pushdown check: every parquet scan's pushed filters. */
   def pushedFilters(df: DataFrame): Seq[String] = {

@@ -240,7 +240,7 @@ object ChBenchQueries extends QueryModule {
     * Bench.scala asserts the ShuffledHashJoin before timing.
     *
     * r13 optimization (guide §2.3/§2.4/§3.1), measured interleaved
-    * in one JVM (JoinTune): median 1.37 → 0.74 s, min 0.88 → 0.71 s,
+    * in one JVM (OPTIMIZATION_r13.md): median 1.37 → 0.74 s, min 0.88 → 0.71 s,
     * value-checked identical results:
     *  - the colocated fact pair (lineitem⋈orders on the distribution
     *    key — zero-movement in the reference's layout) joins BEFORE

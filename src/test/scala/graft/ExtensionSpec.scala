@@ -4,8 +4,7 @@ import graft.operators.Dedup
 import graft.sql.PgDialect
 import graft.sources.Ingest
 import graft.catalog.DistributionCatalog
-import graft.plans.{GraftExtensions, PlanChecks}
-import org.apache.spark.sql.SparkSession
+import graft.plans.PlanChecks
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -598,42 +597,33 @@ class ExtensionSpec extends AnyFunSuite {
   }
 
   test("reference tables auto-broadcast via the optimizer rule") {
-    // getOrCreate reuses the default session (ignoring withExtensions),
-    // so detach it first; the SparkContext is still shared.
-    SparkSession.clearDefaultSession()
-    SparkSession.clearActiveSession()
-    val extSpark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-ext-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir",
-        spark.conf.get("spark.sql.warehouse.dir"))
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    // the threshold is a runtime conf: turn auto-broadcast off on the
+    // shared session for this test and restore it afterwards
+    val thresholdKey = "spark.sql.autoBroadcastJoinThreshold"
+    val savedThreshold = spark.conf.get(thresholdKey)
+    spark.conf.set(thresholdKey, "-1")
     try {
       DistributionCatalog.reset()
-      DistributionCatalog.createDistributedTable(extSpark,
-        Tables(extSpark, TestSpark.sf, "orders"), "ext_orders", "o_orderkey",
+      DistributionCatalog.createDistributedTable(spark,
+        Tables(spark, TestSpark.sf, "orders"), "ext_orders", "o_orderkey",
         buckets = 4)
-      DistributionCatalog.createReferenceTable(extSpark,
-        Tables(extSpark, TestSpark.sf, "nation"), "ext_nation")
+      DistributionCatalog.createReferenceTable(spark,
+        Tables(spark, TestSpark.sf, "nation"), "ext_nation")
       // no explicit broadcast() and threshold is -1: only the rule can
       // make this a BroadcastHashJoin
-      val j = extSpark.table("ext_orders")
-        .join(extSpark.table("ext_nation"),
+      val j = spark.table("ext_orders")
+        .join(spark.table("ext_nation"),
           col("o_custkey") % 25 === col("n_nationkey"))
       assert(PlanChecks.hasBroadcastHashJoin(j))
       // SQL function registration
-      val sig = extSpark.sql(
+      val sig = spark.sql(
         "SELECT simhash64(array('a','b','c')) AS s").collect()(0).getLong(0)
       assert(sig !== 0L)
 
       // LIMIT approximation rule: with the GUC-analogue conf set, each
       // partition feeds at most N rows into the aggregate.
       import graft.plans.ApproximateLimit
-      val grouped = Tables(extSpark, TestSpark.sf, "lineitem")
+      val grouped = Tables(spark, TestSpark.sf, "lineitem")
         .groupBy(col("l_partkey")).count().limit(5)
       def aggInputLimited(plan: org.apache.spark.sql.DataFrame): Boolean =
         plan.queryExecution.optimizedPlan.collect {
@@ -642,13 +632,13 @@ class ExtensionSpec extends AnyFunSuite {
                 org.apache.spark.sql.catalyst.plans.logical.LocalLimit] => a
         }.nonEmpty
       assert(!aggInputLimited(grouped)) // off by default
-      extSpark.conf.set(ApproximateLimit.ConfKey, "100")
+      spark.conf.set(ApproximateLimit.ConfKey, "100")
       try {
-        val approx = Tables(extSpark, TestSpark.sf, "lineitem")
+        val approx = Tables(spark, TestSpark.sf, "lineitem")
           .groupBy(col("l_partkey")).count().limit(5)
         assert(aggInputLimited(approx))
         assert(approx.collect().length === 5)
-      } finally extSpark.conf.set(ApproximateLimit.ConfKey, "0")
+      } finally spark.conf.set(ApproximateLimit.ConfKey, "0")
 
       // count(DISTINCT) error-rate rule: conf >0 replans the exact
       // distinct count as a HyperLogLog++ sketch.
@@ -662,23 +652,23 @@ class ExtensionSpec extends AnyFunSuite {
                 case _ => false
               }) => a
         }.nonEmpty
-      val li = Tables(extSpark, TestSpark.sf, "lineitem")
+      val li = Tables(spark, TestSpark.sf, "lineitem")
       val exactDf = li.agg(countDistinct(col("l_partkey")).as("n"))
       assert(!hllPlanned(exactDf)) // off by default
       val exact = exactDf.collect()(0).getLong(0)
-      extSpark.conf.set(ApproxCountDistinct.ConfKey, "0.02")
+      spark.conf.set(ApproxCountDistinct.ConfKey, "0.02")
       try {
         val approxDf = li.agg(countDistinct(col("l_partkey")).as("n"))
         assert(hllPlanned(approxDf))
         val est = approxDf.collect()(0).getLong(0)
         assert(math.abs(est - exact).toDouble / exact < 0.05,
           s"HLL estimate $est vs exact $exact")
-      } finally extSpark.conf.set(ApproxCountDistinct.ConfKey, "0")
+      } finally spark.conf.set(ApproxCountDistinct.ConfKey, "0")
 
       // PgSession maps the citus GUC onto the rule's conf: SETting
       // citus.count_distinct_error_rate flips the same plan to HLL
       locally {
-        val psess = new graft.sql.PgSession(extSpark)
+        val psess = new graft.sql.PgSession(spark)
         psess.execute("SET citus.count_distinct_error_rate = 0.02")
         try assert(hllPlanned(
           li.agg(countDistinct(col("l_partkey")).as("n"))))
@@ -702,7 +692,7 @@ class ExtensionSpec extends AnyFunSuite {
           })
         all(df.queryExecution.executedPlan).map(_.getClass.getSimpleName)
       }
-      val pts = Tables(extSpark, TestSpark.sf, "orders")
+      val pts = Tables(spark, TestSpark.sf, "orders")
         .select(col("o_orderkey"), col("o_orderdate").as("ts"))
       val iv = pts.select(date_trunc("month", col("ts")).as("ws")).distinct()
         .select(col("ws"), (col("ws") + expr("INTERVAL 10 DAYS")).as("we"))
@@ -712,7 +702,7 @@ class ExtensionSpec extends AnyFunSuite {
       assert(offNames.exists(n => n.contains("NestedLoop") ||
         n.contains("Cartesian")), s"expected a loop join when off: $offNames")
       val offRows = contained.count()
-      extSpark.conf.set(RangeJoinRewrite.ConfKey, "86400")
+      spark.conf.set(RangeJoinRewrite.ConfKey, "86400")
       try {
         val onNames = planNames(contained)
         assert(!onNames.exists(n => n.contains("NestedLoop") ||
@@ -728,28 +718,28 @@ class ExtensionSpec extends AnyFunSuite {
         assert(!flipNames.exists(n => n.contains("NestedLoop") ||
           n.contains("Cartesian")), s"flipped rewrite missing: $flipNames")
         assert(flipped.count() === offRows)
-      } finally extSpark.conf.set(RangeJoinRewrite.ConfKey, "0")
+      } finally spark.conf.set(RangeJoinRewrite.ConfKey, "0")
 
       // repartition-join guard (citus.enable_repartition_joins OFF):
       // non-colocated distributed⋈distributed raises; the colocated
       // dist-key join and reference joins still pass.
       import graft.plans.RepartitionJoinGuard
-      DistributionCatalog.createDistributedTable(extSpark,
-        Tables(extSpark, TestSpark.sf, "lineitem")
+      DistributionCatalog.createDistributedTable(spark,
+        Tables(spark, TestSpark.sf, "lineitem")
           .withColumnRenamed("l_orderkey", "o_orderkey"),
         "ext_lineitem", "o_orderkey", buckets = 4,
         colocateWith = Some("ext_orders"))
-      extSpark.conf.set(RepartitionJoinGuard.ConfKey, "false")
+      spark.conf.set(RepartitionJoinGuard.ConfKey, "false")
       try {
-        assert(extSpark.table("ext_orders")
-          .join(extSpark.table("ext_lineitem"), "o_orderkey")
+        assert(spark.table("ext_orders")
+          .join(spark.table("ext_lineitem"), "o_orderkey")
           .count() > 0, "colocated dist-key join must pass the guard")
-        assert(extSpark.table("ext_orders")
-          .join(extSpark.table("ext_nation"),
+        assert(spark.table("ext_orders")
+          .join(spark.table("ext_nation"),
             col("o_custkey") % 25 === col("n_nationkey"))
           .count() > 0, "reference join must pass the guard")
-        val bad = extSpark.table("ext_orders")
-          .join(extSpark.table("ext_lineitem")
+        val bad = spark.table("ext_orders")
+          .join(spark.table("ext_lineitem")
               .withColumnRenamed("o_orderkey", "lk"),
             col("o_custkey") === col("lk"))
         val ex = intercept[Throwable] { bad.count() }
@@ -760,20 +750,17 @@ class ExtensionSpec extends AnyFunSuite {
           s"unexpected failure: $ex")
         // a dist-key equality hidden inside an OR disjunct does NOT
         // guarantee colocated execution — the guard must still raise
-        val lo = extSpark.table("ext_orders")
-        val li = extSpark.table("ext_lineitem")
+        val lo = spark.table("ext_orders")
+        val li = spark.table("ext_lineitem")
         val orJoin = lo.join(li,
           lo("o_orderkey") === li("o_orderkey") ||
             lo("o_custkey") === li("l_partkey"))
         val ex2 = intercept[Throwable] { orJoin.count() }
         assert(allMsgs(ex2).exists(_.contains("requires repartitioning")),
           s"OR-disjunct join must not pass the guard: $ex2")
-      } finally extSpark.conf.set(RepartitionJoinGuard.ConfKey, "true")
+      } finally spark.conf.set(RepartitionJoinGuard.ConfKey, "true")
     } finally {
-      // do NOT stop extSpark — it shares the one SparkContext
-      SparkSession.clearActiveSession()
-      SparkSession.setDefaultSession(spark)
-      SparkSession.setActiveSession(spark)
+      spark.conf.set(thresholdKey, savedThreshold)
       DistributionCatalog.reset()
     }
   }

@@ -85,6 +85,17 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(factPair.nonEmpty,
       s"lineitem ⋈ orders (the colocated pair) must join below the " +
         s"computed-key exchange, not above it; got plan:\n$plan")
+    // Keys match by exact name: a ps_suppkey key is not s_suppkey.
+    import org.apache.spark.sql.functions.col
+    val ps = Tables(spark, TestSpark.sf, "lineitem")
+      .select(col("l_suppkey").as("ps_suppkey"))
+      .join(Tables(spark, TestSpark.sf, "supplier").hint("shuffle_hash"),
+        col("ps_suppkey") === col("s_suppkey"))
+    val psPlan = PlanChecks.executedPlan(ps)
+    assert(PlanChecks.shuffledHashJoinsOn(psPlan, "ps_suppkey", "s_suppkey")
+      .nonEmpty, s"expected the ps_suppkey = s_suppkey join in:\n$psPlan")
+    assert(PlanChecks.shuffledHashJoinsOn(psPlan, "s_suppkey", "s_suppkey")
+      .isEmpty, "a ps_suppkey key must not match s_suppkey")
   }
 
   test("q21: EXISTS/NOT EXISTS plan as semi + anti joins, no subquery re-execution") {

@@ -3,20 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (sbt runs suites in one JVM),
-  * with the engine's extensions installed as `Graft.session` installs
-  * them, so the suites check the plans users get. */
+  * built by the engine's own builder so the suites check the plans
+  * users get; only the warehouse dir and the shuffle width are the
+  * test's own. */
 object TestSpark {
   lazy val spark: SparkSession = {
     val wh = java.nio.file.Files.createTempDirectory("graft-warehouse")
-    SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
+    Graft.builder("local[4]", "graft-test")
       .config("spark.sql.warehouse.dir", wh.toUri.toString)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
+      .config("spark.sql.shuffle.partitions", "4")
       .getOrCreate()
   }
 
