@@ -320,50 +320,49 @@ object PgExtraQueries extends QueryModule {
       FROM c, b GROUP BY 1 ORDER BY 1"""))
 
   /** A statement from the reference's OWN regression corpus
-    * (multi_orderby_limit_pushdown.sql), on the reference's OWN
-    * shipped fixture data (data/users_table.data), inside the
-    * hash-checked oracle gate: Spark runs it through the dialect,
-    * DuckDB reads the same CSV — both engines, same query, same
-    * bytes. Wrapped in a column-aliasing derived table because the
-    * two engines name unaliased computed columns differently. */
+    * (multi_orderby_limit_pushdown.sql), verbatim, inside the
+    * hash-checked oracle gate. Its input is [[BehavioralFixture]], a
+    * seeded in-repo reconstruction with the reference's `users_table`
+    * schema: Spark runs the statement through the dialect and DuckDB
+    * reads the same rendered rows — both engines, same query, same
+    * rows. Wrapped in a column-aliasing derived table because the two
+    * engines name unaliased computed columns differently. */
   private val refVerbatim = GraftQuery(
     "ref_verbatim_orderby_limit",
     (s, dir) => {
-      s.read.schema("user_id int, time timestamp, value_1 int, " +
-          "value_2 int, value_3 double, value_4 bigint")
-        .csv("/root/reference/src/test/regress/data/users_table.data")
+      s.sql(BehavioralFixture.sql.users)
         .createOrReplaceTempView("ref_users_table")
       graft.sql.PgDialect.sql(s,
         """SELECT * FROM (SELECT user_id, sum(value_1) + sum(value_2)
            FROM ref_users_table GROUP BY user_id
            ORDER BY 2 DESC LIMIT 1) AS v(user_id, total)""")
     },
-    Some("""SELECT user_id, CAST(total AS BIGINT) AS total FROM (
+    Some(s"""SELECT user_id, CAST(total AS BIGINT) AS total FROM (
         SELECT user_id, sum(value_1) + sum(value_2) AS total
-        FROM read_csv(
-          '/root/reference/src/test/regress/data/users_table.data',
-          header=false,
-          columns={'user_id':'INT','time':'TIMESTAMP','value_1':'INT',
-                   'value_2':'INT','value_3':'DOUBLE','value_4':'BIGINT'})
+        FROM (${BehavioralFixture.sql.users}) AS ref_users_table
         GROUP BY user_id ORDER BY 2 DESC LIMIT 1)"""))
+
+  /** Both [[BehavioralFixture]] tables as the temp views the
+    * window/subquery corpus names; the oracle's matching CTEs. */
+  private def behavioralViews(s: SparkSession): Unit = {
+    s.sql(BehavioralFixture.sql.users).createOrReplaceTempView("users_table")
+    s.sql(BehavioralFixture.sql.events)
+      .createOrReplaceTempView("events_table")
+  }
+  private def behavioralCtes: String =
+    s"""WITH users_table AS (${BehavioralFixture.sql.users}),
+        events_table AS (${BehavioralFixture.sql.events})"""
 
   /** A second reference-verbatim gate statement, this one stacking
     * DISTINCT ON + a named WINDOW + a join + a LIMIT tail
-    * (window_functions.sql) over both reference fixture CSVs —
+    * (window_functions.sql) over both [[BehavioralFixture]] tables —
     * DuckDB runs its native DISTINCT ON/WINDOW syntax, Spark runs the
-    * dialect's two-level rewrite with the window inlined. */
+    * dialect's two-level rewrite with the window inlined, both over
+    * the same rendered rows. */
   private val refVerbatimWin = GraftQuery(
     "ref_verbatim_window_distinct_on",
     (s, dir) => {
-      val d = "/root/reference/src/test/regress/data"
-      s.read.schema("user_id int, time timestamp, value_1 int, " +
-          "value_2 int, value_3 double, value_4 bigint")
-        .csv(s"$d/users_table.data")
-        .createOrReplaceTempView("users_table")
-      s.read.schema("user_id int, time timestamp, event_type int, " +
-          "value_2 int, value_3 double, value_4 bigint")
-        .csv(s"$d/events_table.data")
-        .createOrReplaceTempView("events_table")
+      behavioralViews(s)
       graft.sql.PgDialect.sql(s,
         """SELECT DISTINCT ON (events_table.user_id, rnk)
              events_table.user_id, rank() OVER my_win AS rnk
@@ -373,16 +372,7 @@ object PgExtraQueries extends QueryModule {
              users_table.value_1 ORDER BY events_table.time DESC)
            ORDER BY rnk DESC, 1 DESC LIMIT 10""")
     },
-    Some("""WITH users_table AS (SELECT * FROM read_csv(
-          '/root/reference/src/test/regress/data/users_table.data',
-          header=false,
-          columns={'user_id':'INT','time':'TIMESTAMP','value_1':'INT',
-                   'value_2':'INT','value_3':'DOUBLE','value_4':'BIGINT'})),
-        events_table AS (SELECT * FROM read_csv(
-          '/root/reference/src/test/regress/data/events_table.data',
-          header=false,
-          columns={'user_id':'INT','time':'TIMESTAMP','event_type':'INT',
-                   'value_2':'INT','value_3':'DOUBLE','value_4':'BIGINT'}))
+    Some(s"""$behavioralCtes
       SELECT DISTINCT ON (events_table.user_id, rnk)
         events_table.user_id, rank() OVER my_win AS rnk
       FROM events_table, users_table
@@ -393,22 +383,15 @@ object PgExtraQueries extends QueryModule {
 
   /** Third reference-verbatim gate statement: quantified comparisons
     * over subqueries (`> ALL` with GROUP BY, correlated `< ANY`) in
-    * the shape of multi_subquery_in_where_reference_clause.sql —
+    * the shape of multi_subquery_in_where_reference_clause.sql, over
+    * both [[BehavioralFixture]] tables —
     * DuckDB runs PG's native ANY/ALL syntax, Spark runs the dialect's
     * NULL-faithful EXISTS rewrites. (max, not avg, as the inner
     * aggregate: order-free, so both engines agree bit-exactly.) */
   private val refVerbatimQuant = GraftQuery(
     "ref_verbatim_quantified_all",
     (s, dir) => {
-      val d = "/root/reference/src/test/regress/data"
-      s.read.schema("user_id int, time timestamp, value_1 int, " +
-          "value_2 int, value_3 double, value_4 bigint")
-        .csv(s"$d/users_table.data")
-        .createOrReplaceTempView("users_table")
-      s.read.schema("user_id int, time timestamp, event_type int, " +
-          "value_2 int, value_3 double, value_4 bigint")
-        .csv(s"$d/events_table.data")
-        .createOrReplaceTempView("events_table")
+      behavioralViews(s)
       graft.sql.PgDialect.sql(s,
         """SELECT user_id, count(*) AS cnt
            FROM users_table
@@ -421,16 +404,7 @@ object PgExtraQueries extends QueryModule {
            GROUP BY user_id
            ORDER BY cnt DESC, user_id LIMIT 10""")
     },
-    Some("""WITH users_table AS (SELECT * FROM read_csv(
-          '/root/reference/src/test/regress/data/users_table.data',
-          header=false,
-          columns={'user_id':'INT','time':'TIMESTAMP','value_1':'INT',
-                   'value_2':'INT','value_3':'DOUBLE','value_4':'BIGINT'})),
-        events_table AS (SELECT * FROM read_csv(
-          '/root/reference/src/test/regress/data/events_table.data',
-          header=false,
-          columns={'user_id':'INT','time':'TIMESTAMP','event_type':'INT',
-                   'value_2':'INT','value_3':'DOUBLE','value_4':'BIGINT'}))
+    Some(s"""$behavioralCtes
       SELECT user_id, count(*) AS cnt
       FROM users_table
       WHERE value_2 >= ALL (SELECT max(value_3) FROM events_table

@@ -22,4 +22,13 @@ class QueriesSmokeSpec extends AnyFunSuite {
   test("every oracle key has a matching query") {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
   }
+
+  test("no oracle statement reads a file by absolute path") {
+    // DuckDB reads a file through read_*('..') or a quoted FROM/JOIN path
+    val absoluteRead = """(?i)(read_\w+\s*\(|\bfrom|\bjoin)\s*'/""".r
+    val bad = SparkEntry.oracleSql.collect {
+      case (name, sql) if absoluteRead.findFirstIn(sql).isDefined => name
+    }
+    assert(bad.isEmpty, s"oracle SQL reads outside the sf tables: $bad")
+  }
 }
