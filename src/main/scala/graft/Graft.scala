@@ -17,7 +17,8 @@ import org.apache.spark.sql.SparkSession
   * Graft.catalog.shardSizes(spark, "fact")      // ≙ citus_shards
   *
   * // DML (≙ MERGE / multi-shard UPDATE / DELETE)
-  * Graft.dml.mergeIntoTable(spark, "fact", changes, "key")
+  * Graft.dml.mergeIntoTable(spark, "fact", changes, "key",
+  *   Graft.dml.MergeClauses(matchedUpdate = Map("v" -> col("s.v"))))
   *
   * // pipelines
   * Graft.dedup.minhashCandidates(docs, "id", "text")

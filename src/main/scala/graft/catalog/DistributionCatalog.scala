@@ -1,6 +1,7 @@
 package graft.catalog
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions.broadcast
 
 import scala.collection.concurrent.TrieMap
@@ -70,19 +71,85 @@ object DistributionCatalog {
         o.colocationId
       case None => nextColocation.getAndIncrement()
     }
+    writeBucketed(df, name, warehousePath(spark, name), buckets, distColumn)
+    val spec = DistributionSpec(name, Hash, Some(distColumn), buckets, coloc)
+    specs.put(name, spec)
+    spec
+  }
+
+  private def writeBucketed(df: DataFrame, name: String, path: String,
+      buckets: Int, distColumn: String): Unit =
     df.write.mode("overwrite")
       .bucketBy(buckets, distColumn)
       .sortBy(distColumn)
-      .option("path", warehousePath(spark, name))
+      .option("path", path)
       // zstd ≙ the reference columnar store's default compression
       // (columnar/README.md:93-101)
       .option("compression", "zstd")
       .format("parquet")
       .saveAsTable(name)
-    val spec = DistributionSpec(name, Hash, Some(distColumn), buckets, coloc)
-    specs.put(name, spec)
-    spec
+
+  /** Snapshot commit of a hash-distributed table's new contents `df`
+    * (in the table's schema), the Delta/Iceberg commit protocol:
+    *   1. write `df` once, bucketed and sorted like the table, to a
+    *      fresh `_v<uuid>` directory under the table's warehouse path,
+    *      through a staging catalog entry (bucketed writes need
+    *      `saveAsTable`); Spark's file listing skips `_` names, so a
+    *      reader of the old location never sees the new files;
+    *   2. point the catalog table at the new directory — its bucket
+    *      spec and its [[DistributionSpec]] (colocation id included)
+    *      stay as they are;
+    *   3. delete everything else under the table's warehouse path: the
+    *      previous version and whatever an interrupted commit left.
+    *      Files outside the warehouse path are never deleted.
+    * If anything fails before step 2, the old version stays readable
+    * and routable, and the staging entry and directory are removed.
+    * `df` may read the table itself: the write never touches the files
+    * it reads. `s` must be hash-bucketed with a distribution column. */
+  def commitVersion(spark: SparkSession, s: DistributionSpec,
+      df: DataFrame): Unit = {
+    val name = s.table
+    val catalog = spark.sessionState.catalog
+    val meta = catalog.getTableMetadata(TableIdentifier(name))
+    val token = java.util.UUID.randomUUID().toString.replace("-", "")
+    val staging = TableIdentifier(s"${name}__v$token")
+    val dir = new java.io.File(warehousePath(spark, name))
+    val next = new java.io.File(dir, s"_v$token")
+    var committed = false
+    try {
+      writeBucketed(df, staging.table, next.getPath, s.bucketCount,
+        s.distColumn.get)
+      catalog.alterTable(meta.copy(stats = None,
+        storage = meta.storage.copy(locationUri = Some(next.toURI))))
+      committed = true
+    } finally {
+      // the staging entry is external: dropping it keeps its files
+      catalog.dropTable(staging, ignoreIfNotExists = true, purge = false)
+      if (!committed) deleteTree(next)
+    }
+    spark.catalog.refreshTable(name)
+    // every version lives under the warehouse path: keep only `next`
+    Option(dir.listFiles()).getOrElse(Array.empty)
+      .filterNot(_.getCanonicalFile == next.getCanonicalFile)
+      .foreach(deleteTree)
   }
+
+  private def deleteTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteTree)
+    f.delete()
+  }
+
+  /** The directory a catalog table's files live in: after a
+    * [[commitVersion]] that is a `_v…` directory under the warehouse
+    * path, not the warehouse path itself. */
+  private def tableDir(spark: SparkSession, name: String): java.io.File =
+    new java.io.File(spark.sessionState.catalog
+      .getTableMetadata(TableIdentifier(name)).location)
+
+  /** True when [[isolateTenant]] moved some of `name`'s keys into
+    * tables of their own. */
+  def hasIsolatedTenants(name: String): Boolean =
+    isolatedTenants.get(name).exists(_.nonEmpty)
 
   /** Reference table: stored once, broadcast to every join site. */
   def createReferenceTable(spark: SparkSession, df: DataFrame,
@@ -419,7 +486,7 @@ object DistributionCatalog {
     require(s.method == Hash && s.bucketCount > 0,
       s"$name is not hash-bucketed")
     val bucketRe = "_(\\d{5})[_.]".r
-    val bytes = Option(new java.io.File(warehousePath(spark, name))
+    val bytes = Option(tableDir(spark, name)
         .listFiles()).getOrElse(Array.empty)
       .filter(f => f.isFile && !f.getName.startsWith("_"))
       .flatMap(f => bucketRe.findFirstMatchIn(f.getName)
@@ -439,7 +506,7 @@ object DistributionCatalog {
     // citus_shards lists an isolated tenant's dedicated shard
     val tenantRows = isolatedTenants.getOrElse(name, Map.empty).values
       .toSeq.sorted.map { t =>
-        val sz = Option(new java.io.File(warehousePath(spark, t))
+        val sz = Option(tableDir(spark, t)
             .listFiles()).getOrElse(Array.empty)
           .filter(f => f.isFile && !f.getName.startsWith("_"))
           .map(_.length()).sum
@@ -869,8 +936,7 @@ object DistributionCatalog {
   def analyzeTable(spark: SparkSession, name: String): Long = {
     spark.sql(s"ANALYZE TABLE $name COMPUTE STATISTICS")
     spark.sessionState.catalog
-      .getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(name))
+      .getTableMetadata(TableIdentifier(name))
       .stats.flatMap(_.rowCount).map(_.toLong)
       .getOrElse(spark.table(name).count())
   }

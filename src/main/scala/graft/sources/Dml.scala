@@ -9,13 +9,14 @@ import org.apache.spark.sql.functions._
   * `planner/merge_planner.c:115,73,93` + `executor/merge_executor.c`)
   * re-expressed for immutable columnar storage as copy-on-write dataset
   * transforms: the new table state is COMPUTED distributively (this
-  * module), then written back with the layout preserved
+  * module), then committed as a new snapshot with the layout preserved
   * ([[mergeIntoTable]]), which is what Delta/Iceberg do under a MERGE.
   *
   * Plan-shape parity with the reference's three MERGE strategies:
   *   - pushable (source colocated with target): target bucketed by the
-  *     join key ⇒ Spark plans the full-outer join with an Exchange only
-  *     on the source side;
+  *     join key ⇒ the target side needs no Exchange; a MERGE without an
+  *     insert clause is a left join, so a small source broadcasts and
+  *     the target is read once, in bucket order;
   *   - repartition: non-colocated source ⇒ both sides shuffle — Spark's
   *     standard shuffle join IS citus's repartition executor;
   *   - pull-to-coordinator: never needed (no driver-side row motion).
@@ -79,32 +80,34 @@ object Dml {
       notMatchedInsert: Option[Map[String, Column]] = None)
 
   /** MERGE INTO target t USING source s ON t.targetKey = s.sourceKey —
-    * as the resulting relation. One full-outer join computes all three
-    * row fates: matched (update or delete), source-only (insert or
-    * drop), target-only (keep). */
+    * as the resulting relation. With an insert clause, one full-outer
+    * join computes all three row fates: matched (update or delete),
+    * source-only (insert), target-only (keep). Without one, source-only
+    * rows are always dropped, so a left join computes the other two:
+    * a small source broadcasts and the target needs no exchange. */
   def merge(target: DataFrame, source: DataFrame,
       targetKey: String, sourceKey: String,
       clauses: MergeClauses): DataFrame = {
-    val t = target.withColumn("__t", lit(true)).alias("t")
     val s = source.withColumn("__s", lit(true)).alias("s")
-    val joined = t.join(s,
-      col(s"t.$targetKey") === col(s"s.$sourceKey"), "full_outer")
-    val matched = col("t.__t").isNotNull && col("s.__s").isNotNull
-    val srcOnly = col("t.__t").isNull
-    val keep =
-      when(matched, clauses.matchedDelete
-        .map(d => !coalesce(d, lit(false))).getOrElse(lit(true)))
-      .when(srcOnly, lit(clauses.notMatchedInsert.nonEmpty))
-      .otherwise(lit(true)) // target-only rows always survive
-    val out = target.schema.fields.map { f =>
-      val tcol = col(s"t.${f.name}")
-      val upd = clauses.matchedUpdate.getOrElse(f.name, tcol)
-      val ins = clauses.notMatchedInsert
-        .map(_.getOrElse(f.name, lit(null).cast(f.dataType)))
-        .getOrElse(lit(null).cast(f.dataType))
-      when(matched, upd).when(srcOnly, ins).otherwise(tcol).as(f.name)
+    val on = col(s"t.$targetKey") === col(s"s.$sourceKey")
+    val (joined, matched, srcOnly) = clauses.notMatchedInsert match {
+      case None => (target.alias("t").join(s, on, "left_outer"),
+        col("s.__s").isNotNull, lit(false))
+      case Some(_) =>
+        val t = target.withColumn("__t", lit(true)).alias("t")
+        (t.join(s, on, "full_outer"),
+          col("t.__t").isNotNull && col("s.__s").isNotNull, col("t.__t").isNull)
     }
-    joined.filter(keep).select(out.toIndexedSeq: _*)
+    val kept = clauses.matchedDelete.fold(joined)(d =>
+      joined.filter(!matched || !coalesce(d, lit(false))))
+    kept.select(target.schema.fields.toIndexedSeq.map { f =>
+      val tcol = col(s"t.${f.name}")
+      val upd = clauses.matchedUpdate.get(f.name)
+        .fold(tcol)(when(matched, _).otherwise(tcol))
+      clauses.notMatchedInsert.fold(upd)(ins => when(srcOnly,
+        ins.getOrElse(f.name, lit(null).cast(f.dataType))).otherwise(upd))
+        .as(f.name)
+    }: _*)
   }
 
   /** INSERT ... SELECT ... ON CONFLICT (key) DO NOTHING — the reference
@@ -135,28 +138,31 @@ object Dml {
       notMatchedInsert =
         Some(target.columns.map(c => c -> col(s"s.$c")).toMap)))
 
-  /** MERGE INTO a catalog table, rewriting it copy-on-write with its
-    * bucket layout (and colocation group) preserved. The merged state is
-    * checkpointed before the overwrite because the write reads from the
-    * same files it replaces; a production deployment would write a new
-    * snapshot directory and swap pointers atomically (Delta/Iceberg
-    * commit protocol) instead of a same-path rewrite. */
+  /** MERGE INTO a catalog table as a snapshot commit: the merged state
+    * is computed in one pass over the target and written once, bucketed
+    * like the table, into a new version directory, and the catalog is
+    * then pointed at it ([[DistributionCatalog.commitVersion]], the
+    * Delta/Iceberg commit protocol). Bucket spec, distribution spec and
+    * colocation id are kept; a merge that fails before the swap leaves
+    * the old version readable and routable. Each column keeps its type:
+    * assigned values are cast to it, as a PG UPDATE casts them.
+    * A table with isolated tenants is refused: their rows live in
+    * tables of their own, which this merge would not see. */
   def mergeIntoTable(spark: SparkSession, table: String,
       source: DataFrame, sourceKey: String,
       clauses: MergeClauses): Unit = {
     val spec = DistributionCatalog.spec(table).getOrElse(
       throw new IllegalArgumentException(s"not a catalog table: $table"))
     require(spec.method == DistributionCatalog.Hash &&
-      spec.distColumn.isDefined, s"$table is not hash-distributed")
-    val distCol = spec.distColumn.get
-    val merged = merge(spark.table(table), source, distCol, sourceKey,
-      clauses).localCheckpoint(eager = true)
-    // rejoin the original colocation group through any sibling table
-    val sibling = DistributionCatalog.listTables(spark)
-      .filter(col("colocationid") === spec.colocationId &&
-        col("logicalrelid") =!= table)
-      .limit(1).collect().headOption.map(_.getString(0))
-    DistributionCatalog.createDistributedTable(spark, merged, table,
-      distCol, spec.bucketCount, colocateWith = sibling)
+      spec.bucketCount > 0 && spec.distColumn.isDefined,
+      s"$table is not hash-bucketed")
+    require(!DistributionCatalog.hasIsolatedTenants(table),
+      s"$table has isolated tenants; MERGE INTO it would miss their rows")
+    val target = spark.table(table)
+    val merged = merge(target, source, spec.distColumn.get, sourceKey,
+      clauses)
+    DistributionCatalog.commitVersion(spark, spec, merged.select(
+      target.schema.fields.toIndexedSeq.map(f =>
+        col(f.name).cast(f.dataType).as(f.name)): _*))
   }
 }

@@ -2,14 +2,53 @@ package graft
 
 import graft.catalog.DistributionCatalog
 import graft.sources.Dml
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
 /** PG row semantics + copy-on-write layout preservation for the DML
-  * surface (reference: merge_planner.c / multi_router_planner.c). */
+  * surface (reference: merge_planner.c / multi_router_planner.c), and
+  * the snapshot commit behind `mergeIntoTable`. */
 class DmlSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
+
+  private def warehouseDir(table: String): java.io.File =
+    new java.io.File(new java.net.URI(
+      spark.conf.get("spark.sql.warehouse.dir")).getPath, table)
+
+  /** Spark jobs `body` runs, counted by job group. Each listener sees
+    * events in order, so once it sees a marker job of another group it
+    * has seen every job of `body`. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
+          .orNull match {
+          case "dml-counted" => jobs.incrementAndGet()
+          case "dml-marker" => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("dml-counted", "counted")
+      body
+      sc.setJobGroup("dml-marker", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, TimeUnit.SECONDS), "listener never drained")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
+  }
 
   test("updateWhere: NULL condition leaves the row untouched (PG)") {
     val df = Seq((1, Some(10.0)), (2, None), (3, Some(60.0)))
@@ -49,11 +88,17 @@ class DmlSpec extends AnyFunSuite {
   }
 
   test("merge without insert clause drops source-only rows") {
-    val target = Seq((1, "a")).toDF("id", "v")
-    val source = Seq((9, "x")).toDF("k", "nv")
-    val out = Dml.merge(target, source, "id", "k",
-      Dml.MergeClauses(matchedUpdate = Map("v" -> col("s.nv"))))
-    assert(out.as[(Int, String)].collect().toSeq === Seq((1, "a")))
+    val target = Seq((1, "keep"), (2, "update-me"), (3, "delete-me"),
+      (4, "null-delete")).toDF("id", "v")
+    val source = Seq((2, "updated", Some(false)), (3, "", Some(true)),
+      (4, "null-updated", None), (9, "never", Some(false)))
+      .toDF("k", "nv", "del")
+    val out = Dml.merge(target, source, "id", "k", Dml.MergeClauses(
+        matchedUpdate = Map("v" -> col("s.nv")),
+        matchedDelete = Some(col("s.del"))))
+      .orderBy("id").as[(Int, String)].collect().toSeq
+    // a NULL delete condition deletes nothing (PG)
+    assert(out === Seq((1, "keep"), (2, "updated"), (4, "null-updated")))
   }
 
   test("insertOnConflict: DO NOTHING keeps existing rows, DO UPDATE upserts") {
@@ -86,5 +131,105 @@ class DmlSpec extends AnyFunSuite {
     val specAfter = DistributionCatalog.spec("dml_acct").get
     assert(specAfter.bucketCount === specBefore.bucketCount)
     assert(specAfter.distColumn === specBefore.distColumn)
+    // a table alone in its group keeps its group
+    assert(specAfter.colocationId === specBefore.colocationId)
+  }
+
+  test("a no-insert merge of a 32-bucket table runs at most 2 jobs: " +
+      "the source broadcast and one bucketed write") {
+    DistributionCatalog.createDistributedTable(spark,
+      spark.range(0, 2000).select(col("id"), (col("id") * 2.0).as("v")),
+      "dml_jobs", "id")
+    val jobs = jobsOf(Dml.mergeIntoTable(spark, "dml_jobs",
+      spark.range(100, 300).toDF("k"), "k",
+      Dml.MergeClauses(matchedUpdate = Map("v" -> (col("t.v") + lit(1.0))))))
+    assert(jobs <= 2, s"merge ran $jobs jobs")
+    val r = spark.table("dml_jobs").agg(count(lit(1)), sum("v")).head()
+    assert(r.getLong(0) === 2000L)
+    assert(r.getDouble(1) === (0 until 2000).map(_ * 2.0).sum + 200.0)
+  }
+
+  test("a merge that fails mid-write leaves the old version readable, " +
+      "routable and its spec unchanged, with no staging left") {
+    DistributionCatalog.createDistributedTable(spark,
+      (1 to 40).map(i => (i, i * 10.0)).toDF("id", "bal").coalesce(1),
+      "dml_fail", "id", buckets = 4)
+    val specBefore = DistributionCatalog.spec("dml_fail").get
+    val rowsBefore = spark.table("dml_fail").orderBy("id")
+      .as[(Int, Double)].collect().toSeq
+    val tablesBefore = spark.catalog.listTables().collect().map(_.name).toSet
+    val boom = udf { (k: Int, v: Double) =>
+      if (k == 17) throw new IllegalStateException("boom") else v }
+    intercept[Exception](Dml.mergeIntoTable(spark, "dml_fail",
+      (1 to 40).map(k => (k, -1.0)).toDF("k", "nb"), "k",
+      Dml.MergeClauses(matchedUpdate =
+        Map("bal" -> boom(col("s.k"), col("s.nb"))))))
+    assert(spark.table("dml_fail").orderBy("id").as[(Int, Double)]
+      .collect().toSeq === rowsBefore)
+    val pinned = Graft.pgSqlParams(spark,
+      "SELECT id, bal FROM dml_fail WHERE id = $1", 17)
+    assert(pinned.inputFiles.length === 1)
+    assert(pinned.as[(Int, Double)].collect().toSeq === Seq((17, 170.0)))
+    assert(DistributionCatalog.spec("dml_fail") === Some(specBefore))
+    assert(spark.catalog.listTables().collect().map(_.name).toSet ===
+      tablesBefore)
+    assert(Option(warehouseDir("dml_fail").list()).getOrElse(Array.empty)
+      .filter(_.startsWith("_v")).isEmpty)
+  }
+
+  test("consecutive merges keep one live version on disk") {
+    DistributionCatalog.createDistributedTable(spark,
+      (1 to 20).map(i => (i, 0.0)).toDF("id", "bal"), "dml_versions", "id",
+      buckets = 4)
+    (1 to 3).foreach { _ =>
+      Dml.mergeIntoTable(spark, "dml_versions",
+        (1 to 10).toDF("k"), "k",
+        Dml.MergeClauses(matchedUpdate = Map("bal" -> (col("t.bal") + 1.0))))
+    }
+    assert(spark.table("dml_versions").orderBy("id").as[(Int, Double)]
+      .collect().toSeq === (1 to 20).map(i => (i, if (i <= 10) 3.0 else 0.0)))
+    val versions = warehouseDir("dml_versions").listFiles()
+    assert(versions.length === 1 && versions.head.getName.startsWith("_v"),
+      "the first version's files and older versions must be deleted")
+    assert(DistributionCatalog.totalRelationSize(spark, "dml_versions") ===
+      versions.head.listFiles().filterNot(_.getName.startsWith("_"))
+        .map(_.length).sum)
+  }
+
+  test("a merge deletes old versions only under the table's warehouse " +
+      "path") {
+    val rows = (1 to 8).map(i => (i, 0.0)).toDF("id", "bal")
+    DistributionCatalog.createDistributedTable(spark, rows, "dml_moved",
+      "id", buckets = 4)
+    // recreated by plain Spark at a path of its own; the spec remains
+    val elsewhere = java.nio.file.Files.createTempDirectory("dml_moved")
+      .toFile
+    val moved = new java.io.File(elsewhere, "t")
+    spark.sql("DROP TABLE dml_moved")
+    rows.write.bucketBy(4, "id").sortBy("id").option("path", moved.getPath)
+      .format("parquet").saveAsTable("dml_moved")
+    try {
+      Dml.mergeIntoTable(spark, "dml_moved", Seq(1).toDF("k"), "k",
+        Dml.MergeClauses(matchedUpdate = Map("bal" -> (col("t.bal") + 1.0))))
+      assert(spark.table("dml_moved").orderBy("id").as[(Int, Double)]
+        .collect().toSeq === (1 to 8).map(i => (i, if (i == 1) 1.0 else 0.0)))
+      assert(moved.listFiles().exists(_.getName.endsWith(".parquet")),
+        "files outside the warehouse path must be left alone")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(elsewhere)
+    }
+  }
+
+  test("mergeIntoTable refuses a table with isolated tenants") {
+    DistributionCatalog.createDistributedTable(spark,
+      Seq((1, 1.0), (2, 2.0), (3, 3.0)).toDF("id", "bal"), "dml_iso", "id",
+      buckets = 4)
+    DistributionCatalog.isolateTenant(spark, "dml_iso", 2)
+    val e = intercept[IllegalArgumentException](Dml.mergeIntoTable(spark,
+      "dml_iso", Seq((2, 9.0)).toDF("k", "nb"), "k",
+      Dml.MergeClauses(matchedUpdate = Map("bal" -> col("s.nb")))))
+    assert(e.getMessage.contains("isolated tenants"))
+    assert(DistributionCatalog.table(spark, "dml_iso").orderBy("id")
+      .as[(Int, Double)].collect().toSeq === Seq((1, 1.0), (2, 2.0), (3, 3.0)))
   }
 }

@@ -3,15 +3,26 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Every registered query runs end-to-end at sf0.001 (the driver's t1
-  * smoke), and the headline/bench queries return rows there. */
+  * smoke) and returns rows there, except the few that sf0.001's data
+  * leaves legitimately empty, each listed with its reason. */
 class QueriesSmokeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
+
+  /** Queries with no rows at sf0.001, and why that is right. */
+  private val emptyAtSf0001: Map[String, String] = Map(
+    "join_theta_range" -> ("pairs of suppliers of one nation; sf0.001's " +
+      "10 suppliers are in 10 different nations"))
 
   SparkEntry.all.foreach { q =>
     test(s"${q.name} runs at sf0.001") {
       val n = q.run(spark, TestSpark.sf).count()
-      assert(n >= 0)
-      if (q.bench) assert(n > 0, s"bench query ${q.name} must return rows")
+      emptyAtSf0001.get(q.name) match {
+        case Some(why) =>
+          assert(!q.bench, s"bench query ${q.name} must return rows")
+          assert(n == 0, s"${q.name} is listed as empty ($why) but " +
+            s"returned $n rows")
+        case None => assert(n > 0, s"${q.name} returned no rows at sf0.001")
+      }
     }
   }
 

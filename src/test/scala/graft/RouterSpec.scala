@@ -2,6 +2,7 @@ package graft
 
 import graft.catalog.DistributionCatalog
 import graft.plans.{ReferenceLiteral, ShardFileIndex}
+import graft.sources.Dml
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Literal
@@ -174,6 +175,35 @@ class RouterSpec extends AnyFunSuite {
       assert(df.inputFiles.map(f => BucketingUtils.getBucketId(
         new java.io.File(f).getName)).distinct.length === 1)
       assert(rows(df) === rows(read(lookup.replace("g_", "src_"), k)))
+    }
+  }
+
+  test("after a MERGE, a lookup still reads one bucket file and " +
+      "citus_shards keeps its row counts with non-zero bytes") {
+    setup
+    val orders = spark.table("src_orders")
+    DistributionCatalog.createDistributedTable(spark, orders, "r_merged",
+      "o_orderkey")
+    def shards(): Map[Int, (Long, Long)] =
+      DistributionCatalog.shardSizes(spark, "r_merged").collect()
+        .map(r => r.getInt(1) -> (r.getLong(2), r.getLong(3))).toMap
+    val before = shards()
+    Dml.mergeIntoTable(spark, "r_merged",
+      spark.createDataFrame(keys.map(Tuple1(_))).toDF("k"), "k",
+      Dml.MergeClauses(matchedUpdate =
+        Map("o_totalprice" -> (col("t.o_totalprice") + lit(1.0)))))
+    val after = shards()
+    assert(after.map { case (b, (_, n)) => b -> n } ===
+      before.map { case (b, (_, n)) => b -> n })
+    assert(after.values.forall { case (bytes, n) => n == 0 || bytes > 0 })
+    val text = "SELECT o_orderkey, o_totalprice FROM r_merged " +
+      "WHERE o_orderkey = $1"
+    keys.foreach { k =>
+      val df = read(text, k)
+      assert(routed(df) === Seq("r_merged"))
+      assert(df.inputFiles.length === 1)
+      assert(rows(df) === rows(orders.filter(col("o_orderkey") === k)
+        .select(col("o_orderkey"), col("o_totalprice") + 1.0)))
     }
   }
 }
