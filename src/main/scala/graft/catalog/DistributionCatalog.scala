@@ -61,72 +61,118 @@ object DistributionCatalog {
   def createDistributedTable(spark: SparkSession, df: DataFrame,
       name: String, distColumn: String,
       buckets: Int = DefaultBuckets,
-      colocateWith: Option[String] = None): DistributionSpec = {
-    val coloc = colocateWith match {
-      case Some(other) =>
-        val o = specs.getOrElse(other,
-          throw new IllegalArgumentException(s"no such table: $other"))
-        require(o.bucketCount == buckets,
-          s"cannot colocate: $other has ${o.bucketCount} buckets, want $buckets")
-        o.colocationId
-      case None => nextColocation.getAndIncrement()
-    }
-    writeBucketed(df, name, warehousePath(spark, name), buckets, distColumn)
-    val spec = DistributionSpec(name, Hash, Some(distColumn), buckets, coloc)
-    specs.put(name, spec)
+      colocateWith: Option[String] = None): DistributionSpec =
+    create(spark, df, DistributionSpec(name, Hash, Some(distColumn), buckets,
+      colocationFor(colocateWith, buckets)))
+
+  /** The colocation group of a table with `buckets` buckets: that of
+    * hash table `other` (bucket counts must match), or a new one. */
+  private def colocationFor(colocateWith: Option[String],
+      buckets: Int): Int = colocateWith match {
+    case Some(other) =>
+      val o = specs.getOrElse(other,
+        throw new IllegalArgumentException(s"no such table: $other"))
+      require(o.method == Hash && o.bucketCount == buckets,
+        s"cannot colocate: $other has ${o.bucketCount} buckets, want $buckets")
+      o.colocationId
+    case None => nextColocation.getAndIncrement()
+  }
+
+  /** zstd ≙ the reference columnar store's default compression
+    * (columnar/README.md:93-101). The options a table is created with
+    * are recorded in its catalog entry, and every later rewrite writes
+    * with them. */
+  private val Zstd = Map("compression" -> "zstd")
+
+  /** A new catalog table: `df` is written in `spec`'s layout straight to
+    * the table's warehouse path (there is no earlier version to
+    * protect), and `spec` is recorded. */
+  private def create(spark: SparkSession, df: DataFrame,
+      spec: DistributionSpec,
+      options: Map[String, String] = Zstd): DistributionSpec = {
+    writeTable(df, spec.table, Some(spec), options,
+      Some(warehousePath(spark, spec.table)))
+    specs.put(spec.table, spec)
     spec
   }
 
-  private def writeBucketed(df: DataFrame, name: String, path: String,
-      buckets: Int, distColumn: String): Unit =
-    df.write.mode("overwrite")
-      .bucketBy(buckets, distColumn)
-      .sortBy(distColumn)
-      .option("path", path)
-      // zstd ≙ the reference columnar store's default compression
-      // (columnar/README.md:93-101)
-      .option("compression", "zstd")
-      .format("parquet")
-      .saveAsTable(name)
+  /** The one table writer. The layout comes from `layout`:
+    *   - hash with buckets: bucketed and sorted on the distribution
+    *     column (bucket ≙ shard);
+    *   - range or append: partitioned by `__shard` (directory ≙ shard);
+    *   - hash with 0 buckets on a `__…` column (time-partitioned):
+    *     partitioned by that column;
+    *   - otherwise (reference, not distributed): plain.
+    * With a `path` the write creates (or replaces) catalog table `name`
+    * there; without one it appends to `name` at its catalog location,
+    * and Spark takes the options from the catalog entry. */
+  private def writeTable(df: DataFrame, name: String,
+      layout: Option[DistributionSpec], options: Map[String, String],
+      path: Option[String]): Unit = {
+    val w = df.write.mode(if (path.isEmpty) "append" else "overwrite")
+      .options(options ++ path.map("path" -> _)).format("parquet")
+    (layout match {
+      case Some(DistributionSpec(_, Hash, Some(c), b, _)) if b > 0 =>
+        w.bucketBy(b, c).sortBy(c)
+      case Some(DistributionSpec(_, RangeDist | AppendDist, _, _, _)) =>
+        w.partitionBy("__shard")
+      case Some(DistributionSpec(_, Hash, Some(c), 0, _))
+          if c.startsWith("__") => w.partitionBy(c)
+      case _ => w
+    }).saveAsTable(name)
+  }
 
-  /** Snapshot commit of a hash-distributed table's new contents `df`
-    * (in the table's schema), the Delta/Iceberg commit protocol:
-    *   1. write `df` once, bucketed and sorted like the table, to a
-    *      fresh `_v<uuid>` directory under the table's warehouse path,
-    *      through a staging catalog entry (bucketed writes need
-    *      `saveAsTable`); Spark's file listing skips `_` names, so a
-    *      reader of the old location never sees the new files;
-    *   2. point the catalog table at the new directory — its bucket
-    *      spec and its [[DistributionSpec]] (colocation id included)
-    *      stay as they are;
+  /** Replace catalog table `name`'s contents with `df` as a snapshot
+    * commit — the Delta/Iceberg commit protocol, and the order citus's
+    * `alter_distributed_table` keeps (build the new table, then swap):
+    *   1. write `df` once, in `layout`'s layout and with the table's
+    *      write options (its catalog entry's, overridden by `options`),
+    *      to a fresh `_v<uuid>` directory under the table's warehouse
+    *      path, through a staging catalog entry; Spark's file listing
+    *      skips `_` names, so a reader of the old location never sees
+    *      the new files;
+    *   2. swap: the table takes the staging entry's whole definition
+    *      (schema, bucket spec, partition columns, options, location)
+    *      and its partitions, and `layout` becomes its
+    *      [[DistributionSpec]] (None: it leaves the distribution
+    *      catalog);
     *   3. delete everything else under the table's warehouse path: the
     *      previous version and whatever an interrupted commit left.
     *      Files outside the warehouse path are never deleted.
     * If anything fails before step 2, the old version stays readable
-    * and routable, and the staging entry and directory are removed.
-    * `df` may read the table itself: the write never touches the files
-    * it reads. `s` must be hash-bucketed with a distribution column. */
-  def commitVersion(spark: SparkSession, s: DistributionSpec,
-      df: DataFrame): Unit = {
-    val name = s.table
+    * and routable under its old spec, and the staging entry and
+    * directory are removed. `df` may read the table itself: the write
+    * never touches the files it reads. Isolated tenant parts are the
+    * caller's: they stay as they are. */
+  private[graft] def commitVersion(spark: SparkSession, name: String,
+      layout: Option[DistributionSpec], df: DataFrame,
+      options: Map[String, String] = Map.empty): Unit = {
     val catalog = spark.sessionState.catalog
-    val meta = catalog.getTableMetadata(TableIdentifier(name))
+    val ident = TableIdentifier(name)
+    val meta = catalog.getTableMetadata(ident)
     val token = java.util.UUID.randomUUID().toString.replace("-", "")
     val staging = TableIdentifier(s"${name}__v$token")
     val dir = new java.io.File(warehousePath(spark, name))
     val next = new java.io.File(dir, s"_v$token")
     var committed = false
     try {
-      writeBucketed(df, staging.table, next.getPath, s.bucketCount,
-        s.distColumn.get)
-      catalog.alterTable(meta.copy(stats = None,
-        storage = meta.storage.copy(locationUri = Some(next.toURI))))
+      writeTable(df, staging.table, layout,
+        meta.storage.properties ++ options, Some(next.getPath))
+      val staged = catalog.getTableMetadata(staging)
+      // the old partitions go before the partition columns change
+      catalog.dropPartitions(ident, catalog.listPartitions(ident).map(_.spec),
+        ignoreIfNotExists = false, purge = false, retainData = true)
+      catalog.alterTable(staged.copy(identifier = meta.identifier,
+        stats = None))
+      catalog.createPartitions(ident, catalog.listPartitions(staging),
+        ignoreIfExists = false)
       committed = true
     } finally {
       // the staging entry is external: dropping it keeps its files
       catalog.dropTable(staging, ignoreIfNotExists = true, purge = false)
       if (!committed) deleteTree(next)
     }
+    layout.fold(specs.remove(name))(specs.put(name, _))
     spark.catalog.refreshTable(name)
     // every version lives under the warehouse path: keep only `next`
     Option(dir.listFiles()).getOrElse(Array.empty)
@@ -146,6 +192,32 @@ object DistributionCatalog {
     new java.io.File(spark.sessionState.catalog
       .getTableMetadata(TableIdentifier(name)).location)
 
+  /** The data files of catalog table `name`: every file under its
+    * catalog location except those Spark's own file listing hides —
+    * `.` names (Hadoop's `.crc` checksums) and `_` names without a `=`
+    * (`_SUCCESS`, a `_v…` directory no commit swapped in). */
+  private def dataFiles(spark: SparkSession,
+      name: String): Seq[java.io.File] = {
+    def walk(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles()).getOrElse(Array.empty).toSeq
+        .filterNot(f => f.getName.startsWith(".") ||
+          f.getName.startsWith("_") && !f.getName.contains("="))
+        .flatMap(f => if (f.isDirectory) walk(f) else Seq(f))
+    walk(tableDir(spark, name))
+  }
+
+  /** `ALTER TABLE … DROP PARTITION`, files included. A datasource
+    * table's drop keeps the files, so they are deleted here, at the
+    * partition's catalog location: wherever the table's last commit
+    * put it. */
+  private def dropPartition(spark: SparkSession, name: String,
+      column: String, value: String): Unit = {
+    val dir = spark.sessionState.catalog
+      .getPartition(TableIdentifier(name), Map(column -> value)).location
+    spark.sql(s"ALTER TABLE $name DROP PARTITION ($column='$value')")
+    deleteTree(new java.io.File(dir))
+  }
+
   /** True when [[isolateTenant]] moved some of `name`'s keys into
     * tables of their own. */
   def hasIsolatedTenants(name: String): Boolean =
@@ -153,14 +225,9 @@ object DistributionCatalog {
 
   /** Reference table: stored once, broadcast to every join site. */
   def createReferenceTable(spark: SparkSession, df: DataFrame,
-      name: String): DistributionSpec = {
-    df.write.mode("overwrite")
-      .option("path", warehousePath(spark, name))
-      .format("parquet").saveAsTable(name)
-    val spec = DistributionSpec(name, Reference, None, 1, 0)
-    specs.put(name, spec)
-    spec
-  }
+      name: String): DistributionSpec =
+    create(spark, df, DistributionSpec(name, Reference, None, 1, 0),
+      options = Map.empty)
 
   /** Read a catalog table; reference tables come back broadcast-hinted
     * so every join applies the REFERENCE_JOIN strategy. A table with
@@ -187,11 +254,14 @@ object DistributionCatalog {
   }
 
   /** True when two tables are in the same colocation group — a join on
-    * their distribution columns needs no exchange. */
+    * their distribution columns needs no exchange. Both must be
+    * bucketed: time-partitioned tables are hash tables with 0 buckets,
+    * all in group 0, and their layouts share nothing. */
   def colocated(a: String, b: String): Boolean =
     (specs.get(a), specs.get(b)) match {
       case (Some(x), Some(y)) =>
-        x.method == Hash && y.method == Hash && x.colocationId == y.colocationId
+        Seq(x, y).forall(s => s.method == Hash && s.bucketCount > 0) &&
+          x.colocationId == y.colocationId
       case _ => false
     }
 
@@ -232,15 +302,9 @@ object DistributionCatalog {
 
   /** `citus_total_relation_size(rel)`: physical bytes of a cataloged
     * table (all shards + isolated tenant parts). */
-  def totalRelationSize(spark: SparkSession, name: String): Long = {
-    def dirBytes(d: java.io.File): Long =
-      Option(d.listFiles()).getOrElse(Array.empty).map(f =>
-        if (f.isDirectory) dirBytes(f)
-        else if (f.getName.startsWith("_")) 0L else f.length()).sum
-    val tenantBytes = isolatedTenants.getOrElse(name, Map.empty).values
-      .map(t => dirBytes(new java.io.File(warehousePath(spark, t)))).sum
-    dirBytes(new java.io.File(warehousePath(spark, name))) + tenantBytes
-  }
+  def totalRelationSize(spark: SparkSession, name: String): Long =
+    (name +: isolatedTenants.getOrElse(name, Map.empty).values.toSeq)
+      .flatMap(dataFiles(spark, _)).map(_.length()).sum
 
   /** `update_distributed_table_colocation(rel, colocate_with)`
     * (`sql/udfs/update_distributed_table_colocation/` — metadata-only
@@ -254,17 +318,8 @@ object DistributionCatalog {
     val s = specs.getOrElse(name,
       throw new IllegalArgumentException(s"not a distributed table: $name"))
     require(s.method == Hash, s"$name is not hash-distributed")
-    val newId = colocateWith match {
-      case Some(other) =>
-        val o = specs.getOrElse(other,
-          throw new IllegalArgumentException(s"no such table: $other"))
-        require(o.method == Hash && o.bucketCount == s.bucketCount,
-          s"cannot colocate: $other has ${o.bucketCount} buckets, " +
-            s"$name has ${s.bucketCount}")
-        o.colocationId
-      case None => nextColocation.getAndIncrement()
-    }
-    val spec = s.copy(colocationId = newId)
+    val spec = s.copy(colocationId = colocationFor(colocateWith,
+      s.bucketCount))
     specs.put(name, spec)
     spec
   }
@@ -277,17 +332,9 @@ object DistributionCatalog {
       name: String, tsColumn: String, granularity: String): DistributionSpec = {
     import org.apache.spark.sql.functions.{col, date_trunc}
     val partCol = s"__${granularity}_part"
-    df.withColumn(partCol,
-        date_trunc(granularity, col(tsColumn)).cast("date"))
-      .write.mode("overwrite")
-      .partitionBy(partCol)
-      .option("path", warehousePath(spark, name))
-      .option("compression", "zstd")
-      .format("parquet")
-      .saveAsTable(name)
-    val spec = DistributionSpec(name, Hash, Some(partCol), 0, 0)
-    specs.put(name, spec)
-    spec
+    create(spark, df.withColumn(partCol,
+        date_trunc(granularity, col(tsColumn)).cast("date")),
+      DistributionSpec(name, Hash, Some(partCol), 0, 0))
   }
 
   /** The `time_partitions` view (`sql/udfs/time_partitions/` —
@@ -303,13 +350,8 @@ object DistributionCatalog {
       throw new IllegalArgumentException(s"$name is not time-partitioned"))
     val counts = spark.table(name).groupBy(col(partCol))
       .agg(count(lit(1)).as("n_rows"))
-    val bytes = Option(new java.io.File(warehousePath(spark, name))
-        .listFiles()).getOrElse(Array.empty)
-      .filter(_.isDirectory)
-      .map(d => d.getName.split("=", 2)(1) ->
-        Option(d.listFiles()).getOrElse(Array.empty)
-          .filterNot(_.getName.startsWith("_")).map(_.length()).sum)
-      .toMap
+    val bytes = dataFiles(spark, name).groupMapReduce(
+      _.getParentFile.getName.split("=", 2).last)(_.length())(_ + _)
     import spark.implicits._
     counts.collect()
       .map(r => (name, r.get(0).toString, r.getLong(1),
@@ -357,25 +399,15 @@ object DistributionCatalog {
       .filter(col(partCol) < olderThan)
       .collect().map(_.get(0).toString).sorted.toSeq
     if (old.nonEmpty) {
-      val prev = spark.conf.getOption(
-        "spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try {
-        val rows = spark.table(name)
-          .filter(col(partCol) < olderThan)
-          .localCheckpoint(eager = true)
-        // path write (not insertInto): the parquet writer honors the
-        // codec option, and dynamic overwrite touches only the
-        // partitions present in `rows`
-        rows.write.mode("overwrite").partitionBy(partCol)
-          .option("compression", codec)
-          .parquet(warehousePath(spark, name))
-      } finally prev match {
-        case Some(v) => spark.conf.set(
-          "spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset(
-          "spark.sql.sources.partitionOverwriteMode")
-      }
+      // path write (not insertInto): the parquet writer honors the codec
+      // option, and dynamic overwrite touches only the partitions present
+      // in the rows, in the table's catalog location
+      spark.table(name).filter(col(partCol) < olderThan)
+        .localCheckpoint(eager = true)
+        .write.mode("overwrite").partitionBy(partCol)
+        .option("partitionOverwriteMode", "dynamic")
+        .option("compression", codec)
+        .parquet(tableDir(spark, name).getPath)
       spark.catalog.refreshTable(name)
     }
     old
@@ -400,12 +432,7 @@ object DistributionCatalog {
     val old = spark.table(name).select(col(partCol)).distinct()
       .filter(col(partCol) < olderThan)
       .collect().map(_.get(0).toString).sorted.toSeq
-    old.foreach { v =>
-      spark.sql(s"ALTER TABLE $name DROP PARTITION ($partCol='$v')")
-      val dir = new java.io.File(warehousePath(spark, name),
-        s"$partCol=$v")
-      if (dir.exists()) { dir.listFiles().foreach(_.delete()); dir.delete() }
-    }
+    old.foreach(dropPartition(spark, name, partCol, _))
     spark.catalog.refreshTable(name)
     old
   }
@@ -425,48 +452,40 @@ object DistributionCatalog {
   }
 
   /** `alter_distributed_table(rel, distribution_column, shard_count,
-    * colocate_with)` (`commands/alter_table.c:219` — recreates the table
-    * with the new distribution and moves the data): rewrite the bucketed
-    * layout with a new distribution column and/or bucket count. Data is
-    * re-read from the existing table and re-bucketed in one shuffle-write
-    * stage — the Spark analogue of citus's shard-move data copy. */
+    * colocate_with)` (`commands/alter_table.c:219` — builds the table
+    * with the new distribution, then swaps it in): rewrite the bucketed
+    * layout with a new distribution column and/or bucket count, as one
+    * [[commitVersion]]. The whole table, isolated tenant parts
+    * included, is re-bucketed in one shuffle-write stage — the Spark
+    * analogue of citus's shard-move data copy — and the tenant parts
+    * go once the new version is in. A failed rewrite (a bad column, a
+    * colocation the bucket count refuses) leaves the table as it was. */
   def alterDistributedTable(spark: SparkSession, name: String,
       distColumn: Option[String] = None, buckets: Option[Int] = None,
       colocateWith: Option[String] = None): DistributionSpec = {
     val old = specs.getOrElse(name,
       throw new IllegalArgumentException(s"not a distributed table: $name"))
     require(old.method == Hash, s"$name is not hash-distributed")
-    val newCol = distColumn.orElse(old.distColumn).get
     val newBuckets = buckets.getOrElse(old.bucketCount)
-    // materialize the FULL table (incl. isolated tenant parts) before
-    // the overwrite drops the old files; the rewrite re-absorbs
-    // isolated tenants into the new layout
-    val data = table(spark, name).localCheckpoint(eager = true)
+    val spec = DistributionSpec(name, Hash, distColumn.orElse(old.distColumn),
+      newBuckets, colocationFor(colocateWith, newBuckets))
+    commitVersion(spark, name, Some(spec), table(spark, name))
     dropTenantParts(spark, name)
-    spark.sql(s"DROP TABLE IF EXISTS $name")
-    specs.remove(name)
-    createDistributedTable(spark, data, name, newCol, newBuckets,
-      colocateWith)
+    spec
   }
 
   /** `undistribute_table(rel)` (`commands/alter_table.c:180`): convert a
     * distributed table back to a plain (non-bucketed) local table and
-    * drop it from the distribution catalog. */
+    * drop it from the distribution catalog, as one [[commitVersion]];
+    * isolated tenant parts fold back into the plain table. */
   def undistributeTable(spark: SparkSession, name: String): Unit = {
     require(specs.contains(name), s"not a distributed table: $name")
-    // full view: isolated tenant parts fold back into the plain table
-    val data = table(spark, name).localCheckpoint(eager = true)
+    commitVersion(spark, name, None, table(spark, name))
     dropTenantParts(spark, name)
-    spark.sql(s"DROP TABLE IF EXISTS $name")
-    specs.remove(name)
-    data.write.mode("overwrite")
-      .option("path", warehousePath(spark, name))
-      .option("compression", "zstd")
-      .format("parquet").saveAsTable(name)
   }
 
   /** Drop a table's isolated-tenant side tables + bookkeeping (used by
-    * the layout rewrites, which re-absorb those rows). */
+    * the rewrites that re-absorb those rows, after their commit). */
   private def dropTenantParts(spark: SparkSession, name: String): Unit = {
     isolatedTenants.remove(name).foreach(_.values.foreach(t =>
       spark.sql(s"DROP TABLE IF EXISTS $t")))
@@ -486,12 +505,10 @@ object DistributionCatalog {
     require(s.method == Hash && s.bucketCount > 0,
       s"$name is not hash-bucketed")
     val bucketRe = "_(\\d{5})[_.]".r
-    val bytes = Option(tableDir(spark, name)
-        .listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && !f.getName.startsWith("_"))
+    val bytes = dataFiles(spark, name)
       .flatMap(f => bucketRe.findFirstMatchIn(f.getName)
         .map(m => m.group(1).toInt -> f.length()))
-      .groupBy(_._1).map { case (b, fs) => b -> fs.map(_._2).sum }
+      .groupMapReduce(_._1)(_._2)(_ + _)
     // bucket id comes from the file name (file-splits ≠ buckets: tiny
     // files pack many-per-partition, so spark_partition_id won't do)
     import org.apache.spark.sql.functions.{input_file_name, regexp_extract}
@@ -505,13 +522,8 @@ object DistributionCatalog {
     // isolated tenants show as their own "shards" (shard = -1), the way
     // citus_shards lists an isolated tenant's dedicated shard
     val tenantRows = isolatedTenants.getOrElse(name, Map.empty).values
-      .toSeq.sorted.map { t =>
-        val sz = Option(tableDir(spark, t)
-            .listFiles()).getOrElse(Array.empty)
-          .filter(f => f.isFile && !f.getName.startsWith("_"))
-          .map(_.length()).sum
-        (t, -1, sz, spark.table(t).count())
-      }
+      .toSeq.sorted.map(t => (t, -1, dataFiles(spark, t).map(_.length()).sum,
+        spark.table(t).count()))
     (base ++ tenantRows)
       .toDF("table_name", "shard", "size_bytes", "n_rows")
   }
@@ -522,8 +534,12 @@ object DistributionCatalog {
   /** `isolate_tenant_to_new_shard(table, tenant_id, 'CASCADE')`
     * (`operations/isolate_shards.c:48-57` — split the shard holding a
     * hot tenant so that tenant gets a shard of its own): the hot key's
-    * rows move to a dedicated single-bucket table and the remainder is
-    * re-bucketed in place. [[table]] transparently unions the parts, so
+    * rows move to a new dedicated single-bucket table, then the
+    * remainder replaces the table's contents as one [[commitVersion]]
+    * under its unchanged spec — bucket count and colocation group
+    * included (citus's CASCADE isolation keeps colocation too). If that
+    * commit fails, the new tenant table is dropped again and the table
+    * is as it was. [[table]] transparently unions the parts, so
     * whole-table analytics are unchanged; [[tenantShard]] routes a
     * single-tenant query straight to the dedicated files — the
     * isolated tenant's scan cost becomes proportional to ITS data, not
@@ -533,8 +549,10 @@ object DistributionCatalog {
     * isolateTenant cures.
     * READ CONTRACT after isolation: whole-table reads must go through
     * [[table]] (a raw `spark.table(name)` sees only the remainder);
-    * [[shardSizes]] lists tenant parts as their own shards; the layout
-    * rewrites (alter/undistribute) re-absorb them. */
+    * [[shardSizes]] lists tenant parts as their own shards; the
+    * rewrites of the whole table (alter, undistribute, columnar options)
+    * re-absorb them. A tenant is isolated once: its rows are no longer
+    * in the table to move again. */
   def isolateTenant(spark: SparkSession, name: String,
       tenantValue: Any): DistributionSpec = {
     import org.apache.spark.sql.functions.{col, lit}
@@ -544,31 +562,28 @@ object DistributionCatalog {
       s"$name is not hash-bucketed (tenant isolation needs a bucketed " +
         "layout; time-partitioned and reference tables have none)")
     val distCol = s.distColumn.get
+    require(!isolatedTenants.get(name).exists(_.contains(
+      tenantValue.toString)), s"tenant $tenantValue of $name is isolated")
     val tenantTable =
       s"${name}__tenant_${tenantValue.toString.replaceAll("\\W", "_")}"
-    val data = spark.table(name).localCheckpoint(eager = true)
-    val hot = data.filter(col(distCol) === lit(tenantValue))
-    val rest = data.filter(col(distCol) =!= lit(tenantValue) ||
-      col(distCol).isNull)
-    hot.write.mode("overwrite")
-      .bucketBy(1, distCol).sortBy(distCol)
-      .option("path", warehousePath(spark, tenantTable))
-      .option("compression", "zstd")
-      .format("parquet").saveAsTable(tenantTable)
-    spark.sql(s"DROP TABLE IF EXISTS $name")
-    specs.remove(name)
-    val rebuilt = createDistributedTable(spark, rest, name, distCol,
-      s.bucketCount)
-    // the physical bucketing is unchanged, so the table KEEPS its
-    // colocation group (citus's CASCADE isolation does the same for
-    // all colocated tables at once)
-    val spec = rebuilt.copy(colocationId = s.colocationId)
-    specs.put(name, spec)
+    val data = spark.table(name)
+    val tenantPath = warehousePath(spark, tenantTable)
+    writeTable(data.filter(col(distCol) === lit(tenantValue)), tenantTable,
+      Some(DistributionSpec(tenantTable, Hash, Some(distCol), 1, 0)),
+      spark.sessionState.catalog.getTableMetadata(TableIdentifier(name))
+        .storage.properties, Some(tenantPath))
+    try commitVersion(spark, name, Some(s), data.filter(
+      col(distCol) =!= lit(tenantValue) || col(distCol).isNull))
+    catch { case e: Throwable =>
+      spark.sql(s"DROP TABLE IF EXISTS $tenantTable")
+      deleteTree(new java.io.File(tenantPath))
+      throw e
+    }
     isolatedTenants.updateWith(name) {
       case Some(m) => Some(m + (tenantValue.toString -> tenantTable))
       case None => Some(Map(tenantValue.toString -> tenantTable))
     }
-    spec
+    s
   }
 
   private val tenantReads = TrieMap.empty[(String, String), Long]
@@ -634,7 +649,9 @@ object DistributionCatalog {
   }
 
   /** `REFRESH MATERIALIZED VIEW` — recompute the stored result from the
-    * current state of its inputs. */
+    * current state of its inputs; the new result replaces the old as
+    * one [[commitVersion]], so a definition that fails leaves the last
+    * result in place. */
   def refreshMaterializedView(spark: SparkSession, name: String): Unit = {
     val defn = matviews.getOrElse(name,
       throw new IllegalArgumentException(s"no such materialized view: $name"))
@@ -644,21 +661,25 @@ object DistributionCatalog {
       spec.map(_.bucketCount).filter(_ > 0).getOrElse(DefaultBuckets))
   }
 
+  /** Store `definition`'s result as table `name`: created if new, else
+    * committed over the previous result (which the definition may
+    * read). A distributed view keeps its colocation group across
+    * refreshes. */
   private def materialize(spark: SparkSession, name: String,
       definition: SparkSession => DataFrame, distColumn: Option[String],
       buckets: Int): Unit = {
-    // evaluate BEFORE dropping the old materialization (the definition
-    // may read it, and refresh must not see its own target mid-write)
-    val data = definition(spark).localCheckpoint(eager = true)
-    spark.sql(s"DROP TABLE IF EXISTS $name")
-    specs.remove(name)
-    distColumn match {
-      case Some(c) => createDistributedTable(spark, data, name, c, buckets)
-      case None =>
-        data.write.mode("overwrite")
-          .option("path", warehousePath(spark, name))
-          .option("compression", "zstd")
-          .format("parquet").saveAsTable(name)
+    val layout = distColumn.map { c =>
+      val s = DistributionSpec(name, Hash, Some(c), buckets, 0)
+      specs.get(name).filter(_.copy(colocationId = 0) == s)
+        .getOrElse(s.copy(colocationId = nextColocation.getAndIncrement()))
+    }
+    if (!spark.catalog.tableExists(name)) {
+      writeTable(definition(spark), name, layout, Zstd,
+        Some(warehousePath(spark, name)))
+      layout.foreach(specs.put(name, _))
+    } else {
+      commitVersion(spark, name, layout, definition(spark))
+      dropTenantParts(spark, name)
     }
   }
 
@@ -733,12 +754,11 @@ object DistributionCatalog {
     val shardExpr = splitPoints
       .map(p => when(col(distColumn) >= lit(p), 1).otherwise(0))
       .reduce(_ + _)
-    writeShardPartitioned(spark, name,
-      df.withColumn("__shard", coalesce(shardExpr, lit(0))))
+    val spec = create(spark, df.withColumn("__shard",
+        coalesce(shardExpr, lit(0))),
+      DistributionSpec(name, RangeDist, Some(distColumn),
+        splitPoints.size + 1, 0))
     recordIntervals(spark, name, distColumn, replace = true)
-    val spec = DistributionSpec(name, RangeDist, Some(distColumn),
-      splitPoints.size + 1, 0)
-    specs.put(name, spec)
     spec
   }
 
@@ -752,11 +772,9 @@ object DistributionCatalog {
   def createAppendTable(spark: SparkSession, firstBatch: DataFrame,
       name: String, distColumn: String): DistributionSpec = {
     import org.apache.spark.sql.functions.lit
-    writeShardPartitioned(spark, name,
-      firstBatch.withColumn("__shard", lit(0)))
+    val spec = create(spark, firstBatch.withColumn("__shard", lit(0)),
+      DistributionSpec(name, AppendDist, Some(distColumn), 1, 0))
     recordIntervals(spark, name, distColumn, replace = true)
-    val spec = DistributionSpec(name, AppendDist, Some(distColumn), 1, 0)
-    specs.put(name, spec)
     spec
   }
 
@@ -768,12 +786,8 @@ object DistributionCatalog {
       throw new IllegalArgumentException(s"not a distributed table: $name"))
     require(s.method == AppendDist, s"$name is not append-distributed")
     val next = shardIntervals(name).map(_.shard).max + 1
-    // append into the existing table (location/partitioning come from
-    // the catalog entry; specifying path again on append is rejected)
-    batch.withColumn("__shard", lit(next))
-      .write.mode("append").partitionBy("__shard")
-      .option("compression", "zstd")
-      .format("parquet").saveAsTable(name)
+    writeTable(batch.withColumn("__shard", lit(next)), name, Some(s),
+      Map.empty, path = None)
     spark.catalog.refreshTable(name)
     recordIntervals(spark, name, s.distColumn.get, replace = true)
     val spec = s.copy(bucketCount = next + 1)
@@ -841,32 +855,17 @@ object DistributionCatalog {
       .reduce(_ + _) + base
     // rewrite ONLY the split shard's rows under their new shard ids
     // (materialized first: the write appends to the table being read)
-    spark.table(name).filter(col("__shard") === shard).drop("__shard")
-      .localCheckpoint(eager = true)
-      .withColumn("__shard", subExpr)
-      .write.mode("append").partitionBy("__shard")
-      .option("compression", "zstd")
-      .format("parquet").saveAsTable(name)
+    writeTable(spark.table(name).filter(col("__shard") === shard)
+        .drop("__shard").localCheckpoint(eager = true)
+        .withColumn("__shard", subExpr), name, Some(s), Map.empty,
+      path = None)
     // retire the old shard: drop its partition (files included)
-    spark.sql(s"ALTER TABLE $name DROP PARTITION (__shard=$shard)")
-    val dir = new java.io.File(warehousePath(spark, name),
-      s"__shard=$shard")
-    if (dir.exists()) {
-      dir.listFiles().foreach(_.delete()); dir.delete()
-    }
+    dropPartition(spark, name, "__shard", shard.toString)
     spark.catalog.refreshTable(name)
     recordIntervals(spark, name, distCol, replace = true)
     val spec = s.copy(bucketCount = shardIntervals(name).size)
     specs.put(name, spec)
     spec
-  }
-
-  private def writeShardPartitioned(spark: SparkSession, name: String,
-      df: DataFrame): Unit = {
-    df.write.mode("overwrite").partitionBy("__shard")
-      .option("path", warehousePath(spark, name))
-      .option("compression", "zstd")
-      .format("parquet").saveAsTable(name)
   }
 
   /** Record per-shard observed min/max (one small grouped scan — N
@@ -890,41 +889,29 @@ object DistributionCatalog {
     * layout — stripe ≙ row group (`parquet.block.size`, a bytes
     * budget), chunk group ≙ page (`parquet.page.row.count.limit`,
     * a row budget), compression ≙ the Parquet codec
-    * (none|snappy|zstd|lz4 — zstd is both defaults). The table
-    * rewrites once under the new layout, preserving its distribution
-    * (bucketed stays bucketed). Chunk skipping ≙ row-group/page
-    * min-max statistics, which Parquet writes unconditionally. */
+    * (none|snappy|zstd|lz4 — zstd is both defaults). The table's
+    * contents are committed once more ([[commitVersion]]) with these
+    * write options changed and the others kept, in the same layout
+    * (bucketed stays bucketed, partitioned stays partitioned); later
+    * rewrites and MERGEs keep the options, which live in the catalog
+    * entry. Isolated tenant parts fold back in. Chunk skipping ≙
+    * row-group/page min-max statistics, which Parquet writes
+    * unconditionally. */
   def setColumnarOptions(spark: SparkSession, name: String,
       compression: Option[String] = None,
       stripeBytes: Option[Long] = None,
       chunkRows: Option[Int] = None): Unit = {
     val s = specs.getOrElse(name,
       throw new IllegalArgumentException(s"not a cataloged table: $name"))
+    // range/append shards live in the __shard column, which table()
+    // strips as non-user schema: read the raw catalog table to keep it
     val sharded = s.method == RangeDist || s.method == AppendDist
-    // Range/append layouts live in the __shard partition column, which
-    // table() strips as non-user schema — read the raw catalog table so
-    // the rewrite keeps it and the shard map stays valid.
-    val raw = if (sharded) spark.table(name)
-              else table(spark, name)
-    val data = raw.localCheckpoint(eager = true)
+    commitVersion(spark, name, Some(s),
+      if (sharded) spark.table(name) else table(spark, name),
+      compression.map("compression" -> _).toMap ++
+        stripeBytes.map("parquet.block.size" -> _.toString) ++
+        chunkRows.map("parquet.page.row.count.limit" -> _.toString))
     dropTenantParts(spark, name)
-    spark.sql(s"DROP TABLE IF EXISTS $name")
-    var w = data.write.mode("overwrite")
-      .option("path", warehousePath(spark, name))
-      .option("compression", compression.getOrElse("zstd"))
-      .format("parquet")
-    stripeBytes.foreach(b => w = w.option("parquet.block.size", b.toString))
-    chunkRows.foreach(r =>
-      w = w.option("parquet.page.row.count.limit", r.toString))
-    s match {
-      case DistributionSpec(_, Hash, Some(dc), b, _) if b > 0 =>
-        w.bucketBy(b, dc).sortBy(dc).saveAsTable(name)
-      case _ if sharded => w.partitionBy("__shard").saveAsTable(name)
-      case _ => w.saveAsTable(name)
-    }
-    specs.put(name, s)
-    if (sharded) s.distColumn.foreach(dc =>
-      recordIntervals(spark, name, dc, replace = true))
   }
 
   /** `citus_update_table_statistics(rel)` (`sql/udfs/

@@ -142,10 +142,11 @@ object Dml {
     * is computed in one pass over the target and written once, bucketed
     * like the table, into a new version directory, and the catalog is
     * then pointed at it ([[DistributionCatalog.commitVersion]], the
-    * Delta/Iceberg commit protocol). Bucket spec, distribution spec and
-    * colocation id are kept; a merge that fails before the swap leaves
-    * the old version readable and routable. Each column keeps its type:
-    * assigned values are cast to it, as a PG UPDATE casts them.
+    * Delta/Iceberg commit protocol). Bucket spec, distribution spec,
+    * colocation id and write options (the codec) are kept; a merge that
+    * fails before the swap leaves the old version readable and
+    * routable. Each column keeps its type: assigned values are cast to
+    * it, as a PG UPDATE casts them.
     * A table with isolated tenants is refused: their rows live in
     * tables of their own, which this merge would not see. */
   def mergeIntoTable(spark: SparkSession, table: String,
@@ -161,8 +162,8 @@ object Dml {
     val target = spark.table(table)
     val merged = merge(target, source, spec.distColumn.get, sourceKey,
       clauses)
-    DistributionCatalog.commitVersion(spark, spec, merged.select(
-      target.schema.fields.toIndexedSeq.map(f =>
+    DistributionCatalog.commitVersion(spark, table, Some(spec),
+      merged.select(target.schema.fields.toIndexedSeq.map(f =>
         col(f.name).cast(f.dataType).as(f.name)): _*))
   }
 }

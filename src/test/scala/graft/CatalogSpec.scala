@@ -12,6 +12,58 @@ import org.scalatest.funsuite.AnyFunSuite
 class CatalogSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
+  private def catalogTable(name: String) =
+    spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(name))
+
+  private def warehouseDir(table: String): java.io.File =
+    new java.io.File(new java.net.URI(
+      spark.conf.get("spark.sql.warehouse.dir")).getPath, table)
+
+  /** Every file under `d`, at any depth. */
+  private def walk(d: java.io.File): Seq[java.io.File] =
+    Option(d.listFiles()).getOrElse(Array.empty).toSeq
+      .flatMap(f => if (f.isDirectory) f +: walk(f) else Seq(f))
+
+  /** The parquet codecs in the footers of `files` (Spark file URIs). */
+  private def codecs(files: Seq[String]): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    files.flatMap { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f),
+          spark.sparkContext.hadoopConfiguration))
+      try r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
+        .map(_.getCodec.toString)
+      finally r.close()
+    }.toSet
+  }
+
+  private def hotCustomer(orders: org.apache.spark.sql.DataFrame): Long =
+    orders.groupBy("o_custkey").count()
+      .orderBy(col("count").desc, col("o_custkey")).first().getLong(0)
+
+  /** Runs `rewrite`, which must throw, and checks that it changed
+    * nothing: the rows (isolated tenant parts included), the spec, the
+    * tenant parts, the session's tables (so no staging entry is left)
+    * and the table's warehouse directory (so no new `_v…` version). */
+  private def assertFailsAtomically(name: String)(rewrite: => Unit): Unit = {
+    def rows = DistributionCatalog.table(spark, name).collect()
+      .map(_.toString).sorted.toSeq
+    def tables = spark.catalog.listTables().collect().map(_.name).toSet
+    val rowsBefore = rows
+    val specBefore = DistributionCatalog.spec(name)
+    val tenantsBefore = DistributionCatalog.hasIsolatedTenants(name)
+    val tablesBefore = tables
+    val dirBefore = warehouseDir(name).list().toSet
+    intercept[Exception](rewrite)
+    assert(rows === rowsBefore)
+    assert(DistributionCatalog.spec(name) === specBefore)
+    assert(DistributionCatalog.hasIsolatedTenants(name) === tenantsBefore)
+    assert(tables === tablesBefore)
+    assert(warehouseDir(name).list().toSet === dirBefore)
+  }
+
   private lazy val setup: Unit = {
     DistributionCatalog.reset()
     val orders = Tables(spark, TestSpark.sf, "orders")
@@ -601,5 +653,177 @@ class CatalogSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       Rebalancer.drainNode(spark, "d_stale_orders", 0, nodeCount = 1)
     }
+  }
+
+  test("a failed alter_distributed_table changes nothing: rows, spec, " +
+      "tenant parts; no staging entry or version directory is left") {
+    setup
+    val orders = Tables(spark, TestSpark.sf, "orders")
+    DistributionCatalog.createDistributedTable(spark, orders,
+      "d_alter_fail", "o_custkey", buckets = 4)
+    DistributionCatalog.isolateTenant(spark, "d_alter_fail",
+      hotCustomer(orders))
+    // d_orders has 8 buckets: the colocation is refused
+    assertFailsAtomically("d_alter_fail")(DistributionCatalog
+      .alterDistributedTable(spark, "d_alter_fail", buckets = Some(4),
+        colocateWith = Some("d_orders")))
+    assertFailsAtomically("d_alter_fail")(DistributionCatalog
+      .alterDistributedTable(spark, "d_alter_fail",
+        distColumn = Some("no_such_col")))
+    assert(DistributionCatalog.table(spark, "d_alter_fail").count() ===
+      orders.count())
+  }
+
+  test("a failed materialized-view refresh keeps the last result") {
+    setup
+    spark.sql("DROP TABLE IF EXISTS mv_fail_src")
+    Tables(spark, TestSpark.sf, "orders").limit(100)
+      .write.mode("overwrite").saveAsTable("mv_fail_src")
+    val boom = udf { (k: Long) =>
+      if (k > 0) throw new IllegalStateException("boom") else k }
+    var definition = "ok"
+    DistributionCatalog.createMaterializedView(spark, "mv_fail", s => {
+      val src = s.table("mv_fail_src")
+      definition match {
+        case "ok" => src.select(col("o_orderkey"), col("o_custkey"))
+        // throws in every task of the write
+        case "throws" => src.select(col("o_orderkey"),
+          boom(col("o_custkey")).as("o_custkey"))
+        // parquet cannot store an interval: the write is refused
+        case "unstorable" => src.select(col("o_orderkey"),
+          expr("make_interval(0, 0, 0, 1)").as("o_custkey"))
+      }
+    }, distColumn = Some("o_orderkey"), buckets = 4)
+    Seq("throws", "unstorable").foreach { d =>
+      definition = d
+      assertFailsAtomically("mv_fail")(
+        DistributionCatalog.refreshMaterializedView(spark, "mv_fail"))
+    }
+    assert(spark.table("mv_fail").count() === 100)
+  }
+
+  test("alter_columnar_table_set with an unknown codec changes nothing") {
+    setup
+    val orders = Tables(spark, TestSpark.sf, "orders")
+    DistributionCatalog.createDistributedTable(spark, orders,
+      "d_col_fail", "o_custkey", buckets = 4)
+    DistributionCatalog.isolateTenant(spark, "d_col_fail",
+      hotCustomer(orders))
+    assertFailsAtomically("d_col_fail")(DistributionCatalog
+      .setColumnarOptions(spark, "d_col_fail", compression = Some("nosuch")))
+  }
+
+  test("a columnar rewrite keeps a time-partitioned table partitioned: " +
+      "time_partitions sizes and drop_old_time_partitions still work") {
+    setup
+    val orders = Tables(spark, TestSpark.sf, "orders")
+    Seq("d_time_col", "d_time_other").foreach(n => DistributionCatalog
+      .createTimePartitionedTable(spark, orders, n, "o_orderdate", "year"))
+    // two time-partitioned tables share colocation id 0, not a layout
+    assert(!DistributionCatalog.colocated("d_time_col", "d_time_other"))
+    DistributionCatalog.setColumnarOptions(spark, "d_time_col",
+      compression = Some("snappy"))
+    assert(catalogTable("d_time_col").partitionColumnNames ===
+      Seq("__year_part"))
+    val parts = DistributionCatalog.timePartitions(spark, "d_time_col")
+      .collect().map(r => r.getString(1) -> (r.getLong(2), r.getLong(3)))
+      .toMap
+    assert(parts.values.map(_._1).sum === orders.count())
+    assert(parts.values.forall(_._2 > 0), s"zero-byte partitions: $parts")
+    // the old partitions recompress where the catalog reads them
+    val zstd = DistributionCatalog.compressOldTimePartitions(spark,
+      "d_time_col", java.sql.Date.valueOf("1999-01-01"), codec = "zstd")
+    assert(zstd.nonEmpty)
+    assert(codecs(spark.table("d_time_col")
+      .filter(col("__year_part") < "1999-01-01").inputFiles) === Set("ZSTD"))
+    assert(spark.table("d_time_col").count() === orders.count())
+    val dropped = DistributionCatalog.dropOldTimePartitions(spark,
+      "d_time_col", java.sql.Date.valueOf("1998-01-01"))
+    assert(dropped.nonEmpty)
+    assert(spark.table("d_time_col").count() ===
+      orders.count() - dropped.map(parts(_)._1).sum)
+    val left = walk(warehouseDir("d_time_col")).map(_.getName).toSet
+    dropped.foreach(v => assert(!left.contains(s"__year_part=$v"),
+      s"the files of dropped partition $v must be deleted"))
+  }
+
+  test("rewrites keep the write options: a MERGE after " +
+      "alter_columnar_table_set still writes snappy") {
+    import graft.sources.Dml
+    setup
+    DistributionCatalog.createDistributedTable(spark,
+      Tables(spark, TestSpark.sf, "orders"), "d_codec_merge", "o_orderkey",
+      buckets = 4)
+    DistributionCatalog.setColumnarOptions(spark, "d_codec_merge",
+      compression = Some("snappy"))
+    val n = spark.table("d_codec_merge").count()
+    Dml.mergeIntoTable(spark, "d_codec_merge",
+      spark.range(1, 100).toDF("k"), "k", Dml.MergeClauses(matchedUpdate =
+        Map("o_totalprice" -> (col("t.o_totalprice") + lit(1.0)))))
+    assert(spark.table("d_codec_merge").count() === n)
+    assert(codecs(spark.table("d_codec_merge").inputFiles) === Set("SNAPPY"))
+  }
+
+  test("isolate_tenant keeps the colocation group, the bucket count and " +
+      "the table's codec") {
+    setup
+    val orders = Tables(spark, TestSpark.sf, "orders")
+    DistributionCatalog.createDistributedTable(spark, orders, "d_iso_a",
+      "o_custkey", buckets = 4)
+    DistributionCatalog.createDistributedTable(spark, orders, "d_iso_b",
+      "o_custkey", buckets = 4, colocateWith = Some("d_iso_a"))
+    DistributionCatalog.setColumnarOptions(spark, "d_iso_a",
+      compression = Some("snappy"))
+    val before = DistributionCatalog.spec("d_iso_a")
+    val hot = hotCustomer(orders)
+    DistributionCatalog.isolateTenant(spark, "d_iso_a", hot)
+    assert(DistributionCatalog.spec("d_iso_a") === before)
+    assert(catalogTable("d_iso_a").bucketSpec.map(_.numBuckets) === Some(4))
+    assert(DistributionCatalog.colocated("d_iso_a", "d_iso_b"))
+    assert(PlanChecks.countShuffles(spark.table("d_iso_a")
+      .join(spark.table("d_iso_b"), "o_custkey")) === 0)
+    assert(codecs(spark.table("d_iso_a").inputFiles) === Set("SNAPPY"))
+    assert(codecs(DistributionCatalog.tenantShard(spark, "d_iso_a", hot)
+      .inputFiles) === Set("SNAPPY"))
+    // a second isolation of the same tenant would find none of its rows
+    intercept[IllegalArgumentException](
+      DistributionCatalog.isolateTenant(spark, "d_iso_a", hot))
+    assert(DistributionCatalog.tenantShard(spark, "d_iso_a", hot).count() ===
+      orders.filter(col("o_custkey") === hot).count())
+  }
+
+  test("split shard after a columnar rewrite deletes the retired shard's " +
+      "files where the catalog put them; sizes count live files only") {
+    setup
+    val orders = Tables(spark, TestSpark.sf, "orders")
+    DistributionCatalog.createRangeDistributedTable(spark, orders,
+      "d_split_col", "o_custkey", splitPoints = Seq(75))
+    DistributionCatalog.setColumnarOptions(spark, "d_split_col",
+      compression = Some("snappy"))
+    val retired = new java.io.File(spark.sessionState.catalog.getPartition(
+      org.apache.spark.sql.catalyst.TableIdentifier("d_split_col"),
+      Map("__shard" -> "1")).location)
+    assert(retired.listFiles().exists(_.getName.endsWith(".parquet")))
+    DistributionCatalog.splitShard(spark, "d_split_col", 1, Seq(110))
+    assert(!retired.exists(), s"$retired must be deleted")
+    assert(spark.table("d_split_col").count() === orders.count())
+    val live = spark.table("d_split_col").inputFiles
+    assert(DistributionCatalog.totalRelationSize(spark, "d_split_col") ===
+      live.map(f => new java.io.File(new java.net.URI(f)).length).sum)
+    // the split shards are appended with the table's options
+    assert(codecs(live) === Set("SNAPPY"))
+  }
+
+  test("size views count data files only: not Hadoop checksums or " +
+      "commit markers") {
+    setup
+    val files = walk(new java.io.File(catalogTable("d_orders").location))
+    assert(files.exists(_.getName.endsWith(".crc")))
+    val parquet = files.filter(_.getName.endsWith(".parquet"))
+      .map(_.length).sum
+    assert(DistributionCatalog.shardSizes(spark, "d_orders")
+      .agg(sum("size_bytes")).head().getLong(0) === parquet)
+    assert(DistributionCatalog.totalRelationSize(spark, "d_orders") ===
+      parquet)
   }
 }

@@ -192,7 +192,8 @@ class DmlSpec extends AnyFunSuite {
     assert(versions.length === 1 && versions.head.getName.startsWith("_v"),
       "the first version's files and older versions must be deleted")
     assert(DistributionCatalog.totalRelationSize(spark, "dml_versions") ===
-      versions.head.listFiles().filterNot(_.getName.startsWith("_"))
+      versions.head.listFiles().filterNot(f =>
+        f.getName.startsWith("_") || f.getName.startsWith("."))
         .map(_.length).sum)
   }
 
