@@ -1,6 +1,7 @@
 package graft
 
 import graft.plans.PlanChecks
+import org.apache.spark.metrics.source.CodegenMetrics
 
 /** Benchmark main: times the headline queries (SparkEntry.benchQueries)
   * on SPARK_GRAFT_SF_DIR with SPARK_GRAFT_CPUS cores and prints one JSON
@@ -80,9 +81,15 @@ object Bench {
     // Pin the working set in memory (buffer-pool analogue) and warm up
     // (JIT/C2 + codegen caches — steady state needs ~4 passes in a
     // fresh JVM; the 2-pass timed total was ~1s slower); not timed.
+    // Classes compiled per phase (the JVM-wide codegen counter): a
+    // warm, JIT-steady timed phase compiles almost nothing, so a codegen
+    // cache that evicts between queries shows up here as a count.
+    def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     Tables.pinForBench(spark, sfDir)
+    val warmupStart = compiles()
     (1 to 4).foreach(_ => names.foreach(run))
     abortOnFailures("warm-up")
+    val timedStart = compiles()
     // Machine-load context: ambient load inflated a recorded round
     // total by ~23% once (r5; a quiet rerun reproduced r4's numbers).
     // Record the 1-minute loadavg before and after the timed passes so
@@ -120,6 +127,7 @@ object Bench {
     val samples: Map[String, Seq[Double]] =
       names.map(n => n -> (1 to passesFor(n)).map(_ => run(n))).toMap
     abortOnFailures("timed")
+    val timedEnd = compiles()
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
       if (s.size % 2 == 1) s(s.size / 2)
@@ -137,7 +145,7 @@ object Bench {
     val total = results.map(_._2).sum
     val loadEnd = loadavg()
     println(
-      f"""{"metric":"total","value":$total%.4f,"unit":"sec","queries":$qs,"spread":$spread,"passes":$timedPasses,"loadavg":{"start":$loadStart%.2f,"end":$loadEnd%.2f},"sf":"$sfDir"}""")
+      f"""{"metric":"total","value":$total%.4f,"unit":"sec","queries":$qs,"spread":$spread,"passes":$timedPasses,"loadavg":{"start":$loadStart%.2f,"end":$loadEnd%.2f},"codegen_compiles":{"warmup":${timedStart - warmupStart},"timed":${timedEnd - timedStart}},"sf":"$sfDir"}""")
     spark.stop()
   }
 }

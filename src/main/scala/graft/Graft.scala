@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 
 /** The library's front door — what a user of the reference switches to.
   *
@@ -40,13 +41,47 @@ object Graft {
   /** The engine's session: [[plans.GraftExtensions]] installed, AQE on,
     * UTC, and the static settings the sf0.1 bench measured as wins:
     * kryo for broadcast/cache serde, a 64 MB broadcast threshold that
-    * keeps every dim table on the hash side, and raw in-memory columns
-    * (the cache is already compact).
+    * keeps every dim table on the hash side, raw in-memory columns
+    * (the cache is already compact), and a codegen cache sized for a
+    * mixed query stream (see [[builder]]).
     * Settings that depend on the data size (shuffle width, split size,
-    * AQE at small sizes) are runtime confs: see [[Tables.benchConf]]. */
+    * AQE at small sizes) are runtime confs: see [[Tables.benchConf]].
+    *
+    * `getOrCreate` hands back a session that already exists in the JVM
+    * and drops this builder's extensions and static settings when it
+    * does. So a session not built here (a plain
+    * `SparkSession.builder().getOrCreate()` that ran first) would come
+    * back without the router, the SQL functions or the codegen cache
+    * size. Such a session is refused with an `IllegalStateException`
+    * naming what is missing; it is not rebuilt. */
   def session(master: String = "local[*]", appName: String = "graft")
-      : SparkSession =
-    builder(master, appName).getOrCreate()
+      : SparkSession = {
+    val spark = builder(master, appName).getOrCreate()
+    val missing = Seq(
+      "GraftExtensions (no simhash64 function)" -> !spark.sessionState
+        .functionRegistry.functionExists(FunctionIdentifier("simhash64")),
+      s"$CodegenCacheKey=$CodegenCacheEntries in the SparkContext's conf" ->
+        !spark.sparkContext.getConf.getOption(CodegenCacheKey)
+          .contains(CodegenCacheEntries.toString))
+      .collect { case (what, true) => what }
+    if (missing.nonEmpty)
+      throw new IllegalStateException("Graft.session: the session in " +
+        "this JVM was not built by Graft.builder; missing " +
+        missing.mkString(" and ") + ". Stop it, or build the first " +
+        "session through Graft.builder.")
+    spark
+  }
+
+  /** Spark's JVM-wide cache of compiled generated classes, which Spark
+    * sizes once, at the first codegen of the JVM. One round of the 12
+    * bench queries generates 196–212 classes (sf0.001 and sf0.1
+    * alike). At Spark's default of 100 entries an interleaved stream
+    * evicts what the next query needs and recompiles 159–190 of them
+    * every warm round; at 1000 a warm round compiles none and takes
+    * half the wall time, with headroom for AQE re-plans and other
+    * statements (OPTIMIZATION_codegen.md). */
+  private val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
+  private val CodegenCacheEntries = 1000
 
   /** The builder [[session]] finishes; the one place a session is
     * configured (the test session adds only its own warehouse dir and
@@ -63,6 +98,7 @@ object Graft {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(CodegenCacheKey, CodegenCacheEntries.toLong)
       .withExtensions(new plans.GraftExtensions)
 
   val catalog: graft.catalog.DistributionCatalog.type =

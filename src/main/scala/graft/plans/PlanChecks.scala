@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, NamedExpression}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
 
 /** Plan-shape assertions — the engine's analogue of the reference's
   * EXPLAIN-diff regression tests (citus `sql/multi_explain.sql`,
@@ -54,24 +54,31 @@ object PlanChecks {
     * shuffled-hash). */
   def nodesOf(plan: SparkPlan): Seq[SparkPlan] = collectAll(plan)
 
-  /** The ShuffledHashJoin nodes whose left/right join keys name the
-    * given attributes: a key matches when it references an attribute
-    * of exactly that name or carries an alias of that name (a
-    * collapsed projection). Identifies the forced expression-key join
-    * among several shuffle-capable joins; `s_suppkey` does not match a
+  /** The join nodes, of any join exec, whose left/right join keys name
+    * the given attributes: a key matches when it references an
+    * attribute of exactly that name or carries an alias of that name
+    * (a collapsed projection); `s_suppkey` does not match a
     * `ps_suppkey` key. */
-  def shuffledHashJoinsOn(plan: SparkPlan, leftKey: String,
-      rightKey: String): Seq[ShuffledHashJoinExec] = {
+  def joinsOn(plan: SparkPlan, leftKey: String, rightKey: String)
+      : Seq[BaseJoinExec] = {
     def named(keys: Seq[Expression], name: String): Boolean =
       keys.exists(_.exists {
         case n: NamedExpression => n.name == name
         case _ => false
       })
     collectAll(plan).collect {
-      case j: ShuffledHashJoinExec
+      case j: BaseJoinExec
           if named(j.leftKeys, leftKey) && named(j.rightKeys, rightKey) => j
     }
   }
+
+  /** The ShuffledHashJoin nodes among [[joinsOn]]: identifies the forced
+    * expression-key join among several shuffle-capable joins. */
+  def shuffledHashJoinsOn(plan: SparkPlan, leftKey: String,
+      rightKey: String): Seq[ShuffledHashJoinExec] =
+    joinsOn(plan, leftKey, rightKey).collect {
+      case j: ShuffledHashJoinExec => j
+    }
 
   /** Scan-level pushdown check: every parquet scan's pushed filters. */
   def pushedFilters(df: DataFrame): Seq[String] = {

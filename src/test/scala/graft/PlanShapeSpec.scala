@@ -73,15 +73,12 @@ class PlanShapeSpec extends AnyFunSuite {
       s"the supplier link (link_key = s_suppkey) must stay the forced " +
         s"repartition join; got plan:\n$plan")
     // And the colocated fact pair (lineitem ⋈ orders on the
-    // distribution key) must sit BELOW that join's streamed side —
-    // i.e. inside the subtree feeding the computed-key exchange.
-    val factPair = links.flatMap(j => PlanChecks.nodesOf(j.left)).collect {
-      case b: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-          if b.leftKeys.exists(_.references.exists(_.name == "l_orderkey")) ||
-            b.rightKeys.exists(_.references.exists(_.name == "o_orderkey")) ||
-            b.leftKeys.exists(_.references.exists(_.name == "o_orderkey")) ||
-            b.rightKeys.exists(_.references.exists(_.name == "l_orderkey")) => b
-    }
+    // distribution key) must sit BELOW that join, on either side of it
+    // and as any join exec: the planner's side order and the broadcast
+    // threshold are not what this pins.
+    val factPair = links.flatMap(_.children).flatMap(side =>
+      PlanChecks.joinsOn(side, "l_orderkey", "o_orderkey") ++
+        PlanChecks.joinsOn(side, "o_orderkey", "l_orderkey"))
     assert(factPair.nonEmpty,
       s"lineitem ⋈ orders (the colocated pair) must join below the " +
         s"computed-key exchange, not above it; got plan:\n$plan")

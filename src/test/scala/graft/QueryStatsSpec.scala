@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** citus_stat_statements analogue: same statement shape with different
   * literals collapses to one queryid; distinct shapes get their own
-  * rows; reset empties the view. */
+  * rows; a failed statement counts as a failure, not a call; reset
+  * empties the view. */
 class QueryStatsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -59,6 +60,31 @@ class QueryStatsSpec extends AnyFunSuite {
           .filter(_.getString(1).contains("o_totalprice"))
         assert(rows.length === 1, s"expected one statement: ${rows.toSeq}")
         assert(rows(0).getLong(2) === 2)
+      }
+    } finally {
+      QueryStats.reset()
+      QueryStats.uninstall(spark)
+    }
+  }
+
+  test("a statement that fails counts as a failure with its error class " +
+      "and adds no call") {
+    QueryStats.reset()
+    QueryStats.install(spark)
+    try {
+      val boom = udf((k: Long) =>
+        if (k > 0) throw new IllegalArgumentException("boom") else k)
+      val li = Tables(spark, TestSpark.sf, "lineitem")
+      intercept[Exception](li.select(boom(col("l_orderkey"))).collect())
+      eventually {
+        val failed = QueryStats.view(spark).collect()
+          .filter(_.getAs[Long]("failures") > 0)
+        assert(failed.length === 1, s"one failed statement: ${failed.toSeq}")
+        val r = failed(0)
+        assert(r.getAs[Long]("failures") === 1)
+        assert(r.getAs[Long]("calls") === 0)
+        assert(r.isNullAt(r.fieldIndex("mean_time_ms")))
+        assert(r.getAs[String]("last_error_class") != null)
       }
     } finally {
       QueryStats.reset()
