@@ -1,8 +1,11 @@
 package graft
 import java.nio.file.{Files, Paths}
 /** Correctness dump: each SparkEntry.queries result → parquet, plus
-  * oracle_sql.json, for the DuckDB compare (tools/check.py). Runs on
-  * [[Graft.session]], the session users, Bench and perfbench run. */
+  * oracle_sql.json, for the DuckDB compare (tools/check.py), and
+  * failures.json: each query that threw → `class: message`. A query's
+  * old output is deleted before it runs, so a failure never leaves an
+  * earlier run's result to be scored. Runs on [[Graft.session]], the
+  * session users, Bench and perfbench run. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -13,13 +16,17 @@ object Verify {
     // Local-iteration filter: SPARK_GRAFT_ONLY=q1,q2 dumps a subset.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(',').map(_.trim).toSet)
-    SparkEntry.queries
+    val failures = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      .flatMap { case (name, fn) =>
+      val out = new java.io.File(outDir, name)
+      org.apache.commons.io.FileUtils.deleteDirectory(out)
+      try {
+        fn(spark, sfDir).coalesce(1).write.parquet(out.getPath)
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name -> s"${e.getClass.getName}: ${e.getMessage}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -34,9 +41,11 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    def json(m: Iterable[(String, String)]): String =
+      m.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      json(SparkEntry.oracleSql))
+    Files.writeString(Paths.get(s"$outDir/failures.json"), json(failures))
     spark.stop()
   }
 }

@@ -46,9 +46,35 @@ object DistributionCatalog {
       method: PartMethod,
       distColumn: Option[String],
       bucketCount: Int,
-      colocationId: Int)
+      colocationId: Int) {
+    /** A hash table with buckets (bucket ≙ shard); time-partitioned
+      * tables are hash tables with 0 buckets. */
+    def bucketed: Boolean = method == Hash && bucketCount > 0
+  }
 
-  private val specs = TrieMap.empty[String, DistributionSpec]
+  /** One table's catalog state: its `pg_dist_partition` row, its
+    * `pg_dist_shard` intervals (range/append tables), its stored
+    * `pg_dist_placement` (shards never moved are absent: they sit at
+    * the default) and its isolated tenants (tenant value → table).
+    * Every create, and every commit under a new spec, replaces it
+    * whole. */
+  private final case class Entry(spec: DistributionSpec,
+      intervals: Seq[ShardInterval] = Nil,
+      placements: Map[Int, Int] = Map.empty,
+      tenants: Map[String, String] = Map.empty) {
+    /** The live shard ids: a range/append table's interval ids, else
+      * its buckets. */
+    def shards: Seq[Int] = spec.method match {
+      case RangeDist | AppendDist => intervals.map(_.shard)
+      case _ => 0 until spec.bucketCount
+    }
+  }
+
+  private val entries = TrieMap.empty[String, Entry]
+
+  private def entry(name: String): Entry = entries.getOrElse(name,
+    throw new IllegalArgumentException(s"not a cataloged table: $name"))
+
   private val nextColocation = new java.util.concurrent.atomic.AtomicInteger(1)
 
   /** Default bucket count ≙ citus.shard_count default of 32. */
@@ -70,8 +96,7 @@ object DistributionCatalog {
   private def colocationFor(colocateWith: Option[String],
       buckets: Int): Int = colocateWith match {
     case Some(other) =>
-      val o = specs.getOrElse(other,
-        throw new IllegalArgumentException(s"no such table: $other"))
+      val o = entry(other).spec
       require(o.method == Hash && o.bucketCount == buckets,
         s"cannot colocate: $other has ${o.bucketCount} buckets, want $buckets")
       o.colocationId
@@ -86,13 +111,13 @@ object DistributionCatalog {
 
   /** A new catalog table: `df` is written in `spec`'s layout straight to
     * the table's warehouse path (there is no earlier version to
-    * protect), and `spec` is recorded. */
+    * protect), and `spec` is recorded as a fresh entry. */
   private def create(spark: SparkSession, df: DataFrame,
       spec: DistributionSpec,
       options: Map[String, String] = Zstd): DistributionSpec = {
     writeTable(df, spec.table, Some(spec), options,
       Some(warehousePath(spark, spec.table)))
-    specs.put(spec.table, spec)
+    entries.put(spec.table, Entry(spec))
     spec
   }
 
@@ -142,8 +167,12 @@ object DistributionCatalog {
     * If anything fails before step 2, the old version stays readable
     * and routable under its old spec, and the staging entry and
     * directory are removed. `df` may read the table itself: the write
-    * never touches the files it reads. Isolated tenant parts are the
-    * caller's: they stay as they are. */
+    * never touches the files it reads. Under an unchanged spec the
+    * table keeps its entry: intervals, placements and isolated tenant
+    * parts, which are the caller's. A new spec starts a fresh entry at
+    * the default placement, as citus's `alter_distributed_table` places
+    * the shards it creates; a caller that changes the spec re-absorbs
+    * the tenant parts ([[commitAbsorbing]]). */
   private[graft] def commitVersion(spark: SparkSession, name: String,
       layout: Option[DistributionSpec], df: DataFrame,
       options: Map[String, String] = Map.empty): Unit = {
@@ -172,7 +201,8 @@ object DistributionCatalog {
       catalog.dropTable(staging, ignoreIfNotExists = true, purge = false)
       if (!committed) deleteTree(next)
     }
-    layout.fold(specs.remove(name))(specs.put(name, _))
+    entries.updateWith(name)(old =>
+      layout.map(s => old.filter(_.spec == s).getOrElse(Entry(s))))
     spark.catalog.refreshTable(name)
     // every version lives under the warehouse path: keep only `next`
     Option(dir.listFiles()).getOrElse(Array.empty)
@@ -221,7 +251,7 @@ object DistributionCatalog {
   /** True when [[isolateTenant]] moved some of `name`'s keys into
     * tables of their own. */
   def hasIsolatedTenants(name: String): Boolean =
-    isolatedTenants.get(name).exists(_.nonEmpty)
+    entries.get(name).exists(_.tenants.nonEmpty)
 
   /** Reference table: stored once, broadcast to every join site. */
   def createReferenceTable(spark: SparkSession, df: DataFrame,
@@ -238,17 +268,13 @@ object DistributionCatalog {
     * the one bucket file that can hold the key
     * ([[graft.plans.RouteToShard]]). */
   def table(spark: SparkSession, name: String): DataFrame = {
-    val base = spark.table(name)
-    val df = isolatedTenants.get(name) match {
-      case Some(parts) =>
-        parts.values.foldLeft(base)((acc, t) => acc.unionByName(spark.table(t)))
-      case None => base
-    }
-    specs.get(name) match {
-      case Some(s) if s.method == Reference => broadcast(df)
+    val e = entries.get(name)
+    val df = e.toSeq.flatMap(_.tenants.values)
+      .foldLeft(spark.table(name))((acc, t) => acc.unionByName(spark.table(t)))
+    e.map(_.spec.method) match {
+      case Some(Reference) => broadcast(df)
       // the shard id is physical layout, not user schema
-      case Some(s) if s.method == RangeDist || s.method == AppendDist =>
-        df.drop("__shard")
+      case Some(RangeDist | AppendDist) => df.drop("__shard")
       case _ => df
     }
   }
@@ -258,19 +284,18 @@ object DistributionCatalog {
     * bucketed: time-partitioned tables are hash tables with 0 buckets,
     * all in group 0, and their layouts share nothing. */
   def colocated(a: String, b: String): Boolean =
-    (specs.get(a), specs.get(b)) match {
+    (spec(a), spec(b)) match {
       case (Some(x), Some(y)) =>
-        Seq(x, y).forall(s => s.method == Hash && s.bucketCount > 0) &&
-          x.colocationId == y.colocationId
+        x.bucketed && y.bucketed && x.colocationId == y.colocationId
       case _ => false
     }
 
-  def spec(name: String): Option[DistributionSpec] = specs.get(name)
+  def spec(name: String): Option[DistributionSpec] = entries.get(name).map(_.spec)
 
   /** The `pg_dist_partition` view of this catalog. */
   def listTables(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    specs.values.toSeq
+    entries.values.map(_.spec).toSeq
       .map(s => (s.table,
         s.method match { case Hash => "h"; case Reference => "n"
           case RangeDist => "r"; case AppendDist => "a" },
@@ -286,7 +311,7 @@ object DistributionCatalog {
     * system, not a scan. */
   def citusTables(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    specs.values.toSeq.sortBy(_.table).map { s =>
+    entries.values.map(_.spec).toSeq.sortBy(_.table).map { s =>
       val kind = s.method match {
         case Hash => "distributed"
         case Reference => "reference"
@@ -303,7 +328,7 @@ object DistributionCatalog {
   /** `citus_total_relation_size(rel)`: physical bytes of a cataloged
     * table (all shards + isolated tenant parts). */
   def totalRelationSize(spark: SparkSession, name: String): Long =
-    (name +: isolatedTenants.getOrElse(name, Map.empty).values.toSeq)
+    (name +: entries.get(name).toSeq.flatMap(_.tenants.values))
       .flatMap(dataFiles(spark, _)).map(_.length()).sum
 
   /** `update_distributed_table_colocation(rel, colocate_with)`
@@ -315,12 +340,11 @@ object DistributionCatalog {
     * compatible, which is exactly the citus precondition. */
   def updateDistributedTableColocation(spark: SparkSession, name: String,
       colocateWith: Option[String]): DistributionSpec = {
-    val s = specs.getOrElse(name,
-      throw new IllegalArgumentException(s"not a distributed table: $name"))
-    require(s.method == Hash, s"$name is not hash-distributed")
-    val spec = s.copy(colocationId = colocationFor(colocateWith,
-      s.bucketCount))
-    specs.put(name, spec)
+    val e = entry(name)
+    require(e.spec.method == Hash, s"$name is not hash-distributed")
+    val spec = e.spec.copy(colocationId = colocationFor(colocateWith,
+      e.spec.bucketCount))
+    entries.put(name, e.copy(spec = spec))
     spec
   }
 
@@ -344,10 +368,7 @@ object DistributionCatalog {
     * over the partition column only. */
   def timePartitions(spark: SparkSession, name: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, count, lit}
-    val s = specs.getOrElse(name,
-      throw new IllegalArgumentException(s"not a cataloged table: $name"))
-    val partCol = s.distColumn.filter(_.startsWith("__")).getOrElse(
-      throw new IllegalArgumentException(s"$name is not time-partitioned"))
+    val partCol = timePartColumn(name)
     val counts = spark.table(name).groupBy(col(partCol))
       .agg(count(lit(1)).as("n_rows"))
     val bytes = dataFiles(spark, name).groupMapReduce(
@@ -359,6 +380,11 @@ object DistributionCatalog {
       .sortBy(_._2).toSeq
       .toDF("table_name", "partition_value", "n_rows", "size_bytes")
   }
+
+  /** The partition column of time-partitioned table `name`. */
+  private def timePartColumn(name: String): String =
+    entry(name).spec.distColumn.filter(_.startsWith("__")).getOrElse(
+      throw new IllegalArgumentException(s"$name is not time-partitioned"))
 
   /** `get_missing_time_partition_ranges(table, interval, to, from)`:
     * the month starts in [from, to] that have NO partition yet — the
@@ -391,10 +417,7 @@ object DistributionCatalog {
   def compressOldTimePartitions(spark: SparkSession, name: String,
       olderThan: java.sql.Date, codec: String = "zstd"): Seq[String] = {
     import org.apache.spark.sql.functions.col
-    val s = specs.getOrElse(name,
-      throw new IllegalArgumentException(s"not a cataloged table: $name"))
-    val partCol = s.distColumn.filter(_.startsWith("__")).getOrElse(
-      throw new IllegalArgumentException(s"$name is not time-partitioned"))
+    val partCol = timePartColumn(name)
     val old = spark.table(name).select(col(partCol)).distinct()
       .filter(col(partCol) < olderThan)
       .collect().map(_.get(0).toString).sorted.toSeq
@@ -423,12 +446,7 @@ object DistributionCatalog {
   def dropOldTimePartitions(spark: SparkSession, name: String,
       olderThan: java.sql.Date): Seq[String] = {
     import org.apache.spark.sql.functions.col
-    val s = specs.getOrElse(name,
-      throw new IllegalArgumentException(s"not a cataloged table: $name"))
-    val partCol = s.distColumn.getOrElse(
-      throw new IllegalArgumentException(s"$name has no partition column"))
-    require(partCol.startsWith("__"),
-      s"$name is not time-partitioned (partition column $partCol)")
+    val partCol = timePartColumn(name)
     val old = spark.table(name).select(col(partCol)).distinct()
       .filter(col(partCol) < olderThan)
       .collect().map(_.get(0).toString).sorted.toSeq
@@ -463,14 +481,12 @@ object DistributionCatalog {
   def alterDistributedTable(spark: SparkSession, name: String,
       distColumn: Option[String] = None, buckets: Option[Int] = None,
       colocateWith: Option[String] = None): DistributionSpec = {
-    val old = specs.getOrElse(name,
-      throw new IllegalArgumentException(s"not a distributed table: $name"))
+    val old = entry(name).spec
     require(old.method == Hash, s"$name is not hash-distributed")
     val newBuckets = buckets.getOrElse(old.bucketCount)
     val spec = DistributionSpec(name, Hash, distColumn.orElse(old.distColumn),
       newBuckets, colocationFor(colocateWith, newBuckets))
-    commitVersion(spark, name, Some(spec), table(spark, name))
-    dropTenantParts(spark, name)
+    commitAbsorbing(spark, name, Some(spec), table(spark, name))
     spec
   }
 
@@ -479,16 +495,19 @@ object DistributionCatalog {
     * drop it from the distribution catalog, as one [[commitVersion]];
     * isolated tenant parts fold back into the plain table. */
   def undistributeTable(spark: SparkSession, name: String): Unit = {
-    require(specs.contains(name), s"not a distributed table: $name")
-    commitVersion(spark, name, None, table(spark, name))
-    dropTenantParts(spark, name)
+    require(spec(name).nonEmpty, s"not a distributed table: $name")
+    commitAbsorbing(spark, name, None, table(spark, name))
   }
 
-  /** Drop a table's isolated-tenant side tables + bookkeeping (used by
-    * the rewrites that re-absorb those rows, after their commit). */
-  private def dropTenantParts(spark: SparkSession, name: String): Unit = {
-    isolatedTenants.remove(name).foreach(_.values.foreach(t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")))
+  /** [[commitVersion]] for a rewrite whose `df` replaces the isolated
+    * tenant parts too: their tables go once the commit is in. */
+  private def commitAbsorbing(spark: SparkSession, name: String,
+      layout: Option[DistributionSpec], df: DataFrame,
+      options: Map[String, String] = Map.empty): Unit = {
+    val parts = entries.get(name).toSeq.flatMap(_.tenants.values)
+    commitVersion(spark, name, layout, df, options)
+    entries.updateWith(name)(_.map(_.copy(tenants = Map.empty)))
+    parts.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
   /** The `citus_shards` size view (`sql/udfs/citus_shards/` — shard
@@ -500,36 +519,40 @@ object DistributionCatalog {
     * the rebalancer's diagnosis step. */
   def shardSizes(spark: SparkSession, name: String): DataFrame = {
     import spark.implicits._
-    val s = specs.getOrElse(name,
-      throw new IllegalArgumentException(s"not a distributed table: $name"))
-    require(s.method == Hash && s.bucketCount > 0,
-      s"$name is not hash-bucketed")
-    val bucketRe = "_(\\d{5})[_.]".r
-    val bytes = dataFiles(spark, name)
-      .flatMap(f => bucketRe.findFirstMatchIn(f.getName)
-        .map(m => m.group(1).toInt -> f.length()))
-      .groupMapReduce(_._1)(_._2)(_ + _)
+    val bytes = shardBytes(spark, name)
     // bucket id comes from the file name (file-splits ≠ buckets: tiny
     // files pack many-per-partition, so spark_partition_id won't do)
     import org.apache.spark.sql.functions.{input_file_name, regexp_extract}
     val rows = spark.table(name)
-      .groupBy(regexp_extract(input_file_name(), "_(\\d{5})[_.]", 1)
+      .groupBy(regexp_extract(input_file_name(), BucketFile.regex, 1)
         .cast("int").as("bucket"))
       .count().collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val base = (0 until s.bucketCount).map { b =>
-      (name, b, bytes.getOrElse(b, 0L), rows.getOrElse(b, 0L))
+    val base = bytes.toSeq.sorted.map { case (b, n) =>
+      (name, b, n, rows.getOrElse(b, 0L))
     }
     // isolated tenants show as their own "shards" (shard = -1), the way
     // citus_shards lists an isolated tenant's dedicated shard
-    val tenantRows = isolatedTenants.getOrElse(name, Map.empty).values
+    val tenantRows = entry(name).tenants.values
       .toSeq.sorted.map(t => (t, -1, dataFiles(spark, t).map(_.length()).sum,
         spark.table(t).count()))
     (base ++ tenantRows)
       .toDF("table_name", "shard", "size_bytes", "n_rows")
   }
 
-  private val isolatedTenants =
-    TrieMap.empty[String, Map[String, String]] // base -> value -> table
+  private val BucketFile = "_(\\d{5})[_.]".r
+
+  /** Bytes per bucket of hash-bucketed table `name` (0 for an empty
+    * bucket), from the file listing alone: no Spark job. */
+  private[catalog] def shardBytes(spark: SparkSession,
+      name: String): Map[Int, Long] = {
+    val e = entry(name)
+    require(e.spec.bucketed, s"$name is not hash-bucketed")
+    val bytes = dataFiles(spark, name)
+      .flatMap(f => BucketFile.findFirstMatchIn(f.getName)
+        .map(m => m.group(1).toInt -> f.length()))
+      .groupMapReduce(_._1)(_._2)(_ + _)
+    e.shards.map(b => b -> bytes.getOrElse(b, 0L)).toMap
+  }
 
   /** `isolate_tenant_to_new_shard(table, tenant_id, 'CASCADE')`
     * (`operations/isolate_shards.c:48-57` — split the shard holding a
@@ -556,14 +579,14 @@ object DistributionCatalog {
   def isolateTenant(spark: SparkSession, name: String,
       tenantValue: Any): DistributionSpec = {
     import org.apache.spark.sql.functions.{col, lit}
-    val s = specs.getOrElse(name,
-      throw new IllegalArgumentException(s"not a distributed table: $name"))
-    require(s.method == Hash && s.bucketCount > 0,
+    val e = entry(name)
+    val s = e.spec
+    require(s.bucketed,
       s"$name is not hash-bucketed (tenant isolation needs a bucketed " +
         "layout; time-partitioned and reference tables have none)")
     val distCol = s.distColumn.get
-    require(!isolatedTenants.get(name).exists(_.contains(
-      tenantValue.toString)), s"tenant $tenantValue of $name is isolated")
+    require(!e.tenants.contains(tenantValue.toString),
+      s"tenant $tenantValue of $name is isolated")
     val tenantTable =
       s"${name}__tenant_${tenantValue.toString.replaceAll("\\W", "_")}"
     val data = spark.table(name)
@@ -579,10 +602,8 @@ object DistributionCatalog {
       deleteTree(new java.io.File(tenantPath))
       throw e
     }
-    isolatedTenants.updateWith(name) {
-      case Some(m) => Some(m + (tenantValue.toString -> tenantTable))
-      case None => Some(Map(tenantValue.toString -> tenantTable))
-    }
+    entries.updateWith(name)(_.map(e =>
+      e.copy(tenants = e.tenants + (tenantValue.toString -> tenantTable))))
     s
   }
 
@@ -619,11 +640,11 @@ object DistributionCatalog {
     tenantReads.updateWith((name, tenantValue.toString)) {
       case Some(n) => Some(n + 1); case None => Some(1L)
     }
-    isolatedTenants.get(name).flatMap(_.get(tenantValue.toString)) match {
+    val e = entry(name)
+    e.tenants.get(tenantValue.toString) match {
       case Some(t) => spark.table(t)
       case None =>
-        val s = specs.getOrElse(name,
-          throw new IllegalArgumentException(s"not a distributed table: $name"))
+        val s = e.spec
         require(s.method == Hash && s.distColumn.nonEmpty,
           s"$name has no distribution column to route on")
         spark.table(name).filter(col(s.distColumn.get) === lit(tenantValue))
@@ -655,7 +676,7 @@ object DistributionCatalog {
   def refreshMaterializedView(spark: SparkSession, name: String): Unit = {
     val defn = matviews.getOrElse(name,
       throw new IllegalArgumentException(s"no such materialized view: $name"))
-    val spec = specs.get(name)
+    val spec = this.spec(name)
     materialize(spark, name, defn,
       spec.filter(_.method == Hash).flatMap(_.distColumn),
       spec.map(_.bucketCount).filter(_ > 0).getOrElse(DefaultBuckets))
@@ -670,47 +691,35 @@ object DistributionCatalog {
       buckets: Int): Unit = {
     val layout = distColumn.map { c =>
       val s = DistributionSpec(name, Hash, Some(c), buckets, 0)
-      specs.get(name).filter(_.copy(colocationId = 0) == s)
+      spec(name).filter(_.copy(colocationId = 0) == s)
         .getOrElse(s.copy(colocationId = nextColocation.getAndIncrement()))
     }
     if (!spark.catalog.tableExists(name)) {
       writeTable(definition(spark), name, layout, Zstd,
         Some(warehousePath(spark, name)))
-      layout.foreach(specs.put(name, _))
-    } else {
-      commitVersion(spark, name, layout, definition(spark))
-      dropTenantParts(spark, name)
-    }
+      layout.fold(entries.remove(name))(s => entries.put(name, Entry(s)))
+    } else commitAbsorbing(spark, name, layout, definition(spark))
   }
 
   // ---- shard placements (pg_dist_placement) ---------------------------
 
-  private val placementMap = TrieMap.empty[String, Map[Int, Int]]
-
-  /** Current shard→node placement ≙ `pg_dist_placement`. Never-placed
-    * tables get citus's create-time default: round-robin across the
-    * node set. */
+  /** Current shard→node placement ≙ `pg_dist_placement`. A shard never
+    * moved has citus's create-time default: round-robin across the node
+    * set. */
   def placements(table: String, nodeCount: Int,
-      shards: Set[Int]): Map[Int, Int] =
-    placementMap.get(table) match {
-      // Reconcile against the live shard set: splitShard /
-      // alterDistributedTable can change it under a stored placement,
-      // so drop entries for shards that no longer exist and give new
-      // shards the default round-robin home.
-      case Some(p) => shards.map(s => s -> p.getOrElse(s, s % nodeCount)).toMap
-      case None => shards.map(s => s -> (s % nodeCount)).toMap
-    }
+      shards: Set[Int]): Map[Int, Int] = {
+    val stored = entries.get(table).fold(Map.empty[Int, Int])(_.placements)
+    shards.map(s => s -> stored.getOrElse(s, s % nodeCount)).toMap
+  }
 
-  private[catalog] def setPlacements(table: String,
-      p: Map[Int, Int]): Unit = placementMap.put(table, p)
+  private[catalog] def setPlacements(table: String, p: Map[Int, Int]): Unit =
+    entries.updateWith(table)(_.map(_.copy(placements = p)))
 
   /** The `pg_dist_placement` view (shardid, nodeid) for one table. */
   def shardPlacements(spark: SparkSession, table: String,
       nodeCount: Int): DataFrame = {
     import spark.implicits._
-    val s = specs.getOrElse(table,
-      throw new IllegalArgumentException(s"not a distributed table: $table"))
-    placements(table, nodeCount, (0 until s.bucketCount).toSet)
+    placements(table, nodeCount, entry(table).shards.toSet)
       .toSeq.sorted.map { case (sh, n) => (table, sh, n) }
       .toDF("logicalrelid", "shardid", "nodeid")
   }
@@ -724,8 +733,6 @@ object DistributionCatalog {
     * ACTUAL observed bounds of the shard's rows, the way citus records
     * them for append tables and uses them for pruning. */
   final case class ShardInterval(shard: Int, min: Any, max: Any)
-
-  private val shardIntervals = TrieMap.empty[String, Seq[ShardInterval]]
 
   private def cmp(a: Any, b: Any): Int = (a, b) match {
     // numbers compare across widths (stored bounds are often Long while
@@ -754,12 +761,10 @@ object DistributionCatalog {
     val shardExpr = splitPoints
       .map(p => when(col(distColumn) >= lit(p), 1).otherwise(0))
       .reduce(_ + _)
-    val spec = create(spark, df.withColumn("__shard",
+    recordIntervals(spark, create(spark, df.withColumn("__shard",
         coalesce(shardExpr, lit(0))),
       DistributionSpec(name, RangeDist, Some(distColumn),
-        splitPoints.size + 1, 0))
-    recordIntervals(spark, name, distColumn, replace = true)
-    spec
+        splitPoints.size + 1, 0)))
   }
 
   /** Append-distributed table (`DISTRIBUTE_BY_APPEND 'a'`,
@@ -772,34 +777,28 @@ object DistributionCatalog {
   def createAppendTable(spark: SparkSession, firstBatch: DataFrame,
       name: String, distColumn: String): DistributionSpec = {
     import org.apache.spark.sql.functions.lit
-    val spec = create(spark, firstBatch.withColumn("__shard", lit(0)),
-      DistributionSpec(name, AppendDist, Some(distColumn), 1, 0))
-    recordIntervals(spark, name, distColumn, replace = true)
-    spec
+    recordIntervals(spark, create(spark,
+      firstBatch.withColumn("__shard", lit(0)),
+      DistributionSpec(name, AppendDist, Some(distColumn), 1, 0)))
   }
 
   /** Append one more batch as a new shard (shard id = previous max + 1). */
   def appendShard(spark: SparkSession, name: String,
       batch: DataFrame): DistributionSpec = {
     import org.apache.spark.sql.functions.lit
-    val s = specs.getOrElse(name,
-      throw new IllegalArgumentException(s"not a distributed table: $name"))
-    require(s.method == AppendDist, s"$name is not append-distributed")
-    val next = shardIntervals(name).map(_.shard).max + 1
-    writeTable(batch.withColumn("__shard", lit(next)), name, Some(s),
+    val e = entry(name)
+    require(e.spec.method == AppendDist, s"$name is not append-distributed")
+    val next = e.shards.max + 1
+    writeTable(batch.withColumn("__shard", lit(next)), name, Some(e.spec),
       Map.empty, path = None)
     spark.catalog.refreshTable(name)
-    recordIntervals(spark, name, s.distColumn.get, replace = true)
-    val spec = s.copy(bucketCount = next + 1)
-    specs.put(name, spec)
-    spec
+    recordIntervals(spark, e.spec)
   }
 
   /** The `pg_dist_shard` view: one row per shard with its interval. */
   def rangeShards(spark: SparkSession, name: String): DataFrame = {
     import spark.implicits._
-    shardIntervals.getOrElse(name,
-        throw new IllegalArgumentException(s"no shard intervals for $name"))
+    rangeEntry(name).intervals
       .map(i => (name, i.shard, String.valueOf(i.min), String.valueOf(i.max)))
       .toDF("logicalrelid", "shardid", "shardminvalue", "shardmaxvalue")
   }
@@ -812,15 +811,12 @@ object DistributionCatalog {
   def rangeScan(spark: SparkSession, name: String,
       lo: Option[Any], hi: Option[Any]): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    val s = specs.getOrElse(name,
-      throw new IllegalArgumentException(s"not a distributed table: $name"))
-    require(s.method == RangeDist || s.method == AppendDist,
-      s"$name is not range/append-distributed")
-    val keep = shardIntervals(name).filter(i =>
+    val e = rangeEntry(name)
+    val keep = e.intervals.filter(i =>
         lo.forall(l => cmp(i.max, l) >= 0) &&
         hi.forall(h => cmp(i.min, h) <= 0))
       .map(_.shard)
-    val dc = col(s.distColumn.get)
+    val dc = col(e.spec.distColumn.get)
     val residual = (lo.map(l => dc >= lit(l)) ++ hi.map(h => dc <= lit(h)))
       .reduceOption(_ && _).getOrElse(lit(true))
     spark.table(name)
@@ -841,15 +837,11 @@ object DistributionCatalog {
   def splitShard(spark: SparkSession, name: String, shard: Int,
       points: Seq[Any]): DistributionSpec = {
     import org.apache.spark.sql.functions.{col, lit, when}
-    val s = specs.getOrElse(name,
-      throw new IllegalArgumentException(s"not a distributed table: $name"))
-    require(s.method == RangeDist || s.method == AppendDist,
-      s"$name is not range/append-distributed")
+    val e = rangeEntry(name)
     require(points.nonEmpty, "need at least one split point")
-    val ivs = shardIntervals(name)
-    require(ivs.exists(_.shard == shard), s"no such shard: $shard")
-    val distCol = s.distColumn.get
-    val base = ivs.map(_.shard).max + 1
+    require(e.shards.contains(shard), s"no such shard: $shard")
+    val distCol = e.spec.distColumn.get
+    val base = e.shards.max + 1
     val subExpr = points
       .map(p => when(col(distCol) >= lit(p), 1).otherwise(0))
       .reduce(_ + _) + base
@@ -857,29 +849,41 @@ object DistributionCatalog {
     // (materialized first: the write appends to the table being read)
     writeTable(spark.table(name).filter(col("__shard") === shard)
         .drop("__shard").localCheckpoint(eager = true)
-        .withColumn("__shard", subExpr), name, Some(s), Map.empty,
+        .withColumn("__shard", subExpr), name, Some(e.spec), Map.empty,
       path = None)
     // retire the old shard: drop its partition (files included)
     dropPartition(spark, name, "__shard", shard.toString)
     spark.catalog.refreshTable(name)
-    recordIntervals(spark, name, distCol, replace = true)
-    val spec = s.copy(bucketCount = shardIntervals(name).size)
-    specs.put(name, spec)
-    spec
+    recordIntervals(spark, e.spec)
+  }
+
+  /** The entry of range/append table `name`. */
+  private def rangeEntry(name: String): Entry = {
+    val e = entry(name)
+    require(e.spec.method == RangeDist || e.spec.method == AppendDist,
+      s"$name is not range/append-distributed")
+    e
   }
 
   /** Record per-shard observed min/max (one small grouped scan — N
-    * shards rows to the driver, never data rows). */
-  private def recordIntervals(spark: SparkSession, name: String,
-      distColumn: String, replace: Boolean): Unit = {
+    * shards rows to the driver, never data rows) as the intervals of
+    * range/append table `layout.table`, whose shard count becomes the
+    * number of intervals. Placements of retired shards go. */
+  private def recordIntervals(spark: SparkSession,
+      layout: DistributionSpec): DistributionSpec = {
     import org.apache.spark.sql.functions.{col, max, min}
-    val ivs = spark.table(name)
-      .groupBy(col("__shard")).agg(min(distColumn), max(distColumn))
+    val ivs = spark.table(layout.table)
+      .groupBy(col("__shard"))
+      .agg(min(layout.distColumn.get), max(layout.distColumn.get))
       .collect()
       .map(r => ShardInterval(
         r.get(0).toString.toInt, r.get(1), r.get(2)))
       .sortBy(_.shard).toSeq
-    shardIntervals.put(name, ivs)
+    val spec = layout.copy(bucketCount = ivs.size)
+    val live = ivs.map(_.shard).toSet
+    entries.updateWith(spec.table)(_.map(e => e.copy(spec = spec,
+      intervals = ivs, placements = e.placements.filter(p => live(p._1)))))
+    spec
   }
 
   /** `alter_columnar_table_set(rel, chunk_group_row_limit,
@@ -901,17 +905,15 @@ object DistributionCatalog {
       compression: Option[String] = None,
       stripeBytes: Option[Long] = None,
       chunkRows: Option[Int] = None): Unit = {
-    val s = specs.getOrElse(name,
-      throw new IllegalArgumentException(s"not a cataloged table: $name"))
+    val s = entry(name).spec
     // range/append shards live in the __shard column, which table()
     // strips as non-user schema: read the raw catalog table to keep it
     val sharded = s.method == RangeDist || s.method == AppendDist
-    commitVersion(spark, name, Some(s),
+    commitAbsorbing(spark, name, Some(s),
       if (sharded) spark.table(name) else table(spark, name),
       compression.map("compression" -> _).toMap ++
         stripeBytes.map("parquet.block.size" -> _.toString) ++
         chunkRows.map("parquet.page.row.count.limit" -> _.toString))
-    dropTenantParts(spark, name)
   }
 
   /** `citus_update_table_statistics(rel)` (`sql/udfs/
@@ -929,8 +931,7 @@ object DistributionCatalog {
   }
 
   def reset(): Unit =
-    { specs.clear(); matviews.clear(); isolatedTenants.clear()
-      shardIntervals.clear(); placementMap.clear(); tenantReads.clear() }
+    { entries.clear(); matviews.clear(); tenantReads.clear() }
 
   private def warehousePath(spark: SparkSession, name: String): String =
     new java.io.File(

@@ -82,17 +82,14 @@ object Rebalancer {
     moves.result().sortBy(m => (m.shard, m.toNode))
   }
 
-  /** Plan against the catalog's live state: shard sizes come from
-    * [[DistributionCatalog.shardSizes]] (the `citus_shards` view),
+  /** Plan against the catalog's live state: shard bytes come from the
+    * table's file listing (the `size_bytes` of
+    * [[DistributionCatalog.shardSizes]], without its row-count scan),
     * current placement from the catalog (round-robin when never
     * rebalanced — citus's default placement at create time). */
   def planForTable(spark: SparkSession, table: String, nodeCount: Int,
       strategy: String = "by_disk_size"): Seq[Move] = {
-    val sizes = DistributionCatalog.shardSizes(spark, table)
-      .collect().filter(_.getInt(1) >= 0)
-      .map(r => r.getInt(1) -> r.getLong(2)).toMap
-    val current = DistributionCatalog.placements(table, nodeCount,
-      sizes.keySet)
+    val (sizes, current) = state(spark, table, nodeCount)
     plan(sizes, current, nodeCount, strategy)
   }
 
@@ -101,15 +98,8 @@ object Rebalancer {
     * the executed moves (empty = already balanced). */
   def rebalance(spark: SparkSession, table: String, nodeCount: Int,
       strategy: String = "by_disk_size"): Seq[Move] = {
-    val moves = planForTable(spark, table, nodeCount, strategy)
-    val sizes = DistributionCatalog.shardSizes(spark, table)
-      .collect().filter(_.getInt(1) >= 0).map(_.getInt(1))
-    val current = DistributionCatalog.placements(table, nodeCount,
-      sizes.toSet)
-    val updated = moves.foldLeft(current)((p, m) =>
-      p.updated(m.shard, m.toNode))
-    DistributionCatalog.setPlacements(table, updated)
-    moves
+    val (sizes, current) = state(spark, table, nodeCount)
+    commit(table, current, plan(sizes, current, nodeCount, strategy))
   }
 
   /** `citus_drain_node(node)` (`operations/shard_rebalancer.c` — move
@@ -123,25 +113,17 @@ object Rebalancer {
       nodeCount: Int): Seq[Move] = {
     require(node >= 0 && node < nodeCount, s"no such node: $node")
     require(nodeCount > 1, "draining the only node leaves shards homeless")
-    val sizes = DistributionCatalog.shardSizes(spark, table)
-      .collect().filter(_.getInt(1) >= 0)
-      .map(r => r.getInt(1) -> r.getLong(2)).toMap
-    val current = DistributionCatalog.placements(table, nodeCount,
-      sizes.keySet)
-    def sizeOf(s: Int): Long = sizes.getOrElse(s, 0L)
+    val (sizes, current) = state(spark, table, nodeCount)
     val loads = Array.fill(nodeCount)(0L)
-    current.foreach { case (s, n) => if (n != node) loads(n) += sizeOf(s) }
+    current.foreach { case (s, n) => if (n != node) loads(n) += sizes(s) }
     val moves = current.toSeq.collect { case (s, n) if n == node => s }
-      .sortBy(s => (-sizeOf(s), s))
+      .sortBy(s => (-sizes(s), s))
       .map { s =>
         val target = loads.indices.filter(_ != node).minBy(loads)
-        loads(target) += sizeOf(s)
-        Move(s, sizeOf(s), node, target)
+        loads(target) += sizes(s)
+        Move(s, sizes(s), node, target)
       }
-    val updated = moves.foldLeft(current)((p, m) =>
-      p.updated(m.shard, m.toNode))
-    DistributionCatalog.setPlacements(table, updated)
-    moves
+    commit(table, current, moves)
   }
 
   /** `citus_move_shard_placement(shardid, source, target)`: one
@@ -150,11 +132,25 @@ object Rebalancer {
   def moveShardPlacement(spark: SparkSession, table: String, shard: Int,
       toNode: Int, nodeCount: Int): Unit = {
     require(toNode >= 0 && toNode < nodeCount, s"no such node: $toNode")
-    val sizes = DistributionCatalog.shardSizes(spark, table)
-      .collect().filter(_.getInt(1) >= 0).map(_.getInt(1)).toSet
+    val (sizes, current) = state(spark, table, nodeCount)
     require(sizes.contains(shard), s"no such shard: $shard")
-    val current = DistributionCatalog.placements(table, nodeCount, sizes)
     DistributionCatalog.setPlacements(table, current.updated(shard, toNode))
+  }
+
+  /** Bytes per live shard from the file listing, and the current
+    * placement of those shards. Starts no Spark job. */
+  private def state(spark: SparkSession, table: String,
+      nodeCount: Int): (Map[Int, Long], Map[Int, Int]) = {
+    val sizes = DistributionCatalog.shardBytes(spark, table)
+    (sizes, DistributionCatalog.placements(table, nodeCount, sizes.keySet))
+  }
+
+  /** Store `current` with `moves` applied; returns `moves`. */
+  private def commit(table: String, current: Map[Int, Int],
+      moves: Seq[Move]): Seq[Move] = {
+    DistributionCatalog.setPlacements(table,
+      moves.foldLeft(current)((p, m) => p.updated(m.shard, m.toNode)))
+    moves
   }
 
   /** Render a move list the way `get_rebalance_table_shards_plan`

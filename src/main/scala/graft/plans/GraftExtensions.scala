@@ -23,6 +23,7 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
   *     file, and [[ShareKeyCodegen]] keeps the key out of the generated
   *     source, so every key of a parameterized statement reuses one
   *     compiled class. Both are always on;
+  *   - [[TopKPerGroupStrategy]], which plans [[TopKPerGroup]]'s node;
   *   - SQL function `simhash64(array<string>)` → the native single-pass
   *     expression.
   *
@@ -50,6 +51,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectPreCBORule(_ => RouteToShard)
     // before CollapseCodegenStages, on the adaptive and static paths
     e.injectColumnar(_ => ShareKeyCodegen)
+    // the partial/final plan of the TopKPerGroup operator
+    e.injectPlannerStrategy(_ => TopKPerGroupStrategy)
     e.injectFunction((
       new FunctionIdentifier("simhash64"),
       new ExpressionInfo(classOf[graft.functions.SimHash64Expr].getName,

@@ -154,8 +154,7 @@ object Dml {
       clauses: MergeClauses): Unit = {
     val spec = DistributionCatalog.spec(table).getOrElse(
       throw new IllegalArgumentException(s"not a catalog table: $table"))
-    require(spec.method == DistributionCatalog.Hash &&
-      spec.bucketCount > 0 && spec.distColumn.isDefined,
+    require(spec.bucketed && spec.distColumn.isDefined,
       s"$table is not hash-bucketed")
     require(!DistributionCatalog.hasIsolatedTenants(table),
       s"$table has isolated tenants; MERGE INTO it would miss their rows")

@@ -367,6 +367,9 @@ class CatalogSpec extends AnyFunSuite {
     val shards = DistributionCatalog.rangeShards(spark, "d_split_orders")
       .collect().map(_.getInt(1)).toSet
     assert(shards === Set(0, 2, 3), s"got $shards")
+    // pg_dist_placement lists the live shards, not the retired one
+    assert(DistributionCatalog.shardPlacements(spark, "d_split_orders", 3)
+      .collect().map(_.getInt(1)).toSet === shards)
     assert(spark.table("d_split_orders").count() === orders.count(),
       "no rows lost in the split")
     assert(spark.table("d_split_orders")
@@ -378,6 +381,84 @@ class CatalogSpec extends AnyFunSuite {
     assert(pruned.inputFiles.forall(_.contains("__shard=2")))
     assert(pruned.count() === orders
       .filter(col("o_custkey") >= 80 && col("o_custkey") <= 100).count())
+  }
+
+  test("an append table's shard count and placements follow its live " +
+      "shards through split and append") {
+    setup
+    val orders = Tables(spark, TestSpark.sf, "orders")
+    DistributionCatalog.createAppendTable(spark,
+      orders.filter(col("o_custkey") < 50), "d_live_app", "o_custkey")
+    DistributionCatalog.appendShard(spark, "d_live_app",
+      orders.filter(col("o_custkey") >= 50 && col("o_custkey") < 100))
+    // shard 0 retires into 2 and 3; the next append is shard 4
+    DistributionCatalog.splitShard(spark, "d_live_app", 0, Seq(25))
+    val spec = DistributionCatalog.appendShard(spark, "d_live_app",
+      orders.filter(col("o_custkey") >= 100))
+    val shards = DistributionCatalog.rangeShards(spark, "d_live_app")
+      .collect().map(_.getInt(1)).toSet
+    assert(shards === Set(1, 2, 3, 4), s"got $shards")
+    assert(spec.bucketCount === shards.size)
+    assert(DistributionCatalog.listTables(spark)
+      .filter(col("logicalrelid") === "d_live_app").head().getInt(3) ===
+      shards.size)
+    assert(DistributionCatalog.shardPlacements(spark, "d_live_app", 3)
+      .collect().map(_.getInt(1)).toSet === shards)
+  }
+
+  test("undistribute_table forgets a range table's shard intervals") {
+    setup
+    val orders = Tables(spark, TestSpark.sf, "orders")
+    DistributionCatalog.createRangeDistributedTable(spark, orders,
+      "d_undist_range", "o_custkey", splitPoints = Seq(75))
+    DistributionCatalog.undistributeTable(spark, "d_undist_range")
+    assert(DistributionCatalog.spec("d_undist_range").isEmpty)
+    assert(spark.table("d_undist_range").count() === orders.count())
+    intercept[IllegalArgumentException](
+      DistributionCatalog.rangeShards(spark, "d_undist_range"))
+  }
+
+  test("a table created again under a name whose shard was moved gets " +
+      "the default placement") {
+    import graft.catalog.Rebalancer
+    setup
+    val orders = Tables(spark, TestSpark.sf, "orders")
+    DistributionCatalog.createDistributedTable(spark, orders, "d_again",
+      "o_orderkey", buckets = 4)
+    Rebalancer.moveShardPlacement(spark, "d_again", shard = 0, toNode = 2,
+      nodeCount = 3)
+    DistributionCatalog.undistributeTable(spark, "d_again")
+    spark.sql("DROP TABLE d_again")
+    DistributionCatalog.createDistributedTable(spark, orders, "d_again",
+      "o_orderkey", buckets = 4)
+    val placed = DistributionCatalog.shardPlacements(spark, "d_again", 3)
+      .collect().map(r => r.getInt(1) -> r.getInt(2)).toMap
+    assert(placed === Map(0 -> 0, 1 -> 1, 2 -> 2, 3 -> 0))
+  }
+
+  test("the rebalancer reads shard bytes from the file listing: " +
+      "planning, rebalancing, draining and moving start no Spark job") {
+    import graft.catalog.Rebalancer
+    setup
+    DistributionCatalog.createDistributedTable(spark,
+      Tables(spark, TestSpark.sf, "orders"), "d_nojob", "o_orderkey",
+      buckets = 4)
+    val sc = spark.sparkContext
+    val group = "rebalancer-no-job"
+    sc.setJobGroup(group, "rebalancer calls")
+    try {
+      Rebalancer.planForTable(spark, "d_nojob", 3)
+      Rebalancer.rebalance(spark, "d_nojob", 3)
+      Rebalancer.drainNode(spark, "d_nojob", 0, 3)
+      Rebalancer.moveShardPlacement(spark, "d_nojob", 1, 0, 3)
+      assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty)
+    } finally sc.clearJobGroup()
+    // the bytes it balances are citus_shards' size_bytes
+    val sizes = DistributionCatalog.shardSizes(spark, "d_nojob").collect()
+      .map(r => r.getInt(1) -> r.getLong(2)).toMap
+    val drains = Rebalancer.drainNode(spark, "d_nojob", 1, 3)
+    assert(drains.nonEmpty)
+    drains.foreach(m => assert(m.sizeBytes === sizes(m.shard)))
   }
 
   test("tenant read stats accumulate per (table, tenant) and drive " +

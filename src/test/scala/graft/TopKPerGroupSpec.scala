@@ -52,6 +52,8 @@ class TopKPerGroupSpec extends AnyFunSuite {
     val nodes = all(df.queryExecution.executedPlan)
     assert(nodes.count(_.isInstanceOf[TopKPerGroupExec]) === 2)
     assert(!nodes.exists(_.isInstanceOf[WindowExec]))
+    // the session's extensions plan it: nothing is added per call
+    assert(spark.experimental.extraStrategies.isEmpty)
   }
 
   test("k larger than any group returns whole groups") {

@@ -7,8 +7,9 @@ Scores every query named in oracle_sql.json: runs its oracle SQL in
 DuckDB against the same sfDir tables and compares it with the query's
 result parquet under verifyOutDir: column names (sorted), row count, and
 exact values after sorting columns by name and rows by all columns. A
-query whose result is missing counts as a failure. Result directories
-without an oracle get a rows-only check.
+query whose result is missing, or that Verify recorded as failed in
+failures.json, counts as one failure and prints its error. Result
+directories without an oracle get a rows-only check.
 """
 import json
 import sys
@@ -36,10 +37,14 @@ def main(sf_dir: str, out_dir: str) -> int:
     import os
     outputs = {
         os.path.basename(p) for p in glob.glob(f"{out_dir}/*") if os.path.isdir(p)}
+    failures_path = f"{out_dir}/failures.json"
+    failures = (json.load(open(failures_path))
+                if os.path.exists(failures_path) else {})
     n_pass = n_fail = n_noora = 0
-    for name in sorted(outputs | set(oracle)):
-        if name not in outputs:
-            print(f"  [FAIL-miss] {name}: no result output")
+    for name in sorted(outputs | set(oracle) | set(failures)):
+        if name in failures or name not in outputs:
+            print(f"  [FAIL-miss] {name}: " +
+                  failures.get(name, "no result output"))
             n_fail += 1
             continue
         got = pd.read_parquet(f"{out_dir}/{name}")
