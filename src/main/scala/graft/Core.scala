@@ -12,16 +12,39 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Tables pinned in memory by [[pinForBench]] — the engine's
-    * buffer-pool analogue (the reference reads shards from PostgreSQL's
-    * shared buffers; at bench scale the whole working set is resident). */
-  private val pinned =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
+  /** A resolved table: the DataFrame and the `stamp` of the files it
+    * was resolved from. */
+  private final case class Handle(stamp: Seq[(String, Long, Long)],
+      df: DataFrame)
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    pinned.getOrElse((dir, name),
-      if (name == "events") readEvents(spark, s"$dir/$name.parquet")
-      else spark.read.parquet(s"$dir/$name.parquet"))
+  /** Each table's handle per (session, dir, table): a parquet read
+    * resolved once (resolving runs a schema-inference job), or the
+    * cached copy [[pinForBench]] pinned — the engine's buffer-pool
+    * analogue (the reference reads shards from PostgreSQL's shared
+    * buffers; at bench scale the whole working set is resident). */
+  private val handles = scala.collection.concurrent.TrieMap
+    .empty[(SparkSession, String, String), Handle]
+
+  /** Table `name` under `dir`, resolved once per session: a later call
+    * returns the same DataFrame, and starts no job, until one of the
+    * table's files changes length or modification time. */
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val now = stamp(dir, name)
+    handles.get((spark, dir, name)).filter(_.stamp == now).map(_.df)
+      .getOrElse {
+        val path = s"$dir/$name.parquet"
+        val df = if (name == "events") readEvents(spark, path)
+          else spark.read.parquet(path)
+        handles.put((spark, dir, name), Handle(now, df))
+        df
+      }
+  }
+
+  /** (path, length, modification time) of each data file of table
+    * `name` under `dir`. */
+  private def stamp(dir: String, name: String): Seq[(String, Long, Long)] =
+    parquetFiles(new java.io.File(s"$dir/$name.parquet"))
+      .map(p => (p.getPath, p.length, p.lastModified))
 
   /** events.ts has shipped as both nanosecond parquet timestamps (older
     * testdata generations) and timestamp[us]; normalize to a microsecond
@@ -46,9 +69,9 @@ object Tables {
     }
   }
 
-  /** Drop pinned handles (required before stopping a SparkSession —
-    * cached plans are bound to their session). */
-  def unpin(): Unit = pinned.clear()
+  /** Drop every handle, pinned or not (required before stopping a
+    * SparkSession — plans are bound to their session). */
+  def unpin(): Unit = handles.clear()
 
   /** The star-schema tables [[pinForBench]] pins: the bench's working
     * set, and the input [[benchConf]] is sized over. */
@@ -82,7 +105,7 @@ object Tables {
       val base = apply(spark, dir, n)
       val df = (if (parts > 1) base.repartition(parts) else base).cache()
       df.count()
-      pinned.put((dir, n), df)
+      handles.put((spark, dir, n), Handle(stamp(dir, n), df))
     }
   }
 
@@ -98,9 +121,11 @@ object Tables {
   def mapParallelism(bytes: Long, cores: Int): Int =
     math.min(cores.toLong, math.max(1L, bytes / (1250L << 10))).toInt
 
-  /** Parquet bytes of each of [[benchTables]] under `dir`. */
+  /** Parquet bytes of each of [[benchTables]] under `dir`: the sum of
+    * its data files ([[stamp]]; `File.length` of a directory-style
+    * table is its inode size, about 4 KB). A missing table is 0 bytes. */
   def benchBytes(dir: String): Seq[Long] =
-    benchTables.map(n => parquetBytes(new java.io.File(s"$dir/$n.parquet")))
+    benchTables.map(n => stamp(dir, n).map(_._2).sum)
 
   /** The bench's data-sized SQL confs: a pure function of the pinned
     * tables' parquet bytes ([[benchBytes]]) and the core count. All are
@@ -142,15 +167,16 @@ object Tables {
       "spark.sql.adaptive.coalescePartitions.enabled" -> aqe)
   }
 
-  /** Bytes of a parquet table: the file itself, or the sum of the part
-    * files of a directory-style table (`File.length` of a directory is
-    * its inode size, about 4 KB). A missing table is 0 bytes. */
-  private def parquetBytes(f: java.io.File): Long =
+  /** The data files of a parquet table: `f` itself, or the files under
+    * a directory-style table at any depth, without the names Spark's
+    * listing hides (`.` names, and `_` names that are not `k=v`
+    * partition directories); none when it is missing. */
+  private def parquetFiles(f: java.io.File): Seq[java.io.File] =
     if (f.isDirectory) Option(f.listFiles()).toSeq.flatten
-      .filter(p => p.isFile && !p.getName.startsWith("_") &&
-        !p.getName.startsWith("."))
-      .map(_.length).sum
-    else f.length
+      .filterNot(p => p.getName.startsWith(".") ||
+        p.getName.startsWith("_") && !p.getName.contains("="))
+      .sortBy(_.getName).flatMap(parquetFiles)
+    else if (f.isFile) Seq(f) else Nil
 
   /** Register every table as a temp view (for spark.sql-based queries). */
   def registerAll(spark: SparkSession, dir: String): Unit =

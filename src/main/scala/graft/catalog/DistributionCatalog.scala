@@ -109,16 +109,38 @@ object DistributionCatalog {
     * with them. */
   private val Zstd = Map("compression" -> "zstd")
 
-  /** A new catalog table: `df` is written in `spec`'s layout straight to
-    * the table's warehouse path (there is no earlier version to
-    * protect), and `spec` is recorded as a fresh entry. */
+  /** A new catalog table: `df`, grouped by bucket ([[byBucket]]), is
+    * written in `spec`'s layout straight to the table's warehouse path
+    * (there is no earlier version to protect), and `spec` is recorded
+    * as a fresh entry. */
   private def create(spark: SparkSession, df: DataFrame,
       spec: DistributionSpec,
       options: Map[String, String] = Zstd): DistributionSpec = {
-    writeTable(df, spec.table, Some(spec), options,
+    writeTable(byBucket(df, spec), spec.table, Some(spec), options,
       Some(warehousePath(spark, spec.table)))
     entries.put(spec.table, Entry(spec))
     spec
+  }
+
+  /** `df`'s rows grouped by the bucket they take in `layout`, for a
+    * write into a hash-bucketed layout from outside it: hash-partitioned
+    * on the distribution column into `p` partitions, `p` the largest
+    * divisor of the bucket count that is at most the default
+    * parallelism. Spark's bucket id is `pmod(murmur3(c), b)` and `p`
+    * divides `b`, so each bucket lands whole in one partition: the
+    * bucketed write leaves one file per bucket, whatever the input's
+    * partitioning, and runs as `p` parallel tasks. A layout without
+    * buckets passes `df` through. A rewrite of a table's own rows under
+    * its own spec (MERGE, an isolated tenant's remainder, a columnar
+    * rewrite) does without it: each bucket file is read whole by one
+    * task, so its rows stay together already. */
+  private[graft] def byBucket(df: DataFrame,
+      layout: DistributionSpec): DataFrame = layout match {
+    case DistributionSpec(_, Hash, Some(c), b, _) if b > 0 =>
+      import org.apache.spark.sql.functions.col
+      val cores = df.sparkSession.sparkContext.defaultParallelism
+      df.repartition((1 to math.min(b, cores)).filter(b % _ == 0).max, col(c))
+    case _ => df
   }
 
   /** The one table writer. The layout comes from `layout`:
@@ -486,7 +508,8 @@ object DistributionCatalog {
     val newBuckets = buckets.getOrElse(old.bucketCount)
     val spec = DistributionSpec(name, Hash, distColumn.orElse(old.distColumn),
       newBuckets, colocationFor(colocateWith, newBuckets))
-    commitAbsorbing(spark, name, Some(spec), table(spark, name))
+    commitAbsorbing(spark, name, Some(spec),
+      byBucket(table(spark, name), spec))
     spec
   }
 
@@ -591,8 +614,9 @@ object DistributionCatalog {
       s"${name}__tenant_${tenantValue.toString.replaceAll("\\W", "_")}"
     val data = spark.table(name)
     val tenantPath = warehousePath(spark, tenantTable)
-    writeTable(data.filter(col(distCol) === lit(tenantValue)), tenantTable,
-      Some(DistributionSpec(tenantTable, Hash, Some(distCol), 1, 0)),
+    val tenantSpec = DistributionSpec(tenantTable, Hash, Some(distCol), 1, 0)
+    writeTable(byBucket(data.filter(col(distCol) === lit(tenantValue)),
+        tenantSpec), tenantTable, Some(tenantSpec),
       spark.sessionState.catalog.getTableMetadata(TableIdentifier(name))
         .storage.properties, Some(tenantPath))
     try commitVersion(spark, name, Some(s), data.filter(
@@ -694,11 +718,12 @@ object DistributionCatalog {
       spec(name).filter(_.copy(colocationId = 0) == s)
         .getOrElse(s.copy(colocationId = nextColocation.getAndIncrement()))
     }
+    val result = definition(spark)
+    val df = layout.fold(result)(byBucket(result, _))
     if (!spark.catalog.tableExists(name)) {
-      writeTable(definition(spark), name, layout, Zstd,
-        Some(warehousePath(spark, name)))
+      writeTable(df, name, layout, Zstd, Some(warehousePath(spark, name)))
       layout.fold(entries.remove(name))(s => entries.put(name, Entry(s)))
-    } else commitAbsorbing(spark, name, layout, definition(spark))
+    } else commitAbsorbing(spark, name, layout, df)
   }
 
   // ---- shard placements (pg_dist_placement) ---------------------------

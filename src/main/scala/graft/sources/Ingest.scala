@@ -8,16 +8,14 @@ import org.apache.spark.sql.functions.col
   * of the reference's data-movement surface:
   *
   *   - COPY (citus `commands/multi_copy.c`: coordinator hashes each row's
-  *     distribution column and streams it to the owning shard) becomes a
-  *     single Spark write stage: the bucketed write hashes rows to bucket
-  *     files in one distributed pass — the entire 3k-LoC async-libpq
-  *     machinery is the shuffle service;
+  *     distribution column and streams it to the owning shard) becomes
+  *     one shuffle that groups the rows by bucket, then a bucketed write
+  *     of one file per bucket from parallel tasks — the entire 3k-LoC
+  *     async-libpq machinery is the shuffle service;
   *   - INSERT..SELECT (citus `planner/insert_select_planner.c:219`:
   *     pushdown when colocated, else repartition through intermediate
-  *     results) becomes `insertInto` — Spark repartitions to the target's
-  *     bucket spec automatically when specs differ (the "repartition"
-  *     path) and keeps bucket-local writes when they match (the
-  *     "pushdown" path).
+  *     results) becomes `insertInto` after the same grouping by the
+  *     target's buckets — the "repartition" path for any source.
   *
   * At 100 TB: ingest parallelism = input splits; the only shuffle is the
   * hash to bucket files, which is also what makes every later colocated
@@ -55,7 +53,9 @@ object Ingest {
   }
 
   /** INSERT INTO target SELECT — append `rows` into an existing
-    * distributed table, preserving its bucket layout. */
+    * distributed table, preserving its bucket layout: the rows are
+    * grouped by bucket first, so the append adds at most one file per
+    * bucket. */
   def insertSelect(spark: SparkSession, rows: DataFrame,
       target: String): Unit = {
     val spec = DistributionCatalog.spec(target).getOrElse(
@@ -65,7 +65,7 @@ object Ingest {
     val cols = spark.table(target).schema.fieldNames
     require(spec.method == DistributionCatalog.Hash,
       s"$target is a reference table; use createReferenceTable to replace it")
-    rows.select(cols.map(col): _*)
+    DistributionCatalog.byBucket(rows.select(cols.map(col): _*), spec)
       .write.mode(SaveMode.Append).insertInto(target)
   }
 }

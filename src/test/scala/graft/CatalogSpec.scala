@@ -2,6 +2,7 @@ package graft
 
 import graft.catalog.DistributionCatalog
 import graft.plans.PlanChecks
+import graft.sources.Ingest
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -38,6 +39,13 @@ class CatalogSpec extends AnyFunSuite {
       finally r.close()
     }.toSet
   }
+
+  /** Files per bucket of catalog table `name`, from its file listing. */
+  private def filesPerBucket(name: String): Map[Int, Int] =
+    spark.table(name).inputFiles.toSeq
+      .groupBy(f => org.apache.spark.sql.execution.datasources.BucketingUtils
+        .getBucketId(new java.io.File(f).getName).get)
+      .map { case (b, fs) => b -> fs.length }
 
   private def hotCustomer(orders: org.apache.spark.sql.DataFrame): Long =
     orders.groupBy("o_custkey").count()
@@ -443,16 +451,12 @@ class CatalogSpec extends AnyFunSuite {
     DistributionCatalog.createDistributedTable(spark,
       Tables(spark, TestSpark.sf, "orders"), "d_nojob", "o_orderkey",
       buckets = 4)
-    val sc = spark.sparkContext
-    val group = "rebalancer-no-job"
-    sc.setJobGroup(group, "rebalancer calls")
-    try {
+    assert(TestSpark.jobsOf {
       Rebalancer.planForTable(spark, "d_nojob", 3)
       Rebalancer.rebalance(spark, "d_nojob", 3)
       Rebalancer.drainNode(spark, "d_nojob", 0, 3)
       Rebalancer.moveShardPlacement(spark, "d_nojob", 1, 0, 3)
-      assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty)
-    } finally sc.clearJobGroup()
+    } === 0)
     // the bytes it balances are citus_shards' size_bytes
     val sizes = DistributionCatalog.shardSizes(spark, "d_nojob").collect()
       .map(r => r.getInt(1) -> r.getLong(2)).toMap
@@ -906,5 +910,56 @@ class CatalogSpec extends AnyFunSuite {
       .agg(sum("size_bytes")).head().getLong(0) === parquet)
     assert(DistributionCatalog.totalRelationSize(spark, "d_orders") ===
       parquet)
+  }
+
+  test("a distributed table gets one file per bucket from any input " +
+      "partitioning, and a key lookup reads one file") {
+    setup
+    val orders = Tables(spark, TestSpark.sf, "orders").repartition(4)
+    DistributionCatalog.createDistributedTable(spark, orders, "d_grouped",
+      "o_orderkey", buckets = 8)
+    assert(filesPerBucket("d_grouped") === (0 until 8).map(_ -> 1).toMap)
+    val k = orders.select("o_orderkey").head().getLong(0)
+    assert(spark.table("d_grouped").filter(col("o_orderkey") === k)
+      .inputFiles.length === 1)
+    // INSERT ... SELECT from a 4-partition input adds one file per bucket
+    Ingest.insertSelect(spark, orders.withColumn("o_orderkey",
+      col("o_orderkey") + 1000000), "d_grouped")
+    assert(filesPerBucket("d_grouped") === (0 until 8).map(_ -> 2).toMap)
+    assert(spark.table("d_grouped").count() === 2 * orders.count())
+  }
+
+  test("a distributed matview over a several-partition definition " +
+      "creates and refreshes to one file per bucket") {
+    setup
+    DistributionCatalog.createMaterializedView(spark, "mv_grouped",
+      s => Tables(s, TestSpark.sf, "orders").repartition(3)
+        .select(col("o_orderkey"), col("o_custkey")),
+      distColumn = Some("o_orderkey"), buckets = 4)
+    assert(filesPerBucket("mv_grouped") === (0 until 4).map(_ -> 1).toMap)
+    DistributionCatalog.refreshMaterializedView(spark, "mv_grouped")
+    assert(filesPerBucket("mv_grouped") === (0 until 4).map(_ -> 1).toMap)
+    assert(spark.table("mv_grouped").count() ===
+      Tables(spark, TestSpark.sf, "orders").count())
+  }
+
+  test("a parquet table resolves once per session: a second read starts " +
+      "no job, and a rewritten file is resolved again") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-tables").toFile
+    val f = new java.io.File(dir, "nation.parquet")
+    java.nio.file.Files.copy(
+      new java.io.File(s"${TestSpark.sf}/nation.parquet").toPath, f.toPath)
+    var first, second, third: org.apache.spark.sql.DataFrame = null
+    assert(TestSpark.jobsOf { first = Tables(spark, dir.getPath, "nation") } > 0)
+    assert(TestSpark.jobsOf {
+      second = Tables(spark, dir.getPath, "nation") } === 0)
+    assert(second eq first)
+    assert(f.setLastModified(f.lastModified() + 2000))
+    assert(TestSpark.jobsOf { third = Tables(spark, dir.getPath, "nation") } > 0)
+    assert(!(third eq first))
+    assert(third.count() === 25)
+    Tables.unpin()
+    assert(!(Tables(spark, dir.getPath, "nation") eq third))
+    f.delete(); dir.delete()
   }
 }

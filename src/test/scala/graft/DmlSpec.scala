@@ -2,12 +2,8 @@ package graft
 
 import graft.catalog.DistributionCatalog
 import graft.sources.Dml
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
 /** PG row semantics + copy-on-write layout preservation for the DML
   * surface (reference: merge_planner.c / multi_router_planner.c), and
@@ -19,36 +15,6 @@ class DmlSpec extends AnyFunSuite {
   private def warehouseDir(table: String): java.io.File =
     new java.io.File(new java.net.URI(
       spark.conf.get("spark.sql.warehouse.dir")).getPath, table)
-
-  /** Spark jobs `body` runs, counted by job group. Each listener sees
-    * events in order, so once it sees a marker job of another group it
-    * has seen every job of `body`. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val drained = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
-          .orNull match {
-          case "dml-counted" => jobs.incrementAndGet()
-          case "dml-marker" => drained.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("dml-counted", "counted")
-      body
-      sc.setJobGroup("dml-marker", "marker")
-      sc.parallelize(Seq(1), 1).count()
-      assert(drained.await(60, TimeUnit.SECONDS), "listener never drained")
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-    jobs.get
-  }
 
   test("updateWhere: NULL condition leaves the row untouched (PG)") {
     val df = Seq((1, Some(10.0)), (2, None), (3, Some(60.0)))
@@ -140,7 +106,7 @@ class DmlSpec extends AnyFunSuite {
     DistributionCatalog.createDistributedTable(spark,
       spark.range(0, 2000).select(col("id"), (col("id") * 2.0).as("v")),
       "dml_jobs", "id")
-    val jobs = jobsOf(Dml.mergeIntoTable(spark, "dml_jobs",
+    val jobs = TestSpark.jobsOf(Dml.mergeIntoTable(spark, "dml_jobs",
       spark.range(100, 300).toDF("k"), "k",
       Dml.MergeClauses(matchedUpdate = Map("v" -> (col("t.v") + lit(1.0))))))
     assert(jobs <= 2, s"merge ran $jobs jobs")

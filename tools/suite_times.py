@@ -8,8 +8,10 @@ slowest first: time, tests, failures (errors included) and skipped
 (ignored or pending), then the total against the 2670 s Tier-1
 budget. sbt's reports do not mark canceled tests, so pass the captured
 sbt output with --log to count each suite's `!!! CANCELED !!!` lines
-too. The total is the sum of suite times; the sbt run's wall time adds
-JVM start-up and compilation on top.
+too. With --log only the suites that log ran are reported: a report
+file left from an earlier run of other suites is skipped, and the
+number skipped is printed. The total is the sum of suite times; the
+sbt run's wall time adds JVM start-up and compilation on top.
 Exits 1 when a suite failed or the total exceeds the budget.
 """
 import argparse
@@ -34,9 +36,10 @@ def suites(report_dir):
     return out
 
 
-def canceled(log_path):
-    """Canceled tests per suite, from ScalaTest's console output: a line
-    `SuiteName:` opens a suite, `- name !!! CANCELED !!!` is one test."""
+def from_log(log_path):
+    """The suites a run ran and their canceled tests, from ScalaTest's
+    console output: a line `SuiteName:` opens a suite, `- name !!!
+    CANCELED !!!` is one test. Returns {simple suite name: canceled}."""
     counts, suite = {}, None
     head = re.compile(r"^(?:\[info\] )?(\w+):$")
     with open(log_path, errors="replace") as f:
@@ -45,20 +48,28 @@ def canceled(log_path):
             m = head.match(line)
             if m:
                 suite = m.group(1)
+                counts.setdefault(suite, 0)
             elif "!!! CANCELED !!!" in line and suite:
-                counts[suite] = counts.get(suite, 0) + 1
+                counts[suite] += 1
     return counts
 
 
 def main(argv=None):
     p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     p.add_argument("report_dir", nargs="?", default="target/test-reports")
-    p.add_argument("--log", help="captured sbt output, for canceled counts")
+    p.add_argument("--log", help="captured sbt output: canceled counts, "
+                   "and only the suites it ran")
     a = p.parse_args(argv)
     rows = suites(a.report_dir)
+    cancel = from_log(a.log) if a.log else {}
+    if a.log:
+        ran = [r for r in rows if r[0].rsplit(".", 1)[-1] in cancel]
+        print(f"skipped {len(rows) - len(ran)} report file(s) of suites "
+              f"{a.log} did not run")
+        rows = ran
     if not rows:
-        sys.exit(f"no TEST-*.xml under {a.report_dir}")
-    cancel = canceled(a.log) if a.log else {}
+        sys.exit(f"no TEST-*.xml under {a.report_dir}"
+                 + (f" for a suite {a.log} ran" if a.log else ""))
     print(f"{'suite':<36} {'time_s':>9} {'tests':>6} {'failed':>6} "
           f"{'skipped':>7} {'canceled':>8}")
     for name, t, n, bad, skip in sorted(rows, key=lambda r: -r[1]):
