@@ -2,6 +2,8 @@ package graft
 
 import graft.plans.PlanChecks
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
+  ShuffledHashJoinExec}
 
 /** Benchmark main: times the headline queries (SparkEntry.benchQueries)
   * on SPARK_GRAFT_SF_DIR with SPARK_GRAFT_CPUS cores and prints one JSON
@@ -32,8 +34,9 @@ object Bench {
     // is a per-round tracked artifact).
     locally {
       val df = qmap("join_shuffle_fact")(spark, sfDir)
-      if (!PlanChecks.hasShuffledHashJoin(df) ||
-          PlanChecks.hasBroadcastHashJoin(df))
+      val nodes = PlanChecks.planNodes(df)
+      if (!nodes.exists(_.isInstanceOf[ShuffledHashJoinExec]) ||
+          nodes.exists(_.isInstanceOf[BroadcastHashJoinExec]))
         abort("join_shuffle_fact plan degraded — expected " +
           "ShuffledHashJoin with no BroadcastHashJoin, got:\n" +
           df.queryExecution.executedPlan)

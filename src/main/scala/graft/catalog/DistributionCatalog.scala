@@ -1,7 +1,8 @@
 package graft.catalog
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.CatalogTablePartition
 import org.apache.spark.sql.functions.broadcast
 
 import scala.collection.concurrent.TrieMap
@@ -35,11 +36,12 @@ import scala.collection.concurrent.TrieMap
   */
 object DistributionCatalog {
 
-  sealed trait PartMethod
-  case object Hash extends PartMethod      // DISTRIBUTE_BY_HASH 'h'
-  case object Reference extends PartMethod // DISTRIBUTE_BY_NONE 'n'
-  case object RangeDist extends PartMethod // DISTRIBUTE_BY_RANGE 'r'
-  case object AppendDist extends PartMethod // DISTRIBUTE_BY_APPEND 'a'
+  /** `pg_dist_partition.partmethod` and the `citus_tables` type. */
+  sealed abstract class PartMethod(val code: String, val kind: String)
+  case object Hash extends PartMethod("h", "distributed")
+  case object Reference extends PartMethod("n", "reference")
+  case object RangeDist extends PartMethod("r", "range-distributed")
+  case object AppendDist extends PartMethod("a", "append-distributed")
 
   final case class DistributionSpec(
       table: String,
@@ -117,7 +119,7 @@ object DistributionCatalog {
       spec: DistributionSpec,
       options: Map[String, String] = Zstd): DistributionSpec = {
     writeTable(byBucket(df, spec), spec.table, Some(spec), options,
-      Some(warehousePath(spark, spec.table)))
+      warehousePath(spark, spec.table))
     entries.put(spec.table, Entry(spec))
     spec
   }
@@ -150,14 +152,12 @@ object DistributionCatalog {
     *   - hash with 0 buckets on a `__…` column (time-partitioned):
     *     partitioned by that column;
     *   - otherwise (reference, not distributed): plain.
-    * With a `path` the write creates (or replaces) catalog table `name`
-    * there; without one it appends to `name` at its catalog location,
-    * and Spark takes the options from the catalog entry. */
+    * The write creates (or replaces) catalog table `name` at `path`. */
   private def writeTable(df: DataFrame, name: String,
       layout: Option[DistributionSpec], options: Map[String, String],
-      path: Option[String]): Unit = {
-    val w = df.write.mode(if (path.isEmpty) "append" else "overwrite")
-      .options(options ++ path.map("path" -> _)).format("parquet")
+      path: String): Unit = {
+    val w = df.write.mode("overwrite")
+      .options(options + ("path" -> path)).format("parquet")
     (layout match {
       case Some(DistributionSpec(_, Hash, Some(c), b, _)) if b > 0 =>
         w.bucketBy(b, c).sortBy(c)
@@ -172,12 +172,8 @@ object DistributionCatalog {
   /** Replace catalog table `name`'s contents with `df` as a snapshot
     * commit — the Delta/Iceberg commit protocol, and the order citus's
     * `alter_distributed_table` keeps (build the new table, then swap):
-    *   1. write `df` once, in `layout`'s layout and with the table's
-    *      write options (its catalog entry's, overridden by `options`),
-    *      to a fresh `_v<uuid>` directory under the table's warehouse
-    *      path, through a staging catalog entry; Spark's file listing
-    *      skips `_` names, so a reader of the old location never sees
-    *      the new files;
+    *   1. [[staged]]: write `df` once, in `layout`'s layout and with the
+    *      table's write options overridden by `options`;
     *   2. swap: the table takes the staging entry's whole definition
     *      (schema, bucket spec, partition columns, options, location)
     *      and its partitions, and `layout` becomes its
@@ -185,51 +181,103 @@ object DistributionCatalog {
     *      catalog);
     *   3. delete everything else under the table's warehouse path: the
     *      previous version and whatever an interrupted commit left.
-    *      Files outside the warehouse path are never deleted.
     * If anything fails before step 2, the old version stays readable
-    * and routable under its old spec, and the staging entry and
-    * directory are removed. `df` may read the table itself: the write
-    * never touches the files it reads. Under an unchanged spec the
-    * table keeps its entry: intervals, placements and isolated tenant
-    * parts, which are the caller's. A new spec starts a fresh entry at
-    * the default placement, as citus's `alter_distributed_table` places
-    * the shards it creates; a caller that changes the spec re-absorbs
-    * the tenant parts ([[commitAbsorbing]]). */
+    * and routable under its old spec. `df` may read the table itself:
+    * the write never touches the files it reads. Under an unchanged
+    * spec the table keeps its entry: intervals, placements and isolated
+    * tenant parts, which are the caller's. A new spec starts a fresh
+    * entry at the default placement, as citus's `alter_distributed_table`
+    * places the shards it creates; a caller that changes the spec
+    * re-absorbs the tenant parts ([[commitAbsorbing]]). */
   private[graft] def commitVersion(spark: SparkSession, name: String,
       layout: Option[DistributionSpec], df: DataFrame,
       options: Map[String, String] = Map.empty): Unit = {
     val catalog = spark.sessionState.catalog
     val ident = TableIdentifier(name)
     val meta = catalog.getTableMetadata(ident)
-    val token = java.util.UUID.randomUUID().toString.replace("-", "")
-    val staging = TableIdentifier(s"${name}__v$token")
-    val dir = new java.io.File(warehousePath(spark, name))
-    val next = new java.io.File(dir, s"_v$token")
-    var committed = false
-    try {
-      writeTable(df, staging.table, layout,
-        meta.storage.properties ++ options, Some(next.getPath))
-      val staged = catalog.getTableMetadata(staging)
+    val next = staged(spark, name, layout, df,
+        meta.storage.properties ++ options) { staging =>
+      val stagedMeta = catalog.getTableMetadata(staging)
       // the old partitions go before the partition columns change
       catalog.dropPartitions(ident, catalog.listPartitions(ident).map(_.spec),
         ignoreIfNotExists = false, purge = false, retainData = true)
-      catalog.alterTable(staged.copy(identifier = meta.identifier,
+      catalog.alterTable(stagedMeta.copy(identifier = meta.identifier,
         stats = None))
       catalog.createPartitions(ident, catalog.listPartitions(staging),
         ignoreIfExists = false)
-      committed = true
-    } finally {
-      // the staging entry is external: dropping it keeps its files
-      catalog.dropTable(staging, ignoreIfNotExists = true, purge = false)
-      if (!committed) deleteTree(next)
     }
     entries.updateWith(name)(old =>
       layout.map(s => old.filter(_.spec == s).getOrElse(Entry(s))))
     spark.catalog.refreshTable(name)
     // every version lives under the warehouse path: keep only `next`
-    Option(dir.listFiles()).getOrElse(Array.empty)
+    Option(next.getParentFile.listFiles()).getOrElse(Array.empty)
       .filterNot(_.getCanonicalFile == next.getCanonicalFile)
       .foreach(deleteTree)
+  }
+
+  /** A partition commit, the way citus's shard split, append load and
+    * `alter_old_partitions_set_access_method` change `pg_dist_shard` in
+    * one step: `rows` (None: no rows), cast to the table's schema as an
+    * INSERT would, are [[staged]] in its layout with its write options
+    * overridden by `options`; the swap drops partitions `replaced` of
+    * table `name` from the catalog and adds the staged ones at their
+    * `_v…` locations; then the replaced partitions' directories go, and
+    * a `_v…` directory left with no partition (unless it is the table's
+    * location). The other partitions keep their files, a failure before
+    * the swap changes nothing, and `rows` may read the table itself. */
+  private def commitPartitions(spark: SparkSession, name: String,
+      replaced: Seq[Map[String, String]], rows: Option[DataFrame],
+      options: Map[String, String] = Map.empty): Unit = {
+    import org.apache.spark.sql.functions.col
+    val catalog = spark.sessionState.catalog
+    val ident = TableIdentifier(name)
+    val meta = catalog.getTableMetadata(ident)
+    val oldDirs = replaced.map(p =>
+      new java.io.File(catalog.getPartition(ident, p).location))
+    def swap(added: Seq[CatalogTablePartition]): Unit = {
+      catalog.dropPartitions(ident, replaced, ignoreIfNotExists = false,
+        purge = false, retainData = true)
+      catalog.createPartitions(ident, added, ignoreIfExists = false)
+    }
+    rows match {
+      case Some(df) => staged(spark, name, Some(entry(name).spec),
+          df.select(meta.schema.map(f => col(f.name).cast(f.dataType)): _*),
+          meta.storage.properties ++ options)(
+        staging => swap(catalog.listPartitions(staging)))
+      case None => swap(Nil)
+    }
+    spark.catalog.refreshTable(name)
+    oldDirs.foreach(deleteTree)
+    oldDirs.map(_.getParentFile).distinct.filter(d =>
+      d.getName.startsWith("_v") && d != new java.io.File(meta.location) &&
+        !Option(d.list()).exists(_.exists(_.contains("="))))
+      .foreach(deleteTree)
+  }
+
+  /** The staging step of every commit: `df` is written once, in
+    * `layout`'s layout and with `options`, through a staging catalog
+    * entry to a fresh `_v<uuid>` directory under table `name`'s
+    * warehouse path, which Spark's file listing skips; `swap` then makes
+    * the staged contents the table's. The (external) staging entry goes
+    * either way, the directory too if anything failed. Returns it. */
+  private def staged(spark: SparkSession, name: String,
+      layout: Option[DistributionSpec], df: DataFrame,
+      options: Map[String, String])(
+      swap: TableIdentifier => Unit): java.io.File = {
+    val token = java.util.UUID.randomUUID().toString.replace("-", "")
+    val staging = TableIdentifier(s"${name}__v$token")
+    val next = new java.io.File(warehousePath(spark, name), s"_v$token")
+    var committed = false
+    try {
+      writeTable(df, staging.table, layout, options, next.getPath)
+      swap(staging)
+      committed = true
+    } finally {
+      spark.sessionState.catalog.dropTable(staging, ignoreIfNotExists = true,
+        purge = false)
+      if (!committed) deleteTree(next)
+    }
+    next
   }
 
   private def deleteTree(f: java.io.File): Unit = {
@@ -237,37 +285,24 @@ object DistributionCatalog {
     f.delete()
   }
 
-  /** The directory a catalog table's files live in: after a
-    * [[commitVersion]] that is a `_v…` directory under the warehouse
-    * path, not the warehouse path itself. */
-  private def tableDir(spark: SparkSession, name: String): java.io.File =
-    new java.io.File(spark.sessionState.catalog
-      .getTableMetadata(TableIdentifier(name)).location)
-
   /** The data files of catalog table `name`: every file under its
-    * catalog location except those Spark's own file listing hides —
-    * `.` names (Hadoop's `.crc` checksums) and `_` names without a `=`
-    * (`_SUCCESS`, a `_v…` directory no commit swapped in). */
+    * catalog location (a partitioned table's: its partitions'), except
+    * those Spark's own file listing hides — `.` names (Hadoop's `.crc`
+    * checksums) and `_` names without a `=` (`_SUCCESS`, a `_v…`
+    * directory no commit swapped in). */
   private def dataFiles(spark: SparkSession,
       name: String): Seq[java.io.File] = {
+    val catalog = spark.sessionState.catalog
+    val ident = TableIdentifier(name)
+    val meta = catalog.getTableMetadata(ident)
     def walk(d: java.io.File): Seq[java.io.File] =
       Option(d.listFiles()).getOrElse(Array.empty).toSeq
         .filterNot(f => f.getName.startsWith(".") ||
           f.getName.startsWith("_") && !f.getName.contains("="))
         .flatMap(f => if (f.isDirectory) walk(f) else Seq(f))
-    walk(tableDir(spark, name))
-  }
-
-  /** `ALTER TABLE … DROP PARTITION`, files included. A datasource
-    * table's drop keeps the files, so they are deleted here, at the
-    * partition's catalog location: wherever the table's last commit
-    * put it. */
-  private def dropPartition(spark: SparkSession, name: String,
-      column: String, value: String): Unit = {
-    val dir = spark.sessionState.catalog
-      .getPartition(TableIdentifier(name), Map(column -> value)).location
-    spark.sql(s"ALTER TABLE $name DROP PARTITION ($column='$value')")
-    deleteTree(new java.io.File(dir))
+    (if (meta.partitionColumnNames.isEmpty) Seq(meta.location)
+      else catalog.listPartitions(ident).map(_.location))
+      .flatMap(d => walk(new java.io.File(d)))
   }
 
   /** True when [[isolateTenant]] moved some of `name`'s keys into
@@ -318,10 +353,8 @@ object DistributionCatalog {
   def listTables(spark: SparkSession): DataFrame = {
     import spark.implicits._
     entries.values.map(_.spec).toSeq
-      .map(s => (s.table,
-        s.method match { case Hash => "h"; case Reference => "n"
-          case RangeDist => "r"; case AppendDist => "a" },
-        s.distColumn.getOrElse(""), s.bucketCount, s.colocationId))
+      .map(s => (s.table, s.method.code, s.distColumn.getOrElse(""),
+        s.bucketCount, s.colocationId))
       .toDF("logicalrelid", "partmethod", "partkey", "bucketcount",
         "colocationid")
   }
@@ -333,17 +366,10 @@ object DistributionCatalog {
     * system, not a scan. */
   def citusTables(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    entries.values.map(_.spec).toSeq.sortBy(_.table).map { s =>
-      val kind = s.method match {
-        case Hash => "distributed"
-        case Reference => "reference"
-        case RangeDist => "range-distributed"
-        case AppendDist => "append-distributed"
-      }
-      val bytes = totalRelationSize(spark, s.table)
-      (s.table, kind, s.distColumn.getOrElse(""), s.colocationId,
-        bytes, s.bucketCount)
-    }.toDF("table_name", "citus_table_type", "distribution_column",
+    entries.values.map(_.spec).toSeq.sortBy(_.table).map(s =>
+      (s.table, s.method.kind, s.distColumn.getOrElse(""), s.colocationId,
+        totalRelationSize(spark, s.table), s.bucketCount)
+    ).toDF("table_name", "citus_table_type", "distribution_column",
       "colocation_id", "table_size", "shard_count")
   }
 
@@ -390,7 +416,7 @@ object DistributionCatalog {
     * over the partition column only. */
   def timePartitions(spark: SparkSession, name: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, count, lit}
-    val partCol = timePartColumn(name)
+    val partCol = timePartitionValues(spark, name)._1
     val counts = spark.table(name).groupBy(col(partCol))
       .agg(count(lit(1)).as("n_rows"))
     val bytes = dataFiles(spark, name).groupMapReduce(
@@ -403,78 +429,59 @@ object DistributionCatalog {
       .toDF("table_name", "partition_value", "n_rows", "size_bytes")
   }
 
-  /** The partition column of time-partitioned table `name`. */
-  private def timePartColumn(name: String): String =
-    entry(name).spec.distColumn.filter(_.startsWith("__")).getOrElse(
-      throw new IllegalArgumentException(s"$name is not time-partitioned"))
-
   /** `get_missing_time_partition_ranges(table, interval, to, from)`:
     * the month starts in [from, to] that have NO partition yet — the
     * planning input `create_time_partitions` consumes. */
   def getMissingTimePartitionRanges(spark: SparkSession, name: String,
       from: java.sql.Date, to: java.sql.Date): Seq[String] = {
-    val existing = timePartitions(spark, name)
-      .collect().map(_.getString(1)).toSet
-    val cal = java.util.Calendar.getInstance(
-      java.util.TimeZone.getTimeZone("UTC"))
-    cal.setTime(from)
-    cal.set(java.util.Calendar.DAY_OF_MONTH, 1)
-    val out = Seq.newBuilder[String]
-    while (!cal.getTime.after(to)) {
-      val v = f"${cal.get(java.util.Calendar.YEAR)}%04d-" +
-        f"${cal.get(java.util.Calendar.MONTH) + 1}%02d-01"
-      if (!existing.contains(v)) out += v
-      cal.add(java.util.Calendar.MONTH, 1)
-    }
-    out.result()
+    val existing = timePartitionValues(spark, name)._2.toSet
+    Iterator.iterate(from.toLocalDate.withDayOfMonth(1))(_.plusMonths(1))
+      .takeWhile(!_.isAfter(to.toLocalDate)).map(_.toString)
+      .filterNot(existing).toSeq
   }
 
   /** `alter_old_partitions_set_access_method(table, older_than,
     * 'columnar')` (`sql/udfs/alter_old_partitions_set_access_method/`
     * — the citus time-series pattern: recent partitions stay row/fast
     * storage, old partitions compress to columnar): rewrite ONLY the
-    * partitions older than the cutoff under the given codec (dynamic
-    * partition overwrite — untouched partitions keep their files).
-    * Cost ∝ the old partitions being compressed, never the table. */
+    * partitions older than the cutoff under the given codec, as one
+    * [[commitPartitions]]. Cost ∝ the old partitions, never the table. */
   def compressOldTimePartitions(spark: SparkSession, name: String,
       olderThan: java.sql.Date, codec: String = "zstd"): Seq[String] = {
     import org.apache.spark.sql.functions.col
-    val partCol = timePartColumn(name)
-    val old = spark.table(name).select(col(partCol)).distinct()
-      .filter(col(partCol) < olderThan)
-      .collect().map(_.get(0).toString).sorted.toSeq
-    if (old.nonEmpty) {
-      // path write (not insertInto): the parquet writer honors the codec
-      // option, and dynamic overwrite touches only the partitions present
-      // in the rows, in the table's catalog location
-      spark.table(name).filter(col(partCol) < olderThan)
-        .localCheckpoint(eager = true)
-        .write.mode("overwrite").partitionBy(partCol)
-        .option("partitionOverwriteMode", "dynamic")
-        .option("compression", codec)
-        .parquet(tableDir(spark, name).getPath)
-      spark.catalog.refreshTable(name)
-    }
+    val (partCol, values) = timePartitionValues(spark, name)
+    val old = values.filter(_ < olderThan.toString)
+    if (old.nonEmpty)
+      commitPartitions(spark, name, old.map(v => Map(partCol -> v)),
+        Some(spark.table(name).filter(col(partCol) < olderThan)),
+        Map("compression" -> codec))
     old
   }
 
   /** `drop_old_time_partitions(table, older_than)` (`sql/udfs/
     * drop_old_time_partitions/` — retention maintenance for
     * time-partitioned tables): drop every partition strictly older
-    * than the cutoff, files included. Partition pruning makes the
-    * enumeration free; the drop is a metadata + file operation, no
-    * data rewrite — the same reason the citus UDF is cheap. Returns
-    * the dropped partition values. */
+    * than the cutoff, files included, as one [[commitPartitions]] of
+    * no rows — catalog and file operations only, no Spark job, the
+    * same reason the citus UDF is cheap. Returns the dropped values. */
   def dropOldTimePartitions(spark: SparkSession, name: String,
       olderThan: java.sql.Date): Seq[String] = {
-    import org.apache.spark.sql.functions.col
-    val partCol = timePartColumn(name)
-    val old = spark.table(name).select(col(partCol)).distinct()
-      .filter(col(partCol) < olderThan)
-      .collect().map(_.get(0).toString).sorted.toSeq
-    old.foreach(dropPartition(spark, name, partCol, _))
-    spark.catalog.refreshTable(name)
+    val (partCol, values) = timePartitionValues(spark, name)
+    val old = values.filter(_ < olderThan.toString)
+    commitPartitions(spark, name, old.map(v => Map(partCol -> v)), None)
     old
+  }
+
+  /** The partition column of time-partitioned table `name` and its
+    * partitions' values, sorted, from the catalog: no Spark job. ISO
+    * dates order as strings; the null partition's `_` name sorts last. */
+  private def timePartitionValues(spark: SparkSession,
+      name: String): (String, Seq[String]) = {
+    val partCol = entry(name).spec.distColumn.filter(_.startsWith("__"))
+      .getOrElse(throw new IllegalArgumentException(
+        s"$name is not time-partitioned"))
+    partCol -> spark.sessionState.catalog
+      .listPartitions(TableIdentifier(name)).map(_.spec(partCol)).sorted
   }
 
   /** The FIXTURES.md layout in one call — the exact distribution the
@@ -618,7 +625,7 @@ object DistributionCatalog {
     writeTable(byBucket(data.filter(col(distCol) === lit(tenantValue)),
         tenantSpec), tenantTable, Some(tenantSpec),
       spark.sessionState.catalog.getTableMetadata(TableIdentifier(name))
-        .storage.properties, Some(tenantPath))
+        .storage.properties, tenantPath)
     try commitVersion(spark, name, Some(s), data.filter(
       col(distCol) =!= lit(tenantValue) || col(distCol).isNull))
     catch { case e: Throwable =>
@@ -721,7 +728,7 @@ object DistributionCatalog {
     val result = definition(spark)
     val df = layout.fold(result)(byBucket(result, _))
     if (!spark.catalog.tableExists(name)) {
-      writeTable(df, name, layout, Zstd, Some(warehousePath(spark, name)))
+      writeTable(df, name, layout, Zstd, warehousePath(spark, name))
       layout.fold(entries.remove(name))(s => entries.put(name, Entry(s)))
     } else commitAbsorbing(spark, name, layout, df)
   }
@@ -776,20 +783,22 @@ object DistributionCatalog {
     * into Spark partition pruning (only overlapping directories are
     * listed/read; at 100 TB an interval query touches only its shards'
     * files, exactly citus's `PruneShards` on `shardminvalue/maxvalue`).
-    * Shard assignment is a branch-free sum of comparisons — codegen'd,
-    * no UDF, one write-stage shuffle. */
+    * Shard assignment is [[rangeShardOf]]: one write-stage shuffle. */
   def createRangeDistributedTable(spark: SparkSession, df: DataFrame,
       name: String, distColumn: String,
-      splitPoints: Seq[Any]): DistributionSpec = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, when}
-    require(splitPoints.nonEmpty, "need at least one split point")
-    val shardExpr = splitPoints
-      .map(p => when(col(distColumn) >= lit(p), 1).otherwise(0))
-      .reduce(_ + _)
-    recordIntervals(spark, create(spark, df.withColumn("__shard",
-        coalesce(shardExpr, lit(0))),
+      splitPoints: Seq[Any]): DistributionSpec =
+    recordIntervals(spark, create(spark,
+      df.withColumn("__shard", rangeShardOf(distColumn, splitPoints)),
       DistributionSpec(name, RangeDist, Some(distColumn),
         splitPoints.size + 1, 0)))
+
+  /** The index of the range among `points` holding column `c` (a null
+    * compares as no point: 0): a branch-free sum of comparisons,
+    * codegen'd, no UDF. */
+  private def rangeShardOf(c: String, points: Seq[Any]): Column = {
+    import org.apache.spark.sql.functions.{col, lit, when}
+    require(points.nonEmpty, "need at least one split point")
+    points.map(p => when(col(c) >= lit(p), 1).otherwise(0)).reduce(_ + _)
   }
 
   /** Append-distributed table (`DISTRIBUTE_BY_APPEND 'a'`,
@@ -807,16 +816,15 @@ object DistributionCatalog {
       DistributionSpec(name, AppendDist, Some(distColumn), 1, 0)))
   }
 
-  /** Append one more batch as a new shard (shard id = previous max + 1). */
+  /** Append one more batch as a new shard (shard id = previous max + 1),
+    * as one [[commitPartitions]] that replaces no partition. */
   def appendShard(spark: SparkSession, name: String,
       batch: DataFrame): DistributionSpec = {
     import org.apache.spark.sql.functions.lit
     val e = entry(name)
     require(e.spec.method == AppendDist, s"$name is not append-distributed")
-    val next = e.shards.max + 1
-    writeTable(batch.withColumn("__shard", lit(next)), name, Some(e.spec),
-      Map.empty, path = None)
-    spark.catalog.refreshTable(name)
+    commitPartitions(spark, name, Nil,
+      Some(batch.withColumn("__shard", lit(e.shards.max + 1))))
     recordIntervals(spark, e.spec)
   }
 
@@ -853,32 +861,22 @@ object DistributionCatalog {
   /** `citus_split_shard_by_split_points(shard, points, ...)`
     * (`operations/shard_split.c` — split one shard at given points;
     * the new shards get FRESH ids and the old shard is retired): only
-    * the target shard's rows are rewritten — the sub-shards land as
-    * new partition directories and the old directory is dropped, the
-    * other shards' files are untouched. That locality is the point of
-    * the citus UDF (split a hot/oversized shard without touching the
-    * rest of the table) and it holds here at any scale: cost is
-    * proportional to the SPLIT shard, not the table. */
+    * the target shard's rows are rewritten, as one [[commitPartitions]]
+    * — the sub-shards land as new partition directories and the old
+    * directory is dropped, the other shards' files are untouched. That
+    * locality is the point of the citus UDF (split a hot/oversized
+    * shard without touching the rest of the table) and it holds here at
+    * any scale: cost is proportional to the SPLIT shard, not the table. */
   def splitShard(spark: SparkSession, name: String, shard: Int,
       points: Seq[Any]): DistributionSpec = {
-    import org.apache.spark.sql.functions.{col, lit, when}
+    import org.apache.spark.sql.functions.col
     val e = rangeEntry(name)
-    require(points.nonEmpty, "need at least one split point")
     require(e.shards.contains(shard), s"no such shard: $shard")
-    val distCol = e.spec.distColumn.get
-    val base = e.shards.max + 1
-    val subExpr = points
-      .map(p => when(col(distCol) >= lit(p), 1).otherwise(0))
-      .reduce(_ + _) + base
-    // rewrite ONLY the split shard's rows under their new shard ids
-    // (materialized first: the write appends to the table being read)
-    writeTable(spark.table(name).filter(col("__shard") === shard)
-        .drop("__shard").localCheckpoint(eager = true)
-        .withColumn("__shard", subExpr), name, Some(e.spec), Map.empty,
-      path = None)
-    // retire the old shard: drop its partition (files included)
-    dropPartition(spark, name, "__shard", shard.toString)
-    spark.catalog.refreshTable(name)
+    val subShard = rangeShardOf(e.spec.distColumn.get, points) +
+      (e.shards.max + 1)
+    commitPartitions(spark, name, Seq(Map("__shard" -> shard.toString)),
+      Some(spark.table(name).filter(col("__shard") === shard)
+        .withColumn("__shard", subShard)))
     recordIntervals(spark, e.spec)
   }
 

@@ -19,21 +19,23 @@ object Sketches {
 
   case class TopItem(item: String, cnt: Long)
 
-  /** Space-saving heavy hitters. With `capacity` ≥ true distinct count
-    * the result is EXACT (the oracle-checked configuration); under
-    * pressure it degrades to the classic ±(n/capacity) guarantee.
-    * Buffer is a bounded counter map; merge sums and re-prunes. */
-  class TopNAgg(k: Int, capacity: Int)
-      extends Aggregator[String, mutable.Map[String, Long], Seq[TopItem]] {
-
+  /** Space-saving heavy hitters: the one counter map of every topn
+    * aggregate. With `capacity` ≥ true distinct count the counts are
+    * EXACT (the oracle-checked configuration); under pressure they
+    * degrade to the classic ±(n/capacity) guarantee. An item adds 1 —
+    * when the map is full, by evicting the min counter, whose count the
+    * item inherits; null items are skipped. A merge sums and keeps the
+    * `capacity` largest counters. */
+  abstract class SpaceSaving[IN, OUT](capacity: Int)
+      extends Aggregator[IN, mutable.Map[String, Long], OUT] {
     override def zero: mutable.Map[String, Long] = mutable.Map.empty
 
-    override def reduce(buf: mutable.Map[String, Long], item: String):
+    protected def add(buf: mutable.Map[String, Long], item: String):
         mutable.Map[String, Long] = {
+      if (item == null) return buf
       if (buf.contains(item) || buf.size < capacity)
         buf.update(item, buf.getOrElse(item, 0L) + 1L)
       else {
-        // evict the min counter, successor inherits its count + 1
         val (minK, minV) = buf.minBy { case (kk, vv) => (vv, kk) }
         buf.remove(minK)
         buf.update(item, minV + 1L)
@@ -41,8 +43,8 @@ object Sketches {
       buf
     }
 
-    override def merge(a: mutable.Map[String, Long],
-        b: mutable.Map[String, Long]): mutable.Map[String, Long] = {
+    protected def sum(a: mutable.Map[String, Long],
+        b: collection.Map[String, Long]): mutable.Map[String, Long] = {
       b.foreach { case (kk, vv) => a.update(kk, a.getOrElse(kk, 0L) + vv) }
       if (a.size > capacity)
         mutable.Map(a.toSeq.sortBy { case (kk, vv) => (-vv, kk) }
@@ -50,12 +52,20 @@ object Sketches {
       else a
     }
 
+    override def merge(a: mutable.Map[String, Long],
+        b: mutable.Map[String, Long]): mutable.Map[String, Long] = sum(a, b)
+    override def bufferEncoder: Encoder[mutable.Map[String, Long]] =
+      Encoders.kryo[mutable.Map[String, Long]]
+  }
+
+  /** The top `k` items of a [[SpaceSaving]] counter. */
+  class TopNAgg(k: Int, capacity: Int)
+      extends SpaceSaving[String, Seq[TopItem]](capacity) {
+    override def reduce(buf: mutable.Map[String, Long], item: String):
+        mutable.Map[String, Long] = add(buf, item)
     override def finish(buf: mutable.Map[String, Long]): Seq[TopItem] =
       buf.toSeq.sortBy { case (kk, vv) => (-vv, kk) }
         .take(k).map { case (kk, vv) => TopItem(kk, vv) }
-
-    override def bufferEncoder: Encoder[mutable.Map[String, Long]] =
-      Encoders.kryo[mutable.Map[String, Long]]
     override def outputEncoder: Encoder[Seq[TopItem]] =
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[TopItem]]()
   }
@@ -188,37 +198,15 @@ object Sketches {
   /** topn entry as the reference's `topn()` SRF exposes it. */
   case class TopEntry(item: String, frequency: Long)
 
-  /** `topn_add_agg(text)` — counter-map building aggregate (space-
-    * saving under capacity pressure, exact above it; the topn
-    * extension's `topn.number_of_counters` default is 1000). */
+  /** `topn_add_agg(text)` — counter-map building aggregate
+    * ([[SpaceSaving]]; the topn extension's `topn.number_of_counters`
+    * default is 1000). */
   class TopNAddAgg(capacity: Int = 1000)
-      extends Aggregator[String, mutable.Map[String, Long],
-        Map[String, Long]] {
-    override def zero: mutable.Map[String, Long] = mutable.Map.empty
+      extends SpaceSaving[String, Map[String, Long]](capacity) {
     override def reduce(buf: mutable.Map[String, Long], item: String):
-        mutable.Map[String, Long] = {
-      if (item == null) return buf
-      if (buf.contains(item) || buf.size < capacity)
-        buf.update(item, buf.getOrElse(item, 0L) + 1L)
-      else {
-        val (minK, minV) = buf.minBy { case (kk, vv) => (vv, kk) }
-        buf.remove(minK)
-        buf.update(item, minV + 1L)
-      }
-      buf
-    }
-    override def merge(a: mutable.Map[String, Long],
-        b: mutable.Map[String, Long]): mutable.Map[String, Long] = {
-      b.foreach { case (kk, vv) => a.update(kk, a.getOrElse(kk, 0L) + vv) }
-      if (a.size > capacity)
-        mutable.Map(a.toSeq.sortBy { case (kk, vv) => (-vv, kk) }
-          .take(capacity): _*)
-      else a
-    }
+        mutable.Map[String, Long] = add(buf, item)
     override def finish(buf: mutable.Map[String, Long]): Map[String, Long] =
       buf.toMap
-    override def bufferEncoder: Encoder[mutable.Map[String, Long]] =
-      Encoders.kryo[mutable.Map[String, Long]]
     override def outputEncoder: Encoder[Map[String, Long]] =
       org.apache.spark.sql.catalyst.encoders
         .ExpressionEncoder[Map[String, Long]]()
@@ -226,28 +214,12 @@ object Sketches {
 
   /** `topn_union_agg(topn)` — merge stored counter maps. */
   class TopNUnionAgg(capacity: Int = 1000)
-      extends Aggregator[Map[String, Long], mutable.Map[String, Long],
-        Map[String, Long]] {
-    override def zero: mutable.Map[String, Long] = mutable.Map.empty
+      extends SpaceSaving[Map[String, Long], Map[String, Long]](capacity) {
     override def reduce(buf: mutable.Map[String, Long],
-        m: Map[String, Long]): mutable.Map[String, Long] = {
-      if (m != null)
-        m.foreach { case (kk, vv) =>
-          buf.update(kk, buf.getOrElse(kk, 0L) + vv) }
-      if (buf.size > capacity)
-        mutable.Map(buf.toSeq.sortBy { case (kk, vv) => (-vv, kk) }
-          .take(capacity): _*)
-      else buf
-    }
-    override def merge(a: mutable.Map[String, Long],
-        b: mutable.Map[String, Long]): mutable.Map[String, Long] = {
-      b.foreach { case (kk, vv) => a.update(kk, a.getOrElse(kk, 0L) + vv) }
-      a
-    }
+        m: Map[String, Long]): mutable.Map[String, Long] =
+      if (m == null) buf else sum(buf, m)
     override def finish(buf: mutable.Map[String, Long]): Map[String, Long] =
       buf.toMap
-    override def bufferEncoder: Encoder[mutable.Map[String, Long]] =
-      Encoders.kryo[mutable.Map[String, Long]]
     override def outputEncoder: Encoder[Map[String, Long]] =
       org.apache.spark.sql.catalyst.encoders
         .ExpressionEncoder[Map[String, Long]]()
@@ -261,62 +233,21 @@ object Sketches {
 
     override def zero: TDigestBuf = TDigestBuf(Vector.empty, compression)
 
-    private def compress(cs: Seq[Centroid]): Seq[Centroid] = {
-      if (cs.isEmpty) return cs
-      val sorted = cs.sortBy(c => (c.mean, c.weight))
-      val total = sorted.map(_.weight).sum.toDouble
-      val out = mutable.ArrayBuffer[Centroid]()
-      var cur = sorted.head
-      var seen = 0.0
-      sorted.tail.foreach { c =>
-        val q = (seen + cur.weight / 2.0) / total
-        val cap = math.max(1.0, 4.0 * total * q * (1 - q) / compression)
-        if (cur.weight + c.weight <= cap) {
-          val w = cur.weight + c.weight
-          cur = Centroid(
-            (cur.mean * cur.weight + c.mean * c.weight) / w, w)
-        } else {
-          seen += cur.weight
-          out += cur
-          cur = c
-        }
-      }
-      out += cur
-      out.toVector
-    }
-
     override def reduce(b: TDigestBuf, x: Double): TDigestBuf = {
       val cs = b.centroids :+ Centroid(x, 1L)
-      if (cs.size > 8 * compression) TDigestBuf(compress(cs), b.compression)
+      if (cs.size > 8 * compression)
+        TDigestBuf(digestCompress(cs, compression), b.compression)
       else TDigestBuf(cs, b.compression)
     }
 
     override def merge(a: TDigestBuf, b: TDigestBuf): TDigestBuf =
-      TDigestBuf(compress(a.centroids ++ b.centroids), compression)
+      TDigestBuf(digestCompress(a.centroids ++ b.centroids, compression),
+        compression)
 
-    private def quantile(cs: Seq[Centroid], q: Double): Double = {
-      if (cs.isEmpty) return Double.NaN
-      val sorted = compress(cs).sortBy(_.mean)
-      val total = sorted.map(_.weight).sum.toDouble
-      val target = q * total
-      var cum = 0.0
-      for (i <- sorted.indices) {
-        val c = sorted(i)
-        val mid = cum + c.weight / 2.0
-        if (target <= mid) {
-          if (i == 0) return c.mean
-          val prev = sorted(i - 1)
-          val prevMid = cum - prev.weight / 2.0
-          val frac = (target - prevMid) / (mid - prevMid)
-          return prev.mean + frac * (c.mean - prev.mean)
-        }
-        cum += c.weight
-      }
-      sorted.last.mean
+    override def finish(b: TDigestBuf): Seq[Double] = {
+      val cs = digestCompress(b.centroids, compression)
+      quantiles.map(digestQuantile(cs, _))
     }
-
-    override def finish(b: TDigestBuf): Seq[Double] =
-      quantiles.map(q => quantile(b.centroids, q))
 
     override def bufferEncoder: Encoder[TDigestBuf] =
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[TDigestBuf]()

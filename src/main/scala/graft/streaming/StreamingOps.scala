@@ -153,19 +153,7 @@ object StreamingOps {
     * the time-bound join condition lets Spark evict buffered rows —
     * without it, stream-stream join state grows forever. */
   def clickPurchaseJoin(clicks: DataFrame, purchases: DataFrame)
-      : DataFrame = {
-    val c = clicks.withWatermark("ts", "2 hours")
-      .select(col("user_id").as("c_user"), col("ts").as("click_ts"))
-    val p = purchases.withWatermark("ts", "2 hours")
-      .select(col("user_id").as("p_user"), col("ts").as("purchase_ts"),
-        col("value"))
-    c.join(p,
-      col("c_user") === col("p_user") &&
-        col("purchase_ts") >= col("click_ts") &&
-        col("purchase_ts") < col("click_ts") + expr("INTERVAL 1 HOUR"))
-      .select(col("c_user").as("user_id"), col("click_ts"),
-        col("purchase_ts"), col("value"))
-  }
+      : DataFrame = clickPurchase(clicks, purchases, "inner")
 
   /** LEFT OUTER stream-stream interval join: like [[clickPurchaseJoin]]
     * but clicks with NO purchase in the following hour are emitted
@@ -175,20 +163,7 @@ object StreamingOps {
     * with a recurring inner side; state stays bounded by the same
     * watermark+interval eviction as the inner variant. */
   def clickPurchaseLeftJoin(clicks: DataFrame, purchases: DataFrame)
-      : DataFrame = {
-    val c = clicks.withWatermark("ts", "2 hours")
-      .select(col("user_id").as("c_user"), col("ts").as("click_ts"))
-    val p = purchases.withWatermark("ts", "2 hours")
-      .select(col("user_id").as("p_user"), col("ts").as("purchase_ts"),
-        col("value"))
-    c.join(p,
-      col("c_user") === col("p_user") &&
-        col("purchase_ts") >= col("click_ts") &&
-        col("purchase_ts") < col("click_ts") + expr("INTERVAL 1 HOUR"),
-      "leftOuter")
-      .select(col("c_user").as("user_id"), col("click_ts"),
-        col("purchase_ts"), col("value"))
-  }
+      : DataFrame = clickPurchase(clicks, purchases, "leftOuter")
 
   /** FULL OUTER stream-stream interval join: unmatched rows from BOTH
     * sides null-extend once the watermark passes their join window —
@@ -196,7 +171,13 @@ object StreamingOps {
     * (organic buys). Completes the stream-stream join matrix
     * (inner/left/full); same watermark+interval state eviction. */
   def clickPurchaseFullJoin(clicks: DataFrame, purchases: DataFrame)
-      : DataFrame = {
+      : DataFrame = clickPurchase(clicks, purchases, "fullOuter")
+
+  /** The click→purchase interval join of type `joinType`. The user is
+    * the click's, or the purchase's where no click matched (a full
+    * join's organic buy; inner and left joins always have a click). */
+  private def clickPurchase(clicks: DataFrame, purchases: DataFrame,
+      joinType: String): DataFrame = {
     val c = clicks.withWatermark("ts", "2 hours")
       .select(col("user_id").as("c_user"), col("ts").as("click_ts"))
     val p = purchases.withWatermark("ts", "2 hours")
@@ -206,7 +187,7 @@ object StreamingOps {
       col("c_user") === col("p_user") &&
         col("purchase_ts") >= col("click_ts") &&
         col("purchase_ts") < col("click_ts") + expr("INTERVAL 1 HOUR"),
-      "fullOuter")
+      joinType)
       .select(coalesce(col("c_user"), col("p_user")).as("user_id"),
         col("click_ts"), col("purchase_ts"), col("value"))
   }

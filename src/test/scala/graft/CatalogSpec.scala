@@ -962,4 +962,65 @@ class CatalogSpec extends AnyFunSuite {
     assert(!(Tables(spark, dir.getPath, "nation") eq third))
     f.delete(); dir.delete()
   }
+
+  test("drop_old_time_partitions reads the catalog and starts no job; " +
+      "a version directory goes with its last partition") {
+    setup
+    DistributionCatalog.createTimePartitionedTable(spark,
+      Tables(spark, TestSpark.sf, "orders"), "d_time_nojob", "o_orderdate",
+      "year")
+    DistributionCatalog.compressOldTimePartitions(spark, "d_time_nojob",
+      java.sql.Date.valueOf("1998-01-01"), codec = "snappy")
+    def versions =
+      warehouseDir("d_time_nojob").list().filter(_.startsWith("_v"))
+    assert(versions.length === 1)
+    var dropped = Seq.empty[String]
+    assert(TestSpark.jobsOf {
+      dropped = DistributionCatalog.dropOldTimePartitions(spark,
+        "d_time_nojob", java.sql.Date.valueOf("1998-01-01"))
+    } === 0)
+    assert(dropped === Seq("1995-01-01", "1996-01-01", "1997-01-01"))
+    assert(spark.table("d_time_nojob")
+      .filter(col("__year_part") < "1998-01-01").count() === 0)
+    assert(versions.isEmpty)
+  }
+
+  test("a failed split or compress changes nothing") {
+    setup
+    val orders = Tables(spark, TestSpark.sf, "orders")
+    DistributionCatalog.createRangeDistributedTable(spark, orders,
+      "d_split_fail", "o_custkey", splitPoints = Seq(75))
+    // the point cannot be cast to the key's type: the write job fails
+    assertFailsAtomically("d_split_fail")(DistributionCatalog
+      .splitShard(spark, "d_split_fail", 1, Seq("not a number")))
+    assert(DistributionCatalog.rangeShards(spark, "d_split_fail")
+      .collect().map(_.getInt(1)).toSet === Set(0, 1))
+    DistributionCatalog.createTimePartitionedTable(spark, orders,
+      "d_compress_fail", "o_orderdate", "year")
+    assertFailsAtomically("d_compress_fail")(DistributionCatalog
+      .compressOldTimePartitions(spark, "d_compress_fail",
+        java.sql.Date.valueOf("1998-01-01"), codec = "nosuch"))
+  }
+
+  test("sizes count the partitions a split or a compress committed") {
+    setup
+    def fileBytes(name: String): Long = spark.table(name).inputFiles
+      .map(f => new java.io.File(new java.net.URI(f)).length).sum
+    val orders = Tables(spark, TestSpark.sf, "orders")
+    DistributionCatalog.createRangeDistributedTable(spark, orders,
+      "d_split_size", "o_custkey", splitPoints = Seq(75))
+    DistributionCatalog.splitShard(spark, "d_split_size", 1, Seq(110))
+    assert(DistributionCatalog.totalRelationSize(spark, "d_split_size") ===
+      fileBytes("d_split_size"))
+    DistributionCatalog.createTimePartitionedTable(spark, orders,
+      "d_compress_size", "o_orderdate", "year")
+    DistributionCatalog.compressOldTimePartitions(spark, "d_compress_size",
+      java.sql.Date.valueOf("1998-01-01"), codec = "snappy")
+    assert(DistributionCatalog.totalRelationSize(spark, "d_compress_size")
+      === fileBytes("d_compress_size"))
+    val parts = DistributionCatalog.timePartitions(spark, "d_compress_size")
+      .collect()
+    assert(parts.length === 7)
+    assert(parts.forall(_.getLong(3) > 0), parts.mkString(", "))
+  }
 }
