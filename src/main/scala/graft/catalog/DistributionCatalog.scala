@@ -2,7 +2,7 @@ package graft.catalog
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
-import org.apache.spark.sql.catalyst.catalog.CatalogTablePartition
+import org.apache.spark.sql.catalyst.catalog.{CatalogTablePartition, ExternalCatalogUtils}
 import org.apache.spark.sql.functions.broadcast
 
 import scala.collection.concurrent.TrieMap
@@ -57,13 +57,13 @@ object DistributionCatalog {
   /** One table's catalog state: its `pg_dist_partition` row, its
     * `pg_dist_shard` intervals (range/append tables), its stored
     * `pg_dist_placement` (shards never moved are absent: they sit at
-    * the default) and its isolated tenants (tenant value → table).
-    * Every create, and every commit under a new spec, replaces it
-    * whole. */
+    * the default) and its isolated tenants (keys with a `__tenant`
+    * partition, [[isolateTenant]]). Every create, and every commit under
+    * a new spec, replaces it whole. */
   private final case class Entry(spec: DistributionSpec,
       intervals: Seq[ShardInterval] = Nil,
       placements: Map[Int, Int] = Map.empty,
-      tenants: Map[String, String] = Map.empty) {
+      tenants: Set[Any] = Set.empty) {
     /** The live shard ids: a range/append table's interval ids, else
       * its buckets. */
     def shards: Seq[Int] = spec.method match {
@@ -133,9 +133,9 @@ object DistributionCatalog {
     * bucketed write leaves one file per bucket, whatever the input's
     * partitioning, and runs as `p` parallel tasks. A layout without
     * buckets passes `df` through. A rewrite of a table's own rows under
-    * its own spec (MERGE, an isolated tenant's remainder, a columnar
-    * rewrite) does without it: each bucket file is read whole by one
-    * task, so its rows stay together already. */
+    * its own spec (MERGE, isolating a tenant, a columnar rewrite) does
+    * without it: each bucket file is read whole by one task, so its
+    * rows stay together already. */
   private[graft] def byBucket(df: DataFrame,
       layout: DistributionSpec): DataFrame = layout match {
     case DistributionSpec(_, Hash, Some(c), b, _) if b > 0 =>
@@ -145,9 +145,32 @@ object DistributionCatalog {
     case _ => df
   }
 
+  /** The partition column of a table with isolated tenants, and its
+    * value outside them: not null, which Spark would file under its
+    * default partition name. */
+  private val TenantCol = "__tenant"
+  private val NoTenant = "-"
+
+  /** The `__tenant` value of distribution-column value `key` in entry
+    * `e`: `key` as a string if it is an isolated tenant, else [[NoTenant]]. */
+  private def tenantOf(e: Entry, key: Column): Column = {
+    import org.apache.spark.sql.functions.when
+    when(key.isin(e.tenants.toSeq: _*), key.cast("string")).otherwise(NoTenant)
+  }
+
+  /** `df` with the `__tenant` column that table `name` (entry `e`) is
+    * stored with, if it has isolated tenants. */
+  private[graft] def withTenant(df: DataFrame, name: String): DataFrame =
+    withTenant(df, entry(name))
+
+  private def withTenant(df: DataFrame, e: Entry): DataFrame =
+    if (e.tenants.isEmpty) df
+    else df.withColumn(TenantCol, tenantOf(e, df(e.spec.distColumn.get)))
+
   /** The one table writer. The layout comes from `layout`:
     *   - hash with buckets: bucketed and sorted on the distribution
-    *     column (bucket ≙ shard);
+    *     column (bucket ≙ shard), and partitioned by `__tenant` if `df`
+    *     has that column ([[withTenant]]);
     *   - range or append: partitioned by `__shard` (directory ≙ shard);
     *   - hash with 0 buckets on a `__…` column (time-partitioned):
     *     partitioned by that column;
@@ -160,7 +183,9 @@ object DistributionCatalog {
       .options(options + ("path" -> path)).format("parquet")
     (layout match {
       case Some(DistributionSpec(_, Hash, Some(c), b, _)) if b > 0 =>
-        w.bucketBy(b, c).sortBy(c)
+        val bucketed = w.bucketBy(b, c).sortBy(c)
+        if (df.columns.contains(TenantCol)) bucketed.partitionBy(TenantCol)
+        else bucketed
       case Some(DistributionSpec(_, RangeDist | AppendDist, _, _, _)) =>
         w.partitionBy("__shard")
       case Some(DistributionSpec(_, Hash, Some(c), 0, _))
@@ -185,17 +210,24 @@ object DistributionCatalog {
     * and routable under its old spec. `df` may read the table itself:
     * the write never touches the files it reads. Under an unchanged
     * spec the table keeps its entry: intervals, placements and isolated
-    * tenant parts, which are the caller's. A new spec starts a fresh
-    * entry at the default placement, as citus's `alter_distributed_table`
-    * places the shards it creates; a caller that changes the spec
-    * re-absorbs the tenant parts ([[commitAbsorbing]]). */
+    * tenants, whose `__tenant` partitions the write derives again
+    * ([[withTenant]]). A new spec starts a fresh entry at the default
+    * placement, as citus's `alter_distributed_table` places the shards
+    * it creates, and with no isolated tenant. */
   private[graft] def commitVersion(spark: SparkSession, name: String,
       layout: Option[DistributionSpec], df: DataFrame,
-      options: Map[String, String] = Map.empty): Unit = {
+      options: Map[String, String] = Map.empty): Unit =
+    commit(spark, name, layout.map(s =>
+      entries.get(name).filter(_.spec == s).getOrElse(Entry(s))), df, options)
+
+  /** [[commitVersion]] to entry `to` (None: out of the catalog). */
+  private def commit(spark: SparkSession, name: String, to: Option[Entry],
+      df: DataFrame, options: Map[String, String] = Map.empty): Unit = {
     val catalog = spark.sessionState.catalog
     val ident = TableIdentifier(name)
     val meta = catalog.getTableMetadata(ident)
-    val next = staged(spark, name, layout, df,
+    val next = staged(spark, name, to.map(_.spec),
+        to.fold(df)(withTenant(df, _)),
         meta.storage.properties ++ options) { staging =>
       val stagedMeta = catalog.getTableMetadata(staging)
       // the old partitions go before the partition columns change
@@ -206,8 +238,7 @@ object DistributionCatalog {
       catalog.createPartitions(ident, catalog.listPartitions(staging),
         ignoreIfExists = false)
     }
-    entries.updateWith(name)(old =>
-      layout.map(s => old.filter(_.spec == s).getOrElse(Entry(s))))
+    entries.updateWith(name)(_ => to)
     spark.catalog.refreshTable(name)
     // every version lives under the warehouse path: keep only `next`
     Option(next.getParentFile.listFiles()).getOrElse(Array.empty)
@@ -259,7 +290,10 @@ object DistributionCatalog {
     * entry to a fresh `_v<uuid>` directory under table `name`'s
     * warehouse path, which Spark's file listing skips; `swap` then makes
     * the staged contents the table's. The (external) staging entry goes
-    * either way, the directory too if anything failed. Returns it. */
+    * either way, the directory too if anything failed — once the failed
+    * write's tasks have ended (for at most a minute): Spark kills them
+    * after the write has thrown, and until then they can still write.
+    * Returns it. */
   private def staged(spark: SparkSession, name: String,
       layout: Option[DistributionSpec], df: DataFrame,
       options: Map[String, String])(
@@ -267,15 +301,25 @@ object DistributionCatalog {
     val token = java.util.UUID.randomUUID().toString.replace("-", "")
     val staging = TableIdentifier(s"${name}__v$token")
     val next = new java.io.File(warehousePath(spark, name), s"_v$token")
+    val sc = spark.sparkContext
     var committed = false
+    sc.addJobTag(staging.table)
     try {
       writeTable(df, staging.table, layout, options, next.getPath)
       swap(staging)
       committed = true
     } finally {
+      sc.removeJobTag(staging.table)
       spark.sessionState.catalog.dropTable(staging, ignoreIfNotExists = true,
         purge = false)
-      if (!committed) deleteTree(next)
+      if (!committed) {
+        val t = sc.statusTracker
+        val deadline = System.nanoTime() + 60000000000L
+        while (System.nanoTime() < deadline && t.getJobIdsForTag(staging.table)
+            .flatMap(t.getJobInfo).flatMap(_.stageIds).flatMap(t.getStageInfo)
+            .exists(_.numActiveTasks > 0)) Thread.sleep(10)
+        deleteTree(next)
+      }
     }
     next
   }
@@ -285,13 +329,14 @@ object DistributionCatalog {
     f.delete()
   }
 
-  /** The data files of catalog table `name`: every file under its
-    * catalog location (a partitioned table's: its partitions'), except
-    * those Spark's own file listing hides — `.` names (Hadoop's `.crc`
-    * checksums) and `_` names without a `=` (`_SUCCESS`, a `_v…`
-    * directory no commit swapped in). */
+  /** The data files of catalog table `name`, each with the catalog
+    * spec of its partition (empty for an unpartitioned table): every
+    * file under its catalog location (a partitioned table's: its
+    * partitions'), except those Spark's own file listing hides — `.`
+    * names (Hadoop's `.crc` checksums) and `_` names without a `=`
+    * (`_SUCCESS`, a `_v…` directory no commit swapped in). */
   private def dataFiles(spark: SparkSession,
-      name: String): Seq[java.io.File] = {
+      name: String): Seq[(Map[String, String], java.io.File)] = {
     val catalog = spark.sessionState.catalog
     val ident = TableIdentifier(name)
     val meta = catalog.getTableMetadata(ident)
@@ -300,15 +345,11 @@ object DistributionCatalog {
         .filterNot(f => f.getName.startsWith(".") ||
           f.getName.startsWith("_") && !f.getName.contains("="))
         .flatMap(f => if (f.isDirectory) walk(f) else Seq(f))
-    (if (meta.partitionColumnNames.isEmpty) Seq(meta.location)
-      else catalog.listPartitions(ident).map(_.location))
-      .flatMap(d => walk(new java.io.File(d)))
+    (if (meta.partitionColumnNames.isEmpty)
+      Seq(Map.empty[String, String] -> meta.location)
+      else catalog.listPartitions(ident).map(p => p.spec -> p.location))
+      .flatMap { case (p, d) => walk(new java.io.File(d)).map(p -> _) }
   }
-
-  /** True when [[isolateTenant]] moved some of `name`'s keys into
-    * tables of their own. */
-  def hasIsolatedTenants(name: String): Boolean =
-    entries.get(name).exists(_.tenants.nonEmpty)
 
   /** Reference table: stored once, broadcast to every join site. */
   def createReferenceTable(spark: SparkSession, df: DataFrame,
@@ -317,21 +358,17 @@ object DistributionCatalog {
       options = Map.empty)
 
   /** Read a catalog table; reference tables come back broadcast-hinted
-    * so every join applies the REFERENCE_JOIN strategy. A table with
-    * isolated tenants ([[isolateTenant]]) reads as base ∪ tenant parts,
-    * so whole-table analytics see every row. A distribution-column
-    * equality on the result is pushed into both parts, and on a session
-    * with [[graft.plans.GraftExtensions]] each part's scan is routed to
-    * the one bucket file that can hold the key
-    * ([[graft.plans.RouteToShard]]). */
+    * so every join applies the REFERENCE_JOIN strategy. The physical
+    * layout columns are not user schema: a range/append table's
+    * `__shard` and an isolated tenant's `__tenant` ([[isolateTenant]])
+    * are dropped. */
   def table(spark: SparkSession, name: String): DataFrame = {
-    val e = entries.get(name)
-    val df = e.toSeq.flatMap(_.tenants.values)
-      .foldLeft(spark.table(name))((acc, t) => acc.unionByName(spark.table(t)))
-    e.map(_.spec.method) match {
-      case Some(Reference) => broadcast(df)
-      // the shard id is physical layout, not user schema
-      case Some(RangeDist | AppendDist) => df.drop("__shard")
+    val df = spark.table(name)
+    entries.get(name) match {
+      case Some(e) if e.spec.method == Reference => broadcast(df)
+      case Some(e) if e.spec.method == RangeDist ||
+        e.spec.method == AppendDist => df.drop("__shard")
+      case Some(e) if e.tenants.nonEmpty => df.drop(TenantCol)
       case _ => df
     }
   }
@@ -374,10 +411,9 @@ object DistributionCatalog {
   }
 
   /** `citus_total_relation_size(rel)`: physical bytes of a cataloged
-    * table (all shards + isolated tenant parts). */
+    * table (every shard and partition). */
   def totalRelationSize(spark: SparkSession, name: String): Long =
-    (name +: entries.get(name).toSeq.flatMap(_.tenants.values))
-      .flatMap(dataFiles(spark, _)).map(_.length()).sum
+    dataFiles(spark, name).map(_._2.length()).sum
 
   /** `update_distributed_table_colocation(rel, colocate_with)`
     * (`sql/udfs/update_distributed_table_colocation/` — metadata-only
@@ -413,18 +449,20 @@ object DistributionCatalog {
     * partition name, from/to range, access method): one row per
     * partition of a time-partitioned table with its value, row count
     * and bytes. Row counts come from one grouped metadata-cheap scan
-    * over the partition column only. */
+    * over the partition column only. Rows with a null timestamp show
+    * under Spark's default partition name, as their directory does. */
   def timePartitions(spark: SparkSession, name: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, count, lit}
+    import org.apache.spark.sql.functions.{coalesce, col, count, lit}
     val partCol = timePartitionValues(spark, name)._1
-    val counts = spark.table(name).groupBy(col(partCol))
+    val counts = spark.table(name).groupBy(coalesce(col(partCol)
+        .cast("string"), lit(ExternalCatalogUtils.DEFAULT_PARTITION_NAME)))
       .agg(count(lit(1)).as("n_rows"))
-    val bytes = dataFiles(spark, name).groupMapReduce(
-      _.getParentFile.getName.split("=", 2).last)(_.length())(_ + _)
+    val bytes = dataFiles(spark, name).groupMapReduce(_._1(partCol))(
+      _._2.length())(_ + _)
     import spark.implicits._
     counts.collect()
-      .map(r => (name, r.get(0).toString, r.getLong(1),
-        bytes.getOrElse(r.get(0).toString, 0L)))
+      .map(r => (name, r.getString(0), r.getLong(1),
+        bytes.getOrElse(r.getString(0), 0L)))
       .sortBy(_._2).toSeq
       .toDF("table_name", "partition_value", "n_rows", "size_bytes")
   }
@@ -502,11 +540,11 @@ object DistributionCatalog {
     * colocate_with)` (`commands/alter_table.c:219` — builds the table
     * with the new distribution, then swaps it in): rewrite the bucketed
     * layout with a new distribution column and/or bucket count, as one
-    * [[commitVersion]]. The whole table, isolated tenant parts
-    * included, is re-bucketed in one shuffle-write stage — the Spark
-    * analogue of citus's shard-move data copy — and the tenant parts
-    * go once the new version is in. A failed rewrite (a bad column, a
-    * colocation the bucket count refuses) leaves the table as it was. */
+    * [[commitVersion]]. The whole table, isolated tenants included, is
+    * re-bucketed in one shuffle-write stage — the Spark analogue of
+    * citus's shard-move data copy; under the new spec no tenant is
+    * isolated. A failed rewrite (a bad column, a colocation the bucket
+    * count refuses) leaves the table as it was. */
   def alterDistributedTable(spark: SparkSession, name: String,
       distColumn: Option[String] = None, buckets: Option[Int] = None,
       colocateWith: Option[String] = None): DistributionSpec = {
@@ -515,29 +553,17 @@ object DistributionCatalog {
     val newBuckets = buckets.getOrElse(old.bucketCount)
     val spec = DistributionSpec(name, Hash, distColumn.orElse(old.distColumn),
       newBuckets, colocationFor(colocateWith, newBuckets))
-    commitAbsorbing(spark, name, Some(spec),
-      byBucket(table(spark, name), spec))
+    commitVersion(spark, name, Some(spec), byBucket(table(spark, name), spec))
     spec
   }
 
   /** `undistribute_table(rel)` (`commands/alter_table.c:180`): convert a
     * distributed table back to a plain (non-bucketed) local table and
     * drop it from the distribution catalog, as one [[commitVersion]];
-    * isolated tenant parts fold back into the plain table. */
+    * isolated tenants fold back into the plain table. */
   def undistributeTable(spark: SparkSession, name: String): Unit = {
     require(spec(name).nonEmpty, s"not a distributed table: $name")
-    commitAbsorbing(spark, name, None, table(spark, name))
-  }
-
-  /** [[commitVersion]] for a rewrite whose `df` replaces the isolated
-    * tenant parts too: their tables go once the commit is in. */
-  private def commitAbsorbing(spark: SparkSession, name: String,
-      layout: Option[DistributionSpec], df: DataFrame,
-      options: Map[String, String] = Map.empty): Unit = {
-    val parts = entries.get(name).toSeq.flatMap(_.tenants.values)
-    commitVersion(spark, name, layout, df, options)
-    entries.updateWith(name)(_.map(_.copy(tenants = Map.empty)))
-    parts.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    commitVersion(spark, name, None, table(spark, name))
   }
 
   /** The `citus_shards` size view (`sql/udfs/citus_shards/` — shard
@@ -546,96 +572,85 @@ object DistributionCatalog {
     * filesystem (shard ≙ bucket files `*_NNNNN.*`), row counts from
     * one grouped scan. The skew this surfaces is the decision input
     * for [[alterDistributedTable]] (re-bucket) or a salted join —
-    * the rebalancer's diagnosis step. */
+    * the rebalancer's diagnosis step. Each isolated tenant shows as one
+    * more [[shard]], with its partition's bytes and rows, which its
+    * bucket does not count — the way citus_shards lists an isolated
+    * tenant's dedicated shard. */
   def shardSizes(spark: SparkSession, name: String): DataFrame = {
     import spark.implicits._
-    val bytes = shardBytes(spark, name)
+    import org.apache.spark.sql.functions.{col, input_file_name, regexp_extract}
+    val e = entry(name)
+    val bytes = bytesByShard(spark, name)
     // bucket id comes from the file name (file-splits ≠ buckets: tiny
     // files pack many-per-partition, so spark_partition_id won't do)
-    import org.apache.spark.sql.functions.{input_file_name, regexp_extract}
     val rows = spark.table(name)
-      .groupBy(regexp_extract(input_file_name(), BucketFile.regex, 1)
-        .cast("int").as("bucket"))
-      .count().collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val base = bytes.toSeq.sorted.map { case (b, n) =>
-      (name, b, n, rows.getOrElse(b, 0L))
-    }
-    // isolated tenants show as their own "shards" (shard = -1), the way
-    // citus_shards lists an isolated tenant's dedicated shard
-    val tenantRows = entry(name).tenants.values
-      .toSeq.sorted.map(t => (t, -1, dataFiles(spark, t).map(_.length()).sum,
-        spark.table(t).count()))
-    (base ++ tenantRows)
+      .groupBy(tenantOf(e, col(e.spec.distColumn.get)),
+        regexp_extract(input_file_name(), BucketFile.regex, 1).cast("int"))
+      // one group per shard: a tenant's rows share one key, so one bucket
+      .count().collect()
+      .map(r => shard(name, r.getString(0), r.getInt(1)) -> r.getLong(2))
+      .toMap
+    (e.shards.map(name -> _) ++ bytes.keys.filter(_._1 != name).toSeq.sorted)
+      .map(s => (s._1, s._2, bytes.getOrElse(s, 0L), rows.getOrElse(s, 0L)))
       .toDF("table_name", "shard", "size_bytes", "n_rows")
   }
 
   private val BucketFile = "_(\\d{5})[_.]".r
 
+  /** A shard of hash-bucketed table `name` as [[shardSizes]] lists it:
+    * (`name`, its bucket), or (`name/__tenant=<key>`, -1) for the rows
+    * of `__tenant` value `tenant`, an isolated tenant. */
+  private def shard(name: String, tenant: String, bucket: Int) =
+    if (tenant == NoTenant) name -> bucket
+    else s"$name/$TenantCol=$tenant" -> -1
+
+  /** Bytes per [[shard]] of hash-bucketed table `name`, from the file
+    * listing alone: no Spark job. */
+  private def bytesByShard(spark: SparkSession,
+      name: String): Map[(String, Int), Long] = {
+    require(entry(name).spec.bucketed, s"$name is not hash-bucketed")
+    dataFiles(spark, name).flatMap { case (p, f) =>
+      BucketFile.findFirstMatchIn(f.getName).map(m => shard(name,
+        p.getOrElse(TenantCol, NoTenant), m.group(1).toInt) -> f.length())
+    }.groupMapReduce(_._1)(_._2)(_ + _)
+  }
+
   /** Bytes per bucket of hash-bucketed table `name` (0 for an empty
-    * bucket), from the file listing alone: no Spark job. */
+    * bucket; an isolated tenant's files are its own shard), from the
+    * file listing alone: no Spark job. */
   private[catalog] def shardBytes(spark: SparkSession,
       name: String): Map[Int, Long] = {
-    val e = entry(name)
-    require(e.spec.bucketed, s"$name is not hash-bucketed")
-    val bytes = dataFiles(spark, name)
-      .flatMap(f => BucketFile.findFirstMatchIn(f.getName)
-        .map(m => m.group(1).toInt -> f.length()))
-      .groupMapReduce(_._1)(_._2)(_ + _)
-    e.shards.map(b => b -> bytes.getOrElse(b, 0L)).toMap
+    val bytes = bytesByShard(spark, name)
+    entry(name).shards.map(b => b -> bytes.getOrElse(name -> b, 0L)).toMap
   }
 
   /** `isolate_tenant_to_new_shard(table, tenant_id, 'CASCADE')`
     * (`operations/isolate_shards.c:48-57` — split the shard holding a
-    * hot tenant so that tenant gets a shard of its own): the hot key's
-    * rows move to a new dedicated single-bucket table, then the
-    * remainder replaces the table's contents as one [[commitVersion]]
-    * under its unchanged spec — bucket count and colocation group
-    * included (citus's CASCADE isolation keeps colocation too). If that
-    * commit fails, the new tenant table is dropped again and the table
-    * is as it was. [[table]] transparently unions the parts, so
-    * whole-table analytics are unchanged; [[tenantShard]] routes a
-    * single-tenant query straight to the dedicated files — the
-    * isolated tenant's scan cost becomes proportional to ITS data, not
-    * its former bucket's, which is the entire point of the citus UDF.
-    * At 100 TB this is the skew remedy for the multi-tenant case where
-    * one tenant is 1000× the median: [[shardSizes]] diagnoses,
-    * isolateTenant cures.
-    * READ CONTRACT after isolation: whole-table reads must go through
-    * [[table]] (a raw `spark.table(name)` sees only the remainder);
-    * [[shardSizes]] lists tenant parts as their own shards; the
-    * rewrites of the whole table (alter, undistribute, columnar options)
-    * re-absorb them. A tenant is isolated once: its rows are no longer
-    * in the table to move again. */
+    * hot tenant so that tenant gets a shard of its own, inside the same
+    * table): one [[commitVersion]] under the unchanged spec (bucket
+    * count and colocation group too, as citus's CASCADE keeps
+    * colocation) that also partitions the table by `__tenant`
+    * ([[withTenant]]), giving the hot key's rows a partition of their
+    * own. Every read still sees every row; [[tenantShard]] reads that
+    * partition alone, so the tenant's scan cost is proportional to ITS
+    * data, not its bucket's — the point of the citus UDF, and the skew
+    * remedy at 100 TB when one tenant is 1000× the median
+    * ([[shardSizes]] diagnoses, isolateTenant cures). Later writes under
+    * the same spec keep the partition; a new spec folds it back. A
+    * tenant is isolated once. */
   def isolateTenant(spark: SparkSession, name: String,
       tenantValue: Any): DistributionSpec = {
-    import org.apache.spark.sql.functions.{col, lit}
     val e = entry(name)
-    val s = e.spec
-    require(s.bucketed,
+    require(e.spec.bucketed,
       s"$name is not hash-bucketed (tenant isolation needs a bucketed " +
         "layout; time-partitioned and reference tables have none)")
-    val distCol = s.distColumn.get
-    require(!e.tenants.contains(tenantValue.toString),
+    require(!e.tenants.contains(tenantValue),
       s"tenant $tenantValue of $name is isolated")
-    val tenantTable =
-      s"${name}__tenant_${tenantValue.toString.replaceAll("\\W", "_")}"
-    val data = spark.table(name)
-    val tenantPath = warehousePath(spark, tenantTable)
-    val tenantSpec = DistributionSpec(tenantTable, Hash, Some(distCol), 1, 0)
-    writeTable(byBucket(data.filter(col(distCol) === lit(tenantValue)),
-        tenantSpec), tenantTable, Some(tenantSpec),
-      spark.sessionState.catalog.getTableMetadata(TableIdentifier(name))
-        .storage.properties, tenantPath)
-    try commitVersion(spark, name, Some(s), data.filter(
-      col(distCol) =!= lit(tenantValue) || col(distCol).isNull))
-    catch { case e: Throwable =>
-      spark.sql(s"DROP TABLE IF EXISTS $tenantTable")
-      deleteTree(new java.io.File(tenantPath))
-      throw e
-    }
-    entries.updateWith(name)(_.map(e =>
-      e.copy(tenants = e.tenants + (tenantValue.toString -> tenantTable))))
-    s
+    require(String.valueOf(tenantValue) != NoTenant,
+      s"$NoTenant is the partition of the rows outside any tenant")
+    commit(spark, name, Some(e.copy(tenants = e.tenants + tenantValue)),
+      spark.table(name))
+    e.spec
   }
 
   private val tenantReads = TrieMap.empty[(String, String), Long]
@@ -657,12 +672,13 @@ object DistributionCatalog {
   /** `citus_stat_tenants_reset()`. */
   def resetTenantStats(): Unit = tenantReads.clear()
 
-  /** Route a single-tenant read: the dedicated table if the tenant is
-    * isolated (scan = just its files), else the base table with a
-    * distribution-column point filter — the router path the reference
-    * plans for non-isolated tenants (`fast_path_router_planner.c`). On
-    * a session with [[graft.plans.GraftExtensions]] that filter routes
-    * the scan to the key's one bucket file, read by one task
+  /** Route a single-tenant read: the table with a distribution-column
+    * point filter — the router path the reference plans
+    * (`fast_path_router_planner.c`) — and, if the table has isolated
+    * tenants, a filter on the key's `__tenant` partition, so an isolated
+    * tenant's read lists its own partition only. On a session with
+    * [[graft.plans.GraftExtensions]] the key filter routes the scan to
+    * the key's one bucket file, read by one task
     * ([[graft.plans.RouteToShard]]); without them Spark's bucket pruning
     * still reads one bucket, but schedules a task per bucket. */
   def tenantShard(spark: SparkSession, name: String,
@@ -672,14 +688,13 @@ object DistributionCatalog {
       case Some(n) => Some(n + 1); case None => Some(1L)
     }
     val e = entry(name)
-    e.tenants.get(tenantValue.toString) match {
-      case Some(t) => spark.table(t)
-      case None =>
-        val s = e.spec
-        require(s.method == Hash && s.distColumn.nonEmpty,
-          s"$name has no distribution column to route on")
-        spark.table(name).filter(col(s.distColumn.get) === lit(tenantValue))
-    }
+    require(e.spec.method == Hash && e.spec.distColumn.nonEmpty,
+      s"$name has no distribution column to route on")
+    val rows = spark.table(name)
+      .filter(col(e.spec.distColumn.get) === lit(tenantValue))
+    if (e.tenants.isEmpty) rows
+    else rows.filter(col(TenantCol) === tenantOf(e, lit(tenantValue)))
+      .drop(TenantCol)
   }
 
   private val matviews =
@@ -730,7 +745,7 @@ object DistributionCatalog {
     if (!spark.catalog.tableExists(name)) {
       writeTable(df, name, layout, Zstd, warehousePath(spark, name))
       layout.fold(entries.remove(name))(s => entries.put(name, Entry(s)))
-    } else commitAbsorbing(spark, name, layout, df)
+    } else commitVersion(spark, name, layout, df)
   }
 
   // ---- shard placements (pg_dist_placement) ---------------------------
@@ -921,23 +936,17 @@ object DistributionCatalog {
     * write options changed and the others kept, in the same layout
     * (bucketed stays bucketed, partitioned stays partitioned); later
     * rewrites and MERGEs keep the options, which live in the catalog
-    * entry. Isolated tenant parts fold back in. Chunk skipping ≙
+    * entry. Isolated tenants keep their partitions. Chunk skipping ≙
     * row-group/page min-max statistics, which Parquet writes
     * unconditionally. */
   def setColumnarOptions(spark: SparkSession, name: String,
       compression: Option[String] = None,
       stripeBytes: Option[Long] = None,
-      chunkRows: Option[Int] = None): Unit = {
-    val s = entry(name).spec
-    // range/append shards live in the __shard column, which table()
-    // strips as non-user schema: read the raw catalog table to keep it
-    val sharded = s.method == RangeDist || s.method == AppendDist
-    commitAbsorbing(spark, name, Some(s),
-      if (sharded) spark.table(name) else table(spark, name),
+      chunkRows: Option[Int] = None): Unit =
+    commitVersion(spark, name, Some(entry(name).spec), spark.table(name),
       compression.map("compression" -> _).toMap ++
         stripeBytes.map("parquet.block.size" -> _.toString) ++
         chunkRows.map("parquet.page.row.count.limit" -> _.toString))
-  }
 
   /** `citus_update_table_statistics(rel)` (`sql/udfs/
     * citus_update_table_statistics/` — refresh shard size/stat

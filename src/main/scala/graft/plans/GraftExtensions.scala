@@ -74,24 +74,28 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 }
 
+private[plans] object CatalogScan {
+  /** The catalog table `p` scans, if `p` is a scan of a table that
+    * [[DistributionCatalog]] distributes by `method`. */
+  def of(p: LogicalPlan,
+      method: DistributionCatalog.PartMethod): Option[String] = p match {
+    case r: LogicalRelation => r.catalogTable.map(_.identifier.table)
+      .filter(DistributionCatalog.spec(_).exists(_.method == method))
+    case _ => None
+  }
+}
+
 /** Optimizer rule: wrap reference-table scans in a broadcast hint
   * (idempotent — already-hinted scans are skipped). */
 object BroadcastReferenceTables extends Rule[LogicalPlan] {
-
-  private def isReferenceScan(p: LogicalPlan): Boolean = p match {
-    case r: LogicalRelation =>
-      r.catalogTable.exists(ct =>
-        DistributionCatalog.spec(ct.identifier.table)
-          .exists(_.method == DistributionCatalog.Reference))
-    case _ => false
-  }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     val alreadyHinted = plan.collect {
       case ResolvedHint(child, _) => child
     }.toSet
     plan.transformUp {
-      case r if isReferenceScan(r) && !alreadyHinted.contains(r) =>
+      case r if CatalogScan.of(r, DistributionCatalog.Reference).nonEmpty &&
+          !alreadyHinted.contains(r) =>
         ResolvedHint(r, HintInfo(strategy = Some(BROADCAST)))
     }
   }

@@ -1,10 +1,9 @@
 package graft.plans
 
 import graft.catalog.DistributionCatalog
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualTo, Expression}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo, PredicateHelper}
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.LogicalRelation
 
 /** The `citus.enable_repartition_joins` GUC (default OFF in citus —
   * a join between distributed tables that is not colocated and not
@@ -26,36 +25,16 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
   * one cataloged hash table are judged; anything more complex has
   * already been planned by upstream decisions.
   */
-object RepartitionJoinGuard extends Rule[LogicalPlan] {
+object RepartitionJoinGuard extends Rule[LogicalPlan] with PredicateHelper {
 
   val ConfKey = "spark.graft.enableRepartitionJoins"
 
-  private def catalogHashTables(p: LogicalPlan): Seq[String] =
-    p.collect {
-      case r: LogicalRelation =>
-        r.catalogTable.map(_.identifier.table)
-          .filter(t => DistributionCatalog.spec(t)
-            .exists(_.method == DistributionCatalog.Hash))
-    }.flatten
-
-  private def referencesReferenceTable(p: LogicalPlan): Boolean =
-    p.collectFirst {
-      case r: LogicalRelation if r.catalogTable.exists(ct =>
-        DistributionCatalog.spec(ct.identifier.table)
-          .exists(_.method == DistributionCatalog.Reference)) => ()
-    }.nonEmpty
-
-  /** Top-level AND conjuncts only — an equality buried inside an OR
-    * or NOT branch does not guarantee colocated execution. */
-  private def conjuncts(e: Expression): Seq[Expression] = e match {
-    case And(l, r) => conjuncts(l) ++ conjuncts(r)
-    case other => Seq(other)
-  }
-
-  /** Does the equi-condition join the two distribution columns?
-    * Attributes are resolved by exprId against the side that scans
-    * each table, so a name-colliding non-key column on the other side
-    * cannot satisfy the check. */
+  /** Does the equi-condition join the two distribution columns? Only
+    * top-level AND conjuncts count — an equality buried inside an OR or
+    * NOT branch does not guarantee colocated execution. Attributes are
+    * resolved by exprId against the side that scans each table, so a
+    * name-colliding non-key column on the other side cannot satisfy
+    * the check. */
   private def joinsOnDistColumns(j: Join, a: String, b: String): Boolean = {
     val colA = DistributionCatalog.spec(a).flatMap(_.distColumn)
     val colB = DistributionCatalog.spec(b).flatMap(_.distColumn)
@@ -66,7 +45,7 @@ object RepartitionJoinGuard extends Rule[LogicalPlan] {
         def distPair(x: AttributeReference, y: AttributeReference) =
           leftOut.contains(x) && x.name.equalsIgnoreCase(ca) &&
             rightOut.contains(y) && y.name.equalsIgnoreCase(cb)
-        j.condition.exists(c => conjuncts(c).exists {
+        j.condition.exists(c => splitConjunctivePredicates(c).exists {
           case EqualTo(l: AttributeReference, r: AttributeReference) =>
             distPair(l, r) || distPair(r, l)
           case _ => false
@@ -79,10 +58,10 @@ object RepartitionJoinGuard extends Rule[LogicalPlan] {
     if (conf.getConfString(ConfKey, "true").toBoolean) return plan
     plan.foreach {
       case j: Join =>
-        val lt = catalogHashTables(j.left)
-        val rt = catalogHashTables(j.right)
-        val refSide = referencesReferenceTable(j.left) ||
-          referencesReferenceTable(j.right)
+        import DistributionCatalog.{Hash, Reference}
+        val lt = j.left.flatMap(CatalogScan.of(_, Hash))
+        val rt = j.right.flatMap(CatalogScan.of(_, Hash))
+        val refSide = j.exists(CatalogScan.of(_, Reference).nonEmpty)
         (lt, rt) match {
           case (Seq(a), Seq(b)) if !refSide =>
             val colocatedKeyJoin = DistributionCatalog.colocated(a, b) &&

@@ -2,12 +2,12 @@ package graft.plans
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, EqualTo, Expression, LeafExpression, Literal, PredicateHelper}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, EqualTo, Expression, LeafExpression, Literal, PredicateHelper, SubqueryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, EmptyBlock, ExprCode, FalseLiteral, JavaCode}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{ColumnarRule, FilterExec, SparkPlan}
-import org.apache.spark.sql.execution.datasources.{BucketingUtils, FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.{BucketingUtils, CatalogFileIndex, FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.types._
 
 /** When a `Filter` pins a bucketed catalog table's single bucket column
@@ -42,7 +42,15 @@ object RouteToShard extends Rule[LogicalPlan] with PredicateHelper {
       } yield {
         val bucket = BucketingUtils.getBucketIdFromValue(attr,
           spec.numBuckets, value)
-        val routed = fs.copy(location = new ShardFileIndex(fs.location,
+        // Spark's partition pruning runs later and skips a wrapped index
+        val partitions = fs.location match {
+          case c: CatalogFileIndex => c.filterPartitions(
+            splitConjunctivePredicates(cond).filter(e => e.deterministic &&
+              !SubqueryExpression.hasSubquery(e) && e.references.map(_.name)
+                .toSet.subsetOf(table.partitionColumnNames.toSet)))
+          case l => l
+        }
+        val routed = fs.copy(location = new ShardFileIndex(partitions,
           bucket), bucketSpec = None)(fs.sparkSession)
         f.copy(child = rel.copy(relation = routed,
           catalogTable = Some(table.copy(stats = None))))

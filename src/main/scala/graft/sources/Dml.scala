@@ -146,9 +146,9 @@ object Dml {
     * colocation id and write options (the codec) are kept; a merge that
     * fails before the swap leaves the old version readable and
     * routable. Each column keeps its type: assigned values are cast to
-    * it, as a PG UPDATE casts them.
-    * A table with isolated tenants is refused: their rows live in
-    * tables of their own, which this merge would not see. */
+    * it, as a PG UPDATE casts them. On a table with isolated tenants
+    * every row, inserted ones too, lands in its key's `__tenant`
+    * partition ([[DistributionCatalog.isolateTenant]]). */
   def mergeIntoTable(spark: SparkSession, table: String,
       source: DataFrame, sourceKey: String,
       clauses: MergeClauses): Unit = {
@@ -156,8 +156,6 @@ object Dml {
       throw new IllegalArgumentException(s"not a catalog table: $table"))
     require(spec.bucketed && spec.distColumn.isDefined,
       s"$table is not hash-bucketed")
-    require(!DistributionCatalog.hasIsolatedTenants(table),
-      s"$table has isolated tenants; MERGE INTO it would miss their rows")
     val target = spark.table(table)
     val merged = merge(target, source, spec.distColumn.get, sourceKey,
       clauses)

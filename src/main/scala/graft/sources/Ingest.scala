@@ -55,17 +55,18 @@ object Ingest {
   /** INSERT INTO target SELECT — append `rows` into an existing
     * distributed table, preserving its bucket layout: the rows are
     * grouped by bucket first, so the append adds at most one file per
-    * bucket. */
+    * bucket, and an isolated tenant's rows land in its partition. */
   def insertSelect(spark: SparkSession, rows: DataFrame,
       target: String): Unit = {
     val spec = DistributionCatalog.spec(target).getOrElse(
       throw new IllegalArgumentException(s"not a catalog table: $target"))
     // insertInto resolves columns by position against the target schema;
     // align by name first (PG INSERT ... SELECT semantics).
-    val cols = spark.table(target).schema.fieldNames
+    val cols = DistributionCatalog.table(spark, target).columns
     require(spec.method == DistributionCatalog.Hash,
       s"$target is a reference table; use createReferenceTable to replace it")
-    DistributionCatalog.byBucket(rows.select(cols.map(col): _*), spec)
+    DistributionCatalog.byBucket(DistributionCatalog.withTenant(
+        rows.select(cols.map(col): _*), target), spec)
       .write.mode(SaveMode.Append).insertInto(target)
   }
 }

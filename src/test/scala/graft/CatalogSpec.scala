@@ -52,8 +52,9 @@ class CatalogSpec extends AnyFunSuite {
       .orderBy(col("count").desc, col("o_custkey")).first().getLong(0)
 
   /** Runs `rewrite`, which must throw, and checks that it changed
-    * nothing: the rows (isolated tenant parts included), the spec, the
-    * tenant parts, the session's tables (so no staging entry is left)
+    * nothing: the rows (isolated tenants' included), the spec, the
+    * partition columns (so isolated tenants keep their `__tenant`
+    * partitions), the session's tables (so no staging entry is left)
     * and the table's warehouse directory (so no new `_v…` version). */
   private def assertFailsAtomically(name: String)(rewrite: => Unit): Unit = {
     def rows = DistributionCatalog.table(spark, name).collect()
@@ -61,13 +62,13 @@ class CatalogSpec extends AnyFunSuite {
     def tables = spark.catalog.listTables().collect().map(_.name).toSet
     val rowsBefore = rows
     val specBefore = DistributionCatalog.spec(name)
-    val tenantsBefore = DistributionCatalog.hasIsolatedTenants(name)
+    val partitionsBefore = catalogTable(name).partitionColumnNames
     val tablesBefore = tables
     val dirBefore = warehouseDir(name).list().toSet
     intercept[Exception](rewrite)
     assert(rows === rowsBefore)
     assert(DistributionCatalog.spec(name) === specBefore)
-    assert(DistributionCatalog.hasIsolatedTenants(name) === tenantsBefore)
+    assert(catalogTable(name).partitionColumnNames === partitionsBefore)
     assert(tables === tablesBefore)
     assert(warehouseDir(name).list().toSet === dirBefore)
   }
@@ -251,14 +252,16 @@ class CatalogSpec extends AnyFunSuite {
 
     DistributionCatalog.isolateTenant(spark, "d_iso_orders", hotKey)
 
-    // routed single-tenant read hits only the dedicated table
+    // routed single-tenant read hits only the tenant's partition
     val routed = DistributionCatalog.tenantShard(spark, "d_iso_orders", hotKey)
     assert(routed.count() === hotRows)
-    assert(routed.inputFiles.forall(_.contains("__tenant_")),
+    assert(routed.inputFiles.nonEmpty &&
+      routed.inputFiles.forall(_.contains(s"/__tenant=$hotKey/")),
       "isolated tenant must read only its own files")
-    // base table no longer holds the tenant; the union view sees all rows
+    // the tenant stays in its table: every read sees every row
     assert(spark.table("d_iso_orders")
-      .filter(col("o_custkey") === hotKey).count() === 0)
+      .filter(col("o_custkey") === hotKey).count() === hotRows)
+    assert(spark.table("d_iso_orders").count() === total)
     assert(DistributionCatalog.table(spark, "d_iso_orders").count() === total)
     // a non-isolated tenant routes to the pruned base table
     val otherKey = hotKey + 1
@@ -875,6 +878,79 @@ class CatalogSpec extends AnyFunSuite {
       DistributionCatalog.isolateTenant(spark, "d_iso_a", hot))
     assert(DistributionCatalog.tenantShard(spark, "d_iso_a", hot).count() ===
       orders.filter(col("o_custkey") === hot).count())
+  }
+
+  test("an isolated tenant stays in its table: SQL, ANALYZE and " +
+      "INSERT ... SELECT see its rows") {
+    setup
+    val orders = Tables(spark, TestSpark.sf, "orders")
+    DistributionCatalog.createDistributedTable(spark, orders, "d_iso_rows",
+      "o_custkey", buckets = 4)
+    val hot = hotCustomer(orders)
+    val hotRows = orders.filter(col("o_custkey") === hot).count()
+    DistributionCatalog.isolateTenant(spark, "d_iso_rows", hot)
+    assert(Graft.pgSql(spark,
+      s"SELECT o_orderkey FROM d_iso_rows WHERE o_custkey = $hot").count() ===
+      hotRows)
+    assert(DistributionCatalog.analyzeTable(spark, "d_iso_rows") ===
+      orders.count())
+    Ingest.insertSelect(spark, orders.filter(col("o_custkey") === hot)
+      .limit(1).withColumn("o_orderkey", lit(-1L)), "d_iso_rows")
+    val routed = DistributionCatalog.tenantShard(spark, "d_iso_rows", hot)
+    assert(routed.filter(col("o_orderkey") === -1L).count() === 1)
+    assert(routed.count() === hotRows + 1)
+    assert(routed.inputFiles.forall(_.contains(s"/__tenant=$hot/")))
+  }
+
+  test("a table with no isolated tenant has no __tenant column and no " +
+      "partition column, after create and after MERGE") {
+    import graft.sources.Dml
+    setup
+    DistributionCatalog.createDistributedTable(spark,
+      Tables(spark, TestSpark.sf, "orders"), "d_plain", "o_orderkey",
+      buckets = 4)
+    def assertPlain(): Unit = {
+      assert(catalogTable("d_plain").partitionColumnNames.isEmpty)
+      assert(!spark.table("d_plain").columns.contains("__tenant"))
+    }
+    assertPlain()
+    Dml.mergeIntoTable(spark, "d_plain",
+      spark.createDataFrame(Seq(Tuple1(1L), Tuple1(-5L))).toDF("k"), "k",
+      Dml.MergeClauses(
+        matchedUpdate = Map("o_totalprice" -> (col("t.o_totalprice") + 1.0)),
+        notMatchedInsert = Some(Map("o_orderkey" -> col("s.k")))))
+    assertPlain()
+    assert(spark.table("d_plain").filter(col("o_orderkey") === -5L)
+      .count() === 1)
+  }
+
+  test("time_partitions lists a null timestamp under Spark's default " +
+      "partition, with its row and bytes; it is never old") {
+    setup
+    val orders = Tables(spark, TestSpark.sf, "orders")
+    val first = orders.agg(min("o_orderkey")).first().getLong(0)
+    DistributionCatalog.createTimePartitionedTable(spark,
+      orders.withColumn("o_orderdate", when(col("o_orderkey") =!= first,
+        col("o_orderdate"))), "d_time_null", "o_orderdate", "year")
+    val default = "__HIVE_DEFAULT_PARTITION__"
+    val parts = DistributionCatalog.timePartitions(spark, "d_time_null")
+      .collect().map(r => r.getString(1) -> (r.getLong(2), r.getLong(3)))
+      .toMap
+    val bytes = walk(warehouseDir("d_time_null"))
+      .filter(f => f.getParentFile.getName == s"__year_part=$default" &&
+        f.getName.endsWith(".parquet"))
+      .map(_.length).sum
+    assert(bytes > 0)
+    assert(parts(default) === (1L, bytes))
+    assert(parts.values.map(_._1).sum === orders.count())
+    val far = java.sql.Date.valueOf("2100-01-01")
+    assert(!DistributionCatalog.compressOldTimePartitions(spark,
+      "d_time_null", far).contains(default))
+    assert(!DistributionCatalog.dropOldTimePartitions(spark, "d_time_null",
+      far).contains(default))
+    assert(DistributionCatalog.timePartitions(spark, "d_time_null")
+      .collect().map(r => (r.getString(1), r.getLong(2))).toSeq ===
+      Seq((default, 1L)))
   }
 
   test("split shard after a columnar rewrite deletes the retired shard's " +

@@ -143,6 +143,25 @@ class DmlSpec extends AnyFunSuite {
       .filter(_.startsWith("_v")).isEmpty)
   }
 
+  test("a failed merge leaves no version directory, also when its other " +
+      "tasks finish after the failure") {
+    DistributionCatalog.createDistributedTable(spark,
+      (1 to 40).map(i => (i, i * 10.0)).toDF("id", "bal").coalesce(1),
+      "dml_fail_race", "id", buckets = 4)
+    val boom = udf { (k: Int, v: Double) =>
+      if (k == 17) throw new IllegalStateException("boom") else v }
+    // tiny tasks: the others often commit while the job is aborted
+    (1 to 30).foreach { i =>
+      intercept[Exception](Dml.mergeIntoTable(spark, "dml_fail_race",
+        (1 to 40).map(k => (k, -1.0)).toDF("k", "nb"), "k",
+        Dml.MergeClauses(matchedUpdate =
+          Map("bal" -> boom(col("s.k"), col("s.nb"))))))
+      assert(Option(warehouseDir("dml_fail_race").list())
+        .getOrElse(Array.empty).filter(_.startsWith("_v")).isEmpty,
+        s"failed merge $i left a version directory")
+    }
+  }
+
   test("consecutive merges keep one live version on disk") {
     DistributionCatalog.createDistributedTable(spark,
       (1 to 20).map(i => (i, 0.0)).toDF("id", "bal"), "dml_versions", "id",
@@ -187,16 +206,25 @@ class DmlSpec extends AnyFunSuite {
     }
   }
 
-  test("mergeIntoTable refuses a table with isolated tenants") {
+  test("mergeIntoTable on a table with isolated tenants: an updated and " +
+      "an inserted row land in their tenant's partition") {
     DistributionCatalog.createDistributedTable(spark,
       Seq((1, 1.0), (2, 2.0), (3, 3.0)).toDF("id", "bal"), "dml_iso", "id",
       buckets = 4)
-    DistributionCatalog.isolateTenant(spark, "dml_iso", 2)
-    val e = intercept[IllegalArgumentException](Dml.mergeIntoTable(spark,
-      "dml_iso", Seq((2, 9.0)).toDF("k", "nb"), "k",
-      Dml.MergeClauses(matchedUpdate = Map("bal" -> col("s.nb")))))
-    assert(e.getMessage.contains("isolated tenants"))
+    // tenant 4 is isolated before it has a row
+    Seq(2, 4).foreach(DistributionCatalog.isolateTenant(spark, "dml_iso", _))
+    Dml.mergeIntoTable(spark, "dml_iso", Seq((2, 9.0), (4, 4.0)).toDF("k", "nb"),
+      "k", Dml.MergeClauses(matchedUpdate = Map("bal" -> col("s.nb")),
+        notMatchedInsert = Some(Map("id" -> col("s.k"), "bal" -> col("s.nb")))))
+    Seq(2 -> 9.0, 4 -> 4.0).foreach { case (k, bal) =>
+      val df = DistributionCatalog.tenantShard(spark, "dml_iso", k)
+      assert(df.as[(Int, Double)].collect().toSeq === Seq((k, bal)))
+      assert(df.inputFiles.nonEmpty &&
+        df.inputFiles.forall(_.contains(s"/__tenant=$k/")),
+        s"tenant $k must read only its own files")
+    }
     assert(DistributionCatalog.table(spark, "dml_iso").orderBy("id")
-      .as[(Int, Double)].collect().toSeq === Seq((1, 1.0), (2, 2.0), (3, 3.0)))
+      .as[(Int, Double)].collect().toSeq ===
+      Seq((1, 1.0), (2, 9.0), (3, 3.0), (4, 4.0)))
   }
 }

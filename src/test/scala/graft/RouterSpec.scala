@@ -140,7 +140,8 @@ class RouterSpec extends AnyFunSuite {
       .filter(col("l_orderkey") === keys.head)))
   }
 
-  test("isolated tenant through the DistributionCatalog.table union") {
+  test("isolated tenant: key reads of the table, the router path " +
+      "included, see its rows") {
     setup
     val orders = spark.table("src_orders")
     val hot = orders.groupBy("o_custkey").count()
@@ -150,10 +151,16 @@ class RouterSpec extends AnyFunSuite {
     DistributionCatalog.createDistributedTable(spark, orders, "r_orders",
       "o_custkey", buckets = 8)
     DistributionCatalog.isolateTenant(spark, "r_orders", hot)
+    val text = "SELECT o_orderkey, o_custkey FROM r_orders " +
+      "WHERE o_custkey = $1"
     Seq(hot, cold, -1L).foreach { k =>
       val df = DistributionCatalog.table(spark, "r_orders")
         .filter(col("o_custkey") === k)
       assert(rows(df) === rows(orders.filter(col("o_custkey") === k)))
+      val sql = read(text, k)
+      assert(routed(sql) === Seq("r_orders"))
+      assert(rows(sql) === rows(orders.filter(col("o_custkey") === k)
+        .select("o_orderkey", "o_custkey")))
     }
     assert(DistributionCatalog.table(spark, "r_orders").count() ===
       orders.count())

@@ -49,7 +49,8 @@ class TenantScenarioSpec extends AnyFunSuite {
     C.isolateTenant(spark, "t_orders", hot)
     val routed = C.tenantShard(spark, "t_orders", hot)
     assert(routed.count() === hotRows)
-    assert(routed.inputFiles.forall(_.contains("__tenant_")),
+    assert(routed.inputFiles.nonEmpty &&
+      routed.inputFiles.forall(_.contains(s"/__tenant=$hot/")),
       "isolated tenant reads only its dedicated shard files")
 
     // whole-table analytics: unchanged by isolation
@@ -65,6 +66,7 @@ class TenantScenarioSpec extends AnyFunSuite {
       .filter(col("shard") === -1).collect()
     assert(tenantShards.length === 1 &&
       tenantShards(0).getLong(3) === hotRows)
+    assert(tenantShards(0).getString(0) === s"t_orders/__tenant=$hot")
     C.reset(); C.resetTenantStats()
   }
 }
