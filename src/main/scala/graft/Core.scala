@@ -78,7 +78,11 @@ object Tables {
   val benchTables: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part", "orders", "lineitem")
 
-  /** Cache + materialize the star-schema tables for benchmarking.
+  /** Cache + materialize the star-schema tables for benchmarking, in
+    * the session configuration they are timed in: first sets every
+    * entry of [[benchConf]] (sized over [[benchBytes]] and the default
+    * parallelism), the one place those confs are applied, and returns
+    * them.
     *
     * Partitioning (revised r14): each sf0.1 parquet file holds ONE row
     * group, so Spark's split rule cannot give the scan more than one
@@ -98,15 +102,19 @@ object Tables {
     * natural; the r13-era "parts>1 loses" result was mean-based and
     * confounded with shuffle=8 + ambient load — per-query medians
     * reverse it. */
-  def pinForBench(spark: SparkSession, dir: String): Unit = {
+  def pinForBench(spark: SparkSession, dir: String): Map[String, String] = {
     val cores = spark.sparkContext.defaultParallelism
-    benchTables.zip(benchBytes(dir)).foreach { case (n, bytes) =>
-      val parts = mapParallelism(bytes, cores)
+    val bytes = benchBytes(dir)
+    val conf = benchConf(bytes, cores)
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    benchTables.zip(bytes).foreach { case (n, b) =>
+      val parts = mapParallelism(b, cores)
       val base = apply(spark, dir, n)
       val df = (if (parts > 1) base.repartition(parts) else base).cache()
       df.count()
       handles.put((spark, dir, n), Handle(stamp(dir, n), df))
     }
+    conf
   }
 
   /** Partitions of a pinned table of `bytes` parquet bytes:
@@ -118,18 +126,18 @@ object Tables {
     * 32 partitions of a 2.7 MB orders file is ~85 KB per task, pure
     * scheduling overhead. The bytes rule keeps orders at 2 and dims
     * at 1. */
-  def mapParallelism(bytes: Long, cores: Int): Int =
+  private[graft] def mapParallelism(bytes: Long, cores: Int): Int =
     math.min(cores.toLong, math.max(1L, bytes / (1250L << 10))).toInt
 
   /** Parquet bytes of each of [[benchTables]] under `dir`: the sum of
     * its data files ([[stamp]]; `File.length` of a directory-style
     * table is its inode size, about 4 KB). A missing table is 0 bytes. */
-  def benchBytes(dir: String): Seq[Long] =
+  private[graft] def benchBytes(dir: String): Seq[Long] =
     benchTables.map(n => stamp(dir, n).map(_._2).sum)
 
   /** The bench's data-sized SQL confs: a pure function of the pinned
     * tables' parquet bytes ([[benchBytes]]) and the core count. All are
-    * runtime confs, applied with `spark.conf.set` on a [[Graft.session]].
+    * runtime confs; [[pinForBench]] is the one place that sets them.
     *
     *  - Shuffle width is sized to the data, not the core count: ~64 MB
     *    of parquet input per partition. At sf0.1 that term is 0 — a
@@ -151,7 +159,8 @@ object Tables {
     *  - Scan split: ~2 scan tasks per core when the data supports it,
     *    never above the 128 MB cluster default, floored at 16 MB so tiny
     *    SFs stay at 1 task (split overhead dominates). */
-  def benchConf(tableBytes: Seq[Long], cores: Int): Map[String, String] = {
+  private[graft] def benchConf(tableBytes: Seq[Long], cores: Int)
+      : Map[String, String] = {
     val inputBytes = tableBytes.sum
     val dataParts = inputBytes / (64L << 20)
     val mapPar = mapParallelism((tableBytes :+ 0L).max, cores)
@@ -171,7 +180,7 @@ object Tables {
     * a directory-style table at any depth, without the names Spark's
     * listing hides (`.` names, and `_` names that are not `k=v`
     * partition directories); none when it is missing. */
-  private def parquetFiles(f: java.io.File): Seq[java.io.File] =
+  private[graft] def parquetFiles(f: java.io.File): Seq[java.io.File] =
     if (f.isDirectory) Option(f.listFiles()).toSeq.flatten
       .filterNot(p => p.getName.startsWith(".") ||
         p.getName.startsWith("_") && !p.getName.contains("="))

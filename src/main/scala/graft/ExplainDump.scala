@@ -6,8 +6,8 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 /** Dev tool: dump physical-plan quality for the headline queries into
   * EXPLAINS.md — per-query exchange counts, join strategies, aggregate
   * modes, and the formatted plan. It runs what Bench times: the
-  * [[Graft.session]] with [[Tables.benchConf]] applied, over the pinned
-  * cache, on SPARK_GRAFT_SF_DIR with SPARK_GRAFT_CPUS cores; each plan
+  * [[Graft.session]] over the cache and confs [[Tables.pinForBench]]
+  * sets, on SPARK_GRAFT_SF_DIR with SPARK_GRAFT_CPUS cores; each plan
   * is captured after a run (the plan that actually ran). This is the
   * ".explain and iterate" record: readers can see each headline plan
   * is the intended one (broadcasts on dims, partial/final aggs,
@@ -19,9 +19,7 @@ object ExplainDump {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = Graft.session(s"local[$cpus]", "graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
-    val conf = Tables.benchConf(Tables.benchBytes(sfDir), cpus)
-    conf.foreach { case (k, v) => spark.conf.set(k, v) }
-    Tables.pinForBench(spark, sfDir)
+    val conf = Tables.pinForBench(spark, sfDir)
     val qmap = SparkEntry.queries
     val sb = new StringBuilder
     sb ++= "# EXPLAINS — headline-query physical plans\n\n"

@@ -38,14 +38,15 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
   */
 object Graft {
 
-  /** The engine's session: [[plans.GraftExtensions]] installed, AQE on,
-    * UTC, and the static settings the sf0.1 bench measured as wins:
-    * kryo for broadcast/cache serde, a 64 MB broadcast threshold that
-    * keeps every dim table on the hash side, raw in-memory columns
-    * (the cache is already compact), and a codegen cache sized for a
-    * mixed query stream (see [[builder]]).
+  /** The engine's session: [[plans.GraftExtensions]] installed, AQE on
+    * (Spark's default), UTC, and the static settings the sf0.1 bench
+    * measured as wins: kryo for broadcast/cache serde, a 64 MB
+    * broadcast threshold that keeps every dim table on the hash side,
+    * raw in-memory columns (the cache is already compact), and a
+    * codegen cache sized for a mixed query stream (see [[builder]]).
     * Settings that depend on the data size (shuffle width, split size,
-    * AQE at small sizes) are runtime confs: see [[Tables.benchConf]].
+    * AQE at small sizes) are runtime confs that [[Tables.pinForBench]]
+    * sets when it pins the bench's working set.
     *
     * `getOrCreate` hands back a session that already exists in the JVM
     * and drops this builder's extensions and static settings when it
@@ -94,8 +95,6 @@ object Graft {
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
       .config("spark.sql.autoBroadcastJoinThreshold", "64m")
       .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config(CodegenCacheKey, CodegenCacheEntries.toLong)

@@ -1,5 +1,6 @@
 package graft.catalog
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.catalyst.catalog.{CatalogTablePartition, ExternalCatalogUtils}
@@ -243,7 +244,7 @@ object DistributionCatalog {
     // every version lives under the warehouse path: keep only `next`
     Option(next.getParentFile.listFiles()).getOrElse(Array.empty)
       .filterNot(_.getCanonicalFile == next.getCanonicalFile)
-      .foreach(deleteTree)
+      .foreach(FileUtils.deleteQuietly)
   }
 
   /** A partition commit, the way citus's shard split, append load and
@@ -278,11 +279,11 @@ object DistributionCatalog {
       case None => swap(Nil)
     }
     spark.catalog.refreshTable(name)
-    oldDirs.foreach(deleteTree)
+    oldDirs.foreach(FileUtils.deleteQuietly)
     oldDirs.map(_.getParentFile).distinct.filter(d =>
       d.getName.startsWith("_v") && d != new java.io.File(meta.location) &&
         !Option(d.list()).exists(_.exists(_.contains("="))))
-      .foreach(deleteTree)
+      .foreach(FileUtils.deleteQuietly)
   }
 
   /** The staging step of every commit: `df` is written once, in
@@ -318,37 +319,28 @@ object DistributionCatalog {
         while (System.nanoTime() < deadline && t.getJobIdsForTag(staging.table)
             .flatMap(t.getJobInfo).flatMap(_.stageIds).flatMap(t.getStageInfo)
             .exists(_.numActiveTasks > 0)) Thread.sleep(10)
-        deleteTree(next)
+        FileUtils.deleteQuietly(next)
       }
     }
     next
   }
 
-  private def deleteTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteTree)
-    f.delete()
-  }
-
   /** The data files of catalog table `name`, each with the catalog
     * spec of its partition (empty for an unpartitioned table): every
     * file under its catalog location (a partitioned table's: its
-    * partitions'), except those Spark's own file listing hides — `.`
-    * names (Hadoop's `.crc` checksums) and `_` names without a `=`
-    * (`_SUCCESS`, a `_v…` directory no commit swapped in). */
+    * partitions'), except those Spark's own file listing hides
+    * ([[graft.Tables.parquetFiles]]: Hadoop's `.crc` checksums,
+    * `_SUCCESS`, a `_v…` directory no commit swapped in). */
   private def dataFiles(spark: SparkSession,
       name: String): Seq[(Map[String, String], java.io.File)] = {
     val catalog = spark.sessionState.catalog
     val ident = TableIdentifier(name)
     val meta = catalog.getTableMetadata(ident)
-    def walk(d: java.io.File): Seq[java.io.File] =
-      Option(d.listFiles()).getOrElse(Array.empty).toSeq
-        .filterNot(f => f.getName.startsWith(".") ||
-          f.getName.startsWith("_") && !f.getName.contains("="))
-        .flatMap(f => if (f.isDirectory) walk(f) else Seq(f))
     (if (meta.partitionColumnNames.isEmpty)
       Seq(Map.empty[String, String] -> meta.location)
       else catalog.listPartitions(ident).map(p => p.spec -> p.location))
-      .flatMap { case (p, d) => walk(new java.io.File(d)).map(p -> _) }
+      .flatMap { case (p, d) =>
+        graft.Tables.parquetFiles(new java.io.File(d)).map(p -> _) }
   }
 
   /** Reference table: stored once, broadcast to every join site. */

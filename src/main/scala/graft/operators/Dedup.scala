@@ -183,61 +183,9 @@ object Dedup {
     * (every doc labeled with the smallest doc id reachable through dup
     * edges; keeping one doc per cluster is then a groupBy(cluster)).
     *
-    * Algorithm: iterative min-label propagation. Each round is one
-    * shuffle (join labels to edges on the source, min per destination)
-    * and converges in O(cluster diameter) rounds — near-dup clusters
-    * are short-diameter by construction (every member pairs with the
-    * same template), so 3-5 rounds in practice. All state lives in
-    * hash-partitioned DataFrames: nothing is collected to the driver
-    * except the per-round convergence count, which is the same
-    * "coordinator sees only the combine scalar" discipline the
-    * reference enforces. For adversarial long-chain graphs, swap the
-    * propagation body for large-star/small-star (Kiveris et al.,
-    * "Connected Components in MapReduce") — same join/groupBy
-    * primitives, O(log n) rounds.
-    *
-    * Input: two long columns (a, b). Output: (id, cluster_id). */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 25): DataFrame = {
-    val e = edges.toDF("a", "b")
-    val sym = e.union(e.select(col("b"), col("a"))).distinct()
-      .toDF("src", "dst").localCheckpoint(true)
-    // localCheckpoint (NOT cache) each round: the round's plan
-    // references `labels` three times, so an uncut logical plan grows
-    // 3^rounds — the driver OOMs serializing the plan long before the
-    // data is a problem. Checkpointing truncates lineage to the
-    // materialized result, the iterative-algorithm discipline every
-    // DataFrame fixpoint loop needs at scale.
-    var labels = sym.select(col("src").as("id")).distinct()
-      .withColumn("cluster_id", col("id")).localCheckpoint(true)
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      val nbrMin = sym.join(labels, col("src") === col("id"))
-        .groupBy(col("dst")).agg(min(col("cluster_id")).as("nbr_min"))
-      val next = labels.join(nbrMin, col("id") === col("dst"), "left")
-        .select(col("id"),
-          least(col("cluster_id"), coalesce(col("nbr_min"), col("cluster_id")))
-            .as("cluster_id"))
-        .localCheckpoint(true)
-      val changed = next.join(labels.withColumnRenamed("cluster_id", "prev"),
-        "id").filter(col("cluster_id") =!= col("prev")).count()
-      labels = next
-      converged = changed == 0
-      iter += 1
-    }
-    // Partial propagation = one component under multiple labels =
-    // silently kept duplicates downstream. Fail loudly instead.
-    require(converged, s"connectedComponents did not converge in " +
-      s"$maxIter rounds (component diameter exceeds maxIter — raise it " +
-      "or use connectedComponentsLogRounds)")
-    labels
-  }
-
-  /** Connected components in O(log n) rounds via alternating
-    * large-star/small-star (Kiveris et al., "Connected Components in
-    * MapReduce and Beyond") — the variant for adversarial long-chain
-    * graphs where [[connectedComponents]]'s min-label propagation
-    * would need O(diameter) rounds. Each round is two grouped passes:
+    * Algorithm: alternating large-star/small-star (Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond"), O(log n) rounds
+    * even on adversarial long chains. Each round is two grouped passes:
     *
     *   large-star(u): m = min(N(u) ∪ {u}); re-point every neighbor
     *     v > u at m.  small-star(u): same m; re-point every v ≤ u.
@@ -245,10 +193,13 @@ object Dedup {
     * Both steps strictly shrink the potential function (sum of edge
     * spans), halving component height per round. Convergence = edge
     * set unchanged over a full round (checked exactly with EXCEPT; a
-    * count+hash signature does the same at scale with one job).
-    * Output: (id, cluster_id), identical to [[connectedComponents]]
-    * (DedupSpec pins the differential). */
-  def connectedComponentsLogRounds(edges: DataFrame, maxIter: Int = 20)
+    * count+hash signature does the same at scale with one job). All
+    * state lives in DataFrames: nothing is collected to the driver
+    * except the convergence check, the "coordinator sees only the
+    * combine scalar" discipline the reference enforces.
+    *
+    * Input: two long columns (a, b). Output: (id, cluster_id). */
+  def connectedComponents(edges: DataFrame, maxIter: Int = 20)
       : DataFrame = {
     def canon(e: DataFrame): DataFrame =
       e.filter(col("u") =!= col("v"))
@@ -289,7 +240,9 @@ object Dedup {
       e = next
       iter += 1
     }
-    require(converged, s"connectedComponentsLogRounds did not converge " +
+    // Partial convergence = one component under several labels =
+    // silently kept duplicates downstream. Fail loudly instead.
+    require(converged, s"connectedComponents did not converge " +
       s"in $maxIter rounds — raise maxIter")
     // converged stars: every node's label = min(self, final neighbors)
     val sym = e.union(e.select(col("v"), col("u"))).toDF("id", "nbr")

@@ -535,8 +535,8 @@ object TextQueries extends QueryModule {
       ORDER BY stage_no"""))
 
   /** Near-dup CLUSTERING: pairwise jaccard edges → connected components
-    * (operators/Dedup.connectedComponents, iterative min-label
-    * propagation — one shuffle per round, O(cluster diameter) rounds) →
+    * (operators/Dedup.connectedComponents, large-star/small-star —
+    * O(log n) rounds of grouped passes) →
     * every doc labeled with its cluster representative; `is_kept` marks
     * the one doc per cluster a dedup pass would retain. The oracle
     * recomputes the transitive closure with a recursive CTE — an

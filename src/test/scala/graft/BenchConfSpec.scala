@@ -2,8 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The bench's data-sized conf rule (Tables.benchConf) and the pinned
-  * cache's partition rule it shares (Tables.mapParallelism). */
+/** The bench's data-sized conf rule (Tables.benchConf), the pinned
+  * cache's partition rule it shares (Tables.mapParallelism), and
+  * Tables.pinForBench, the one place that applies both. */
 class BenchConfSpec extends AnyFunSuite {
   private val shuffle = "spark.sql.shuffle.partitions"
   private val aqe = "spark.sql.adaptive.enabled"
@@ -65,6 +66,31 @@ class BenchConfSpec extends AnyFunSuite {
         f.delete()
       }
       rm(dir)
+    }
+  }
+
+  test("pinForBench sizes the session and keeps every bench answer") {
+    val spark = TestSpark.spark
+    val sf = TestSpark.sf
+    def answers(): Map[String, Map[org.apache.spark.sql.Row, Int]] =
+      SparkEntry.benchQueries.map(n => n ->
+        SparkEntry.queries(n)(spark, sf).collect().toSeq
+          .groupMapReduce(identity)(_ => 1)(_ + _)).toMap
+    val want = Tables.benchConf(Tables.benchBytes(sf), 4)
+    val saved = want.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    try {
+      val unpinned = answers()
+      assert(Tables.pinForBench(spark, sf) === want)
+      assert(want.keys.map(k => k -> spark.conf.get(k)).toMap === want)
+      val pinned = answers()
+      SparkEntry.benchQueries.foreach { n =>
+        assert(pinned(n) === unpinned(n), s"$n: pinned answer differs")
+      }
+    } finally {
+      saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(
+        spark.conf.set(k, _)) }
+      Tables.unpin()
+      spark.catalog.clearCache()
     }
   }
 }
