@@ -40,7 +40,8 @@ object ExplainDump {
       val kinds = nodes.map(_.nodeName).groupBy(identity)
         .map { case (k, v) => s"$k ×${v.size}" }.toSeq.sorted
         .filter(k => k.contains("Join") || k.contains("Exchange") ||
-          k.contains("Aggregate") || k.contains("TakeOrdered"))
+          k.contains("Aggregate") || k.contains("TakeOrdered") ||
+          k.contains("Combine"))
       sb ++= s"\n## $n\n\n"
       sb ++= s"exchanges=$shuffles :: ${kinds.mkString(", ")}\n\n"
       sb ++= "```\n" + plan.toString.split("\n").take(60).map(_.take(120))

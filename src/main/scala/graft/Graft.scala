@@ -42,8 +42,9 @@ object Graft {
     * (Spark's default), UTC, and the static settings the sf0.1 bench
     * measured as wins: kryo for broadcast/cache serde, a 64 MB
     * broadcast threshold that keeps every dim table on the hash side,
-    * raw in-memory columns (the cache is already compact), and a
-    * codegen cache sized for a mixed query stream (see [[builder]]).
+    * raw in-memory columns (the cache is already compact), a
+    * codegen cache sized for a mixed query stream, and broadcast
+    * blocks below G1's humongous size (see [[builder]]).
     * Settings that depend on the data size (shuffle width, split size,
     * AQE at small sizes) are runtime confs that [[Tables.pinForBench]]
     * sets when it pins the bench's working set.
@@ -98,6 +99,12 @@ object Graft {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config(CodegenCacheKey, CodegenCacheEntries.toLong)
+      // TorrentBroadcast.blockifyObject allocates one block-sized buffer
+      // per broadcast, task binaries included. At Spark's 4 MB, under a
+      // 3 GB heap (2 MB G1 regions: an object of 1 MB or more is
+      // humongous), each is a humongous allocation, and those triggered
+      // most young GCs of a router read stream.
+      .config("spark.broadcast.blockSize", "512k")
       .withExtensions(new plans.GraftExtensions)
 
   val catalog: graft.catalog.DistributionCatalog.type =

@@ -23,6 +23,9 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
   *     file, and [[ShareKeyCodegen]] keeps the key out of the generated
   *     source, so every key of a parameterized statement reuses one
   *     compiled class. Both are always on;
+  *   - [[CombineInOneTask]]: an ORDER BY above a grouped aggregate
+  *     whose partial results are small finishes in one task, as
+  *     Citus's coordinator combine query does;
   *   - [[TopKPerGroupStrategy]], which plans [[TopKPerGroup]]'s node;
   *   - SQL function `simhash64(array<string>)` → the native single-pass
   *     expression.
@@ -51,6 +54,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectPreCBORule(_ => RouteToShard)
     // before CollapseCodegenStages, on the adaptive and static paths
     e.injectColumnar(_ => ShareKeyCodegen)
+    // after EnsureRequirements, on the static path only
+    e.injectColumnar(_ => CombineInOneTask)
     // the partial/final plan of the TopKPerGroup operator
     e.injectPlannerStrategy(_ => TopKPerGroupStrategy)
     e.injectFunction((

@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Expression, NamedExpression}
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{SparkPlan, SQLExecution}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
@@ -15,25 +15,28 @@ import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec
   */
 object PlanChecks {
 
-  /** The final physical plan (descending into AQE's current plan). */
+  /** The final physical plan (descending into AQE's current plan),
+    * after running `df`'s own execution: AQE settles on its final plan
+    * and each [[CombineExec]] on the branch it takes. */
   def executedPlan(df: DataFrame): SparkPlan = {
-    // Force execution so AQE settles on the final plan.
-    df.write.format("noop").mode("overwrite").save()
-    df.queryExecution.executedPlan match {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("executedPlan"))(
+      qe.executedPlan.execute().foreach(_ => ()))
+    qe.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.executedPlan
       case p => p
     }
   }
 
   private def collectAll(p: SparkPlan): Seq[SparkPlan] =
-    Seq(p) ++ p.children.flatMap(collectAll) ++
-      p.subqueries.flatMap(collectAll) ++ (p match {
-        // AQE wrappers parent their real subtrees out-of-band
-        case a: AdaptiveSparkPlanExec => collectAll(a.executedPlan)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          collectAll(q.plan)
-        case _ => Nil
-      })
+    Seq(p) ++ (p match {
+      // these parent their real subtrees out-of-band
+      case a: AdaptiveSparkPlanExec => collectAll(a.executedPlan)
+      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
+        collectAll(q.plan)
+      case c: CombineExec => collectAll(c.executed)
+      case _ => p.children.flatMap(collectAll)
+    }) ++ p.subqueries.flatMap(collectAll)
 
   def countShuffles(df: DataFrame): Int =
     collectAll(executedPlan(df)).count(_.isInstanceOf[ShuffleExchangeLike])
@@ -164,7 +167,7 @@ object PlanChecks {
   /** EXPLAIN ANALYZE (`multi_explain.c:279`
     * `worker_save_query_explain_analyze` — the reference captures
     * per-task row counts and timings from the workers): execute the
-    * plan (noop sink), then report each physical node with its
+    * plan, then report each physical node with its
     * measured SQL metrics (rows out, spill, build sizes…). The
     * metrics come from Spark's per-node SQLMetrics — the same
     * executor-side accumulators the UI shows — so this is a real
@@ -172,12 +175,8 @@ object PlanChecks {
   def explainAnalyze(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    // run THIS QueryExecution (a df.write would plan a fresh one whose
-    // metrics we'd never see); count() on the internal RDD fills the
-    // per-node SQLMetric accumulators
-    val qe = df.queryExecution
-    qe.executedPlan.execute().count()
-    collectAll(qe.executedPlan).zipWithIndex.map { case (p, i) =>
+    // executedPlan runs df's own execution, whose nodes hold the metrics
+    collectAll(executedPlan(df)).zipWithIndex.map { case (p, i) =>
       val rows = p.metrics.get("numOutputRows").map(_.value).getOrElse(-1L)
       val interesting = p.metrics
         .filter { case (k, m) => k != "numOutputRows" && m.value > 0 }

@@ -3,7 +3,6 @@ package graft
 import graft.plans.PlanChecks
 import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** EXPLAIN-style plan pins for the headline queries (the reference does
@@ -17,15 +16,8 @@ class PlanShapeSpec extends AnyFunSuite {
     PlanChecks.executedPlan(df)
   }
 
-  private def collectAll(p: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[org.apache.spark.sql.execution.SparkPlan] =
-    Seq(p) ++ p.children.flatMap(collectAll) ++ (p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case _ => Nil
-    })
-
   test("q1: two-phase hash aggregation (partial before, final after exchange)") {
-    val aggs = collectAll(plan("q1_pricing_summary"))
+    val aggs = PlanChecks.nodesOf(plan("q1_pricing_summary"))
       .collect { case h: HashAggregateExec => h }
     assert(aggs.size >= 2, "expected partial+final HashAggregate")
   }
@@ -36,7 +28,7 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("q3: top-k compiles to TakeOrderedAndProject (partial top-k + merge)") {
-    val tops = collectAll(plan("q3_shipping_priority"))
+    val tops = PlanChecks.nodesOf(plan("q3_shipping_priority"))
       .collect { case t: TakeOrderedAndProjectExec => t }
     assert(tops.nonEmpty,
       "ORDER BY + LIMIT must plan as TakeOrderedAndProject, not global sort")
@@ -106,7 +98,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // the avg subquery must appear as an Aggregate joined back, not a
     // per-row re-scan: exactly one pass builds the per-part averages
     val df = SparkEntry.queries("q17_small_quantity_revenue")(spark, TestSpark.sf)
-    val aggs = collectAll(PlanChecks.executedPlan(df))
+    val aggs = PlanChecks.nodesOf(PlanChecks.executedPlan(df))
       .collect { case h: HashAggregateExec => h }
     // partial+final for the avg, partial+final for the outer sum = 4
     assert(aggs.size <= 6, s"unexpected aggregate explosion: ${aggs.size}")
@@ -125,7 +117,7 @@ class PlanShapeSpec extends AnyFunSuite {
       .select(col("o_orderkey").as("k"), lit("X").as("st"))
     val merged = Dml.merge(spark.table("psm_orders"), src, "o_orderkey", "k",
       Dml.MergeClauses(matchedUpdate = Map("o_orderstatus" -> col("s.st"))))
-    val shuffles = collectAll(PlanChecks.executedPlan(merged)).count {
+    val shuffles = PlanChecks.nodesOf(PlanChecks.executedPlan(merged)).count {
       p => p.getClass.getSimpleName.contains("ShuffleExchange")
     }
     // target side reads bucketed (no exchange); source side may shuffle
@@ -135,7 +127,7 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("events_interval_join: binned range join plans as a HASH join " +
       "on the bucket key, never a nested loop") {
-    val nodes = collectAll(plan("events_interval_join"))
+    val nodes = PlanChecks.nodesOf(plan("events_interval_join"))
       .map(_.getClass.getSimpleName)
     assert(!nodes.exists(n => n.contains("NestedLoop") ||
         n.contains("Cartesian")),
@@ -147,7 +139,7 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("ch_expr_join_profit: computed-expression join key still hashes " +
       "(CH mod(a*b,N)=key never becomes a nested loop)") {
-    val nodes = collectAll(plan("ch_expr_join_profit"))
+    val nodes = PlanChecks.nodesOf(plan("ch_expr_join_profit"))
       .map(_.getClass.getSimpleName)
     assert(!nodes.exists(n => n.contains("NestedLoop") ||
         n.contains("Cartesian")),
@@ -162,23 +154,23 @@ class PlanShapeSpec extends AnyFunSuite {
     val p = plan("text_pack_sequences")
     // the only hash repartitioning is the window key; the trailing
     // range exchange is the oracle's presentation ORDER BY, not packing
-    val hashExchanges = collectAll(p).collect {
+    val hashExchanges = PlanChecks.nodesOf(p).collect {
       case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
           if e.outputPartitioning.toString.contains("hashpartitioning") => e
     }
     assert(hashExchanges.size === 1,
       s"packing must cost exactly one hash shuffle, got " +
-        s"${collectAll(p).map(_.nodeName).filter(_.contains("Exchange"))}")
+        s"${PlanChecks.nodesOf(p).map(_.nodeName).filter(_.contains("Exchange"))}")
   }
 
   test("text_bm25_rank: corpus stats broadcast, scoring is map-side, " +
       "top-k merges (no global sort of scored docs)") {
     val p = plan("text_bm25_rank")
-    val nodes = collectAll(p).map(_.getClass.getSimpleName)
+    val nodes = PlanChecks.nodesOf(p).map(_.getClass.getSimpleName)
     assert(nodes.exists(_.contains("BroadcastNestedLoopJoin")) ||
       nodes.exists(_.contains("BroadcastHashJoin")),
       s"1-row stats must broadcast: $nodes")
-    assert(collectAll(p).exists(_.isInstanceOf[TakeOrderedAndProjectExec]),
+    assert(PlanChecks.nodesOf(p).exists(_.isInstanceOf[TakeOrderedAndProjectExec]),
       s"top-25 must plan as TakeOrderedAndProject: $nodes")
   }
 
@@ -188,10 +180,10 @@ class PlanShapeSpec extends AnyFunSuite {
       "is a distributed partial top-k (TakeOrderedAndProject) " +
       "broadcast into a distributed filter") {
     val p = plan("sort_fetch_with_ties")
-    val nodes = collectAll(p).map(_.getClass.getSimpleName)
+    val nodes = PlanChecks.nodesOf(p).map(_.getClass.getSimpleName)
     assert(!nodes.exists(_.contains("Window")),
       s"WITH TIES must not plan ANY window: $nodes")
-    assert(collectAll(p).exists(_.isInstanceOf[TakeOrderedAndProjectExec]),
+    assert(PlanChecks.nodesOf(p).exists(_.isInstanceOf[TakeOrderedAndProjectExec]),
       s"boundary pass must be a distributed partial top-k: $nodes")
     assert(nodes.exists(_.contains("BroadcastNestedLoopJoin")),
       s"1-row boundary must broadcast into the filter pass: $nodes")
@@ -206,7 +198,7 @@ class PlanShapeSpec extends AnyFunSuite {
     val n = 200000L
     def scannedRows(df: org.apache.spark.sql.DataFrame): Long = {
       df.collect() // populate metrics on THIS queryExecution
-      val scans = collectAll(PlanChecks.executedPlan(df)).collect {
+      val scans = PlanChecks.nodesOf(PlanChecks.executedPlan(df)).collect {
         case f: org.apache.spark.sql.execution.FileSourceScanExec => f
       }
       assert(scans.nonEmpty, "expected a FileSourceScanExec")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.SparkSession
 
 import java.util.concurrent.{CountDownLatch, TimeUnit}
@@ -21,20 +21,41 @@ object TestSpark {
 
   val sf: String = "/root/testdata/sf0.001"
 
-  /** Spark jobs `body` runs, counted by job group. Each listener sees
+  /** Runs `body` with the session confs `conf` set, then restores them. */
+  def withConf[T](conf: Map[String, String])(body: => T): T = {
+    val saved = conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally saved.foreach { case (k, v) =>
+      v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  /** Spark jobs `body` runs, counted by job group. */
+  def jobsOf(body: => Unit): Int = workOf(body).jobs
+
+  /** The jobs `body` runs, the stages they ran (a skipped stage is
+    * never submitted) and those stages' tasks. */
+  final case class Work(jobs: Int, stages: Int, tasks: Int)
+
+  /** The [[Work]] `body` runs, counted by job group. Each listener sees
     * events in order, so once it sees a marker job of another group it
-    * has seen every job of `body`. */
-  def jobsOf(body: => Unit): Int = {
+    * has seen every job and stage of `body`. */
+  def workOf(body: => Unit): Work = {
     val sc = spark.sparkContext
-    val jobs = new AtomicInteger
+    val jobs, stages, tasks = new AtomicInteger
     val drained = new CountDownLatch(1)
+    def group(p: java.util.Properties): String =
+      Option(p).map(_.getProperty("spark.jobGroup.id")).orNull
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
-          .orNull match {
+        group(e.properties) match {
           case "test-counted" => jobs.incrementAndGet()
           case "test-marker" => drained.countDown()
           case _ =>
+        }
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (group(e.properties) == "test-counted") {
+          stages.incrementAndGet()
+          tasks.addAndGet(e.stageInfo.numTasks)
         }
     }
     sc.addSparkListener(listener)
@@ -48,6 +69,6 @@ object TestSpark {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
-    jobs.get
+    Work(jobs.get, stages.get, tasks.get)
   }
 }
