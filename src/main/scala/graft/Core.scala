@@ -13,9 +13,9 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   /** A resolved table: the DataFrame and the `stamp` of the files it
-    * was resolved from. */
+    * was resolved from; `pinned` when [[pinForBench]] cached it. */
   private final case class Handle(stamp: Seq[(String, Long, Long)],
-      df: DataFrame)
+      df: DataFrame, pinned: Boolean = false)
 
   /** Each table's handle per (session, dir, table): a parquet read
     * resolved once (resolving runs a schema-inference job), or the
@@ -70,8 +70,14 @@ object Tables {
   }
 
   /** Drop every handle, pinned or not (required before stopping a
-    * SparkSession — plans are bound to their session). */
-  def unpin(): Unit = handles.clear()
+    * SparkSession — plans are bound to their session), and release the
+    * caches [[pinForBench]] made, with the broadcasts built over them;
+    * other cached data stays cached. */
+  def unpin(): Unit = handles.keys.foreach(release)
+
+  /** Drops the handle of `key`, and its cache if [[pinForBench]] made it. */
+  private def release(key: (SparkSession, String, String)): Unit =
+    handles.remove(key).filter(_.pinned).foreach(_.df.unpersist())
 
   /** The star-schema tables [[pinForBench]] pins: the bench's working
     * set, and the input [[benchConf]] is sized over. */
@@ -82,7 +88,9 @@ object Tables {
     * the session configuration they are timed in: first sets every
     * entry of [[benchConf]] (sized over [[benchBytes]] and the default
     * parallelism), the one place those confs are applied, and returns
-    * them.
+    * them. A re-pin releases the previous pin of each table first:
+    * Spark's cache matches a parquet read by its path, so it would
+    * otherwise serve the old rows of a table whose files changed.
     *
     * Partitioning (revised r14): each sf0.1 parquet file holds ONE row
     * group, so Spark's split rule cannot give the scan more than one
@@ -108,11 +116,12 @@ object Tables {
     val conf = benchConf(bytes, cores)
     conf.foreach { case (k, v) => spark.conf.set(k, v) }
     benchTables.zip(bytes).foreach { case (n, b) =>
+      release((spark, dir, n))
       val parts = mapParallelism(b, cores)
       val base = apply(spark, dir, n)
       val df = (if (parts > 1) base.repartition(parts) else base).cache()
       df.count()
-      handles.put((spark, dir, n), Handle(stamp(dir, n), df))
+      handles.put((spark, dir, n), Handle(stamp(dir, n), df, pinned = true))
     }
     conf
   }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.plans.PlanChecks
+import graft.plans.{PinnedBroadcasts, PlanChecks}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 
 /** Dev tool: dump physical-plan quality for the headline queries into
@@ -8,7 +8,8 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
   * modes, and the formatted plan. It runs what Bench times: the
   * [[Graft.session]] over the cache and confs [[Tables.pinForBench]]
   * sets, on SPARK_GRAFT_SF_DIR with SPARK_GRAFT_CPUS cores; each plan
-  * is captured after a run (the plan that actually ran). This is the
+  * is captured from a run after a warm-up run of every query, as Bench
+  * times them (the plan that actually ran). This is the
   * ".explain and iterate" record: readers can see each headline plan
   * is the intended one (broadcasts on dims, partial/final aggs,
   * TakeOrderedAndProject for top-k, no redundant exchanges).
@@ -29,11 +30,15 @@ object ExplainDump {
       ") over the pinned cache. For each headline query: exchange " +
       "count (the cache's round-robin exchange ran once, at pin time, " +
       "and is not counted), join/aggregate strategy mix, and the " +
-      "executed plan tree.\n"
+      "plan tree of a run after a warm-up run of every query: a " +
+      "`PinnedBroadcast reused` node read the broadcast an earlier run " +
+      "built and started no job for it.\n"
     // the bench headliners + the r11 scale-safe WITH TIES plan (its
     // r10 adjudication was the one weak plan — the pin here shows
     // the threshold-then-filter shape with zero Window nodes)
-    (SparkEntry.benchQueries :+ "sort_fetch_with_ties").foreach { n =>
+    val names = SparkEntry.benchQueries :+ "sort_fetch_with_ties"
+    names.foreach(n => PlanChecks.executedPlan(qmap(n)(spark, sfDir)))
+    names.foreach { n =>
       val plan = PlanChecks.executedPlan(qmap(n)(spark, sfDir))
       val nodes = PlanChecks.nodesOf(plan)
       val shuffles = nodes.count(_.isInstanceOf[ShuffleExchangeLike])
@@ -41,13 +46,17 @@ object ExplainDump {
         .map { case (k, v) => s"$k ×${v.size}" }.toSeq.sorted
         .filter(k => k.contains("Join") || k.contains("Exchange") ||
           k.contains("Aggregate") || k.contains("TakeOrdered") ||
-          k.contains("Combine"))
+          k.contains("Combine") || k.contains("PinnedBroadcast"))
       sb ++= s"\n## $n\n\n"
       sb ++= s"exchanges=$shuffles :: ${kinds.mkString(", ")}\n\n"
       sb ++= "```\n" + plan.toString.split("\n").take(60).map(_.take(120))
         .mkString("\n") + "\n```\n"
       println(s"PLAN $n :: exchanges=$shuffles :: ${kinds.mkString(", ")}")
     }
+    val sc = spark.sparkContext
+    sb ++= s"\nAfter these runs the broadcasts of pinned data kept for " +
+      s"reuse number ${PinnedBroadcasts.size(sc)}, " +
+      s"${PinnedBroadcasts.bytes(sc)} bytes as built.\n"
     sb ++= joinOrderNote
     java.nio.file.Files.write(java.nio.file.Paths.get("EXPLAINS.md"),
       sb.toString.getBytes("UTF-8"))

@@ -26,6 +26,9 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
   *   - [[CombineInOneTask]]: an ORDER BY above a grouped aggregate
   *     whose partial results are small finishes in one task, as
   *     Citus's coordinator combine query does;
+  *   - [[ReusePinnedBroadcasts]]: a broadcast of pinned data is built
+  *     once and reused by later queries, as Citus copies a reference
+  *     table to every node once;
   *   - [[TopKPerGroupStrategy]], which plans [[TopKPerGroup]]'s node;
   *   - SQL function `simhash64(array<string>)` → the native single-pass
   *     expression.
@@ -56,6 +59,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectColumnar(_ => ShareKeyCodegen)
     // after EnsureRequirements, on the static path only
     e.injectColumnar(_ => CombineInOneTask)
+    // on the static path only, before exchange reuse
+    e.injectColumnar(_ => ReusePinnedBroadcasts)
     // the partial/final plan of the TopKPerGroup operator
     e.injectPlannerStrategy(_ => TopKPerGroupStrategy)
     e.injectFunction((

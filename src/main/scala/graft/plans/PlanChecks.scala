@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, PinnedBroadcastExec}
 import org.apache.spark.sql.catalyst.expressions.{Expression, NamedExpression}
 import org.apache.spark.sql.execution.{SparkPlan, SQLExecution}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -35,6 +35,7 @@ object PlanChecks {
       case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
         collectAll(q.plan)
       case c: CombineExec => collectAll(c.executed)
+      case b: PinnedBroadcastExec => collectAll(b.exchange)
       case _ => p.children.flatMap(collectAll)
     }) ++ p.subqueries.flatMap(collectAll)
 

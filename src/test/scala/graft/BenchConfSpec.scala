@@ -90,7 +90,6 @@ class BenchConfSpec extends AnyFunSuite {
       saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(
         spark.conf.set(k, _)) }
       Tables.unpin()
-      spark.catalog.clearCache()
     }
   }
 }
