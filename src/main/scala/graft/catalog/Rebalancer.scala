@@ -99,7 +99,7 @@ object Rebalancer {
   def rebalance(spark: SparkSession, table: String, nodeCount: Int,
       strategy: String = "by_disk_size"): Seq[Move] = {
     val (sizes, current) = state(spark, table, nodeCount)
-    commit(table, current, plan(sizes, current, nodeCount, strategy))
+    commit(spark, table, current, plan(sizes, current, nodeCount, strategy))
   }
 
   /** `citus_drain_node(node)` (`operations/shard_rebalancer.c` — move
@@ -123,7 +123,7 @@ object Rebalancer {
         loads(target) += sizes(s)
         Move(s, sizes(s), node, target)
       }
-    commit(table, current, moves)
+    commit(spark, table, current, moves)
   }
 
   /** `citus_move_shard_placement(shardid, source, target)`: one
@@ -134,7 +134,8 @@ object Rebalancer {
     require(toNode >= 0 && toNode < nodeCount, s"no such node: $toNode")
     val (sizes, current) = state(spark, table, nodeCount)
     require(sizes.contains(shard), s"no such shard: $shard")
-    DistributionCatalog.setPlacements(table, current.updated(shard, toNode))
+    DistributionCatalog.setPlacements(spark, table,
+      current.updated(shard, toNode))
   }
 
   /** Bytes per live shard from the file listing, and the current
@@ -142,13 +143,14 @@ object Rebalancer {
   private def state(spark: SparkSession, table: String,
       nodeCount: Int): (Map[Int, Long], Map[Int, Int]) = {
     val sizes = DistributionCatalog.shardBytes(spark, table)
-    (sizes, DistributionCatalog.placements(table, nodeCount, sizes.keySet))
+    (sizes, DistributionCatalog.placements(spark, table, nodeCount,
+      sizes.keySet))
   }
 
   /** Store `current` with `moves` applied; returns `moves`. */
-  private def commit(table: String, current: Map[Int, Int],
-      moves: Seq[Move]): Seq[Move] = {
-    DistributionCatalog.setPlacements(table,
+  private def commit(spark: SparkSession, table: String,
+      current: Map[Int, Int], moves: Seq[Move]): Seq[Move] = {
+    DistributionCatalog.setPlacements(spark, table,
       moves.foldLeft(current)((p, m) => p.updated(m.shard, m.toNode)))
     moves
   }

@@ -85,12 +85,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 private[plans] object CatalogScan {
-  /** The catalog table `p` scans, if `p` is a scan of a table that
-    * [[DistributionCatalog]] distributes by `method`. */
-  def of(p: LogicalPlan,
-      method: DistributionCatalog.PartMethod): Option[String] = p match {
-    case r: LogicalRelation => r.catalogTable.map(_.identifier.table)
-      .filter(DistributionCatalog.spec(_).exists(_.method == method))
+  /** The distribution by `method` of the table `p` scans, if any, from
+    * the relation's own catalog entry: no lookup by name. */
+  def of(p: LogicalPlan, method: DistributionCatalog.PartMethod)
+      : Option[DistributionCatalog.DistributionSpec] = p match {
+    case r: LogicalRelation => r.catalogTable
+      .flatMap(DistributionCatalog.specOf(_)(0)).filter(_.method == method)
     case _ => None
   }
 }

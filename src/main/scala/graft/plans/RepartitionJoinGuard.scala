@@ -1,6 +1,7 @@
 package graft.plans
 
 import graft.catalog.DistributionCatalog
+import graft.catalog.DistributionCatalog.DistributionSpec
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo, PredicateHelper}
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -35,10 +36,9 @@ object RepartitionJoinGuard extends Rule[LogicalPlan] with PredicateHelper {
     * resolved by exprId against the side that scans each table, so a
     * name-colliding non-key column on the other side cannot satisfy
     * the check. */
-  private def joinsOnDistColumns(j: Join, a: String, b: String): Boolean = {
-    val colA = DistributionCatalog.spec(a).flatMap(_.distColumn)
-    val colB = DistributionCatalog.spec(b).flatMap(_.distColumn)
-    (colA, colB) match {
+  private def joinsOnDistColumns(j: Join, a: DistributionSpec,
+      b: DistributionSpec): Boolean =
+    (a.distColumn, b.distColumn) match {
       case (Some(ca), Some(cb)) =>
         val leftOut = j.left.outputSet
         val rightOut = j.right.outputSet
@@ -52,7 +52,6 @@ object RepartitionJoinGuard extends Rule[LogicalPlan] with PredicateHelper {
         })
       case _ => false
     }
-  }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (conf.getConfString(ConfKey, "true").toBoolean) return plan
@@ -64,12 +63,11 @@ object RepartitionJoinGuard extends Rule[LogicalPlan] with PredicateHelper {
         val refSide = j.exists(CatalogScan.of(_, Reference).nonEmpty)
         (lt, rt) match {
           case (Seq(a), Seq(b)) if !refSide =>
-            val colocatedKeyJoin = DistributionCatalog.colocated(a, b) &&
-              joinsOnDistColumns(j, a, b)
-            if (!colocatedKeyJoin) {
+            if (!(a.colocatedWith(b) && joinsOnDistColumns(j, a, b))) {
               throw new UnsupportedOperationException(
                 s"the query contains a join between distributed tables " +
-                  s"'$a' and '$b' that requires repartitioning, and " +
+                  s"'${a.table}' and '${b.table}' that requires " +
+                  "repartitioning, and " +
                   s"$ConfKey is false (citus.enable_repartition_joins)")
             }
           case _ => ()

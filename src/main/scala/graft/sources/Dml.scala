@@ -152,7 +152,7 @@ object Dml {
   def mergeIntoTable(spark: SparkSession, table: String,
       source: DataFrame, sourceKey: String,
       clauses: MergeClauses): Unit = {
-    val spec = DistributionCatalog.spec(table).getOrElse(
+    val spec = DistributionCatalog.spec(spark, table).getOrElse(
       throw new IllegalArgumentException(s"not a catalog table: $table"))
     require(spec.bucketed && spec.distColumn.isDefined,
       s"$table is not hash-bucketed")

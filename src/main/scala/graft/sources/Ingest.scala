@@ -58,7 +58,7 @@ object Ingest {
     * bucket, and an isolated tenant's rows land in its partition. */
   def insertSelect(spark: SparkSession, rows: DataFrame,
       target: String): Unit = {
-    val spec = DistributionCatalog.spec(target).getOrElse(
+    val spec = DistributionCatalog.spec(spark, target).getOrElse(
       throw new IllegalArgumentException(s"not a catalog table: $target"))
     // insertInto resolves columns by position against the target schema;
     // align by name first (PG INSERT ... SELECT semantics).

@@ -47,6 +47,16 @@ class CatalogSpec extends AnyFunSuite {
         .getBucketId(new java.io.File(f).getName).get)
       .map { case (b, fs) => b -> fs.length }
 
+  /** Whether `df`'s analyzed plan carries a broadcast hint. */
+  private def broadcastHinted(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.analyzed.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.ResolvedHint])
+
+  /** `t`'s message and its causes'. */
+  private def messages(t: Throwable): Seq[String] =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+      .map(e => String.valueOf(e.getMessage)).toSeq
+
   private def hotCustomer(orders: org.apache.spark.sql.DataFrame): Long =
     orders.groupBy("o_custkey").count()
       .orderBy(col("count").desc, col("o_custkey")).first().getLong(0)
@@ -61,20 +71,19 @@ class CatalogSpec extends AnyFunSuite {
       .map(_.toString).sorted.toSeq
     def tables = spark.catalog.listTables().collect().map(_.name).toSet
     val rowsBefore = rows
-    val specBefore = DistributionCatalog.spec(name)
+    val specBefore = DistributionCatalog.spec(spark, name)
     val partitionsBefore = catalogTable(name).partitionColumnNames
     val tablesBefore = tables
     val dirBefore = warehouseDir(name).list().toSet
     intercept[Exception](rewrite)
     assert(rows === rowsBefore)
-    assert(DistributionCatalog.spec(name) === specBefore)
+    assert(DistributionCatalog.spec(spark, name) === specBefore)
     assert(catalogTable(name).partitionColumnNames === partitionsBefore)
     assert(tables === tablesBefore)
     assert(warehouseDir(name).list().toSet === dirBefore)
   }
 
   private lazy val setup: Unit = {
-    DistributionCatalog.reset()
     val orders = Tables(spark, TestSpark.sf, "orders")
     val lineitem = Tables(spark, TestSpark.sf, "lineitem")
     val nation = Tables(spark, TestSpark.sf, "nation")
@@ -89,7 +98,7 @@ class CatalogSpec extends AnyFunSuite {
 
   test("colocated join on the distribution column plans without shuffle") {
     setup
-    assert(DistributionCatalog.colocated("d_orders", "d_lineitem"))
+    assert(DistributionCatalog.colocated(spark, "d_orders", "d_lineitem"))
     val joined = DistributionCatalog.table(spark, "d_orders")
       .join(DistributionCatalog.table(spark, "d_lineitem"), "o_orderkey")
       .select(col("o_orderkey"), col("l_quantity"), col("o_totalprice"))
@@ -132,7 +141,9 @@ class CatalogSpec extends AnyFunSuite {
 
   test("colocation bookkeeping mirrors pg_dist_partition") {
     setup
+    // the suites share one session: other suites' tables are listed too
     val rows = DistributionCatalog.listTables(spark)
+      .filter(col("logicalrelid").isin("d_lineitem", "d_nation", "d_orders"))
       .orderBy("logicalrelid").collect()
     assert(rows.map(_.getString(0)).toSeq ===
       Seq("d_lineitem", "d_nation", "d_orders"))
@@ -207,7 +218,7 @@ class CatalogSpec extends AnyFunSuite {
     DistributionCatalog.createMaterializedView(spark, "mv_dist",
       s => s.table("mv_source").select(col("o_orderkey"), col("o_custkey")),
       distColumn = Some("o_orderkey"), buckets = 4)
-    val spec = DistributionCatalog.spec("mv_dist").get
+    val spec = DistributionCatalog.spec(spark, "mv_dist").get
     assert(spec.bucketCount === 4 && spec.distColumn.contains("o_orderkey"))
     assert(spark.table("mv_dist").count() === 150)
   }
@@ -231,11 +242,11 @@ class CatalogSpec extends AnyFunSuite {
         .withColumn("c_nationkey", col("o_custkey") % 25),
       "d_alter_ord", "c_nationkey", buckets = 8,
       colocateWith = Some("d_alter_cust"))
-    assert(DistributionCatalog.colocated("d_alter_cust", "d_alter_ord"))
+    assert(DistributionCatalog.colocated(spark, "d_alter_cust", "d_alter_ord"))
 
     // undistribute: rows intact, catalog entry gone
     DistributionCatalog.undistributeTable(spark, "d_alter_cust")
-    assert(DistributionCatalog.spec("d_alter_cust").isEmpty)
+    assert(DistributionCatalog.spec(spark, "d_alter_cust").isEmpty)
     assert(spark.table("d_alter_cust").count() === n)
   }
 
@@ -423,7 +434,7 @@ class CatalogSpec extends AnyFunSuite {
     DistributionCatalog.createRangeDistributedTable(spark, orders,
       "d_undist_range", "o_custkey", splitPoints = Seq(75))
     DistributionCatalog.undistributeTable(spark, "d_undist_range")
-    assert(DistributionCatalog.spec("d_undist_range").isEmpty)
+    assert(DistributionCatalog.spec(spark, "d_undist_range").isEmpty)
     assert(spark.table("d_undist_range").count() === orders.count())
     intercept[IllegalArgumentException](
       DistributionCatalog.rangeShards(spark, "d_undist_range"))
@@ -571,7 +582,7 @@ class CatalogSpec extends AnyFunSuite {
       assert(blocks.head.getColumns.asScala.head.getStatistics != null)
     } finally reader.close()
     // distribution survived the rewrite (bucketed join still shuffle-free)
-    assert(DistributionCatalog.spec("d_col_orders").get.bucketCount === 2)
+    assert(DistributionCatalog.spec(spark, "d_col_orders").get.bucketCount === 2)
   }
 
   test("citus_tables view: type, distribution column, physical size, " +
@@ -594,16 +605,16 @@ class CatalogSpec extends AnyFunSuite {
     val cust = Tables(spark, TestSpark.sf, "customer")
     DistributionCatalog.createDistributedTable(spark, cust,
       "d_coloc_cust", "c_custkey", buckets = 8)
-    assert(!DistributionCatalog.colocated("d_coloc_cust", "d_orders"))
+    assert(!DistributionCatalog.colocated(spark, "d_coloc_cust", "d_orders"))
     val filesBefore = spark.table("d_coloc_cust").inputFiles.toSet
     DistributionCatalog.updateDistributedTableColocation(spark,
       "d_coloc_cust", Some("d_orders"))
-    assert(DistributionCatalog.colocated("d_coloc_cust", "d_orders"))
+    assert(DistributionCatalog.colocated(spark, "d_coloc_cust", "d_orders"))
     assert(spark.table("d_coloc_cust").inputFiles.toSet === filesBefore,
       "no data may move")
     DistributionCatalog.updateDistributedTableColocation(spark,
       "d_coloc_cust", None)
-    assert(!DistributionCatalog.colocated("d_coloc_cust", "d_orders"))
+    assert(!DistributionCatalog.colocated(spark, "d_coloc_cust", "d_orders"))
     // mismatched bucket counts refuse, like citus
     DistributionCatalog.createDistributedTable(spark, cust,
       "d_coloc_cust4", "c_custkey", buckets = 4)
@@ -808,7 +819,7 @@ class CatalogSpec extends AnyFunSuite {
     Seq("d_time_col", "d_time_other").foreach(n => DistributionCatalog
       .createTimePartitionedTable(spark, orders, n, "o_orderdate", "year"))
     // two time-partitioned tables share colocation id 0, not a layout
-    assert(!DistributionCatalog.colocated("d_time_col", "d_time_other"))
+    assert(!DistributionCatalog.colocated(spark, "d_time_col", "d_time_other"))
     DistributionCatalog.setColumnarOptions(spark, "d_time_col",
       compression = Some("snappy"))
     assert(catalogTable("d_time_col").partitionColumnNames ===
@@ -862,12 +873,12 @@ class CatalogSpec extends AnyFunSuite {
       "o_custkey", buckets = 4, colocateWith = Some("d_iso_a"))
     DistributionCatalog.setColumnarOptions(spark, "d_iso_a",
       compression = Some("snappy"))
-    val before = DistributionCatalog.spec("d_iso_a")
+    val before = DistributionCatalog.spec(spark, "d_iso_a")
     val hot = hotCustomer(orders)
     DistributionCatalog.isolateTenant(spark, "d_iso_a", hot)
-    assert(DistributionCatalog.spec("d_iso_a") === before)
+    assert(DistributionCatalog.spec(spark, "d_iso_a") === before)
     assert(catalogTable("d_iso_a").bucketSpec.map(_.numBuckets) === Some(4))
-    assert(DistributionCatalog.colocated("d_iso_a", "d_iso_b"))
+    assert(DistributionCatalog.colocated(spark, "d_iso_a", "d_iso_b"))
     assert(PlanChecks.countShuffles(spark.table("d_iso_a")
       .join(spark.table("d_iso_b"), "o_custkey")) === 0)
     assert(codecs(spark.table("d_iso_a").inputFiles) === Set("SNAPPY"))
@@ -1098,5 +1109,120 @@ class CatalogSpec extends AnyFunSuite {
       .collect()
     assert(parts.length === 7)
     assert(parts.forall(_.getLong(3) > 0), parts.mkString(", "))
+  }
+
+  test("SQL DROP TABLE takes the distribution with it: citus_tables and " +
+      "pg_dist_partition still read, and a plain table re-created under " +
+      "the name is plain") {
+    setup
+    DistributionCatalog.createDistributedTable(spark,
+      Tables(spark, TestSpark.sf, "orders"), "d_dropped", "o_orderkey",
+      buckets = 4)
+    DistributionCatalog.createReferenceTable(spark,
+      Tables(spark, TestSpark.sf, "nation"), "d_dropped_ref")
+    spark.sql("DROP TABLE d_dropped")
+    spark.sql("DROP TABLE d_dropped_ref")
+    def names(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.collect().map(_.getString(0)).toSet
+    val gone = Set("d_dropped", "d_dropped_ref")
+    assert((names(DistributionCatalog.citusTables(spark)) & gone).isEmpty)
+    assert((names(DistributionCatalog.listTables(spark)) & gone).isEmpty)
+    // the dropped table's files stay where it was (it was external)
+    val dir = java.nio.file.Files.createTempDirectory("graft-plain").toFile
+    spark.sql(s"CREATE TABLE d_dropped_ref USING parquet LOCATION " +
+      s"'${new java.io.File(dir, "t").toURI}' AS SELECT * FROM d_nation")
+    assert(DistributionCatalog.spec(spark, "d_dropped_ref").isEmpty)
+    assert(!broadcastHinted(spark.table("d_dropped_ref")))
+    assert(!names(DistributionCatalog.listTables(spark))
+      .contains("d_dropped_ref"))
+    spark.sql("DROP TABLE d_dropped_ref")
+    org.apache.commons.io.FileUtils.deleteQuietly(dir)
+  }
+
+  test("a plain table in another database is not the reference table of " +
+      "the same name: it gets no broadcast hint") {
+    setup
+    spark.sql("CREATE DATABASE IF NOT EXISTS d_other")
+    try {
+      Tables(spark, TestSpark.sf, "nation").write.mode("overwrite")
+        .saveAsTable("d_other.d_nation")
+      assert(broadcastHinted(spark.table("default.d_nation")))
+      assert(!broadcastHinted(spark.table("d_other.d_nation")))
+    } finally spark.sql("DROP DATABASE d_other CASCADE")
+  }
+
+  test("update_distributed_table_colocation reaches the planner: a join " +
+      "the repartition guard refused passes once the tables are colocated") {
+    import graft.plans.RepartitionJoinGuard
+    setup
+    DistributionCatalog.createDistributedTable(spark,
+      Tables(spark, TestSpark.sf, "orders").select("o_orderkey", "o_custkey"),
+      "d_guarded", "o_orderkey", buckets = 8)
+    def join() = spark.table("d_orders")
+      .join(spark.table("d_guarded").withColumnRenamed("o_custkey", "c"),
+        "o_orderkey")
+    TestSpark.withConf(Map(RepartitionJoinGuard.ConfKey -> "false")) {
+      val refused = intercept[Throwable](join().count())
+      assert(messages(refused).exists(_.contains("requires repartitioning")),
+        s"got $refused")
+      DistributionCatalog.updateDistributedTableColocation(spark,
+        "d_guarded", Some("d_orders"))
+      assert(join().count() === spark.table("d_orders").count())
+    }
+  }
+
+  test("split and append record the new shards' bounds from the new " +
+      "rows alone: the rest of the table is not read") {
+    setup
+    val orders = Tables(spark, TestSpark.sf, "orders")
+    val total = orders.count()
+    // shard 0 (o_custkey < 20) is a small part of the table
+    DistributionCatalog.createRangeDistributedTable(spark, orders,
+      "d_split_reads", "o_custkey", splitPoints = Seq(20))
+    val small = orders.filter(col("o_custkey") < 20).count()
+    assert(small > 0 && 2 * small < total)
+    // the split reads shard 0 once to write it, and its new shards once
+    // for their bounds
+    assert(TestSpark.rowsReadOf(DistributionCatalog.splitShard(spark,
+      "d_split_reads", 0, Seq(10))) === 2 * small)
+    assert(DistributionCatalog.rangeShards(spark, "d_split_reads").count() ===
+      3)
+    DistributionCatalog.createAppendTable(spark,
+      orders.filter(col("o_custkey") >= 20), "d_append_reads", "o_custkey")
+    // a batch of local rows: the write reads no file
+    val batch = orders.filter(col("o_custkey") < 20)
+    val local = spark.createDataFrame(
+      spark.sparkContext.parallelize(batch.collect().toSeq), batch.schema)
+    assert(TestSpark.rowsReadOf(DistributionCatalog.appendShard(spark,
+      "d_append_reads", local)) === small)
+    assert(DistributionCatalog.rangeShards(spark, "d_append_reads")
+      .filter(col("shardid") === 1).head().getString(3) ===
+      batch.agg(max("o_custkey")).head().get(0).toString)
+  }
+
+  test("shard bounds render and prune in the distribution column's type: " +
+      "long, date and string") {
+    setup
+    // the source's o_orderdate is a timestamp: make it a date
+    val orders = Tables(spark, TestSpark.sf, "orders")
+      .withColumn("o_orderdate", col("o_orderdate").cast("date"))
+    Seq("o_custkey" -> 75L,
+      "o_orderdate" -> java.sql.Date.valueOf("1995-01-01"),
+      "o_orderpriority" -> "3-MEDIUM").foreach { case (c, point) =>
+      val name = s"d_bounds_$c"
+      DistributionCatalog.createRangeDistributedTable(spark, orders, name, c,
+        Seq(point))
+      // the rendering the observed rows give
+      val want = spark.table(name).groupBy("__shard").agg(min(c), max(c))
+        .collect().map(r => (r.getInt(0), String.valueOf(r.get(1)),
+          String.valueOf(r.get(2)))).toSet
+      assert(DistributionCatalog.rangeShards(spark, name).collect()
+        .map(r => (r.getInt(1), r.getString(2), r.getString(3))).toSet === want)
+      val pruned = DistributionCatalog.rangeScan(spark, name, Some(point),
+        Some(point))
+      assert(pruned.inputFiles.nonEmpty &&
+        pruned.inputFiles.forall(_.contains("__shard=1")), c)
+      assert(pruned.count() === orders.filter(col(c) === lit(point)).count())
+    }
   }
 }

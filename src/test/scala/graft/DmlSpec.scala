@@ -12,6 +12,12 @@ class DmlSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  /** The `graft.*` properties of catalog table `name`. */
+  private def catalogProperties(name: String): Map[String, String] =
+    spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(name))
+      .properties.filter(_._1.startsWith("graft."))
+
   private def warehouseDir(table: String): java.io.File =
     new java.io.File(new java.net.URI(
       spark.conf.get("spark.sql.warehouse.dir")).getPath, table)
@@ -85,7 +91,7 @@ class DmlSpec extends AnyFunSuite {
     DistributionCatalog.createDistributedTable(spark,
       Seq((1, 100.0), (2, 200.0)).toDF("id", "bal"), "dml_acct", "id",
       buckets = 4)
-    val specBefore = DistributionCatalog.spec("dml_acct").get
+    val specBefore = DistributionCatalog.spec(spark, "dml_acct").get
     Dml.mergeIntoTable(spark, "dml_acct",
       Seq((2, 250.0), (3, 300.0)).toDF("k", "nb"), "k",
       Dml.MergeClauses(
@@ -94,7 +100,7 @@ class DmlSpec extends AnyFunSuite {
     val after = spark.table("dml_acct").orderBy("id")
       .as[(Int, Double)].collect().toSeq
     assert(after === Seq((1, 100.0), (2, 250.0), (3, 300.0)))
-    val specAfter = DistributionCatalog.spec("dml_acct").get
+    val specAfter = DistributionCatalog.spec(spark, "dml_acct").get
     assert(specAfter.bucketCount === specBefore.bucketCount)
     assert(specAfter.distColumn === specBefore.distColumn)
     // a table alone in its group keeps its group
@@ -120,7 +126,7 @@ class DmlSpec extends AnyFunSuite {
     DistributionCatalog.createDistributedTable(spark,
       (1 to 40).map(i => (i, i * 10.0)).toDF("id", "bal").coalesce(1),
       "dml_fail", "id", buckets = 4)
-    val specBefore = DistributionCatalog.spec("dml_fail").get
+    val specBefore = DistributionCatalog.spec(spark, "dml_fail").get
     val rowsBefore = spark.table("dml_fail").orderBy("id")
       .as[(Int, Double)].collect().toSeq
     val tablesBefore = spark.catalog.listTables().collect().map(_.name).toSet
@@ -136,7 +142,7 @@ class DmlSpec extends AnyFunSuite {
       "SELECT id, bal FROM dml_fail WHERE id = $1", 17)
     assert(pinned.inputFiles.length === 1)
     assert(pinned.as[(Int, Double)].collect().toSeq === Seq((17, 170.0)))
-    assert(DistributionCatalog.spec("dml_fail") === Some(specBefore))
+    assert(DistributionCatalog.spec(spark, "dml_fail") === Some(specBefore))
     assert(spark.catalog.listTables().collect().map(_.name).toSet ===
       tablesBefore)
     assert(Option(warehouseDir("dml_fail").list()).getOrElse(Array.empty)
@@ -187,13 +193,18 @@ class DmlSpec extends AnyFunSuite {
     val rows = (1 to 8).map(i => (i, 0.0)).toDF("id", "bal")
     DistributionCatalog.createDistributedTable(spark, rows, "dml_moved",
       "id", buckets = 4)
-    // recreated by plain Spark at a path of its own; the spec remains
+    // recreated by plain Spark at a path of its own, with the spec it
+    // had recorded again in its catalog properties
+    val props = catalogProperties("dml_moved")
     val elsewhere = java.nio.file.Files.createTempDirectory("dml_moved")
       .toFile
     val moved = new java.io.File(elsewhere, "t")
     spark.sql("DROP TABLE dml_moved")
     rows.write.bucketBy(4, "id").sortBy("id").option("path", moved.getPath)
       .format("parquet").saveAsTable("dml_moved")
+    spark.sql("ALTER TABLE dml_moved SET TBLPROPERTIES (" + props
+      .map { case (k, v) => s"'$k' = '$v'" }.mkString(", ") + ")")
+    assert(DistributionCatalog.spec(spark, "dml_moved").nonEmpty)
     try {
       Dml.mergeIntoTable(spark, "dml_moved", Seq(1).toDF("k"), "k",
         Dml.MergeClauses(matchedUpdate = Map("bal" -> (col("t.bal") + 1.0))))

@@ -575,7 +575,6 @@ class ExtensionSpec extends AnyFunSuite {
   }
 
   test("bulk load -> distributed table -> insertSelect append") {
-    DistributionCatalog.reset()
     val tmp = java.nio.file.Files.createTempDirectory("graft-ingest")
     // stage some CSV input (COPY-style source)
     Tables(spark, TestSpark.sf, "customer")
@@ -591,7 +590,7 @@ class ExtensionSpec extends AnyFunSuite {
       spark.table("ing_customer").withColumn("c_custkey",
         col("c_custkey") + 1000000), "ing_customer")
     assert(spark.table("ing_customer").count() === n0 * 2)
-    val spec = DistributionCatalog.spec("ing_customer").get
+    val spec = DistributionCatalog.spec(spark, "ing_customer").get
     assert(spec.bucketCount === 4 &&
       spec.distColumn.contains("c_custkey"))
   }
@@ -603,7 +602,6 @@ class ExtensionSpec extends AnyFunSuite {
     val savedThreshold = spark.conf.get(thresholdKey)
     spark.conf.set(thresholdKey, "-1")
     try {
-      DistributionCatalog.reset()
       DistributionCatalog.createDistributedTable(spark,
         Tables(spark, TestSpark.sf, "orders"), "ext_orders", "o_orderkey",
         buckets = 4)
@@ -759,10 +757,7 @@ class ExtensionSpec extends AnyFunSuite {
         assert(allMsgs(ex2).exists(_.contains("requires repartitioning")),
           s"OR-disjunct join must not pass the guard: $ex2")
       } finally spark.conf.set(RepartitionJoinGuard.ConfKey, "true")
-    } finally {
-      spark.conf.set(thresholdKey, savedThreshold)
-      DistributionCatalog.reset()
-    }
+    } finally spark.conf.set(thresholdKey, savedThreshold)
   }
 
   test("function-scan macro expansion: JOIN f(args) alias ON ... " +

@@ -26,7 +26,6 @@ class RouterSpec extends AnyFunSuite {
     "GROUP BY o.o_orderkey, o.o_totalprice"
 
   private lazy val setup: Unit = {
-    DistributionCatalog.reset()
     DistributionCatalog.setupTpchLayout(spark,
       n => Tables(spark, TestSpark.sf, n))
     Seq("lineitem", "orders").foreach(n =>

@@ -15,7 +15,7 @@ class TenantScenarioSpec extends AnyFunSuite {
 
   test("multi-tenant lifecycle: distribute, observe, isolate the hot " +
       "tenant, route, rebalance — analytics results invariant") {
-    C.reset(); C.resetTenantStats()
+    C.resetTenantStats()
     val orders = Tables(spark, TestSpark.sf, "orders")
     val total = orders.count()
     C.createDistributedTable(spark, orders, "t_orders", "o_custkey",
@@ -67,6 +67,6 @@ class TenantScenarioSpec extends AnyFunSuite {
     assert(tenantShards.length === 1 &&
       tenantShards(0).getLong(3) === hotRows)
     assert(tenantShards(0).getString(0) === s"t_orders/__tenant=$hot")
-    C.reset(); C.resetTenantStats()
+    C.resetTenantStats()
   }
 }

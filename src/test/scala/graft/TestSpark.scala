@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** One shared local session for all suites (sbt runs suites in one JVM),
   * built by the engine's own builder so the suites check the plans
@@ -36,12 +36,20 @@ object TestSpark {
     * never submitted) and those stages' tasks. */
   final case class Work(jobs: Int, stages: Int, tasks: Int)
 
-  /** The [[Work]] `body` runs, counted by job group. Each listener sees
-    * events in order, so once it sees a marker job of another group it
-    * has seen every job and stage of `body`. */
-  def workOf(body: => Unit): Work = {
+  /** The [[Work]] `body` runs, counted by job group. */
+  def workOf(body: => Unit): Work = measure(body)._1
+
+  /** The rows `body`'s tasks read from files or cached blocks (their
+    * input metrics), counted by job group. */
+  def rowsReadOf(body: => Unit): Long = measure(body)._2
+
+  /** Each listener sees events in order, so once it sees a marker job
+    * of another group it has seen every job, stage and task of `body`. */
+  private def measure(body: => Unit): (Work, Long) = {
     val sc = spark.sparkContext
     val jobs, stages, tasks = new AtomicInteger
+    val rowsRead = new AtomicLong
+    val counted = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val drained = new CountDownLatch(1)
     def group(p: java.util.Properties): String =
       Option(p).map(_.getProperty("spark.jobGroup.id")).orNull
@@ -56,7 +64,11 @@ object TestSpark {
         if (group(e.properties) == "test-counted") {
           stages.incrementAndGet()
           tasks.addAndGet(e.stageInfo.numTasks)
+          counted.add(e.stageInfo.stageId)
         }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (counted.contains(e.stageId) && e.taskMetrics != null)
+          rowsRead.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
     }
     sc.addSparkListener(listener)
     try {
@@ -69,6 +81,6 @@ object TestSpark {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
-    Work(jobs.get, stages.get, tasks.get)
+    (Work(jobs.get, stages.get, tasks.get), rowsRead.get)
   }
 }

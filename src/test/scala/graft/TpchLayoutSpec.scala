@@ -12,7 +12,6 @@ class TpchLayoutSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private lazy val setup: Unit = {
-    DistributionCatalog.reset()
     DistributionCatalog.setupTpchLayout(spark,
       n => Tables(spark, TestSpark.sf, n), buckets = 8)
   }
