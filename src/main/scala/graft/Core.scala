@@ -27,11 +27,14 @@ object Tables {
 
   /** Table `name` under `dir`, resolved once per session: a later call
     * returns the same DataFrame, and starts no job, until one of the
-    * table's files changes length or modification time. */
+    * table's files changes length or modification time. Then the old
+    * handle is released first: Spark's cache matches a parquet read by
+    * its path, so a pin of the old files would answer the new read. */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     val now = stamp(dir, name)
     handles.get((spark, dir, name)).filter(_.stamp == now).map(_.df)
       .getOrElse {
+        release((spark, dir, name))
         val path = s"$dir/$name.parquet"
         val df = if (name == "events") readEvents(spark, path)
           else spark.read.parquet(path)
@@ -88,9 +91,8 @@ object Tables {
     * the session configuration they are timed in: first sets every
     * entry of [[benchConf]] (sized over [[benchBytes]] and the default
     * parallelism), the one place those confs are applied, and returns
-    * them. A re-pin releases the previous pin of each table first:
-    * Spark's cache matches a parquet read by its path, so it would
-    * otherwise serve the old rows of a table whose files changed.
+    * them. A re-pin releases the previous pin of each table first, so
+    * the new pin caches the parquet read, not the old pin.
     *
     * Partitioning (revised r14): each sf0.1 parquet file holds ONE row
     * group, so Spark's split rule cannot give the scan more than one

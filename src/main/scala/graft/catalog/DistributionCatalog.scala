@@ -1,10 +1,11 @@
 package graft.catalog
 
 import org.apache.commons.io.FileUtils
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, TableIdentifier}
 import org.apache.spark.sql.catalyst.catalog.{CatalogTable, CatalogTablePartition, ExternalCatalogUtils}
 import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 
 import scala.collection.concurrent.TrieMap
 
@@ -74,21 +75,30 @@ object DistributionCatalog {
   private val MaxKey = "graft.max"
 
   /** The distribution catalog table `t` records, if any. A range or
-    * append table's shard count is `shards`, called for those only. */
+    * append table's shard count is `shards`, called for those only.
+    * `graft.*` properties that do not decode (an unknown method, a
+    * colocation group that is not a number, a range/append table with
+    * no such distribution column; `ALTER TABLE … SET TBLPROPERTIES` can
+    * write any) record none, so the table reads as a plain one. */
   private[graft] def specOf(t: CatalogTable)(
-      shards: => Int): Option[DistributionSpec] =
-    t.properties.get(MethodKey).map { code =>
-      val name = t.identifier.table
-      Seq(Hash, Reference, RangeDist, AppendDist).find(_.code == code).get match {
-        case Hash => t.bucketSpec.fold(DistributionSpec(name, Hash,
+      shards: => Int): Option[DistributionSpec] = {
+    val name = t.identifier.table
+    for {
+      code <- t.properties.get(MethodKey)
+      method <- Seq(Hash, Reference, RangeDist, AppendDist).find(_.code == code)
+      colocation <- t.properties.get(ColocationKey).fold(Option(0))(_.toIntOption)
+      spec <- method match {
+        case Hash => Some(t.bucketSpec.fold(DistributionSpec(name, Hash,
             t.partitionColumnNames.headOption, 0, 0))(b =>
           DistributionSpec(name, Hash, b.bucketColumnNames.headOption,
-            b.numBuckets, t.properties.get(ColocationKey).fold(0)(_.toInt)))
-        case Reference => DistributionSpec(name, Reference, None, 1, 0)
-        case m => DistributionSpec(name, m, t.properties.get(DistColumnKey),
-          shards, 0)
+            b.numBuckets, colocation)))
+        case Reference => Some(DistributionSpec(name, Reference, None, 1, 0))
+        case m => t.properties.get(DistColumnKey)
+          .filter(t.schema.fieldNames.contains)
+          .map(c => DistributionSpec(name, m, Some(c), shards, 0))
       }
-    }
+    } yield spec
+  }
 
   /** `props` with the `graft.*` keys that record `spec` (None: none). */
   private def recording(props: Map[String, String],
@@ -197,13 +207,25 @@ object DistributionCatalog {
   /** The partition column of a table with isolated tenants, and its
     * value outside them (not null: Spark's default partition). An
     * isolated tenant is a `__tenant` partition, empty if it has no rows. */
-  private val TenantCol = "__tenant"
-  private val NoTenant = "-"
+  private[graft] val TenantCol = "__tenant"
+  private[graft] val NoTenant = "-"
+
+  /** The partition column of a range/append table: a shard's id. */
+  private[graft] val ShardCol = "__shard"
+
+  /** The physical layout columns of catalog table `t`, which are not
+    * user schema: a range/append table's [[ShardCol]] and an isolated
+    * tenant's [[TenantCol]]. [[graft.plans.BroadcastReferenceTables]]
+    * projects them out of every read of the table. */
+  private[graft] def layoutColumns(t: CatalogTable): Seq[String] =
+    if (specOf(t)(0).isEmpty) Nil
+    else t.partitionColumnNames.filter(Set(ShardCol, TenantCol))
 
   /** The isolated tenants among partitions `parts`, or table `t`'s. */
   private def tenants(parts: Seq[CatalogTablePartition]): Seq[String] =
     parts.flatMap(_.spec.get(TenantCol)).filter(_ != NoTenant)
-  private def tenants(spark: SparkSession, t: CatalogTable): Seq[String] =
+  private[graft] def tenants(spark: SparkSession,
+      t: CatalogTable): Seq[String] =
     tenants(spark.sessionState.catalog.listPartitions(t.identifier))
 
   /** The `__tenant` value of distribution-column value `key` among
@@ -243,7 +265,7 @@ object DistributionCatalog {
         if (df.columns.contains(TenantCol)) bucketed.partitionBy(TenantCol)
         else bucketed
       case Some(DistributionSpec(_, RangeDist | AppendDist, _, _, _)) =>
-        w.partitionBy("__shard")
+        w.partitionBy(ShardCol)
       case Some(DistributionSpec(_, Hash, Some(c), 0, _))
           if c.startsWith("__") => w.partitionBy(c)
       case _ => w
@@ -386,12 +408,12 @@ object DistributionCatalog {
       case Some(DistributionSpec(_, RangeDist | AppendDist, Some(c), _, _)) =>
         import org.apache.spark.sql.functions.{col, max, min}
         val bounds = spark.table(ident.unquotedString)
-          .groupBy(col("__shard").cast("string"))
+          .groupBy(col(ShardCol).cast("string"))
           .agg(min(c).cast("string"), max(c).cast("string")).collect()
           .map(r => r.getString(0) -> Map(MinKey -> r.getString(1),
             MaxKey -> r.getString(2)).filter(_._2 != null)).toMap
         parts.map(p => p.copy(parameters =
-          p.parameters ++ bounds.getOrElse(p.spec("__shard"), Map.empty)))
+          p.parameters ++ bounds.getOrElse(p.spec(ShardCol), Map.empty)))
       case _ => parts
     }
   }
@@ -415,14 +437,13 @@ object DistributionCatalog {
     create(spark, df, DistributionSpec(name, Reference, None, 1, 0),
       options = Map.empty)
 
-  /** Read a catalog table. The physical layout columns are not user
-    * schema: a range/append table's `__shard` and an isolated tenant's
-    * `__tenant` ([[isolateTenant]]) are dropped. */
-  def table(spark: SparkSession, name: String): DataFrame = {
-    val df = spark.table(name)
-    cataloged(spark, name).fold(df)(c => df.drop(c._1.partitionColumnNames
-      .filter(Set("__shard", TenantCol)): _*))
-  }
+  /** Table `name`'s stored rows, its [[layoutColumns]] included: the
+    * table's relation with no catalog entry attached, which no catalog
+    * rule touches. The rewrites that keep a range/append table's
+    * shards read through it. */
+  private def stored(spark: SparkSession, name: String): DataFrame =
+    spark.baseRelationToDataFrame(GraftBridge.analyzed(spark.table(name))
+      .collectFirst { case r: LogicalRelation => r.relation }.get)
 
   /** True when two tables are in the same colocation group
     * ([[DistributionSpec.colocatedWith]]). */
@@ -586,7 +607,7 @@ object DistributionCatalog {
     val newBuckets = buckets.getOrElse(old.bucketCount)
     val spec = DistributionSpec(name, Hash, distColumn.orElse(old.distColumn),
       newBuckets, colocationFor(spark, colocateWith, newBuckets))
-    commitVersion(spark, name, Some(spec), byBucket(table(spark, name), spec))
+    commitVersion(spark, name, Some(spec), byBucket(spark.table(name), spec))
     spec
   }
 
@@ -595,7 +616,7 @@ object DistributionCatalog {
     * [[commitVersion]]. */
   def undistributeTable(spark: SparkSession, name: String): Unit = {
     require(spec(spark, name).nonEmpty, s"not a distributed table: $name")
-    commitVersion(spark, name, None, table(spark, name))
+    commitVersion(spark, name, None, spark.table(name))
   }
 
   /** The `citus_shards` size view (`sql/udfs/citus_shards/` — shard
@@ -695,25 +716,21 @@ object DistributionCatalog {
   /** `citus_stat_tenants_reset()`. */
   def resetTenantStats(): Unit = tenantReads.clear()
 
-  /** Route a single-tenant read (`fast_path_router_planner.c`): the
-    * table with a distribution-column point filter, which
-    * [[graft.plans.RouteToShard]] routes to the key's one bucket file,
-    * and, on a table with isolated tenants, a filter on the key's
-    * `__tenant` partition, so an isolated tenant lists its own only. */
+  /** Route a single-tenant read (`fast_path_router_planner.c`),
+    * counted in [[statTenants]]: the table with a distribution-column
+    * point filter, which [[graft.plans.RouteToShard]] routes to the
+    * key's one bucket file, in the key's `__tenant` partition on a
+    * table with isolated tenants. */
   def tenantShard(spark: SparkSession, name: String,
       tenantValue: Any): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     tenantReads.updateWith((name, tenantValue.toString)) {
       case Some(n) => Some(n + 1); case None => Some(1L)
     }
-    val (t, s) = distribution(spark, name)
+    val s = distribution(spark, name)._2
     require(s.method == Hash && s.distColumn.nonEmpty,
       s"$name has no distribution column to route on")
-    val rows = spark.table(name)
-      .filter(col(s.distColumn.get) === lit(tenantValue))
-    if (!t.partitionColumnNames.contains(TenantCol)) rows
-    else rows.filter(col(TenantCol) ===
-      tenantOf(tenants(spark, t), lit(tenantValue))).drop(TenantCol)
+    spark.table(name).filter(col(s.distColumn.get) === lit(tenantValue))
   }
 
   private val matviews =
@@ -795,28 +812,21 @@ object DistributionCatalog {
 
   /** One shard's interval ≙ a `pg_dist_shard` row (`pg_dist_shard.h:
     * 22-33`): the observed bounds of its rows, as citus records them
-    * for append tables and prunes with them. */
+    * for append tables and prunes with them (null: no non-null key). */
   final case class ShardInterval(shard: Int, min: Any, max: Any)
-
-  private def cmp(a: Any, b: Any): Int = (a, b) match {
-    // numbers compare across widths (stored bounds are often Long while
-    // the caller passes Int literals)
-    case (x: Number, y: Number) =>
-      BigDecimal(x.toString).compare(BigDecimal(y.toString))
-    case _ => a.asInstanceOf[Comparable[Any]].compareTo(b)
-  }
 
   /** Range-distributed table (`DISTRIBUTE_BY_RANGE 'r'`,
     * `pg_dist_partition.h:56`): rows land in the shard whose interval
     * covers their distribution-column value. Split points define N+1
     * shards; shard i takes `splitPoints(i-1) <= v < splitPoints(i)`
     * ([[rangeShardOf]]). The directory of a `__shard` partition IS the
-    * shard, so [[rangeScan]]'s interval pruning is Spark partition
-    * pruning, as citus's `PruneShards` on `shardminvalue/maxvalue`. */
+    * shard, so [[graft.plans.RouteToShard]]'s interval pruning of any
+    * query is Spark partition pruning, as citus's `PruneShards` on
+    * `shardminvalue/maxvalue`. */
   def createRangeDistributedTable(spark: SparkSession, df: DataFrame,
       name: String, distColumn: String,
       splitPoints: Seq[Any]): DistributionSpec =
-    create(spark, df.withColumn("__shard", rangeShardOf(distColumn,
+    create(spark, df.withColumn(ShardCol, rangeShardOf(distColumn,
       splitPoints)), DistributionSpec(name, RangeDist, Some(distColumn),
       splitPoints.size + 1, 0))
 
@@ -836,7 +846,7 @@ object DistributionCatalog {
   def createAppendTable(spark: SparkSession, firstBatch: DataFrame,
       name: String, distColumn: String): DistributionSpec = {
     import org.apache.spark.sql.functions.lit
-    create(spark, firstBatch.withColumn("__shard", lit(0)),
+    create(spark, firstBatch.withColumn(ShardCol, lit(0)),
       DistributionSpec(name, AppendDist, Some(distColumn), 1, 0))
   }
 
@@ -848,7 +858,7 @@ object DistributionCatalog {
     val (s, ivs) = rangeTable(spark, name)
     require(s.method == AppendDist, s"$name is not append-distributed")
     commitPartitions(spark, name, Nil,
-      Some(batch.withColumn("__shard", lit(ivs.map(_.shard).max + 1))))
+      Some(batch.withColumn(ShardCol, lit(ivs.map(_.shard).max + 1))))
     distribution(spark, name)._2
   }
 
@@ -858,28 +868,6 @@ object DistributionCatalog {
     rangeTable(spark, name)._2
       .map(i => (name, i.shard, String.valueOf(i.min), String.valueOf(i.max)))
       .toDF("logicalrelid", "shardid", "shardminvalue", "shardmaxvalue")
-  }
-
-  /** Interval-pruned read: shards whose [min,max] overlaps [lo,hi] are
-    * scanned, the rest are never listed (`PruneShards`,
-    * `planner/shard_pruning.c:1-67` → Spark partition pruning on
-    * `__shard`), with the exact range kept as a residual predicate.
-    * Pass `lo`/`hi` = None for a half-open interval. */
-  def rangeScan(spark: SparkSession, name: String,
-      lo: Option[Any], hi: Option[Any]): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val (s, ivs) = rangeTable(spark, name)
-    val keep = ivs.filter(i =>
-        lo.forall(l => cmp(i.max, l) >= 0) &&
-        hi.forall(h => cmp(i.min, h) <= 0))
-      .map(_.shard)
-    val dc = col(s.distColumn.get)
-    val residual = (lo.map(l => dc >= lit(l)) ++ hi.map(h => dc <= lit(h)))
-      .reduceOption(_ && _).getOrElse(lit(true))
-    spark.table(name)
-      .filter(col("__shard").isin(keep: _*))
-      .filter(residual)
-      .drop("__shard")
   }
 
   /** `citus_split_shard_by_split_points(shard, points, ...)`
@@ -895,25 +883,32 @@ object DistributionCatalog {
     require(ivs.exists(_.shard == shard), s"no such shard: $shard")
     val subShard = rangeShardOf(s.distColumn.get, points) +
       (ivs.map(_.shard).max + 1)
-    commitPartitions(spark, name, Seq(Map("__shard" -> shard.toString)),
-      Some(spark.table(name).filter(col("__shard") === shard)
-        .withColumn("__shard", subShard)))
+    commitPartitions(spark, name, Seq(Map(ShardCol -> shard.toString)),
+      Some(stored(spark, name).filter(col(ShardCol) === shard)
+        .withColumn(ShardCol, subShard)))
     distribution(spark, name)._2
   }
 
-  /** The spec of range/append table `name` and its shards' intervals,
-    * their bounds cast back to the distribution column's type. */
+  /** The spec of range/append table `name` and its shards' intervals. */
   private def rangeTable(spark: SparkSession,
       name: String): (DistributionSpec, Seq[ShardInterval]) = {
     val (t, s) = distribution(spark, name)
     require(s.method == RangeDist || s.method == AppendDist,
       s"$name is not range/append-distributed")
-    val dt = t.schema(s.distColumn.get).dataType
+    s -> shardIntervals(spark, t, s.distColumn.get)
+  }
+
+  /** The shards of range/append table `t` distributed on column `c`,
+    * from its catalog partitions: no Spark job. Each bound is cast back
+    * to the column's type. */
+  private[graft] def shardIntervals(spark: SparkSession, t: CatalogTable,
+      c: String): Seq[ShardInterval] = {
+    val dt = t.schema(c).dataType
     def bound(v: Option[String]): Any = v.map(b => CatalystTypeConverters
       .convertToScala(Cast(Literal(b), dt,
         Some(spark.sessionState.conf.sessionLocalTimeZone)).eval(), dt)).orNull
-    s -> spark.sessionState.catalog.listPartitions(t.identifier)
-      .map(p => ShardInterval(p.spec("__shard").toInt,
+    spark.sessionState.catalog.listPartitions(t.identifier)
+      .map(p => ShardInterval(p.spec(ShardCol).toInt,
         bound(p.parameters.get(MinKey)), bound(p.parameters.get(MaxKey))))
       .sortBy(_.shard)
   }
@@ -935,7 +930,7 @@ object DistributionCatalog {
       stripeBytes: Option[Long] = None,
       chunkRows: Option[Int] = None): Unit =
     commitVersion(spark, name, Some(distribution(spark, name)._2),
-      spark.table(name),
+      stored(spark, name),
       compression.map("compression" -> _).toMap ++
         stripeBytes.map("parquet.block.size" -> _.toString) ++
         chunkRows.map("parquet.page.row.count.limit" -> _.toString))

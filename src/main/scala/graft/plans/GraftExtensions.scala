@@ -4,7 +4,7 @@ import graft.catalog.DistributionCatalog
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-import org.apache.spark.sql.catalyst.plans.logical.{HintInfo, LogicalPlan, ResolvedHint}
+import org.apache.spark.sql.catalyst.plans.logical.{HintInfo, LogicalPlan, Project, ResolvedHint, SubqueryAlias}
 import org.apache.spark.sql.catalyst.plans.logical.BROADCAST
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.LogicalRelation
@@ -15,14 +15,16 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
   *   - [[BroadcastReferenceTables]]: any scan of a catalog table marked
   *     as a reference table gets a BROADCAST hint — the REFERENCE_JOIN
   *     rule (citus `multi_join_order.h:33`) applied automatically, so
-  *     queries don't need explicit broadcast() calls;
+  *     queries don't need explicit broadcast() calls; it also hides
+  *     a catalog table's layout columns;
   *   - the router fast path for distribution-key reads (citus
   *     `fast_path_router_planner.c:88-124`, `multi_router_planner.c:183`,
-  *     `local_plan_cache.c`): [[RouteToShard]] reads a table whose
-  *     distribution column is pinned to one value from that one bucket
-  *     file, and [[ShareKeyCodegen]] keeps the key out of the generated
-  *     source, so every key of a parameterized statement reuses one
-  *     compiled class. Both are always on;
+  *     `local_plan_cache.c`, `PruneShards`): [[RouteToShard]] reads only
+  *     the shards, tenant partition and bucket file that a query's
+  *     distribution-column conjuncts allow, and [[ShareKeyCodegen]]
+  *     keeps the key out of the generated source, so every key of a
+  *     parameterized statement reuses one compiled class. Both are
+  *     always on;
   *   - [[CombineInOneTask]]: an ORDER BY above a grouped aggregate
   *     whose partial results are small finishes in one task, as
   *     Citus's coordinator combine query does;
@@ -38,9 +40,10 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    // Post-hoc resolution (not optimizer): the hint must exist BEFORE the
-    // optimizer's EliminateResolvedHint folds hints into Join nodes.
-    e.injectPostHocResolutionRule(_ => BroadcastReferenceTables)
+    // Resolution (not optimizer): the hint must exist BEFORE the
+    // optimizer's EliminateResolvedHint folds hints into Join nodes, and
+    // the layout columns must be gone before a `*` is expanded.
+    e.injectResolutionRule(_ => BroadcastReferenceTables)
     // LIMIT approximation (citus.limit_clause_row_fetch_count) — opt-in
     // via spark.graft.limitApproxRowFetchCount.
     e.injectOptimizerRule(_ => ApproximateLimit)
@@ -95,8 +98,12 @@ private[plans] object CatalogScan {
   }
 }
 
-/** Optimizer rule: wrap reference-table scans in a broadcast hint
-  * (idempotent — already-hinted scans are skipped). */
+/** Analyzer rule: wrap reference-table scans in a broadcast hint, and
+  * project a catalog table's [[DistributionCatalog.layoutColumns]] out
+  * of its reads by name, so `SELECT *` shows the user's columns. An
+  * `INSERT` target is not a child of its statement: it keeps them.
+  * Idempotent: already-hinted scans are skipped, and a hidden scan is
+  * no longer the alias's child. */
 object BroadcastReferenceTables extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
@@ -107,6 +114,12 @@ object BroadcastReferenceTables extends Rule[LogicalPlan] {
       case r if CatalogScan.of(r, DistributionCatalog.Reference).nonEmpty &&
           !alreadyHinted.contains(r) =>
         ResolvedHint(r, HintInfo(strategy = Some(BROADCAST)))
+      case a @ SubqueryAlias(_, r: LogicalRelation) =>
+        val layout = r.catalogTable.toSeq
+          .flatMap(DistributionCatalog.layoutColumns)
+        if (layout.isEmpty) a
+        else a.copy(child = Project(
+          r.output.filterNot(o => layout.contains(o.name)), r))
     }
   }
 }

@@ -1,8 +1,11 @@
 package graft.plans
 
+import graft.catalog.DistributionCatalog
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, EqualTo, Expression, LeafExpression, Literal, PredicateHelper, SubqueryExpression}
+import org.apache.spark.sql.catalyst.catalog.CatalogTable
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, Cast, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, LeafExpression, LessThan, LessThanOrEqual, Literal, PredicateHelper, SubqueryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, EmptyBlock, ExprCode, FalseLiteral, JavaCode}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -24,6 +27,15 @@ import org.apache.spark.sql.types._
   * change. Disjunctions and multi-value `IN`s pin nothing and keep
   * Spark's bucket pruning.
   *
+  * The same conjuncts prune the other distribution methods' layout
+  * partitions (citus `PruneShards`, `planner/shard_pruning.c`), which
+  * Spark's partition pruning, running after this rule, then skips: on
+  * a range/append table, `=`, `<`, `<=`, `>` and `>=` literals
+  * (`BETWEEN` is two) add `__shard IN (…)` of the shards whose
+  * interval overlaps each; on a table with isolated tenants, a pinned
+  * key adds `__tenant = <its partition>`. Only such a table has its
+  * partitions listed here.
+  *
   * The table statistics are dropped with the bucket spec, so the size
   * estimate is that one file's and a pinned side of a join can be
   * broadcast.
@@ -31,11 +43,13 @@ import org.apache.spark.sql.types._
 object RouteToShard extends Rule[LogicalPlan] with PredicateHelper {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case f @ Filter(cond, rel @ LogicalRelation(fs: HadoopFsRelation, _,
-        Some(table), false, _))
-        if fs.bucketSpec.exists(_.bucketColumnNames.size == 1) =>
-      val spec = fs.bucketSpec.get
+    case scan @ Filter(_, rel @ LogicalRelation(fs: HadoopFsRelation, _,
+        Some(table), false, _)) =>
+      val f = layoutConjunct(scan.condition, rel, table, fs.sparkSession)
+        .fold(scan)(c => scan.copy(condition = And(scan.condition, c)))
+      val cond = f.condition
       val pinned = for {
+        spec <- fs.bucketSpec.filter(_.bucketColumnNames.size == 1)
         attr <- rel.output.find(a =>
           conf.resolver(a.name, spec.bucketColumnNames.head))
         value <- pinnedValue(cond, attr)
@@ -56,6 +70,67 @@ object RouteToShard extends Rule[LogicalPlan] with PredicateHelper {
           catalogTable = Some(table.copy(stats = None))))
       }
       pinned.getOrElse(f)
+  }
+
+  /** The conjunct on `table`'s `__shard` or `__tenant` partition column
+    * that `cond` implies, if it prunes a partition. */
+  private def layoutConjunct(cond: Expression, rel: LogicalRelation,
+      table: CatalogTable, spark: SparkSession): Option[Expression] = {
+    import DistributionCatalog.{AppendDist, Hash, RangeDist, ShardCol, TenantCol}
+    def attr(name: String) = rel.output.find(a => conf.resolver(a.name, name))
+    for {
+      layout <- table.partitionColumnNames match {
+        case Seq(c @ (ShardCol | TenantCol)) => attr(c)
+        case _ => None
+      }
+      spec <- DistributionCatalog.specOf(table)(0)
+      key <- spec.distColumn.flatMap(attr)
+      conjunct <- (spec.method, layout.name) match {
+        case (RangeDist | AppendDist, ShardCol)
+            if layout.dataType == IntegerType =>
+          val ivs = DistributionCatalog.shardIntervals(spark, table, key.name)
+          val bs = bounds(cond, key)
+          val kept = ivs.filter(i => bs.forall(overlaps(key, i)))
+          Option.when(kept.size < ivs.size)(
+            In(layout, kept.map(i => Literal(i.shard))))
+        case (Hash, TenantCol) => pinnedValue(cond, key).map { v =>
+          val k = Cast(Literal(v, key.dataType), StringType,
+            Some(conf.sessionLocalTimeZone)).eval().toString
+          EqualTo(layout, Literal(
+            if (DistributionCatalog.tenants(spark, table).contains(k)) k
+            else DistributionCatalog.NoTenant))
+        }
+        case _ => None
+      }
+    } yield conjunct
+  }
+
+  /** The conjuncts of `cond` that compare `key` with a non-null literal
+    * of its type by `=`, `<`, `<=`, `>` or `>=`, with that literal. */
+  private def bounds(cond: Expression,
+      key: Attribute): Seq[(Expression, Literal)] =
+    splitConjunctivePredicates(cond).flatMap {
+      case c @ (_: EqualTo | _: LessThan | _: LessThanOrEqual |
+          _: GreaterThan | _: GreaterThanOrEqual) => c.children match {
+        case Seq(a: Attribute, l: Literal) if pins(a, l, key) => Some(c -> l)
+        case Seq(l: Literal, a: Attribute) if pins(a, l, key) => Some(c -> l)
+        case _ => None
+      }
+      case _ => None
+    }
+
+  /** Whether a `key` in interval `i` can satisfy comparison `c` with
+    * `v`: the keys it keeps are a down-set, an up-set or `v` alone, so
+    * it holds at a bound of `i`, or `v` is inside `i`. A shard with no
+    * non-null key satisfies none. */
+  private def overlaps(key: Attribute, i: DistributionCatalog.ShardInterval)(
+      b: (Expression, Literal)): Boolean = {
+    val (c, v) = b
+    val Seq(lo, hi) = Seq(i.min, i.max).map(Literal.create(_, key.dataType))
+    def holds(e: Expression) = e.eval() == true
+    Seq(lo, hi).exists(bound => holds(c.transform {
+      case a: Attribute if a.semanticEquals(key) => bound
+    })) || holds(And(LessThan(lo, v), LessThan(v, hi)))
   }
 
   private def pinnedValue(cond: Expression, attr: Attribute): Option[Any] =

@@ -2,7 +2,6 @@ package graft.sources
 
 import graft.catalog.DistributionCatalog
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.col
 
 /** Bulk ingest + INSERT INTO ... SELECT — the analytics-relevant subset
   * of the reference's data-movement surface:
@@ -52,21 +51,19 @@ object Ingest {
     }
   }
 
-  /** INSERT INTO target SELECT — append `rows` into an existing
-    * distributed table, preserving its bucket layout: the rows are
+  /** INSERT INTO target SELECT — append `rows`, in the table's column
+    * order as a PG INSERT matches them, into an existing distributed
+    * table, preserving its bucket layout: the rows are
     * grouped by bucket first, so the append adds at most one file per
     * bucket, and an isolated tenant's rows land in its partition. */
   def insertSelect(spark: SparkSession, rows: DataFrame,
       target: String): Unit = {
     val spec = DistributionCatalog.spec(spark, target).getOrElse(
       throw new IllegalArgumentException(s"not a catalog table: $target"))
-    // insertInto resolves columns by position against the target schema;
-    // align by name first (PG INSERT ... SELECT semantics).
-    val cols = DistributionCatalog.table(spark, target).columns
     require(spec.method == DistributionCatalog.Hash,
       s"$target is a reference table; use createReferenceTable to replace it")
-    DistributionCatalog.byBucket(DistributionCatalog.withTenant(
-        rows.select(cols.map(col): _*), target), spec)
+    DistributionCatalog.byBucket(DistributionCatalog.withTenant(rows, target),
+        spec)
       .write.mode(SaveMode.Append).insertInto(target)
   }
 }

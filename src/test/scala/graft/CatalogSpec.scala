@@ -67,7 +67,7 @@ class CatalogSpec extends AnyFunSuite {
     * partitions), the session's tables (so no staging entry is left)
     * and the table's warehouse directory (so no new `_v…` version). */
   private def assertFailsAtomically(name: String)(rewrite: => Unit): Unit = {
-    def rows = DistributionCatalog.table(spark, name).collect()
+    def rows = spark.table(name).collect()
       .map(_.toString).sorted.toSeq
     def tables = spark.catalog.listTables().collect().map(_.name).toSet
     val rowsBefore = rows
@@ -99,8 +99,8 @@ class CatalogSpec extends AnyFunSuite {
   test("colocated join on the distribution column plans without shuffle") {
     setup
     assert(DistributionCatalog.colocated(spark, "d_orders", "d_lineitem"))
-    val joined = DistributionCatalog.table(spark, "d_orders")
-      .join(DistributionCatalog.table(spark, "d_lineitem"), "o_orderkey")
+    val joined = spark.table("d_orders")
+      .join(spark.table("d_lineitem"), "o_orderkey")
       .select(col("o_orderkey"), col("l_quantity"), col("o_totalprice"))
     assert(PlanChecks.countShuffles(joined) === 0,
       "bucket join must not introduce a ShuffleExchange")
@@ -110,7 +110,7 @@ class CatalogSpec extends AnyFunSuite {
   test("group-by on the distribution column aggregates without shuffle " +
       "(citus full aggregate pushdown: groupedByDisjointPartitionColumn)") {
     setup
-    val agg = DistributionCatalog.table(spark, "d_orders")
+    val agg = spark.table("d_orders")
       .groupBy(col("o_orderkey"))
       .agg(sum(col("o_totalprice")).as("t"), count(lit(1)).as("n"))
     assert(PlanChecks.countShuffles(agg) === 0,
@@ -123,8 +123,8 @@ class CatalogSpec extends AnyFunSuite {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val j = DistributionCatalog.table(spark, "d_orders")
-        .join(DistributionCatalog.table(spark, "d_lineitem")
+      val j = spark.table("d_orders")
+        .join(spark.table("d_lineitem")
             .withColumnRenamed("o_orderkey", "lk"),
           col("o_custkey") === col("lk"))
       assert(PlanChecks.countShuffles(j) > 0)
@@ -133,8 +133,8 @@ class CatalogSpec extends AnyFunSuite {
 
   test("reference table join is a broadcast hash join, no shuffle of the fact") {
     setup
-    val j = DistributionCatalog.table(spark, "d_orders")
-      .join(DistributionCatalog.table(spark, "d_nation"),
+    val j = spark.table("d_orders")
+      .join(spark.table("d_nation"),
         col("o_custkey") % 25 === col("n_nationkey"))
     assert(PlanChecks.hasBroadcastHashJoin(j))
   }
@@ -273,7 +273,10 @@ class CatalogSpec extends AnyFunSuite {
     assert(spark.table("d_iso_orders")
       .filter(col("o_custkey") === hotKey).count() === hotRows)
     assert(spark.table("d_iso_orders").count() === total)
-    assert(DistributionCatalog.table(spark, "d_iso_orders").count() === total)
+    // the `__tenant` partition column is layout, not user schema
+    assert(spark.table("d_iso_orders").columns.toSeq === orders.columns.toSeq)
+    assert(Graft.pgSql(spark, "SELECT * FROM d_iso_orders").columns.toSeq ===
+      orders.columns.toSeq)
     // a non-isolated tenant routes to the pruned base table
     val otherKey = hotKey + 1
     val expected = orders.filter(col("o_custkey") === otherKey).count()
@@ -330,11 +333,13 @@ class CatalogSpec extends AnyFunSuite {
     assert(shards.map(_.getInt(1)).toSeq === Seq(0, 1, 2, 3))
     // no rows lost in the layout
     assert(spark.table("d_range_orders").count() === orders.count())
-    // an interval read prunes: [0, 300] overlaps only shard 0
-    val pruned = DistributionCatalog.rangeScan(spark, "d_range_orders",
-      lo = Some(0), hi = Some(30))
-    assert(pruned.inputFiles.forall(_.contains("__shard=0")),
+    // an interval read prunes: [0, 30] overlaps only shard 0
+    val pruned = spark.sql(
+      "SELECT * FROM d_range_orders WHERE o_custkey BETWEEN 0 AND 30")
+    assert(pruned.inputFiles.nonEmpty &&
+      pruned.inputFiles.forall(_.contains("__shard=0")),
       "scan must touch only the overlapping shard's directory")
+    assert(pruned.columns.toSeq === orders.columns.toSeq)
     val expected = orders
       .filter(col("o_custkey") >= 0 && col("o_custkey") <= 30).count()
     assert(pruned.count() === expected)
@@ -358,11 +363,16 @@ class CatalogSpec extends AnyFunSuite {
     val shards = DistributionCatalog.rangeShards(spark, "d_append_orders")
     assert(shards.count() === 3)
     assert(spark.table("d_append_orders").count() === orders.count())
-    // a read over [600, 900] overlaps only batch 2's shard
-    val pruned = DistributionCatalog.rangeScan(spark, "d_append_orders",
-      lo = Some(60), hi = Some(90))
-    assert(pruned.inputFiles.forall(_.contains("__shard=1")),
+    // a read over [60, 90] overlaps only batch 2's shard
+    val pruned = spark.table("d_append_orders")
+      .filter(col("o_custkey").between(60, 90))
+    assert(pruned.inputFiles.nonEmpty &&
+      pruned.inputFiles.forall(_.contains("__shard=1")),
       "only the middle batch's shard overlaps [60,90]")
+    assert(spark.table("d_append_orders").columns.toSeq ===
+      orders.columns.toSeq)
+    assert(Graft.pgSql(spark, "SELECT * FROM d_append_orders " +
+      "WHERE o_custkey = 70").columns.toSeq === orders.columns.toSeq)
     val expected = orders
       .filter(col("o_custkey") >= 60 && col("o_custkey") <= 90).count()
     assert(pruned.count() === expected)
@@ -381,8 +391,10 @@ class CatalogSpec extends AnyFunSuite {
     DistributionCatalog.createRangeDistributedTable(spark, orders,
       "d_split_orders", "o_custkey", splitPoints = Seq(75))
     // remember the un-split shard's files: they must survive untouched
-    val keepFiles = spark.table("d_split_orders")
-      .filter(col("__shard") === 0).inputFiles.toSet
+    def shard0Files = spark.table("d_split_orders").inputFiles
+      .filter(_.contains("/__shard=0/")).toSet
+    val keepFiles = shard0Files
+    assert(keepFiles.nonEmpty)
     // split shard 1 ([75, max]) at 110 -> new shards 2 ([75,110)) and
     // 3 ([110, max]); shard 1 retires
     DistributionCatalog.splitShard(spark, "d_split_orders", 1, Seq(110))
@@ -394,13 +406,13 @@ class CatalogSpec extends AnyFunSuite {
       .collect().map(_.getInt(1)).toSet === shards)
     assert(spark.table("d_split_orders").count() === orders.count(),
       "no rows lost in the split")
-    assert(spark.table("d_split_orders")
-      .filter(col("__shard") === 0).inputFiles.toSet === keepFiles,
+    assert(shard0Files === keepFiles,
       "the un-split shard's files must be untouched")
     // interval pruning over the new layout: [80,100] hits only shard 2
-    val pruned = DistributionCatalog.rangeScan(spark, "d_split_orders",
-      lo = Some(80), hi = Some(100))
-    assert(pruned.inputFiles.forall(_.contains("__shard=2")))
+    val pruned = spark.sql(
+      "SELECT * FROM d_split_orders WHERE o_custkey BETWEEN 80 AND 100")
+    assert(pruned.inputFiles.nonEmpty &&
+      pruned.inputFiles.forall(_.contains("__shard=2")))
     assert(pruned.count() === orders
       .filter(col("o_custkey") >= 80 && col("o_custkey") <= 100).count())
   }
@@ -712,16 +724,16 @@ class CatalogSpec extends AnyFunSuite {
       compression = Some("snappy"))
     assert(spark.table("d_col_range").count() === orders.count())
     // physical layout survived: interval reads still prune by directory
-    val pruned = DistributionCatalog.rangeScan(spark, "d_col_range",
-      lo = Some(0), hi = Some(30))
+    val pruned = spark.table("d_col_range")
+      .filter(col("o_custkey") >= 0 && col("o_custkey") <= 30)
     assert(pruned.inputFiles.nonEmpty &&
       pruned.inputFiles.forall(_.contains("__shard=0")),
-      "rangeScan must still prune to the overlapping shard directory")
+      "an interval read must still prune to the overlapping shard directory")
     assert(pruned.count() === orders
       .filter(col("o_custkey") >= 0 && col("o_custkey") <= 30).count())
+    assert(DistributionCatalog.rangeShards(spark, "d_col_range").count() === 4)
     // user-facing reads still hide the shard column
-    assert(!DistributionCatalog.table(spark, "d_col_range")
-      .columns.contains("__shard"))
+    assert(!spark.table("d_col_range").columns.contains("__shard"))
   }
 
   test("placements reconcile against the live shard set after " +
@@ -769,7 +781,7 @@ class CatalogSpec extends AnyFunSuite {
     assertFailsAtomically("d_alter_fail")(DistributionCatalog
       .alterDistributedTable(spark, "d_alter_fail",
         distColumn = Some("no_such_col")))
-    assert(DistributionCatalog.table(spark, "d_alter_fail").count() ===
+    assert(spark.table("d_alter_fail").count() ===
       orders.count())
   }
 
@@ -933,6 +945,28 @@ class CatalogSpec extends AnyFunSuite {
     assertPlain()
     assert(spark.table("d_plain").filter(col("o_orderkey") === -5L)
       .count() === 1)
+  }
+
+  test("graft.* properties written through SQL that do not decode " +
+      "record no distribution: the table still reads, and listTables " +
+      "omits it") {
+    setup
+    val nation = Tables(spark, TestSpark.sf, "nation")
+    Seq("'graft.method' = 'zz'",
+        "'graft.method' = 'h', 'graft.colocation' = 'two'",
+        "'graft.method' = 'r'").foreach { props =>
+      spark.sql("DROP TABLE IF EXISTS d_bad_props")
+      nation.write.bucketBy(4, "n_nationkey").format("parquet")
+        .saveAsTable("d_bad_props")
+      spark.sql(s"ALTER TABLE d_bad_props SET TBLPROPERTIES ($props)")
+      assert(spark.table("d_bad_props").count() === nation.count(), props)
+      assert(spark.sql("SELECT * FROM d_bad_props WHERE n_nationkey = 3")
+        .count() === 1, props)
+      assert(DistributionCatalog.spec(spark, "d_bad_props").isEmpty, props)
+      assert(!DistributionCatalog.listTables(spark).collect()
+        .map(_.getString(0)).contains("d_bad_props"), props)
+    }
+    spark.sql("DROP TABLE d_bad_props")
   }
 
   test("time_partitions lists a null timestamp under Spark's default " +
@@ -1212,14 +1246,15 @@ class CatalogSpec extends AnyFunSuite {
       val name = s"d_bounds_$c"
       DistributionCatalog.createRangeDistributedTable(spark, orders, name, c,
         Seq(point))
-      // the rendering the observed rows give
-      val want = spark.table(name).groupBy("__shard").agg(min(c), max(c))
+      // the rendering the observed rows of each shard directory give
+      val want = spark.table(name)
+        .groupBy(regexp_extract(input_file_name(), "__shard=(\\d+)", 1)
+          .cast("int")).agg(min(c), max(c))
         .collect().map(r => (r.getInt(0), String.valueOf(r.get(1)),
           String.valueOf(r.get(2)))).toSet
       assert(DistributionCatalog.rangeShards(spark, name).collect()
         .map(r => (r.getInt(1), r.getString(2), r.getString(3))).toSet === want)
-      val pruned = DistributionCatalog.rangeScan(spark, name, Some(point),
-        Some(point))
+      val pruned = spark.table(name).filter(col(c) === lit(point))
       assert(pruned.inputFiles.nonEmpty &&
         pruned.inputFiles.forall(_.contains("__shard=1")), c)
       assert(pruned.count() === orders.filter(col(c) === lit(point)).count())

@@ -228,13 +228,16 @@ class DmlSpec extends AnyFunSuite {
       "k", Dml.MergeClauses(matchedUpdate = Map("bal" -> col("s.nb")),
         notMatchedInsert = Some(Map("id" -> col("s.k"), "bal" -> col("s.nb")))))
     Seq(2 -> 9.0, 4 -> 4.0).foreach { case (k, bal) =>
-      val df = DistributionCatalog.tenantShard(spark, "dml_iso", k)
-      assert(df.as[(Int, Double)].collect().toSeq === Seq((k, bal)))
-      assert(df.inputFiles.nonEmpty &&
-        df.inputFiles.forall(_.contains(s"/__tenant=$k/")),
-        s"tenant $k must read only its own files")
+      Seq(DistributionCatalog.tenantShard(spark, "dml_iso", k),
+          spark.sql(s"SELECT * FROM dml_iso WHERE id = $k")).foreach { df =>
+        assert(df.as[(Int, Double)].collect().toSeq === Seq((k, bal)))
+        assert(df.inputFiles.length === 1 &&
+          df.inputFiles.forall(_.contains(s"/__tenant=$k/")),
+          s"tenant $k must read only its own file")
+      }
     }
-    assert(DistributionCatalog.table(spark, "dml_iso").orderBy("id")
+    assert(spark.table("dml_iso").columns.toSeq === Seq("id", "bal"))
+    assert(spark.table("dml_iso").orderBy("id")
       .as[(Int, Double)].collect().toSeq ===
       Seq((1, 1.0), (2, 9.0), (3, 3.0), (4, 4.0)))
   }

@@ -134,6 +134,37 @@ class PinnedBroadcastSpec extends AnyFunSuite {
     } finally Seq(dir, changed, out).foreach(rm)
   }
 
+  test("Tables.apply over a pinned table whose file changed reads the " +
+      "new rows and releases the pinned copy") {
+    val dir = Files.createTempDirectory("graft-pinned-apply").toFile
+    val out = Files.createTempDirectory("graft-pinned-apply-out").toFile
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles()).toSeq.flatten.foreach(rm)
+      f.delete()
+    }
+    try {
+      for (n <- Tables.benchTables)
+        Files.copy(new java.io.File(s"$sf/$n.parquet").toPath,
+          new java.io.File(dir, s"$n.parquet").toPath,
+          StandardCopyOption.REPLACE_EXISTING)
+      spark.read.parquet(s"$sf/nation.parquet")
+        .withColumn("n_name", lit("RENAMED"))
+        .coalesce(1).write.mode("overwrite").parquet(out.getPath)
+      val part = out.listFiles().filter(_.getName.endsWith(".parquet")).head
+      pinned(dir.getPath) {
+        val old = Tables(spark, dir.getPath, "nation")
+        assert(old.storageLevel !== StorageLevel.NONE)
+        Files.move(part.toPath, new java.io.File(dir, "nation.parquet").toPath,
+          StandardCopyOption.REPLACE_EXISTING)
+        val now = Tables(spark, dir.getPath, "nation")
+        assert(now.select("n_name").distinct().collect().toSeq ===
+          Seq(Row("RENAMED")))
+        assert(old.storageLevel === StorageLevel.NONE,
+          "the pinned copy of the old file must be released")
+      }
+    } finally Seq(dir, out).foreach(rm)
+  }
+
   test("a build side over unpinned parquet, or with rand(), is never reused") {
     def join(dim: DataFrame): DataFrame =
       Tables(spark, sf, "supplier")

@@ -150,19 +150,52 @@ class RouterSpec extends AnyFunSuite {
     DistributionCatalog.createDistributedTable(spark, orders, "r_orders",
       "o_custkey", buckets = 8)
     DistributionCatalog.isolateTenant(spark, "r_orders", hot)
+    assert(spark.table("r_orders").columns.toSeq === orders.columns.toSeq)
     val text = "SELECT o_orderkey, o_custkey FROM r_orders " +
       "WHERE o_custkey = $1"
-    Seq(hot, cold, -1L).foreach { k =>
-      val df = DistributionCatalog.table(spark, "r_orders")
-        .filter(col("o_custkey") === k)
-      assert(rows(df) === rows(orders.filter(col("o_custkey") === k)))
-      val sql = read(text, k)
-      assert(routed(sql) === Seq("r_orders"))
-      assert(rows(sql) === rows(orders.filter(col("o_custkey") === k)
-        .select("o_orderkey", "o_custkey")))
+    Seq(hot -> s"/__tenant=$hot/", cold -> "/__tenant=-/").foreach {
+      case (k, partition) =>
+        val df = spark.table("r_orders").filter(col("o_custkey") === k)
+        assert(rows(df) === rows(orders.filter(col("o_custkey") === k)))
+        val sql = read(text, k)
+        assert(routed(sql) === Seq("r_orders"))
+        assert(rows(sql) === rows(orders.filter(col("o_custkey") === k)
+          .select("o_orderkey", "o_custkey")))
+        Seq(df, sql).foreach { d =>
+          assert(d.inputFiles.length === 1 &&
+            d.inputFiles.forall(_.contains(partition)),
+            s"key $k read ${d.inputFiles.toSeq}")
+        }
     }
-    assert(DistributionCatalog.table(spark, "r_orders").count() ===
-      orders.count())
+    val absent = read(text, -1L)
+    assert(routed(absent) === Seq("r_orders"))
+    assert(absent.count() === 0)
+    assert(absent.inputFiles.forall(_.contains("/__tenant=-/")))
+    assert(spark.table("r_orders").count() === orders.count())
+  }
+
+  test("a range table's SQL and DataFrame reads prune to the " +
+      "overlapping shard and show only the user's columns") {
+    setup
+    val source = spark.range(0, 400).coalesce(1)
+      .select(col("id").as("k"), (col("id") * 2).as("v"))
+    source.createOrReplaceTempView("src_range")
+    DistributionCatalog.createRangeDistributedTable(spark, source, "r_range",
+      "k", splitPoints = Seq(100L, 200L, 300L))
+    assert(spark.table("r_range").inputFiles.length === 4)
+    val sql = spark.sql("SELECT * FROM r_range WHERE k BETWEEN 10 AND 20")
+    val filtered = spark.table("r_range").filter(col("k").between(10, 20))
+    val want = rows(spark.sql(
+      "SELECT * FROM src_range WHERE k BETWEEN 10 AND 20"))
+    Seq(sql, filtered).foreach { df =>
+      assert(df.inputFiles.length === 1 &&
+        df.inputFiles.head.contains("/__shard=0/"), df.inputFiles.toSeq)
+      assert(rows(df) === want)
+      assert(df.columns.toSeq === Seq("k", "v"))
+    }
+    assert(spark.table("r_range").columns.toSeq === Seq("k", "v"))
+    assert(Graft.pgSql(spark, "SELECT * FROM r_range WHERE k = 250")
+      .columns.toSeq === Seq("k", "v"))
   }
 
   test("after alter_distributed_table changes the bucket count, reads " +

@@ -22,7 +22,7 @@ class TenantScenarioSpec extends AnyFunSuite {
       buckets = 8)
 
     // a reference analytics result BEFORE any operational changes
-    def revenueByStatus() = C.table(spark, "t_orders")
+    def revenueByStatus() = spark.table("t_orders")
       .groupBy("o_orderstatus")
       .agg(count(lit(1)).as("n"), sum("o_totalprice").as("rev"))
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet

@@ -18,8 +18,8 @@ class TpchLayoutSpec extends AnyFunSuite {
 
   test("orders ⋈ lineitem on the colocated key: zero shuffle exchanges") {
     setup
-    val j = DistributionCatalog.table(spark, "g_orders")
-      .join(DistributionCatalog.table(spark, "g_lineitem"),
+    val j = spark.table("g_orders")
+      .join(spark.table("g_lineitem"),
         col("o_orderkey") === col("l_orderkey"))
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n"))
@@ -30,8 +30,8 @@ class TpchLayoutSpec extends AnyFunSuite {
 
   test("reference dimension joins broadcast") {
     setup
-    val j = DistributionCatalog.table(spark, "g_orders")
-      .join(DistributionCatalog.table(spark, "g_customer"),
+    val j = spark.table("g_orders")
+      .join(spark.table("g_customer"),
         col("o_custkey") === col("c_custkey"))
     assert(PlanChecks.hasBroadcastHashJoin(j))
   }
